@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A crashing query is reported by name in
   * "errors" with value -1 in "queries" — never silently timed. */
@@ -27,7 +28,7 @@ object Bench {
     // first query otherwise pays ~5s of JVM startup that isn't its own.
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     var errors = List.empty[(String, String)]
     // Iterative fixed-point queries (wall = rounds x exchange +
     // per-round scheduling): a single cold run carries up to 2.4x
@@ -52,7 +53,7 @@ object Bench {
         // toRdd keeps the full output schema and forces every column.
         try { fn(spark, sfDir).queryExecution.toRdd.count()
           ((System.nanoTime() - t0) / 1e9, null) }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           // root-cause class + a short sanitized message — a bare
           // class name made sf10 failures undiagnosable. Scrub
           // backslashes and control chars too: this string is embedded
@@ -73,7 +74,7 @@ object Bench {
           // clear interior caches between runs so run 2 re-does the
           // same work (not a cache readback); a failed RERUN keeps the
           // successful first time and is not an error
-          try spark.catalog.clearCache() catch { case _: Throwable => () }
+          try spark.catalog.clearCache() catch { case NonFatal(_) => () }
           val (second, _) = once()
           if (second >= 0) math.min(first, second) else first
         } else first
@@ -84,7 +85,7 @@ object Bench {
       // (the sf10 subset run OOMed on exactly this accumulation).
       // Clearing outside the timed window keeps per-query numbers
       // honest AND independent of sweep ordering.
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
+      try spark.catalog.clearCache() catch { case NonFatal(_) => () }
       name -> t
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
@@ -96,10 +97,13 @@ object Bench {
     println(line)
     // Self-persisted per-query artifact: the driver's own capture of
     // this line has truncated before (r4) — an on-disk copy keeps
-    // regressions attributable round over round.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Path.of("bench_last.json"), line + "\n")
-    catch { case _: Throwable => () }
+    // regressions attributable round over round. Only a full sweep
+    // writes it: a filtered dev run must not replace the sweep's
+    // numbers with a subset.
+    if (only.isEmpty)
+      try java.nio.file.Files.writeString(
+        java.nio.file.Path.of("bench_last.json"), line + "\n")
+      catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components for duplicate-cluster resolution.
@@ -28,13 +29,21 @@ import org.apache.spark.sql.functions._
   *    cannot flip it later); otherwise one directory per round
   *    accumulates until the dir is cleaned externally, which a
   *    multi-hour production run must budget for;
-  *  - the convergence check is an exact set comparison (two left-anti
-  *    counts) on the cached tables — no driver-side data movement;
+  *  - before the first round every partition contracts its own edges
+  *    with a local union-find, so components that fit inside one
+  *    partition need no round at all; its memory is bounded by the
+  *    distinct node ids of that partition's edges;
+  *  - the stop test is one grouped aggregate per checkpoint asking
+  *    whether the edges already form a star forest (no node with two
+  *    parents, no node both parent and child) — no driver-side data
+  *    movement, and no confirming round after the last useful one;
   *  - hot nodes (a component min with millions of members) appear only
   *    as the VALUE side of the final star edges, never as a groupBy
   *    key with unbounded fan-in: large-star groups by each node's own
   *    id, and a node's degree in the contracted graph shrinks every
-  *    round (the paper's load-balance argument).
+  *    round (the paper's load-balance argument). The star-forest test
+  *    does key on roots, but through a map-side partial aggregate, so
+  *    a hot root costs one row per map partition there.
   */
 object Graph {
 
@@ -69,9 +78,11 @@ object Graph {
     * `component` is the minimum node id of the component. Callers with
     * isolated nodes left-join and coalesce to the node's own id.
     *
-    * @param maxIter safety bound; the algorithm provably converges in
-    *   O(log n) rounds, so 25 covers any graph that fits in storage.
-    *   Throws if the bound is hit (a correctness guard, not a budget).
+    * @param maxIter safety bound on the large-star/small-star rounds
+    *   after the partition-local contraction; the algorithm provably
+    *   converges in O(log n) rounds, so 25 covers any graph that fits
+    *   in storage. Throws if the edges are still not a star forest
+    *   after that many rounds (a correctness guard, not a budget).
     * @param checkpointDir when set, per-round state is RELIABLY
     *   checkpointed there (see [[truncate]]) instead of
     *   executor-locally.
@@ -87,33 +98,91 @@ object Graph {
     // files persist unless the session was launched with
     // spark.cleaner.referenceTracking.cleanCheckpoints=true — see
     // the class doc's scale notes.
-    var cur = truncate(edges
+    var cur = truncate(contract(edges
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct(), checkpointDir)
-    var curCount = cur.count()
-    var converged = curCount == 0
+      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))),
+      checkpointDir)
+    // Every edge keeps b < a: contract emits (node, local root) with
+    // the root the minimum of its local component, and both star
+    // steps emit (node, neighbourhood minimum). In a star forest with
+    // b < a every leaf's only neighbour is its centre, which is
+    // smaller, and every centre's neighbours are its leaves, which
+    // are larger: large-star re-emits each (leaf, centre) edge and
+    // small-star then maps it to itself, so the state is a fixed point
+    // and stopping at the first star forest skips no work.
+    // Connectivity is preserved by contract and by every round, so
+    // each star is one whole component and its centre is that
+    // component's minimum id.
     var it = 0
-    while (!converged && it < maxIter) {
-      val next = truncate(smallStar(largeStar(cur)), checkpointDir)
-      val nextCount = next.count()
-      // Exact set equality on two distinct sets: same count and no
-      // element of next outside cur.
-      converged = nextCount == curCount &&
-        next.join(cur, Seq("a", "b"), "left_anti").isEmpty
-      cur = next
-      curCount = nextCount
+    while (!isStarForest(cur)) {
+      if (it >= maxIter)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds")
+      cur = truncate(smallStar(largeStar(cur)), checkpointDir)
       it += 1
     }
-    if (!converged && it >= maxIter)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
-    // Converged state is a star forest: every edge is (member, root).
-    // Roots appear only on the b side — add their self-assignments.
+    // Star forest: every edge is (member, root). Roots appear only on
+    // the b side — add their self-assignments.
     cur.select(col("a").as("node"), col("b").as("component"))
       .union(cur.select(col("b").as("node"), col("b").as("component")))
       .distinct()
   }
+
+  private val pairEncoder =
+    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+
+  /** Partition-local pre-contraction: union-find over each partition's
+    * edges, emitting (node, local root) for every non-root node, where
+    * the root is the minimum id of the node's component within that
+    * partition. Every input edge joins two nodes that now share a
+    * root, and every emitted edge joins two nodes of one component,
+    * so components and their minima are unchanged. A node seen in
+    * several partitions keeps one parent per partition; the rounds
+    * resolve those. The union-find holds one entry per distinct node
+    * id of the partition's edges, so a task's memory is bounded by its
+    * own input, never by the graph. */
+  private def contract(e: DataFrame): DataFrame =
+    e.as(pairEncoder).mapPartitions(localStars)(pairEncoder)
+      .toDF("a", "b").distinct()
+
+  private def localStars(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = new mutable.LongMap[Long]()
+    // Path halving, iterative: a partition-sized chain must not
+    // recurse once per link.
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent(x)
+      while (p != x) {
+        val g = parent(p)
+        parent(x) = g
+        x = g
+        p = parent(x)
+      }
+      x
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      // linking the larger root under the smaller keeps every root
+      // its set's minimum
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    // keys copied first: find() rewrites entries while we walk them
+    parent.keysIterator.toArray.iterator
+      .map(n => (n, find(n)))
+      .filter { case (n, r) => r != n }
+  }
+
+  /** One grouped aggregate: true iff no node has two parents and no
+    * node is both a parent and a child. */
+  private def isStarForest(e: DataFrame): Boolean =
+    e.select(col("a").as("n"), lit(1).as("child"), lit(0).as("parent"))
+      .union(e.select(col("b").as("n"), lit(0), lit(1)))
+      .groupBy("n")
+      .agg(sum(col("child")).as("child"), max(col("parent")).as("parent"))
+      .filter(col("child") > 1 || (col("child") === 1 && col("parent") === 1))
+      .isEmpty
 
   /** Large-star: every node links its LARGER neighbors to the minimum
     * of its neighborhood (including itself). Keeps component minima

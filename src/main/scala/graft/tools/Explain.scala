@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev-only plan auditor: prints the formatted physical plan of named
   * registered queries (or a compact red-flag summary with -s) so plan
@@ -40,7 +41,7 @@ object Explain {
               println(s"\n==== $n ====")
               df.explain("formatted")
             }
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             // getMessage is null for e.g. NPEs — String.valueOf keeps
             // the audit loop alive instead of NPE-ing the reporter.
             println(s"== $n: ERROR ${e.getClass.getSimpleName}: " +

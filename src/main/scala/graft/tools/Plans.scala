@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev-only: print formatted physical plans for selected registered
   * queries — pushdown/broadcast/codegen inspection. */
@@ -21,7 +22,7 @@ object Plans {
       .foreach { case (n, fn) =>
         println(s"\n===== $n =====")
         try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println("PLAN FAIL: " + e.getMessage) }
+        catch { case NonFatal(e) => println("PLAN FAIL: " + e.getMessage) }
       }
     spark.stop()
   }

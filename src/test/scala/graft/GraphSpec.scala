@@ -53,6 +53,31 @@ class GraphSpec extends SparkSpec {
     assert(run(edges) == unionFind(edges))
   }
 
+  test("maxIter = 0: one partition is resolved by contraction alone") {
+    // Every component lies inside the single partition, so the local
+    // union-find already emits a star forest and no round is needed.
+    val edges = Seq((4L, 3L), (3L, 2L), (2L, 1L), (9L, 7L), (8L, 9L))
+    val got = Graph.connectedComponents(edges.toDF("a", "b").repartition(1),
+        maxIter = 0)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == unionFind(edges))
+  }
+
+  test("matches union-find with edges hashed over 6 partitions") {
+    // Hashing scatters each component over several partitions: the
+    // local contraction leaves nodes with several parents, so the
+    // large-star/small-star rounds must finish the job (maxIter = 0
+    // throws on the same input).
+    var s = 777L
+    def next(n: Int): Long = { s = (s * 1103515245L + 12345L) % 2147483648L; s % n }
+    val edges = (1 to 400).map(_ => (next(300), next(300))).filter(e => e._1 != e._2)
+    val df = edges.toDF("a", "b").repartition(6, col("a"))
+    intercept[IllegalStateException](Graph.connectedComponents(df, maxIter = 0))
+    val got = Graph.connectedComponents(df)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == unionFind(edges))
+  }
+
   test("reliable checkpointing: d_components shape with a checkpoint dir") {
     // The production fault-tolerance path: with a checkpoint dir the
     // per-round state goes through eager reliable checkpoint() (files

@@ -234,6 +234,24 @@ class ScaleTechniquesSpec extends SparkSpec {
     assert(cc.count() == 8L * n)
   }
 
+  test("scale smoke: connected components O(log n) rounds hold at 100k-node chains, hash-partitioned") {
+    // The range-partitioned chains above are mostly resolved by the
+    // partition-local union-find before any round runs. Hashing the
+    // edges on `a` over 8 partitions puts a link next to its successor
+    // only about one time in eight, so the large-star/small-star
+    // rounds do the contraction and must still fit the same budget.
+    val n = 12500L
+    val budget = 2 * (64 - java.lang.Long.numberOfLeadingZeros(n)) + 4
+    val edges = spark.range(8L * n)
+      .filter(col("id") % n =!= (n - 1))
+      .select(col("id").as("a"), (col("id") + 1L).as("b"))
+      .repartition(8, col("a"))
+    val cc = graft.operators.Graph.connectedComponents(edges, maxIter = budget)
+    val wrong = cc.filter(col("component") =!= (col("node") - (col("node") % n)))
+    assert(wrong.isEmpty, "component must be the chain minimum")
+    assert(cc.count() == 8L * n)
+  }
+
   test("scale smoke: c_corpus at 16x collapses exact copies to the 1x output") {
     // 16 disjoint-id copies of the sf0.001 corpus: every copy is an
     // exact duplicate of copy 0, so the md5 keeper stage (min doc_id)
