@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A crashing query is reported by name in
@@ -8,21 +7,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single-node bench tuning: with tens of GB of driver heap a
-      // 128 MB dimension build side is cheap, and keeping the
-      // orders/customer side broadcast across the sf1→sf10 decade
-      // avoids the broadcast→shuffle regime cliff measured on
-      // g9_assortativity (31 s → 19 s at sf10). Correctness runs
-      // (Verify, specs) keep Spark defaults.
-      .config("spark.sql.autoBroadcastJoinThreshold", 128 * 1024 * 1024)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.bench(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JIT/codegen/parquet-reader warmup outside the timed loop — the
     // first query otherwise pays ~5s of JVM startup that isn't its own.

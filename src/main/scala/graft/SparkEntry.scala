@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` maps one entry per implemented operator from SURVEY.md §2
   * (plus the LLM-data-pipeline extensions) to a DataFrame builder over
@@ -20,26 +20,41 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TrackingQ.physicsSubmission(spark, "/root/testdata/sf0.001")
 
+  /** Every query module, each listed once. */
+  private def modules: Seq[QueryModule] = Seq(
+    TemporalQ, ScalarQ, AggQ, TrackingQ, LlmQ, MlQ, PipelineQ, IoQ,
+    FeatureStageQ, CorpusQ, EventsQ, GraphQ, CurationQ, Curation2Q,
+    Curation3Q, Curation4Q, Curation5Q, Curation6Q, Curation7Q, Curation8Q,
+    Curation9Q, Curation10Q, Curation11Q, Curation12Q, Curation13Q,
+    Curation14Q, Curation15Q, Curation16Q, Curation17Q, Curation18Q,
+    Curation19Q, Curation20Q, Curation21Q, Curation22Q, Curation23Q,
+    Curation24Q, Curation25Q, Curation26Q, Curation27Q, Curation28Q,
+    Curation29Q, Curation30Q, Curation31Q, Curation32Q, Curation33Q,
+    Curation34Q, Curation35Q, Curation36Q, Curation37Q, Curation38Q,
+    Curation39Q, Curation40Q, Curation41Q, Curation42Q, Curation43Q,
+    Curation44Q, Curation45Q, Curation46Q, Curation47Q, Curation48Q,
+    Curation49Q, Curation50Q, Curation51Q, Curation52Q, Curation53Q,
+    Curation54Q, Curation55Q, Curation56Q, Curation57Q, Curation58Q,
+    Curation59Q, Curation60Q, Curation61Q, Curation62Q, Curation63Q,
+    Curation64Q, Curation65Q, Curation66Q, Curation67Q, Curation68Q,
+    Curation69Q, Curation70Q, Curation71Q, Curation72Q, Curation73Q,
+    Curation74Q, Curation75Q, Curation76Q, Curation77Q)
+
+  /** The union of the modules' maps. A name that two maps both hold
+    * throws instead of letting the later one silently win. */
+  private[graft] def union[V](maps: Seq[Map[String, V]]): Map[String, V] =
+    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val dup = acc.keySet intersect m.keySet
+      require(dup.isEmpty,
+        s"query names registered twice: ${dup.toSeq.sorted.mkString(", ")}")
+      acc ++ m
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    TemporalQ.queries ++ ScalarQ.queries ++ AggQ.queries ++
-      TrackingQ.queries ++ LlmQ.queries ++ MlQ.queries ++
-      PipelineQ.queries ++ IoQ.queries ++ FeatureStageQ.queries ++
-      CorpusQ.queries ++ EventsQ.queries ++ GraphQ.queries ++
-      CurationQ.queries ++ Curation2Q.queries ++ Curation3Q.queries ++
-      Curation4Q.queries ++ Curation5Q.queries ++ Curation6Q.queries ++
-      Curation7Q.queries ++ Curation8Q.queries ++ Curation9Q.queries ++
-      Curation10Q.queries ++ Curation11Q.queries ++ Curation12Q.queries ++ Curation13Q.queries ++ Curation14Q.queries ++ Curation15Q.queries ++ Curation16Q.queries ++ Curation17Q.queries ++ Curation17Q.queries2 ++ Curation18Q.queries ++ Curation19Q.queries ++ Curation20Q.queries ++ Curation21Q.queries ++ Curation22Q.queries ++ Curation23Q.queries ++ Curation24Q.queries ++ Curation25Q.queries ++ Curation26Q.queries ++ Curation27Q.queries ++ Curation28Q.queries ++ Curation29Q.queries ++ Curation30Q.queries ++ Curation31Q.queries ++ Curation32Q.queries ++ Curation33Q.queries ++ Curation34Q.queries ++ Curation35Q.queries ++ Curation36Q.queries ++ Curation37Q.queries ++ Curation38Q.queries ++ Curation39Q.queries ++ Curation40Q.queries ++ Curation41Q.queries ++ Curation42Q.queries ++ Curation43Q.queries ++ Curation44Q.queries ++ Curation45Q.queries ++ Curation46Q.queries ++ Curation47Q.queries ++ Curation48Q.queries ++ Curation49Q.queries ++ Curation50Q.queries ++ Curation51Q.queries ++ Curation52Q.queries ++ Curation53Q.queries ++ Curation54Q.queries ++ Curation55Q.queries ++ Curation56Q.queries ++ Curation57Q.queries ++ Curation58Q.queries ++ Curation59Q.queries ++ Curation60Q.queries ++ Curation61Q.queries ++ Curation62Q.queries ++ Curation63Q.queries ++ Curation64Q.queries ++ Curation65Q.queries ++ Curation66Q.queries ++ Curation67Q.queries ++ Curation68Q.queries ++ Curation69Q.queries ++ Curation70Q.queries ++ Curation71Q.queries ++ Curation72Q.queries ++ Curation73Q.queries ++ Curation74Q.queries ++ Curation75Q.queries ++ Curation76Q.queries ++ Curation77Q.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    union(modules.map(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    TemporalQ.oracle ++ ScalarQ.oracle ++ AggQ.oracle ++
-      TrackingQ.oracle ++ LlmQ.oracle ++ MlQ.oracle ++
-      PipelineQ.oracle ++ IoQ.oracle ++ FeatureStageQ.oracle ++
-      CorpusQ.oracle ++ EventsQ.oracle ++ GraphQ.oracle ++
-      CurationQ.oracle ++ Curation2Q.oracle ++ Curation3Q.oracle ++
-      Curation4Q.oracle ++ Curation5Q.oracle ++ Curation6Q.oracle ++
-      Curation7Q.oracle ++ Curation8Q.oracle ++ Curation9Q.oracle ++
-      Curation10Q.oracle ++ Curation11Q.oracle ++ Curation12Q.oracle ++ Curation13Q.oracle ++ Curation14Q.oracle ++ Curation15Q.oracle ++ Curation16Q.oracle ++ Curation17Q.oracle ++ Curation18Q.oracle ++ Curation19Q.oracle ++ Curation20Q.oracle ++ Curation21Q.oracle ++ Curation22Q.oracle ++ Curation23Q.oracle ++ Curation24Q.oracle ++ Curation25Q.oracle ++ Curation26Q.oracle ++ Curation27Q.oracle ++ Curation28Q.oracle ++ Curation29Q.oracle ++ Curation30Q.oracle ++ Curation31Q.oracle ++ Curation32Q.oracle ++ Curation33Q.oracle ++ Curation34Q.oracle ++ Curation35Q.oracle ++ Curation36Q.oracle ++ Curation37Q.oracle ++ Curation38Q.oracle ++ Curation39Q.oracle ++ Curation40Q.oracle ++ Curation41Q.oracle ++ Curation42Q.oracle ++ Curation43Q.oracle ++ Curation44Q.oracle ++ Curation45Q.oracle ++ Curation46Q.oracle ++ Curation47Q.oracle ++ Curation48Q.oracle ++ Curation49Q.oracle ++ Curation50Q.oracle ++ Curation51Q.oracle ++ Curation52Q.oracle ++ Curation53Q.oracle ++ Curation54Q.oracle ++ Curation55Q.oracle ++ Curation56Q.oracle ++ Curation57Q.oracle ++ Curation58Q.oracle ++ Curation59Q.oracle ++ Curation60Q.oracle ++ Curation61Q.oracle ++ Curation62Q.oracle ++ Curation63Q.oracle ++ Curation64Q.oracle ++ Curation65Q.oracle ++ Curation66Q.oracle ++ Curation67Q.oracle ++ Curation68Q.oracle ++ Curation69Q.oracle ++ Curation70Q.oracle ++ Curation71Q.oracle ++ Curation72Q.oracle ++ Curation73Q.oracle ++ Curation74Q.oracle ++ Curation75Q.oracle ++ Curation76Q.oracle ++ Curation77Q.oracle
+  lazy val oracleSql: Map[String, String] = union(modules.map(_.oracle))
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -12,19 +11,7 @@ object Verify {
     // driver always runs the full set).
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Pandas-equivalent semantics: parse/cast failures yield null,
-      // matching both the reference and the DuckDB oracle.
-      .config("spark.sql.ansi.enabled", "false")
-      // Legacy-schema tolerance: if events.parquet ever ships
-      // TIMESTAMP(NANOS) again, read nanos as long (no-op for the
-      // current TIMESTAMP(MICROS) encoding).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -3,9 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** M4/A8: residual-learning ensemble composition
-  * (`main_cuda.py:1009-1126`) and fold-ensemble averaging
-  * (`main_cuda.py:1503-1521`).
+/** M4: residual-learning ensemble composition
+  * (`main_cuda.py:1009-1126`).
   *
   * All pure column algebra over prediction DataFrames — distributed,
   * shuffle-free except the tiny global RMSE aggregations (1-row
@@ -29,10 +28,6 @@ object ResidualEnsemble {
   /** Weighted blend of prediction columns. */
   def blend(preds: Seq[Column], weights: Seq[Double]): Column =
     preds.zip(weights).map { case (p, w) => p * lit(w) }.reduce(_ + _)
-
-  /** A8: mean across per-fold prediction columns. */
-  def foldMean(preds: Seq[Column]): Column =
-    preds.reduce(_ + _) / lit(preds.size)
 
   /** Compose a residual stage: final = base + residual_pred. */
   def compose(base: Column, residualPred: Column): Column = base + residualPred

@@ -135,11 +135,6 @@ object Dedup {
         lit(Text.P))
     }: _*)
 
-  /** One row per (doc, distinct gram hash) — the gram lambdas run
-    * exactly once per doc; docs with no grams drop out. */
-  def gramHashRows(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("doc"), explode(gramHashes(col(textCol))).as("gh"))
-
   /** The scale-path MinHash: signature as 12 BIGINT columns m0..m11
     * via explode + codegen'd min-aggregates — no interpreted lambda in
     * the aggregation, one hash-agg shuffle on doc id. Docs whose gram

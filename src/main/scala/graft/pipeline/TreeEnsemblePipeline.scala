@@ -55,12 +55,6 @@ object TreeEnsemblePipeline {
     (feats, last)
   }
 
-  /** [[lastWithFeaturesTracked]] for one-shot sessions: the interior
-    * cache is LRU-evictable and released with the session — long-lived
-    * callers should use the tracked variant and unpersist. */
-  def lastWithFeatures(frames: DataFrame): DataFrame =
-    lastWithFeaturesTracked(frames)._1
-
   val FeatureCols: Seq[String] = Seq(
     "x", "y", "s", "vx", "vy", "dist_center", "dist_sideline", "is_offense",
     "gnn_w_speed", "gnn_mean_dist", "gnn_min_dist", "gnn_n_neighbors",

@@ -14,7 +14,7 @@ import Q._
   * the small dimension; the grouped-transform windows share one
   * exchange on user_id.
   */
-object AggQ {
+object AggQ extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
     // A2: multi-agg with named outputs incl. the pre-multiplied

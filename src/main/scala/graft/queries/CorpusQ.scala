@@ -33,7 +33,7 @@ import Q._
   *  - the split keys off the content fingerprint, so the assignment
   *    is stable under re-sharding and dedup-order changes.
   */
-object CorpusQ {
+object CorpusQ extends QueryModule {
 
   private val EnStop = Seq("the", "a", "of", "and", "to", "in", "is")
 
@@ -344,8 +344,6 @@ object CorpusQ {
   // (those constants are hard-wired to `FROM documents`; the pipeline
   // needs them over `keep1`).
   private val P = Text.P
-  private val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
-  private val ToksSql = "list_filter(string_split(t, ' '), w -> length(w) > 0)"
   private def foldSql(e: String) =
     s"""CASE WHEN length($e) > 0 THEN list_reduce(
        | list_prepend(0::BIGINT, list_transform(range(1, length($e) + 1),

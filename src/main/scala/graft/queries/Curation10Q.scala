@@ -13,7 +13,7 @@ import Q._
   * triangle areas are fully cross-multiplied integer determinants
   * with a packed-BIGINT per-bucket argmax.
   */
-object Curation10Q {
+object Curation10Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -135,7 +135,7 @@ object Curation10Q {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  import LlmQ.{NormSql, GramsSql, slotSql}
+  import LlmQ.{GramsSql, slotSql}
 
   val oracle: Map[String, String] = Map(
 

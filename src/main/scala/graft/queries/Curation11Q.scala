@@ -11,7 +11,7 @@ import Q._
   * constants, the running LLR is an exact BIGINT window sum, and the
   * accept/reject decision is an integer threshold crossing.
   */
-object Curation11Q {
+object Curation11Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -9,7 +9,7 @@ import Q._
   * scratch data and read it back, so the oracle reads the SOURCE
   * table: exact value equality proves the round-trip lossless.
   */
-object Curation12Q {
+object Curation12Q extends QueryModule {
 
   // per-prefix per-JVM reused scratch, deleted on JVM exit (both
   // writers run mode=overwrite, so reuse is a rewrite — see IoQ)

@@ -20,7 +20,7 @@ import Q._
   * swap it for an approx-quantile boundary on the integer score
   * (a15-style) and keep the cut integer-decided.
   */
-object Curation13Q {
+object Curation13Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -84,19 +84,15 @@ object Curation13Q {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
-  private val ToksSql =
-    s"list_filter(string_split($NormSql, ' '), w -> length(w) > 0)"
-
   val oracle: Map[String, String] = Map(
 
     "c_curation" ->
       s"""WITH base AS (SELECT doc_id, lang, text,
-         |  len($ToksSql)::BIGINT AS n_tok FROM documents),
+         |  len($NormToksSql)::BIGINT AS n_tok FROM documents),
          |gated AS (SELECT * FROM base WHERE n_tok >= 20),
          |keep AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
          |canon AS (SELECT g.* FROM gated g JOIN keep USING (doc_id)),
-         |tk AS (SELECT doc_id, lang, unnest($ToksSql) AS tok FROM canon),
+         |tk AS (SELECT doc_id, lang, unnest($NormToksSql) AS tok FROM canon),
          |raw AS (SELECT tok, count(*) AS n_r,
          |  sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS n_t
          | FROM tk GROUP BY 1),

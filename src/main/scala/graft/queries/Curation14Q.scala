@@ -11,7 +11,7 @@ import Q._
   * carry no float drift; assortativity is exact Pearson sums with one
   * IEEE tail mirrored token-for-token.
   */
-object Curation14Q {
+object Curation14Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

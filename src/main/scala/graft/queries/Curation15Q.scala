@@ -9,7 +9,7 @@ import Q._
   * aggregates the SOURCE table; exact equality proves the path
   * lossless and the audit honest.
   */
-object Curation15Q {
+object Curation15Q extends QueryModule {
 
   // per-prefix per-JVM reused scratch, deleted on JVM exit (see IoQ;
   // o20 pre-cleans its rename target below, s17 rewrites fixed names)

@@ -11,7 +11,7 @@ import Q._
   * over exact integers mirrored token-for-token; stopword flags are
   * integer cross-products.
   */
-object Curation16Q {
+object Curation16Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -9,7 +9,7 @@ import Q._
   * within-group pair join; rule confidence is one division of exact
   * support counts.
   */
-object Curation17Q {
+object Curation17Q extends QueryModule {
 
   /** Shared per-group pair budget for a56_kendall / a58_theilsen —
     * ONE constant feeds both the Spark sampling rule and the oracle
@@ -75,9 +75,7 @@ object Curation17Q {
           col("fab"), col("fa"), col("fb"),
           (col("fab").cast("double") / col("fa")).as("confidence"),
           expr("fab * n_tx * 1000000 DIV (fa * fb)").as("lift_ppm"))
-    }))
-
-  val queries2: Map[String, QueryFn] = Map(
+    }),
 
     // KMV (k-minimum-values) distinct-count sketch: hash every key
     // onto the polynomial lattice, keep the k=64 smallest per group,

@@ -12,7 +12,7 @@ import Q._
   * by a total (double, pair-id) order — each slope is ONE division of
   * exact integers, so both engines sort identical doubles.
   */
-object Curation18Q {
+object Curation18Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -17,7 +17,7 @@ import Q._
   * hash-matches with RAW doubles (no rounding; the v_randproj rule).
   * IsotonicSpec ties the MLlib PAV predictions to this twin.
   */
-object Curation19Q {
+object Curation19Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

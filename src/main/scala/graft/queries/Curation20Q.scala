@@ -11,7 +11,7 @@ import Q._
   * divisions (the v_randproj raw-double rule); everything else is
   * integer-decided.
   */
-object Curation20Q {
+object Curation20Q extends QueryModule {
 
   private val DayUs = 86400L * 1000000L
 

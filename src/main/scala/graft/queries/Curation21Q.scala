@@ -10,7 +10,7 @@ import Q._
   * decisions are integer-decided; emitted floats are single
   * divisions of exact BIGINTs.
   */
-object Curation21Q {
+object Curation21Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

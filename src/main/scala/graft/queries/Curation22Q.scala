@@ -24,7 +24,7 @@ import Q._
   * non-overlapping, so the fixpoint is engine-identical. Ties in the
   * argmax break on the pair string ascending — a total order.
   */
-object Curation22Q {
+object Curation22Q extends QueryModule {
 
   private val Rounds = 5
 

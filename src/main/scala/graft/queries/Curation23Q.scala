@@ -9,7 +9,7 @@ import Q._
   * count/sum is exact; emitted floats are fixed chains of divisions
   * of exact BIGINTs, mirrored token-for-token.
   */
-object Curation23Q {
+object Curation23Q extends QueryModule {
 
   private val DayUs = 86400L * 1000000L
 

@@ -8,7 +8,7 @@ import Q._
   * concurrency profiling, and Neyman sampling allocation. Net-new vs
   * the reference (SURVEY.md §2.11).
   */
-object Curation24Q {
+object Curation24Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -11,7 +11,7 @@ import Q._
   * dyadic EWMA recursions, exact-BIGINT moments with pinned-order
   * double products, explicit multiplication chains instead of pow().
   */
-object Curation25Q {
+object Curation25Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -7,7 +7,7 @@ import Q._
   * expected calibration error. Net-new vs the reference
   * (SURVEY.md §2.11). All integers; ECE is ONE division.
   */
-object Curation26Q {
+object Curation26Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -9,7 +9,7 @@ import Q._
   * vs the reference (SURVEY.md §2.11). Exact integers everywhere;
   * floats are pinned-order chains of divisions of exact BIGINTs.
   */
-object Curation27Q {
+object Curation27Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

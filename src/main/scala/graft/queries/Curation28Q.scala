@@ -8,7 +8,7 @@ import Q._
   * (progressive-validation) evaluation. Net-new vs the reference
   * (SURVEY.md §2.11). All integer-decided.
   */
-object Curation28Q {
+object Curation28Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

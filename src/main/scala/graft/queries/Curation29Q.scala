@@ -10,7 +10,7 @@ import Q._
   * detection, walk sampling, or hierarchical table digest anywhere
   * in the surface). All integer-decided.
   */
-object Curation29Q {
+object Curation29Q extends QueryModule {
 
   /** Label packing base for the LPA argmax: (count, smallest-label)
     * as one BIGINT max — count * 2^32 + (2^32-1-label). */

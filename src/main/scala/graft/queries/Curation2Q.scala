@@ -18,7 +18,7 @@ import Q._
   * components, cents), every keep/rank decision is integer-decided,
   * and every emitted float is a single IEEE division of exact BIGINTs.
   */
-object Curation2Q {
+object Curation2Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -195,15 +195,11 @@ object Curation2Q {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
-  private val ToksSql =
-    s"list_filter(string_split($NormSql, ' '), w -> length(w) > 0)"
-
   val oracle: Map[String, String] = Map(
 
     "d_ngram_coverage" ->
-      s"""WITH tn AS (SELECT doc_id, $ToksSql AS t,
-         |  len($ToksSql)::BIGINT AS n_tok FROM documents),
+      s"""WITH tn AS (SELECT doc_id, $NormToksSql AS t,
+         |  len($NormToksSql)::BIGINT AS n_tok FROM documents),
          |grams AS (SELECT doc_id,
          |  unnest(list_transform(range(1, n_tok - 3),
          |    i -> {'st': i, 'g': array_to_string(t[i:i+4], ' ')})) AS s
@@ -243,7 +239,7 @@ object Curation2Q {
         |FROM documents""".stripMargin,
 
     "t_dsir" ->
-      s"""WITH toks AS (SELECT doc_id, lang, unnest($ToksSql) AS tok
+      s"""WITH toks AS (SELECT doc_id, lang, unnest($NormToksSql) AS tok
          | FROM documents),
          |raw AS (SELECT tok, count(*) AS n_r,
          |  sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS n_t
@@ -262,7 +258,7 @@ object Curation2Q {
 
     "t_bpe_learn" ->
       s"""WITH words AS (SELECT w, count(*) AS f
-         | FROM (SELECT unnest($ToksSql) AS w FROM documents) GROUP BY 1),
+         | FROM (SELECT unnest($NormToksSql) AS w FROM documents) GROUP BY 1),
          |p0 AS (SELECT w, f, unnest(range(1, length(w))) AS j
          | FROM words WHERE length(w) >= 2),
          |pairs AS (SELECT substr(w, j::INT, 2) AS pair, sum(f)::BIGINT AS cnt

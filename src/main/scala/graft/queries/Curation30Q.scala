@@ -15,7 +15,7 @@ import Q._
   * integer-decided or exact-rational-then-round — no engine-sensitive
   * float path decides a row.
   */
-object Curation30Q {
+object Curation30Q extends QueryModule {
 
   /** Vote packing for the k-NN argmax: (count, smallest-label) as one
     * BIGINT max — count * 16 + (15 - label). Labels are 0..9 and vote
@@ -194,14 +194,6 @@ object Curation30Q {
 
   private val P = Text.P
 
-  /** Non-distinct token lists of normalized text (multiplicity kept —
-    * ROUGE clips counts, it does not dedup). */
-  private val RougeTokCte =
-    s"""tok AS (SELECT doc_id,
-       | list_filter(string_split(${LlmQ.NormSql}, ' '),
-       |   w -> length(w) > 0) AS toks
-       | FROM documents)""".stripMargin
-
   val oracle: Map[String, String] = Map(
 
     "g13_modularity" ->
@@ -232,7 +224,7 @@ object Curation30Q {
         .stripMargin,
 
     "t_rouge" ->
-      s"""WITH $RougeTokCte,
+      s"""WITH $TokCte,
          |uni AS (SELECT doc_id, g, count(*)::BIGINT AS c FROM
          |  (SELECT doc_id, unnest(toks) AS g FROM tok) GROUP BY 1, 2),
          |big AS (SELECT doc_id, g, count(*)::BIGINT AS c FROM

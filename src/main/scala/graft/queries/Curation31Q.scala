@@ -14,7 +14,7 @@ import Q._
   * bitwise-pinned IEEE chains; the only transcendental is BM25's
   * single-ln idf (the audited t_tfidf class).
   */
-object Curation31Q {
+object Curation31Q extends QueryModule {
 
   /** Exact integer milli-lattice projection of a float embedding —
     * the v_mips_topk lattice: every pairwise dot/distance over these
@@ -229,7 +229,7 @@ object Curation31Q {
 
     "t_bm25" ->
       s"""WITH tok AS (SELECT doc_id,
-         |  list_filter(string_split(${LlmQ.NormSql}, ' '),
+         |  list_filter(string_split($NormSql, ' '),
          |    w -> length(w) > 0) AS toks FROM documents),
          |tf AS (SELECT doc_id, g AS term, count(*)::BIGINT AS tf FROM
          |  (SELECT doc_id, unnest(toks) AS g FROM tok) GROUP BY 1, 2),

@@ -14,7 +14,7 @@ import Q._
   * floats are MMR's audited cosine chains, integerized at 1e-6
   * before any decision.
   */
-object Curation32Q {
+object Curation32Q extends QueryModule {
 
   /** Viterbi lane width: packed acc = v0·2^20 + v1. Costs are
     * milli-nat integers bounded by 16 steps × ~3.2k + the idle-lane

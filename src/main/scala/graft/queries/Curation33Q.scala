@@ -13,7 +13,7 @@ import Q._
   * decisions are integer; the float tails are pinned IEEE chains or
   * the audited single-ln micro-nat class.
   */
-object Curation33Q {
+object Curation33Q extends QueryModule {
 
   /** WL hash lattice: commutative per-neighbor mixes summed as
     * BIGINTs then folded mod P — order/partitioning-independent (the
@@ -219,7 +219,7 @@ object Curation33Q {
 
   private val TokCte =
     s"""tok AS (SELECT doc_id, lang,
-       | list_filter(string_split(${LlmQ.NormSql}, ' '),
+       | list_filter(string_split($NormSql, ' '),
        |   w -> length(w) > 0) AS toks
        | FROM documents)""".stripMargin
 

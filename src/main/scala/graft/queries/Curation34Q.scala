@@ -13,7 +13,7 @@ import Q._
   * migration decisions are integers; emitted floats are single
   * divisions of exact BIGINTs.
   */
-object Curation34Q {
+object Curation34Q extends QueryModule {
 
   /** LCM(1..10) — every precision@i and 1/rank with i,rank ≤ 10 is an
     * EXACT integer on this lattice. */
@@ -163,12 +163,6 @@ object Curation34Q {
     }))
 
   // ---- oracle SQL ----------------------------------------------------
-
-  private val TokCte =
-    s"""tok AS (SELECT doc_id,
-       | list_filter(string_split(${LlmQ.NormSql}, ' '),
-       |   w -> length(w) > 0) AS toks
-       | FROM documents)""".stripMargin
 
   val oracle: Map[String, String] = Map(
 

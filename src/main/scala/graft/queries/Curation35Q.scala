@@ -14,7 +14,7 @@ import Q._
   * hazard. Net-new vs the 364-query surface (grep-checked: Dunning
   * G² is a different statistic from a51_sprt's Wald LLR increments).
   */
-object Curation35Q {
+object Curation35Q extends QueryModule {
 
   /** Stump grid: thresholds −750+100·i milli over embedding dims 0-1,
     * both polarities — 2·16·2 = 64 candidates evaluated in ONE agg. */
@@ -213,12 +213,6 @@ object Curation35Q {
   }
 
   // ---- oracle SQL ----------------------------------------------------
-
-  private val TokCte =
-    s"""tok AS (SELECT doc_id,
-       | list_filter(string_split(${LlmQ.NormSql}, ' '),
-       |   w -> length(w) > 0) AS toks
-       | FROM documents)""".stripMargin
 
   /** DuckDB stump prediction for grid row columns f/thr/pol. */
   private val PredSql =

@@ -14,7 +14,7 @@ import Q._
   * 368-query surface (grep-checked; "Cramer" in PipelineQ is
   * Cramer's RULE, a different thing).
   */
-object Curation36Q {
+object Curation36Q extends QueryModule {
 
   private val P = Text.P
 
@@ -279,7 +279,7 @@ object Curation36Q {
         |FROM t""".stripMargin,
 
     "d_cdc_chunks" ->
-      s"""WITH nrm AS (SELECT doc_id, ${LlmQ.NormSql} AS t FROM documents),
+      s"""WITH nrm AS (SELECT doc_id, $NormSql AS t FROM documents),
          |h AS (SELECT doc_id, length(t)::BIGINT AS n_chars_az,
          |  list_filter($CdcHashSql, x -> x % 64 = 0) AS bounds
          | FROM nrm)

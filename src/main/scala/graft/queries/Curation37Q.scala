@@ -14,7 +14,7 @@ import Q._
   * Laplace-noised counts (the DP release mechanism with an auditable
   * noise draw). Net-new vs the 372-query surface (grep-checked).
   */
-object Curation37Q {
+object Curation37Q extends QueryModule {
 
   private val P = Text.P
   private val NPerm = 100
@@ -170,12 +170,6 @@ object Curation37Q {
     }))
 
   // ---- oracle SQL ----------------------------------------------------
-
-  private val TokCte =
-    s"""tok AS (SELECT doc_id,
-       | list_filter(string_split(${LlmQ.NormSql}, ' '),
-       |   w -> length(w) > 0) AS toks
-       | FROM documents)""".stripMargin
 
   /** Poly-hash fold of a string expression (Text.polyHash mirror). */
   private def hashSql(e: String) =

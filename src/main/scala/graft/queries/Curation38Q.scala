@@ -10,7 +10,7 @@ import Q._
   * attribution for the additive AdaBoost model, and Cohen's d effect
   * size. Net-new vs the 376-query surface (grep-checked).
   */
-object Curation38Q {
+object Curation38Q extends QueryModule {
 
   /** Per-round edge support = closed wedges: for undirected survivors
     * E (a<b), wedges through a shared neighbor c closed by (a,b). One

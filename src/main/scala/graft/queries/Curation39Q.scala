@@ -14,7 +14,7 @@ import Q._
   * rerank boundary is the rounded-cosine total order, and DeLong's
   * placement values live on the doubled 1/(2n) lattice.
   */
-object Curation39Q {
+object Curation39Q extends QueryModule {
 
   private val NPerm = 100
 

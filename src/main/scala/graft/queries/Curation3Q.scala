@@ -13,7 +13,7 @@ import Q._
   * integerize on the micro lattice, and each emitted float is an IEEE
   * chain over exact integers mirrored token-for-token in the oracle.
   */
-object Curation3Q {
+object Curation3Q extends QueryModule {
 
   private val SuppOffset = 1000000000L
 

@@ -14,7 +14,7 @@ import Q._
   * pattern); everything that decides is integer or a single division
   * of exact BIGINTs.
   */
-object Curation40Q {
+object Curation40Q extends QueryModule {
 
   /** Harmonic lattice: LCM(1..4) = 12, so 12/d is exact for every
     * bounded-hop distance. */
@@ -203,12 +203,6 @@ object Curation40Q {
     }))
 
   // ---- oracle SQL ----------------------------------------------------
-
-  private val TokCte =
-    s"""tok AS (SELECT doc_id,
-       | list_filter(string_split(${LlmQ.NormSql}, ' '),
-       |   w -> length(w) > 0) AS toks
-       | FROM documents)""".stripMargin
 
   /** One per-seed BFS hop for g17. */
   private def hop(h: Int): String =

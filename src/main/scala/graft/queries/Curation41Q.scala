@@ -12,7 +12,7 @@ import Q._
   * the state-maintenance shape; o23's "replay" is commit-log replay,
   * a different thing entirely).
   */
-object Curation41Q {
+object Curation41Q extends QueryModule {
 
   /** 20-bit lattice hash: low 6 bits pick the register, the top 14
     * feed the rho (trailing-zero) count — every step engine-portable

@@ -20,7 +20,7 @@ import Q._
   * RAW — round() is engine-divergent on bitwise-equal inputs, pinned
   * folds are not.
   */
-object Curation42Q {
+object Curation42Q extends QueryModule {
 
   private val DayUs = 86400000000L
 

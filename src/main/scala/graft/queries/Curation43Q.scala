@@ -14,7 +14,7 @@ import Q._
   * counts are exact integers; the only doubles are single divisions /
   * sqrt of exact operands in pinned order, emitted raw.
   */
-object Curation43Q {
+object Curation43Q extends QueryModule {
 
   private val WeekUs = 7L * 86400000000L
 

@@ -12,7 +12,7 @@ import Q._
   * round-trip (the 100 TB point-lookup pruning knob). Net-new vs the
   * 400-query surface (grep-checked).
   */
-object Curation44Q {
+object Curation44Q extends QueryModule {
 
   // one reused per-prefix dir per JVM, deleted on exit (see Q.scratchDir)
   private def scratchDir(prefix: String): String = Q.scratchDir(prefix)

@@ -13,7 +13,7 @@ import Q._
   * IPF iteration is a bounded-cell (≤ 5×7) pinned-order fold mirrored
   * step-for-step by a recursive-CTE list oracle (the w68 pattern).
   */
-object Curation45Q {
+object Curation45Q extends QueryModule {
 
   private val HourUs = 3600000000L
 

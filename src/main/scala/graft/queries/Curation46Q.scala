@@ -12,7 +12,7 @@ import Q._
   * 405-query surface (grep-checked). Every statistic is exact
   * integers up to at most ONE closing division.
   */
-object Curation46Q {
+object Curation46Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

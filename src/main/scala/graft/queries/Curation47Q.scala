@@ -16,7 +16,7 @@ import graft.operators.{DistRank, Similarity}
   * the v_randproj quality gate, the s_ivf_recall pattern for the
   * projection index). Net-new vs the 408-query surface (grep-checked).
   */
-object Curation47Q {
+object Curation47Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

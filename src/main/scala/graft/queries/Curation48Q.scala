@@ -11,7 +11,7 @@ import Q._
   * backfill primitive; a static overwrite would wipe the table).
   * Net-new vs the 411-query surface (grep-checked).
   */
-object Curation48Q {
+object Curation48Q extends QueryModule {
 
   // one reused per-prefix dir per JVM, deleted on exit (see Q.scratchDir)
   private def scratchDir(prefix: String): String = Q.scratchDir(prefix)

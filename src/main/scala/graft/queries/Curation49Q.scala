@@ -11,7 +11,7 @@ import Q._
   * Both metrics reduce to exact integer counts with ONE closing
   * division — no float path before the emitted quotient.
   */
-object Curation49Q {
+object Curation49Q extends QueryModule {
 
   private val DayUs = 86400000000L
 

@@ -12,7 +12,7 @@ import Q._
   * divisions; Wilson mirrors its IEEE op chain token-for-token over
   * exact integers.
   */
-object Curation4Q {
+object Curation4Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -15,7 +15,7 @@ import graft.operators.Similarity
   * terms, the a27_psi class, folded in sorted-state order).
   * Net-new vs the 415-query surface (grep-checked).
   */
-object Curation50Q {
+object Curation50Q extends QueryModule {
 
   /** Deterministic (bitwise-portable) 8-dim quantized projection +
     * exact integer covariance of the embeddings table, shared by the

@@ -15,7 +15,7 @@ import Q._
   *    differences, so the numerator is an exact integer too).
   * Net-new vs the 417-query surface (grep-checked).
   */
-object Curation51Q {
+object Curation51Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

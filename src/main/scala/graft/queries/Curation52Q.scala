@@ -14,7 +14,7 @@ import Q._
   *    densification screen), on the same within-nation co-supply
   *    graph as g2_triangles.
   */
-object Curation52Q {
+object Curation52Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -26,7 +26,7 @@ import Q._
   * global sorts; the a99 median windows partition by returnflag over
   * the (flag, cent)-aggregated frame, the a29_wmedian precedent.
   */
-object Curation53Q {
+object Curation53Q extends QueryModule {
 
   /** One-way ANOVA over a k-row group-moment frame
     * (g: group key, n: BIGINT count, sv: BIGINT Σv,

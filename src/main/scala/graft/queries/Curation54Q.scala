@@ -23,7 +23,7 @@ import Q._
   * stage is one keyed shuffle (vec_id or cid grain); the k×k
   * cross-cluster stages are 8×8 bounded frames.
   */
-object Curation54Q {
+object Curation54Q extends QueryModule {
 
   private val K = 8
 

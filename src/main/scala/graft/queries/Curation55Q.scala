@@ -24,7 +24,7 @@ import graft.operators.DistRank
   * exact DECIMAL(38,0) with ONE final division, VARCHAR-routed in
   * the oracle (round-9 trap 7).
   */
-object Curation55Q {
+object Curation55Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -23,7 +23,7 @@ import graft.operators.DistRank
   * growth); Kuiper rides the a35_ks value-lattice cumsum; the chart
   * is one groupBy plus a broadcast scalar frame.
   */
-object Curation56Q {
+object Curation56Q extends QueryModule {
 
   private val Scale = 1000000L
   private val Iters = 6

@@ -27,7 +27,7 @@ import Q._
   * recursion on that metadata, mirrored by a recursive CTE over
   * per-step scalars in the oracle (struct accumulators are trap-8).
   */
-object Curation57Q {
+object Curation57Q extends QueryModule {
 
   private val DayUs = 86400000000L
 

@@ -14,7 +14,7 @@ import Q._
   * S = 100·sentences/words, emitted raw. One scan, no shuffle beyond
   * the parquet read.
   */
-object Curation58Q {
+object Curation58Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import Q._
 
@@ -17,11 +16,7 @@ import Q._
   * left-association); everything upstream of the folds is an exact
   * BIGINT cell count from ONE grouped aggregate over orders.
   */
-object Curation59Q {
-
-  /** Pinned left fold over a sorted collected struct list. */
-  private def fold(xs: Column)(f: (Column, Column) => Column): Column =
-    aggregate(xs, lit(0.0), f)
+object Curation59Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

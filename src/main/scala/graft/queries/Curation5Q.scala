@@ -10,7 +10,7 @@ import Q._
   * sum on the cent lattice; emitted floats are fixed IEEE chains over
   * exact integers mirrored token-for-token in the oracle.
   */
-object Curation5Q {
+object Curation5Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

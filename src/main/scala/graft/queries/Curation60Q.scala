@@ -15,7 +15,7 @@ import Q._
   * Qini's per-decile value is ONE division of exact cross-multiplied
   * BIGINT cumulative cells.
   */
-object Curation60Q {
+object Curation60Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -130,12 +130,6 @@ object Curation60Q {
     }))
 
   // ---- oracle SQL ----------------------------------------------------
-
-  private val TokCte =
-    s"""tok AS (SELECT doc_id,
-       | list_filter(string_split(${LlmQ.NormSql}, ' '),
-       |   w -> length(w) > 0) AS toks
-       | FROM documents)""".stripMargin
 
   val oracle: Map[String, String] = Map(
 

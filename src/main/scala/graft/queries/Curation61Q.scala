@@ -13,7 +13,7 @@ import Q._
   * OVERLAPPED the natural layout's intervals are). Net-new vs the
   * 440-query surface (grep-checked: no rsi/jaro/overlap_depth).
   */
-object Curation61Q {
+object Curation61Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -16,7 +16,7 @@ import Q._
   * vs the 443-query surface (grep-checked: no ams/pettitt/hosmer).
   * All three are exact-integer constructions end to end.
   */
-object Curation62Q {
+object Curation62Q extends QueryModule {
 
   /** 16 engine-portable ±1 hash signs for user u: multiplicative
     * hashing h_i(u) = ((u+1)·C_i) mod P with P = 2³¹−1 and fixed odd

@@ -14,7 +14,7 @@ import Q._
   * time-varying gain, not a fixed alpha). Net-new vs the 446-query
   * surface (grep-checked: no multiprobe/kalman).
   */
-object Curation63Q {
+object Curation63Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -12,7 +12,7 @@ import Q._
   * flatMapGroupsWithState harness). Net-new vs the 447-query surface
   * (grep-checked: no theta/stream_kalman).
   */
-object Curation64Q {
+object Curation64Q extends QueryModule {
 
   private val P = graft.functions.Text.P // 1e9+7 hash lattice
   private val K = 64

@@ -12,7 +12,7 @@ import Q._
   * this weighs them). Net-new vs the 449-query surface (grep-checked:
   * no brunner/rolling entropy).
   */
-object Curation65Q {
+object Curation65Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -15,7 +15,7 @@ import Q._
   * mines the informative ones). Net-new vs the 451-query surface
   * (grep-checked: no incremental/hard_neg).
   */
-object Curation66Q {
+object Curation66Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -118,7 +118,7 @@ object Curation66Q {
 
     "d_incremental" -> {
       val sigCte =
-        s"""norm AS (SELECT doc_id, ${LlmQ.NormSql} AS t FROM documents),
+        s"""norm AS (SELECT doc_id, $NormSql AS t FROM documents),
            |g AS (SELECT doc_id, ${LlmQ.GramsSql} AS grams FROM norm),
            |sig AS (SELECT doc_id, ${(0 until 12).map(k =>
               s"${LlmQ.slotSql(k)} AS m$k").mkString(", ")}

@@ -12,7 +12,7 @@ import Q._
   * hypothesized one). Net-new vs the 453-query surface (grep-checked:
   * no woe/iv/chow).
   */
-object Curation67Q {
+object Curation67Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -27,11 +27,7 @@ import Q._
   * DOMAIN (≤ ~56k cent ticks), not the row count — scale-safe at any
   * N.
   */
-object Curation68Q {
-
-  /** Pinned left fold over a sorted collected struct list. */
-  private def fold(xs: Column)(f: (Column, Column) => Column): Column =
-    aggregate(xs, lit(0.0), f)
+object Curation68Q extends QueryModule {
 
   private val dec = "decimal(38,0)"
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Q._
@@ -21,10 +20,7 @@ import Q._
   * folds over domain-bounded sorted lists (≤ ~56k value ticks, ≤ 10
   * type pairs) — scale-independent of N.
   */
-object Curation69Q {
-
-  private def fold(xs: Column)(f: (Column, Column) => Column): Column =
-    aggregate(xs, lit(0.0), f)
+object Curation69Q extends QueryModule {
 
   private val dec = "decimal(38,0)"
 

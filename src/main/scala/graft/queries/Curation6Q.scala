@@ -14,7 +14,7 @@ import Q._
   * exact support counting, so its size-≤2 itemsets oracle as plain
   * SQL aggregates with the identical ceil(minSupport·n) threshold.
   */
-object Curation6Q {
+object Curation6Q extends QueryModule {
 
   private val Stop = Seq("the", "a", "of", "and", "to", "in", "is", "it")
 

@@ -25,7 +25,7 @@ import Q._
   * integer-decided via the t_winnow packed-argmax trick and ×6.25 is
   * dyadic-exact.
   */
-object Curation70Q {
+object Curation70Q extends QueryModule {
 
   /** Daily revenue cents: the bounded (calendar-span) series. */
   private def daily(s: org.apache.spark.sql.SparkSession, dir: String) =

@@ -26,7 +26,7 @@ import Q._
   * entirely on the ×n_cal integer lattice — no float ever
   * accumulates.
   */
-object Curation71Q {
+object Curation71Q extends QueryModule {
 
   private def dailyOhlc(s: org.apache.spark.sql.SparkSession,
                         dir: String) = {

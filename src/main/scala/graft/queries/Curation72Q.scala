@@ -19,7 +19,7 @@ import Q._
   * and then ride SHARED pinned SQL text (the w78 ladder pattern) —
   * sqrt/± are correctly rounded, so raw outputs are bit-portable.
   */
-object Curation72Q {
+object Curation72Q extends QueryModule {
 
   /** VIF ladder over r12/r13/r23 (pairwise correlations, doubles):
     * R⁻¹ diagonals of the 3×3 unit-diagonal correlation matrix. */

@@ -27,10 +27,7 @@ import Q._
   * graph; chrF is exact clipped-count arithmetic with pinned F
   * chains.
   */
-object Curation73Q {
-
-  private def fold(xs: Column)(f: (Column, Column) => Column): Column =
-    aggregate(xs, lit(0.0), f)
+object Curation73Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -17,7 +17,7 @@ import Q._
   * false-positive rate in-band). Net-new vs the 475-query surface
   * (grep-checked: no damerau/wht/hadamard/bloom_handshake).
   */
-object Curation74Q {
+object Curation74Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -146,7 +146,6 @@ object Curation74Q {
   // ---- oracle SQL ----------------------------------------------------
 
   private val P = graft.functions.Text.P
-  private val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
   private val FoldSql =
     s"""CASE WHEN length(t) > 0 THEN list_reduce(
        | list_prepend(0::BIGINT, list_transform(range(1, length(t) + 1),

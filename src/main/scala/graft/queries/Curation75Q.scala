@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import Q._
 
@@ -21,10 +21,7 @@ import Q._
   * grids; the only libm (ln/exp) sits behind r6 on off-boundary
   * composites (rule 3).
   */
-object Curation75Q {
-
-  private def fold(xs: Column)(f: (Column, Column) => Column): Column =
-    aggregate(xs, lit(0.0), f)
+object Curation75Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -140,10 +137,6 @@ object Curation75Q {
     }))
 
   // ---- oracle SQL ----------------------------------------------------
-
-  private val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
-  private val ToksSql =
-    "list_filter(string_split(t, ' '), w -> length(w) > 0)"
 
   val oracle: Map[String, String] = Map(
 

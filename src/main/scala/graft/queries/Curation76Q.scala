@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import Q._
 
@@ -18,10 +17,7 @@ import Q._
   * surface (grep-checked: no stream_ph/murphy/decomposition-identity/
   * jonckheere).
   */
-object Curation76Q {
-
-  private def fold(xs: Column)(f: (Column, Column) => Column): Column =
-    aggregate(xs, lit(0.0), f)
+object Curation76Q extends QueryModule {
 
   private val dec = "decimal(38,0)"
 

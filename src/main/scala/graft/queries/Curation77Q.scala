@@ -19,7 +19,7 @@ import Q._
   * integer cross-multiplied; drawdown is a prefix-max difference) —
   * the only float anywhere is KS's single closing division.
   */
-object Curation77Q {
+object Curation77Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -12,7 +12,7 @@ import Q._
   * the seasonal index is one division of exact sums, and permutation
   * importance is a rows-only MLlib evaluation gated by spec.
   */
-object Curation7Q {
+object Curation7Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -11,7 +11,7 @@ import Q._
   * counts are BIGINTs, the burst flag is an integer cross-product
   * decision, and fertility is one division of exact sums.
   */
-object Curation8Q {
+object Curation8Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -92,14 +92,10 @@ object Curation8Q {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
-  private val ToksSql =
-    s"list_filter(string_split($NormSql, ' '), w -> length(w) > 0)"
-
   val oracle: Map[String, String] = Map(
 
     "t_ccnet_buckets" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($ToksSql) AS tok
+      s"""WITH toks AS (SELECT doc_id, unnest($NormToksSql) AS tok
          | FROM documents),
          |vocab AS (SELECT tok, count(*) AS n_t FROM toks GROUP BY 1),
          |tot AS (SELECT sum(n_t)::BIGINT AS tt FROM vocab),
@@ -134,7 +130,7 @@ object Curation8Q {
       s"""WITH d AS (SELECT lang,
          |  len(regexp_extract_all(lower(text),
          |    '[a-z]+|[0-9]+|[^a-z0-9 ]'))::BIGINT AS np,
-         |  len($ToksSql)::BIGINT AS nw
+         |  len($NormToksSql)::BIGINT AS nw
          | FROM documents)
          |SELECT lang, count(*) AS n_docs,
          | sum(np)::BIGINT AS sum_pieces, sum(nw)::BIGINT AS sum_words,

@@ -13,7 +13,7 @@ import Q._
   * threshold is an integer cross-product argmax — no float ever
   * decides anything.
   */
-object Curation9Q {
+object Curation9Q extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -105,15 +105,11 @@ object Curation9Q {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
-  private val ToksSql =
-    s"list_filter(string_split($NormSql, ' '), w -> length(w) > 0)"
-
   val oracle: Map[String, String] = Map(
 
     "t_zipf_slope" ->
       s"""WITH vocab AS (SELECT tok, count(*) AS f
-         | FROM (SELECT unnest($ToksSql) AS tok FROM documents)
+         | FROM (SELECT unnest($NormToksSql) AS tok FROM documents)
          | GROUP BY 1),
          |rk AS (SELECT f, row_number() OVER (ORDER BY f DESC, tok) AS r
          | FROM vocab),
@@ -131,7 +127,7 @@ object Curation9Q {
 
     "t_heaps" ->
       s"""WITH firsts AS (SELECT tok, min(doc_id) AS first_doc
-         | FROM (SELECT doc_id, unnest($ToksSql) AS tok FROM documents)
+         | FROM (SELECT doc_id, unnest($NormToksSql) AS tok FROM documents)
          | GROUP BY 1),
          |ks AS (SELECT unnest(range(1, 11)) * 50 AS k)
          |SELECT k::BIGINT AS k, count(*)::BIGINT AS vocab_size

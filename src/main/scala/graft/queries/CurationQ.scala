@@ -18,7 +18,7 @@ import Q._
   * exact division of BIGINTs or a single-ln term rounded at 6
   * (ORACLE_NOTES rules 1 and 3; the PSI/PMI-proven pattern).
   */
-object CurationQ {
+object CurationQ extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
 
@@ -455,7 +455,6 @@ object CurationQ {
   // ---- oracle SQL ----------------------------------------------------
 
   private val P = Text.P
-  private val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
   private val FoldSql =
     s"""CASE WHEN length(t) > 0 THEN list_reduce(
        | list_prepend(0::BIGINT, list_transform(range(1, length(t) + 1),

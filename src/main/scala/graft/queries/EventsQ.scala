@@ -16,7 +16,7 @@ import Q._
   * value sums are exact cents (trap #1), orderings carry an `event_id`
   * tiebreak. Nothing here emits an unrounded float.
   */
-object EventsQ {
+object EventsQ extends QueryModule {
 
   private def eventsUs(s: SparkSession, dir: String): DataFrame =
     graft.io.Tables.eventsUs(s, dir)

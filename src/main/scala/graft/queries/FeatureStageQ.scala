@@ -29,7 +29,7 @@ import Q._
   * (`_trig` = rounded libm scalars only, `_windows` = windowed stats
   * only) so any future drift localizes to a column class immediately.
   */
-object FeatureStageQ {
+object FeatureStageQ extends QueryModule {
 
   private val keyCols = Seq("game_id", "play_id", "nfl_id", "frame_id")
   private val trigCols = Seq("vx", "vy", "dist_ball", "angle_ball",

@@ -15,7 +15,7 @@ import Q._
   * (operators/Graph.pageRank) — no float recursion, no summation-order
   * sensitivity; the oracle unrolls the same five exact iterations.
   */
-object GraphQ {
+object GraphQ extends QueryModule {
 
   private[queries] val SuppOffset = 1000000000L
 

@@ -10,7 +10,7 @@ import Q._
   * (SURVEY §2.1 S1-S4, §2.7 O1/O4/O6, plus W7 and the J5 template
   * join). The CSV roundtrip exercises the explicit-schema scan and the
   * submission writer against real files. */
-object IoQ {
+object IoQ extends QueryModule {
 
   private val partSchema = StructType(Seq(
     StructField("p_partkey", LongType),

@@ -16,7 +16,7 @@ import Q._
   * reproduces signatures bit-for-bit; every float is rounded on both
   * sides.
   */
-object LlmQ {
+object LlmQ extends QueryModule {
 
   private val EnStop = Seq("the", "a", "of", "and", "to", "in", "is")
   private val TechWords = Seq("spark", "table", "query", "join", "row", "scan")
@@ -753,10 +753,6 @@ object LlmQ {
   // ---- oracle SQL ----------------------------------------------------
 
   private val P = Text.P
-  /** Normalized text. */
-  private[queries] val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
-  /** Whitespace tokens, empties dropped, of normalized text `t`. */
-  private val ToksSql = "list_filter(string_split(t, ' '), w -> length(w) > 0)"
   private def inList(ws: Seq[String]) = ws.mkString("['", "', '", "']")
   /** Poly-hash fold of a string expression `e` (init 0, mult m). */
   private def foldSql(e: String, m: Long = 31L) =

@@ -8,7 +8,7 @@ import Q._
   * SQL-expressible: fold assignment (M1) and standard scaling (M6).
   * Model-training queries (M2/M3/M5) register in [[PipelineQ]] as
   * rows-only checks — GBT fits aren't SQL. */
-object MlQ {
+object MlQ extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
     "m1_folds" -> ((s, dir) => {

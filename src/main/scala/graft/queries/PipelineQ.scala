@@ -18,7 +18,7 @@ import Q._
   * fits stay bounded at every scale factor (the training-row table,
   * like the reference's, is much smaller than the tracking table).
   */
-object PipelineQ {
+object PipelineQ extends QueryModule {
 
   private def cappedFrames(s: SparkSession, dir: String,
                            cap: Int = 40): DataFrame =

@@ -37,6 +37,27 @@ object Q {
   def r6(c: Column): Column = round(c, 6)
   def r2(c: Column): Column = round(c, 2)
 
+  /** Pinned left fold over a sorted collected struct list: a fixed
+    * association order, so Spark and the oracle sum identically. */
+  def fold(xs: Column)(f: (Column, Column) => Column): Column =
+    aggregate(xs, lit(0.0), f)
+
+  // ---- oracle SQL fragments shared across modules ----------------------
+
+  /** Normalized text: lower-cased, letters and spaces only. */
+  val NormSql = "regexp_replace(lower(text), '[^a-z ]', '', 'g')"
+  /** Whitespace tokens, empties dropped, of a normalized column `t`. */
+  val ToksSql = "list_filter(string_split(t, ' '), w -> length(w) > 0)"
+  /** Whitespace tokens, empties dropped, of [[NormSql]] itself. */
+  val NormToksSql =
+    s"list_filter(string_split($NormSql, ' '), w -> length(w) > 0)"
+  /** `tok` CTE: each document's token list, duplicates kept. */
+  val TokCte =
+    s"""tok AS (SELECT doc_id,
+       | list_filter(string_split($NormSql, ' '),
+       |   w -> length(w) > 0) AS toks
+       | FROM documents)""".stripMargin
+
   private val ivfKCache =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
@@ -122,4 +143,13 @@ object Q {
       }))
       d.toString
     })
+}
+
+/** One module of registered queries. `queries` maps each name to its
+  * DataFrame builder; `oracle` gives the DuckDB SQL of the
+  * SQL-expressible subset under the same names. `graft.SparkEntry`
+  * lists every module exactly once. */
+trait QueryModule {
+  def queries: Map[String, Q.QueryFn]
+  def oracle: Map[String, String]
 }

@@ -10,7 +10,7 @@ import Q._
   * the scan partitioning, with column pruning pushing the 2-3 used
   * columns into the parquet reader.
   */
-object ScalarQ {
+object ScalarQ extends QueryModule {
 
   val queries: Map[String, QueryFn] = Map(
     "p2_velocity" -> ((s, dir) => {

@@ -15,7 +15,7 @@ import Q._
   * entity key, identical to the reference's per-(game,play,nfl) frame
   * ordering (`main_cuda.py:208-232`).
   */
-object TemporalQ {
+object TemporalQ extends QueryModule {
 
   private def w(s: org.apache.spark.sql.SparkSession) =
     Temporal.spec(Seq(col("user_id")), Seq(col("ts"), col("event_id")))

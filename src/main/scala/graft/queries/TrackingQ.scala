@@ -16,7 +16,7 @@ import Q._
   * The typed flatMapGroups kernel is checked against a pure-SQL
   * relational oracle — the strongest cross-engine check in the suite.
   */
-object TrackingQ {
+object TrackingQ extends QueryModule {
 
   /** Deterministic tracking-shaped table: one row per
     * (game_id, play_id, frame_id, nfl_id). Mirrored 1:1 by [[FramesSql]]. */

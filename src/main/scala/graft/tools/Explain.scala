@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Dev-only plan auditor: prints the formatted physical plan of named
@@ -11,16 +10,11 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val summary = args.headOption.contains("-s")
     val names = (if (summary) args.drop(1) else args).toList
-    val spark = SparkSession.builder().master("local[4]")
+    val spark = graft.Sessions.local("4")
       // AQE wraps the plan in AdaptiveSparkPlanExec, whose tree
       // traversal does NOT descend into the inner plan — the audit
       // needs the static plan to walk Window nodes
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")

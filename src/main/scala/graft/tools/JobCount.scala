@@ -6,7 +6,6 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.graftshim.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: run named registered queries under the Bench session
   * settings and report how many Spark JOBS each fires end to end
@@ -22,15 +21,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", 128 * 1024 * 1024)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.bench(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

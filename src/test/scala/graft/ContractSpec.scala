@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.types._
 import graft.io.Tables
+import graft.queries.{Q, QueryModule}
 
-/** Schema canary for the driver-provided testdata (TESTDATA.md).
+/** The driver contract: registry invariants of [[SparkEntry]], and a
+  * schema canary for the driver-provided testdata (TESTDATA.md).
   *
   * Round 4 lost 71 queries to ONE silent testdata change (events.ts
   * flipped from nanos-as-INT64 to timestamp[us]); this spec pins every
@@ -16,6 +18,36 @@ import graft.io.Tables
 class ContractSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+
+  test("registry: 490 distinct query names") {
+    assert(SparkEntry.queries.size == 490)
+  }
+
+  test("registry: every oracle key names a registered query") {
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracle SQL without a query: ${orphans.toSeq.sorted}")
+  }
+
+  test("registry: built once, not per call") {
+    assert(SparkEntry.queries eq SparkEntry.queries)
+    assert(SparkEntry.oracleSql eq SparkEntry.oracleSql)
+  }
+
+  test("registry: a name two modules share fails construction") {
+    def stub(names: String*): QueryModule = new QueryModule {
+      val queries: Map[String, Q.QueryFn] =
+        names.map(n => n -> ((s: org.apache.spark.sql.SparkSession, _: String) =>
+          s.emptyDataFrame)).toMap
+      val oracle: Map[String, String] = names.map(_ -> "SELECT 1").toMap
+    }
+    val modules = Seq(stub("q_a", "q_shared"), stub("q_shared", "q_b"))
+    assert(SparkEntry.union(Seq(stub("q_a"), stub("q_b")).map(_.queries))
+      .keySet == Set("q_a", "q_b"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.union(modules.map(_.queries)))
+    assert(e.getMessage.contains("q_shared"))
+    intercept[IllegalArgumentException](SparkEntry.union(modules.map(_.oracle)))
+  }
 
   private val expected: Map[String, Seq[(String, DataType)]] = Map(
     "region" -> Seq("r_regionkey" -> IntegerType, "r_name" -> StringType),
