@@ -20,7 +20,7 @@ object Tables {
   /** Schema cache keyed by path: a schema-less `spark.read.parquet`
     * runs a one-task footer-inference JOB on every call — ~1000 such
     * jobs per full bench sweep, and a hidden build-time action every
-    * query (BuildActionSpec). On a production cluster the schema
+    * query (PlanAuditSpec). On a production cluster the schema
     * comes from the catalog; here the first read per path infers it
     * once and every later read passes it explicitly (zero jobs). */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[

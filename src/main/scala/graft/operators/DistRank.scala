@@ -50,13 +50,13 @@ import org.apache.spark.sql.functions._
   * ones that can.
   *
   * Cache lifecycle: cumsum/cummin/rowNumbers/adjacentPairs `.cache()`
-  * their tagged input when it is provably aggregate-grain (see
-  * [[boundedGrain]]) and do NOT unpersist it — the cached relation
-  * lives until `spark.catalog.clearCache()` or session end (Bench and
-  * JobCount clear between queries). An embedding application calling
-  * these primitives many times in one session should clear the cache
-  * itself, or pass `cacheInput = false`. Each entry is bounded
-  * (aggregate-grain), but the COUNT of entries is unbounded.
+  * their tagged input under one rule (see [[cacheRule]]) and do NOT
+  * unpersist it — the cached relation lives until
+  * `spark.catalog.clearCache()` or session end (Bench and JobCount
+  * clear between queries). An embedding application calling these
+  * primitives many times in one session should clear the cache
+  * between calls. Each entry is bounded (aggregate-grain), but the
+  * COUNT of entries is unbounded.
   */
 object DistRank {
 
@@ -77,7 +77,7 @@ object DistRank {
     * double-typed `/`: (a - a % b) / b is an exact double (the
     * numerator is divisible by b) for quotients below 2^53 — far past
     * any row count. */
-  private def ldiv(a: Column, b: Column): Column =
+  private[graft] def ldiv(a: Column, b: Column): Column =
     ((a - pmod(a, b)) / b).cast("long")
 
   /** Bucket id = #boundaries strictly below the key — monotone in the
@@ -98,7 +98,7 @@ object DistRank {
     * aggregate, does not. This is a guard-rail, not a cardinality
     * proof — callers assert "this frame is aggregate-grain", and the
     * check turns a mistaken assertion into a plan-build failure that
-    * PlanGuardSpec (which builds every registered query) surfaces. */
+    * PlanAuditSpec (which builds every registered query) surfaces. */
   private[graft] def boundedGrain(plan: LogicalPlan): Boolean = plan match {
     case _: Aggregate | _: Deduplicate | _: Distinct => true
     case _: LocalRelation | _: OneRowRelation => true
@@ -108,6 +108,149 @@ object DistRank {
     case other if other.children.length == 1 =>
       boundedGrain(other.children.head)
     case _ => false
+  }
+
+  /** Bucket count p of one call: `parts` if positive, else the
+    * session's shuffle partitions. */
+  private def partitions(df: DataFrame, parts: Int): Int =
+    if (parts > 0) parts
+    else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+
+  /** Guard of the `parts = 1` fast path, whose single bucket-local
+    * window sorts the whole frame in one task. */
+  private def requireFastPath(df: DataFrame): Unit =
+    require(boundedGrain(df.queryExecution.analyzed),
+      "DistRank parts=1 fast path requires an aggregate-grain input " +
+        "frame (the single-bucket window would otherwise one-task-sort " +
+        "row-scale data); this frame's logical plan has a row-scale core")
+
+  /** The input-cache rule of cumsum/cummin/rowNumbers/adjacentPairs.
+    * The input chain is otherwise evaluated once per eager pass
+    * (boundary sketch, per-bucket totals) AND again by the caller's
+    * final action — for the common value-count inputs that is a
+    * row-scale groupBy recomputed 3x. So `tagged` is cached when `df`
+    * is provably aggregate-grain (bounded — a value lattice, never
+    * row-scale data, so the footprint is compact at every SF) and an
+    * eager pass will read it. Row-scale inputs stay uncached: at
+    * 100 TB caching them is a caller-level judgment (a102/a103 do it
+    * explicitly), not a primitive default. The medians read raw rows
+    * and never cache. The rule is applied BEFORE the sketch, so the
+    * sketch job is the one that materializes the cache. */
+  private def cacheRule(df: DataFrame, tagged: DataFrame,
+      eager: Boolean): DataFrame =
+    if (eager && boundedGrain(df.queryExecution.analyzed)) tagged.cache()
+    else tagged
+
+  /** Pass 0 of every primitive: ONE `percentile_approx` job over
+    * `frame` freezes p-1 boundaries for all `keys` together, returned
+    * sorted and distinct per key. ANY boundary set is correct (it only
+    * balances load), so the approximate sketch is fine; distinct-ing
+    * collapses heavy ties into one bucket, which an ordered
+    * partitioning could not split anyway. p = 1 (the aggregate-grain
+    * fast path) skips the job outright. */
+  private def sketch(frame: DataFrame, keys: Seq[Column],
+      p: Int): Seq[Seq[Double]] =
+    if (p == 1) keys.map(_ => Nil)
+    else {
+      val qs = array((1 until p).map(i => lit(i.toDouble / p)): _*)
+      val aggs = keys.zipWithIndex.map { case (k, j) =>
+        percentile_approx(k, qs, lit(2500)).as(s"b$j")
+      }
+      val row = frame.agg(aggs.head, aggs.tail: _*).head()
+      keys.indices.map(j =>
+        if (row.isNullAt(j)) Nil else row.getSeq[Double](j).distinct.sorted)
+    }
+
+  /** A running aggregate over LONG values: its SQL aggregate, its
+    * identity, its driver-side step, how a bucket-local result meets
+    * the bucket's offset, and the prefix of its scan's column tags. */
+  private final case class Fold(agg: Column => Column, zero: Long,
+      step: (Long, Long) => Long, combine: (Column, Column) => Column,
+      tag: String)
+  private val SumFold = Fold(sum(_), 0L, _ + _, _ + _, "__dr")
+  private val MinFold =
+    Fold(min(_), Long.MaxValue, math.min(_, _), least(_, _), "__dm")
+
+  /** Exclusive per-bucket prefix of `perBucket` (≤ p rows of driver
+    * metadata, `width` values each) under `fold`, as one LITERAL
+    * lookup per value on the bucket-id column `pid`, plus the grand
+    * fold. The offsets are ≤ p driver-known constants, so a codegen'd
+    * CASE chain on the bucket id replaces the former broadcast-join —
+    * one less exchange per call, and no join to degenerate into a
+    * BroadcastNestedLoop when the single-bucket fast path makes the
+    * key foldable. No buckets (a skipped totals pass, or an empty
+    * input) reads as bucket 0 holding the identity. */
+  private def offsets(perBucket: Map[Int, Array[Long]], width: Int,
+      fold: Fold, pid: String): (Seq[Column], Array[Long]) = {
+    val byPid =
+      if (perBucket.nonEmpty) perBucket
+      else Map(0 -> Array.fill(width)(fold.zero))
+    val running = Array.fill(width)(fold.zero)
+    val offs = byPid.keys.toSeq.sorted.map { b =>
+      val before = running.clone()
+      val t = byPid(b)
+      (0 until width).foreach(i => running(i) = fold.step(running(i), t(i)))
+      b -> before
+    }
+    val lookups = (0 until width).map(i =>
+      offs.foldLeft(lit(fold.zero)) { case (acc, (b, o)) =>
+        when(col(pid) === lit(b), lit(o(i))).otherwise(acc)
+      })
+    (lookups, running)
+  }
+
+  /** [[cumsum]] and [[cummin]]: the two-pass shape of the class doc
+    * under one [[Fold]]. `values` are (column, output name) pairs;
+    * each value's grand fold is appended as a literal column named
+    * outputName + `totalsSuffix` when that is set. */
+  private def scan(df: DataFrame, bucketKey: Column, order: Seq[Column],
+      values: Seq[(Column, String)], inclusive: Boolean,
+      totalsSuffix: Option[String], parts: Int, fold: Fold): DataFrame = {
+    val p = partitions(df, parts)
+    if (p == 1) requireFastPath(df)
+    val keep = df.columns.toSeq
+    val tags = values.indices.map(i => s"${fold.tag}v$i")
+    // With a single bucket the offsets are all identities, so the
+    // totals pass runs only when the caller wants grand totals.
+    val totalsPass = p > 1 || totalsSuffix.nonEmpty
+    val tagged = cacheRule(df, df.select(
+      (keep.map(col) :+ bucketKey.cast("double").as("__drk")) ++
+        values.zip(tags).map { case ((c, _), t) => c.cast("long").as(t) }: _*),
+      eager = totalsPass)
+    val bounds = sketch(tagged, Seq(col("__drk")), p).head
+    val bucketed = tagged.withColumn("__drp", pidFor(col("__drk"), bounds))
+
+    // Pass 1: per-bucket totals — ≤ p rows of metadata.
+    val perBucket: Map[Int, Array[Long]] =
+      if (!totalsPass) Map.empty
+      else {
+        val aggs = tags.map(t => fold.agg(col(t)).as(t))
+        bucketed.groupBy("__drp").agg(aggs.head, aggs.tail: _*).collect()
+          .map(r => r.getInt(0) -> tags.indices.map(i =>
+            if (r.isNullAt(i + 1)) fold.zero else r.getLong(i + 1)).toArray)
+          .toMap
+      }
+    val (lookups, grand) = offsets(perBucket, tags.size, fold, "__drp")
+
+    // Pass 2: bucket-local windows + the literal offset lookups.
+    val frameEnd = if (inclusive) 0L else -1L
+    val w = Window.partitionBy("__drp").orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, frameEnd)
+    val withLocal = bucketed.select(
+      (keep.map(col) :+ col("__drp")) ++
+        tags.zipWithIndex.map { case (t, i) =>
+          coalesce(fold.agg(col(t)).over(w), lit(fold.zero))
+            .as(s"${fold.tag}l$i")
+        }: _*)
+    val outCols = keep.map(col) ++
+      values.zipWithIndex.map { case ((_, n), i) =>
+        fold.combine(col(s"${fold.tag}l$i"), lookups(i)).as(n)
+      } ++
+      totalsSuffix.toSeq.flatMap(suf =>
+        values.zipWithIndex.map { case ((_, n), i) =>
+          lit(grand(i)).as(s"$n$suf")
+        })
+    withLocal.select(outCols: _*)
   }
 
   /** Exact global cumulative sums (and optionally a global row
@@ -133,111 +276,10 @@ object DistRank {
   def cumsum(df: DataFrame, bucketKey: Column, order: Seq[Column],
       values: Seq[(Column, String)], inclusive: Boolean = true,
       totalsSuffix: Option[String] = None,
-      rowNumberAs: Option[String] = None, parts: Int = 0,
-      cacheInput: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
-    val p = if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    if (p == 1) require(boundedGrain(df.queryExecution.analyzed),
-      "DistRank parts=1 fast path requires an aggregate-grain input " +
-        "frame (the single-bucket window would otherwise one-task-sort " +
-        "row-scale data); this frame's logical plan has a row-scale core")
-
-    val keep = df.columns.toSeq
-    val vals = (values.map { case (c, n) => (c, n, false) } ++
-      rowNumberAs.map(n => (lit(1L), n, true)).toSeq).zipWithIndex
-      .map { case ((c, n, isRn), i) => (c, n, s"__drv$i", isRn) }
-    val tagged0 = df.select(
-      (keep.map(col) :+ bucketKey.cast("double").as("__drk")) ++
-        vals.map { case (c, _, t, _) => c.cast("long").as(t) }: _*)
-    // The input chain is otherwise evaluated once per eager pass
-    // (boundary sketch, per-bucket totals) AND again by the caller's
-    // final action — for the common value-count inputs that is a
-    // row-scale groupBy recomputed 3x. Cache the tagged frame when it
-    // is provably aggregate-grain (bounded — a value lattice, never
-    // row-scale data, so the footprint is compact at every SF) and at
-    // least one eager pass exists to materialize it. Row-scale inputs
-    // keep the uncached behavior: at 100 TB caching them is a
-    // caller-level judgment (a102/a103 do it explicitly), not a
-    // primitive default. boundedGrain is structural, not a
-    // cardinality proof — a caller whose aggregate grain is itself
-    // near row-scale (a101's cent-price value lattice) opts out with
-    // cacheInput=false: there the cache build costs more than the one
-    // recompute it saves, at every SF.
-    val tagged =
-      if (cacheInput && (p > 1 || totalsSuffix.nonEmpty) &&
-          boundedGrain(df.queryExecution.analyzed)) tagged0.cache()
-      else tagged0
-
-    // Pass 0: freeze boundaries. ANY boundary set is correct (it only
-    // balances load), so the approximate sketch is fine; distinct-ing
-    // collapses heavy ties into one bucket, which an ordered
-    // partitioning could not split anyway. parts=1 (the
-    // aggregate-grain fast path) skips the sketch job outright.
-    val qs = array((1 until p).map(i => lit(i.toDouble / p)): _*)
-    val bounds: Seq[Double] =
-      if (p == 1) Nil
-      else {
-        val bRow = tagged
-          .agg(percentile_approx(col("__drk"), qs, lit(2500)).as("b"))
-          .head()
-        if (bRow.isNullAt(0)) Nil
-        else bRow.getSeq[Double](0).distinct.sorted
-      }
-    val bucketed = tagged.withColumn("__drp", pidFor(col("__drk"), bounds))
-
-    // Pass 1: per-bucket totals — ≤ p rows of metadata. With a single
-    // bucket the offsets are all zero, so the job is needed only when
-    // the caller wants grand totals.
-    val aggs = vals.map { case (_, _, t, _) => sum(col(t)).as(t) }
-    val totRows: Array[Row] =
-      if (p == 1 && totalsSuffix.isEmpty) Array.empty
-      else bucketed.groupBy("__drp")
-        .agg(aggs.head, aggs.tail: _*).collect()
-    val byPid: Map[Int, Array[Long]] =
-      if (totRows.isEmpty) Map(0 -> Array.fill(vals.size)(0L))
-      else totRows.map { r =>
-        r.getInt(0) -> vals.indices.map(i =>
-          if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)).toArray
-      }.toMap
-    val pids = byPid.keys.toSeq.sorted
-    val offsets = scala.collection.mutable.Map[Int, Array[Long]]()
-    val running = Array.fill(vals.size)(0L)
-    pids.foreach { pid =>
-      offsets(pid) = running.clone()
-      val t = byPid(pid)
-      vals.indices.foreach(i => running(i) += t(i))
-    }
-    val grand: Array[Long] = running
-
-    // Pass 2: bucket-local windows + a LITERAL offset lookup. The
-    // offsets are ≤ p driver-known constants, so a codegen'd CASE
-    // chain on the bucket id replaces the former broadcast-join —
-    // one less exchange per call, and no join to degenerate into a
-    // BroadcastNestedLoop when the single-bucket fast path makes the
-    // key foldable.
-    def offLookup(i: Int): Column = pids.foldLeft(lit(0L)) {
-      case (acc, pid) =>
-        when(col("__drp") === lit(pid), lit(offsets(pid)(i))).otherwise(acc)
-    }
-    val frameEnd = if (inclusive) 0L else -1L
-    val w = Window.partitionBy("__drp").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, frameEnd)
-    val withLocal = bucketed.select(
-      (keep.map(col) :+ col("__drp")) ++
-        vals.zipWithIndex.map { case ((_, _, t, _), i) =>
-          coalesce(sum(col(t)).over(w), lit(0L)).as(s"__drl$i")
-        }: _*)
-    val outCols = keep.map(col) ++
-      vals.zipWithIndex.map { case ((_, n, _, _), i) =>
-        (col(s"__drl$i") + offLookup(i)).as(n)
-      } ++
-      totalsSuffix.toSeq.flatMap(suf =>
-        vals.zipWithIndex.map { case ((_, n, _, _), i) =>
-          lit(grand(i)).as(s"$n$suf")
-        })
-    withLocal.select(outCols: _*)
-  }
+      rowNumberAs: Option[String] = None, parts: Int = 0): DataFrame =
+    scan(df, bucketKey, order,
+      values ++ rowNumberAs.map(n => (lit(1L), n)).toSeq, inclusive,
+      totalsSuffix, parts, SumFold)
 
   /** Exact global running MINIMUM of `values` over the total order
     * `order` — the two-pass [[cumsum]] shape with min in place of
@@ -251,71 +293,8 @@ object DistRank {
     * never a single-partition window. */
   def cummin(df: DataFrame, bucketKey: Column, order: Seq[Column],
       values: Seq[(Column, String)], inclusive: Boolean = true,
-      parts: Int = 0, cacheInput: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
-    val p = if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    if (p == 1) require(boundedGrain(df.queryExecution.analyzed),
-      "DistRank parts=1 fast path requires an aggregate-grain input")
-    val keep = df.columns.toSeq
-    val vals = values.zipWithIndex.map { case ((c, n), i) =>
-      (c, n, s"__dmv$i") }
-    val tagged0 = df.select(
-      (keep.map(col) :+ bucketKey.cast("double").as("__drk")) ++
-        vals.map { case (c, _, t) => c.cast("long").as(t) }: _*)
-    // same bounded-grain input cache as [[cumsum]] — two eager passes
-    // plus the final plan otherwise recompute the input chain 3x
-    val tagged =
-      if (cacheInput && p > 1 &&
-          boundedGrain(df.queryExecution.analyzed)) tagged0.cache()
-      else tagged0
-    val qs = array((1 until p).map(i => lit(i.toDouble / p)): _*)
-    val bounds: Seq[Double] =
-      if (p == 1) Nil
-      else {
-        val bRow = tagged
-          .agg(percentile_approx(col("__drk"), qs, lit(2500)).as("b"))
-          .head()
-        if (bRow.isNullAt(0)) Nil
-        else bRow.getSeq[Double](0).distinct.sorted
-      }
-    val bucketed = tagged.withColumn("__drp", pidFor(col("__drk"), bounds))
-    val aggs = vals.map { case (_, _, t) => min(col(t)).as(t) }
-    val minRows: Array[Row] =
-      if (p == 1) Array.empty
-      else bucketed.groupBy("__drp").agg(aggs.head, aggs.tail: _*)
-        .collect()
-    val byPid: Map[Int, Array[Long]] = minRows.map { r =>
-      r.getInt(0) -> vals.indices.map(i =>
-        if (r.isNullAt(i + 1)) Long.MaxValue else r.getLong(i + 1)).toArray
-    }.toMap
-    val pids = byPid.keys.toSeq.sorted
-    val offsets = scala.collection.mutable.Map[Int, Array[Long]]()
-    val running = Array.fill(vals.size)(Long.MaxValue)
-    pids.foreach { pid =>
-      offsets(pid) = running.clone()
-      val m = byPid(pid)
-      vals.indices.foreach(i => running(i) = math.min(running(i), m(i)))
-    }
-    def offLookup(i: Int): Column = pids.foldLeft(lit(Long.MaxValue)) {
-      case (acc, pid) =>
-        when(col("__drp") === lit(pid), lit(offsets(pid)(i))).otherwise(acc)
-    }
-    val frameEnd = if (inclusive) 0L else -1L
-    val w = Window.partitionBy("__drp").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, frameEnd)
-    val withLocal = bucketed.select(
-      (keep.map(col) :+ col("__drp")) ++
-        vals.zipWithIndex.map { case ((_, _, t), i) =>
-          coalesce(min(col(t)).over(w), lit(Long.MaxValue))
-            .as(s"__dml$i")
-        }: _*)
-    val outCols = keep.map(col) ++
-      vals.zipWithIndex.map { case ((_, n, _), i) =>
-        least(col(s"__dml$i"), offLookup(i)).as(n)
-      }
-    withLocal.select(outCols: _*)
-  }
+      parts: Int = 0): DataFrame =
+    scan(df, bucketKey, order, values, inclusive, None, parts, MinFold)
 
   /** Exact global 1-based row number over `order` — `cumsum` of a
     * constant 1. `totalAs`, if set, appends the total row count as a
@@ -358,37 +337,20 @@ object DistRank {
     *                order — it is the same N).
     */
   def rowNumbers(df: DataFrame, specs: Seq[RankSpec],
-      totalAs: Option[String] = None, parts: Int = 0,
-      cacheInput: Boolean = true): DataFrame = {
+      totalAs: Option[String] = None, parts: Int = 0): DataFrame = {
     require(specs.nonEmpty, "rowNumbers needs at least one RankSpec")
-    val spark = df.sparkSession
-    val p = if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    if (p == 1) require(boundedGrain(df.queryExecution.analyzed),
-      "DistRank parts=1 fast path requires an aggregate-grain input")
+    val p = partitions(df, parts)
+    if (p == 1) requireFastPath(df)
     val keep = df.columns.toSeq
     val js = specs.indices
-    val tagged0 = df.select(keep.map(col) ++ specs.zip(js).map {
+    val k = specs.size
+    val totalsPass = p > 1 || totalAs.isDefined
+    val tagged = cacheRule(df, df.select(keep.map(col) ++ specs.zip(js).map {
       case (sp, j) => sp.bucketKey.cast("double").as(s"__drk$j")
-    }: _*)
-    // same bounded-grain input cache as [[cumsum]]
-    val tagged =
-      if (cacheInput && (p > 1 || totalAs.isDefined) &&
-          boundedGrain(df.queryExecution.analyzed)) tagged0.cache()
-      else tagged0
+    }: _*), eager = totalsPass)
 
     // Pass 0: every order's boundary sketch in ONE aggregate job.
-    val qs = array((1 until p).map(i => lit(i.toDouble / p)): _*)
-    val boundsPer: Seq[Seq[Double]] =
-      if (p == 1) js.map(_ => Nil)
-      else {
-        val aggCols = js.map(j =>
-          percentile_approx(col(s"__drk$j"), qs, lit(2500)).as(s"b$j"))
-        val row = tagged.agg(aggCols.head, aggCols.tail: _*).head()
-        js.map(j =>
-          if (row.isNullAt(j)) Nil
-          else row.getSeq[Double](j).distinct.sorted)
-      }
+    val boundsPer = sketch(tagged, js.map(j => col(s"__drk$j")), p)
     val bucketed = tagged.select(keep.map(col) ++ js.map(j =>
       pidFor(col(s"__drk$j"), boundsPer(j)).as(s"__drp$j")): _*)
 
@@ -403,39 +365,24 @@ object DistRank {
     // returns NULL (its when/otherwise chain always falls through to
     // a literal) — a pidFor edit that could yield NULL would silently
     // drop rows from these marginals and corrupt every offset.
-    val needTotals = totalAs.isDefined
-    val (offsetsPer: Seq[Map[Int, Long]], total: Long) =
-      if (p == 1 && !needTotals) (js.map(_ => Map(0 -> 0L)), 0L)
-      else {
-        val cells: Array[Row] = bucketed
-          .groupingSets(js.map(j => Seq(col(s"__drp$j"))),
-            js.map(j => col(s"__drp$j")): _*)
-          .agg(count(lit(1)).as("__n")).collect()
-        val n = cells.filter(r => specs.size == 1 || !r.isNullAt(0))
-          .map(_.getLong(specs.size)).sum
-        val offs = js.map { j =>
-          val marg = cells
-            .filter(r => specs.size == 1 || !r.isNullAt(j))
-            .map(r => r.getInt(j) -> r.getLong(specs.size)).toMap
-          var run = 0L
-          marg.keys.toSeq.sorted.map { pid =>
-            val o = pid -> run; run += marg(pid); o
-          }.toMap
-        }
-        (offs, n)
-      }
+    val cells: Array[Row] =
+      if (!totalsPass) Array.empty
+      else bucketed
+        .groupingSets(js.map(j => Seq(col(s"__drp$j"))),
+          js.map(j => col(s"__drp$j")): _*)
+        .agg(count(lit(1)).as("__n")).collect()
+    val total = cells.filter(r => k == 1 || !r.isNullAt(0))
+      .map(_.getLong(k)).sum
 
     // Pass 2: k bucket-local windows over one scan, literal offsets.
-    def offLookup(j: Int): Column = offsetsPer(j).keys.toSeq.sorted
-      .foldLeft(lit(0L)) { (acc, pid) =>
-        when(col(s"__drp$j") === lit(pid),
-          lit(offsetsPer(j)(pid))).otherwise(acc)
-      }
     val ranked = js.foldLeft(bucketed) { (d, j) =>
+      val marg = cells.filter(r => k == 1 || !r.isNullAt(j))
+        .map(r => r.getInt(j) -> Array(r.getLong(k))).toMap
+      val offset = offsets(marg, 1, SumFold, s"__drp$j")._1.head
       val w = Window.partitionBy(s"__drp$j").orderBy(specs(j).order: _*)
         .rowsBetween(Window.unboundedPreceding, 0)
       d.withColumn(specs(j).as,
-        coalesce(sum(lit(1L)).over(w), lit(0L)) + offLookup(j))
+        coalesce(sum(lit(1L)).over(w), lit(0L)) + offset)
     }
     ranked.select(keep.map(col) ++ specs.map(sp => col(sp.as)) ++
       totalAs.map(t => lit(total).as(t)).toSeq: _*)
@@ -464,35 +411,19 @@ object DistRank {
     * boundary-sketch job.
     */
   def adjacentPairs(df: DataFrame, bucketKey: Column, order: Seq[Column],
-      cols: Seq[String], parts: Int = 0,
-      cacheInput: Boolean = true): DataFrame = {
+      cols: Seq[String], parts: Int = 0): DataFrame = {
     require(cols.forall(c => !cols.contains(s"${c}_n")),
       s"adjacentPairs suffix collision: a requested column's '_n' pair " +
         s"name shadows another requested column (${cols.mkString(", ")})")
-    val spark = df.sparkSession
-    val p = if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val p = partitions(df, parts)
     val oNames = order.indices.map(i => s"__do$i")
-    val tagged0 = df.select(
+    // the sketch is the only eager pass; the cache also serves the
+    // in-bucket pass and the bucket-ends aggregate
+    val tagged = cacheRule(df, df.select(
       order.zip(oNames).map { case (c, n) => c.as(n) } ++
-        cols.map(col) :+ bucketKey.cast("double").as("__drk"): _*)
-    // same bounded-grain input cache as [[cumsum]]: the boundary
-    // sketch, the in-bucket pass and the bucket-ends aggregate
-    // otherwise each recompute the input chain
-    val tagged =
-      if (cacheInput && p > 1 &&
-          boundedGrain(df.queryExecution.analyzed)) tagged0.cache()
-      else tagged0
-    val qs = array((1 until p).map(i => lit(i.toDouble / p)): _*)
-    val bounds: Seq[Double] =
-      if (p == 1) Nil
-      else {
-        val bRow = tagged
-          .agg(percentile_approx(col("__drk"), qs, lit(2500)).as("b"))
-          .head()
-        if (bRow.isNullAt(0)) Nil
-        else bRow.getSeq[Double](0).distinct.sorted
-      }
+        cols.map(col) :+ bucketKey.cast("double").as("__drk"): _*),
+      eager = p > 1)
+    val bounds = sketch(tagged, Seq(col("__drk")), p).head
     val bucketed = tagged.withColumn("__drp", pidFor(col("__drk"), bounds))
     val w = Window.partitionBy("__drp").orderBy(oNames.map(col): _*)
     val ordStruct = struct(oNames.map(col): _*)
@@ -525,6 +456,51 @@ object DistRank {
     inBucket.union(boundary)
   }
 
+
+  /** Where a running weight over `byPid` (bucket id → weight) first
+    * reaches half its total `tot`: bucket b1 holds the first c with
+    * 2·run ≥ tot, bucket b2 the first with 2·run > tot, and off1/off2
+    * are the weights below them. An empty input gives b1 = b2 = -1. */
+  private final case class Crossing(b1: Int, off1: Long, b2: Int,
+      off2: Long, tot: Long)
+
+  private def crossing(byPid: Seq[(Int, Long)]): Crossing = {
+    val sorted = byPid.sortBy(_._1)
+    val tot = sorted.map(_._2).sum
+    var run = 0L
+    var b1 = -1; var off1 = 0L; var b2 = -1; var off2 = 0L
+    sorted.foreach { case (pid, n) =>
+      val before = run; run += n
+      if (b1 < 0 && 2 * run >= tot) { b1 = pid; off1 = before }
+      if (b2 < 0 && 2 * run > tot) { b2 = pid; off2 = before }
+    }
+    Crossing(b1, off1, b2, off2, tot)
+  }
+
+  /** Keeps the rows of buckets [min b1, max b2] over the non-empty
+    * crossings `cs` (none: no row). Filter the crossing buckets by the
+    * VALUE RANGE they span, never by the bucket-id expression: a
+    * predicate on the bucket id gets pushed below the projection with
+    * the pid when-chain SUBSTITUTED into every term, so the caller's
+    * value expression (e.g. a BigDecimal round) re-evaluates ~2p times
+    * per row — measured 14 s for a plain filter+count at sf0.1
+    * (round 12). Bucket b holds exactly the keys in
+    * (bounds(b-1), bounds(b)], so the range keeps whole buckets and
+    * the callers' exact bucket-id conditions stay exact. */
+  private def crossingRange(key: Column, bounds: Seq[Double],
+      cs: Seq[Crossing]): Column = {
+    val live = cs.filter(_.tot > 0L)
+    if (live.isEmpty) lit(false)
+    else {
+      val loB = live.map(_.b1).min
+      val hiB = live.map(_.b2).max
+      Seq(
+        if (loB > 0) Some(key > lit(bounds(loB - 1))) else None,
+        if (hiB < bounds.size) Some(key <= lit(bounds(hiB))) else None
+      ).flatten.reduceOption(_ && _).getOrElse(lit(true))
+    }
+  }
+
   /** Exact DOUBLED median (vlo + vhi, the interpolation-free integer
     * form: vlo = min c with 2·#{v ≤ c} ≥ n, vhi = min c with
     * 2·#{v ≤ c} > n) of a LONG-castable column, without materializing
@@ -551,53 +527,23 @@ object DistRank {
     * (NULL on empty input, matching the aggregate-over-empty shape of
     * the cumsum form). `value` must be non-null. */
   def medianDoubled(df: DataFrame, value: Column, parts: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val p = if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val p = partitions(df, parts)
     val v = df.select(value.cast("long").as("__dmv"))
-    val qs = array((1 until p).map(i => lit(i.toDouble / p)): _*)
     val key = col("__dmv").cast("double")
-    val bounds: Seq[Double] =
-      if (p == 1) Nil
-      else {
-        val bRow = v.agg(percentile_approx(key, qs, lit(2500)).as("b")).head()
-        if (bRow.isNullAt(0)) Nil
-        else bRow.getSeq[Double](0).distinct.sorted
-      }
+    val bounds = sketch(v, Seq(key), p).head
     val bucketed = v.withColumn("__drp", pidFor(key, bounds))
-    val cnts = bucketed.groupBy("__drp").agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val total = cnts.map(_._2).sum
-    var run = 0L
-    var b1 = -1; var off1 = 0L; var b2 = -1; var off2 = 0L
-    cnts.foreach { case (pid, n) =>
-      val before = run; run += n
-      if (b1 < 0 && 2 * run >= total) { b1 = pid; off1 = before }
-      if (b2 < 0 && 2 * run > total) { b2 = pid; off2 = before }
-    }
-    // Filter the crossing buckets by the VALUE RANGE they span, never
-    // by the bucket-id expression: a predicate on __drp gets pushed
-    // below the projection with the pid when-chain SUBSTITUTED into
-    // every term, so the caller's value expression (e.g. a BigDecimal
-    // round) re-evaluates ~2p times per row — measured 14 s for a
-    // plain filter+count at sf0.1 (round 12). Bucket b holds exactly
-    // the keys in (bounds(b-1), bounds(b)], so the range keeps whole
-    // buckets and the __drp conditions below stay exact.
-    val rangeCond =
-      if (total == 0L) lit(false)
-      else Seq(
-        if (b1 > 0) Some(key > lit(bounds(b1 - 1))) else None,
-        if (b2 < bounds.size) Some(key <= lit(bounds(b2))) else None
-      ).flatten.reduceOption(_ && _).getOrElse(lit(true))
-    val sel = bucketed.filter(rangeCond)
+    val c = crossing(bucketed.groupBy("__drp")
+      .agg(count(lit(1)).as("__n")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toSeq)
+    val sel = bucketed.filter(crossingRange(key, bounds, Seq(c)))
       .groupBy(col("__drp"), col("__dmv")).agg(count(lit(1)).as("__m"))
     val w = Window.partitionBy("__drp").orderBy("__dmv")
       .rowsBetween(Window.unboundedPreceding, 0)
     sel.withColumn("__ci", sum(col("__m")).over(w))
-      .agg((min(when(col("__drp") === lit(b1) &&
-          (lit(off1) + col("__ci")) * 2 >= lit(total), col("__dmv"))) +
-        min(when(col("__drp") === lit(b2) &&
-          (lit(off2) + col("__ci")) * 2 > lit(total), col("__dmv"))))
+      .agg((min(when(col("__drp") === lit(c.b1) &&
+          (lit(c.off1) + col("__ci")) * 2 >= lit(c.tot), col("__dmv"))) +
+        min(when(col("__drp") === lit(c.b2) &&
+          (lit(c.off2) + col("__ci")) * 2 > lit(c.tot), col("__dmv"))))
         .as("med2"))
   }
 
@@ -619,40 +565,21 @@ object DistRank {
     * median is vlo + vhi. Exact integers at any SF. */
   def groupedMedianDoubled(df: DataFrame, group: Column, value: Column,
       weight: Column = lit(1L), parts: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val p = if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val p = partitions(df, parts)
     val v = df.select(group.as("__g"), value.cast("long").as("__v"),
       weight.cast("long").as("__w"))
-    val qs = array((1 until p).map(i => lit(i.toDouble / p)): _*)
     val key = col("__v").cast("double")
-    val bounds: Seq[Double] =
-      if (p == 1) Nil
-      else {
-        val bRow = v.agg(percentile_approx(key, qs, lit(2500)).as("b")).head()
-        if (bRow.isNullAt(0)) Nil
-        else bRow.getSeq[Double](0).distinct.sorted
-      }
+    val bounds = sketch(v, Seq(key), p).head
     val bucketed = v.withColumn("__p", pidFor(key, bounds))
     // ≤ #groups × p rows; map-side partial aggregation keeps the
     // exchange at metadata scale
     val cnts = bucketed.groupBy(col("__g"), col("__p"))
       .agg(sum(col("__w")).as("__n")).collect()
-    case class M(b1: Int, off1: Long, b2: Int, off2: Long, tot: Long)
-    val metas: Seq[(Any, M)] = cnts.groupBy(_.get(0)).toSeq.map {
+    val metas: Seq[(Any, Crossing)] = cnts.groupBy(_.get(0)).toSeq.map {
       case (g, rows) =>
-        val byPid = rows.map(r => r.getInt(1) -> r.getLong(2)).sortBy(_._1)
-        val tot = byPid.map(_._2).sum
-        var run = 0L
-        var b1 = -1; var off1 = 0L; var b2 = -1; var off2 = 0L
-        byPid.foreach { case (pid, n) =>
-          val before = run; run += n
-          if (b1 < 0 && 2 * run >= tot) { b1 = pid; off1 = before }
-          if (b2 < 0 && 2 * run > tot) { b2 = pid; off2 = before }
-        }
-        g -> M(b1, off1, b2, off2, tot)
+        g -> crossing(rows.map(r => r.getInt(1) -> r.getLong(2)).toSeq)
     }
-    def chain(f: M => Column, init: Column): Column =
+    def chain(f: Crossing => Column, init: Column): Column =
       metas.foldLeft(init) { case (acc, (g, m)) =>
         when(col("__g") === lit(g), f(m)).otherwise(acc)
       }
@@ -661,23 +588,9 @@ object DistRank {
     val off1C = chain(m => lit(m.off1), lit(0L))
     val off2C = chain(m => lit(m.off2), lit(0L))
     val totC = chain(m => lit(m.tot), lit(0L))
-    // Value-range filter covering every group's crossing buckets (see
-    // medianDoubled: a pushed predicate on the bucket-id when-chain
-    // re-evaluates the caller's value expression ~2p times per row).
-    // The range spans [min b1, max b2] across groups — whole buckets,
-    // so the exact (__g, __p) conditions below are unaffected.
-    val live = metas.map(_._2).filter(_.tot > 0L)
-    val rangeCond =
-      if (live.isEmpty) lit(false)
-      else {
-        val loB = live.map(_.b1).min
-        val hiB = live.map(_.b2).max
-        Seq(
-          if (loB > 0) Some(key > lit(bounds(loB - 1))) else None,
-          if (hiB < bounds.size) Some(key <= lit(bounds(hiB))) else None
-        ).flatten.reduceOption(_ && _).getOrElse(lit(true))
-      }
-    val sel = bucketed.filter(rangeCond)
+    // one range over every group's crossing buckets — whole buckets,
+    // so the exact (__g, __p) conditions below are unaffected
+    val sel = bucketed.filter(crossingRange(key, bounds, metas.map(_._2)))
       .groupBy(col("__g"), col("__p"), col("__v"))
       .agg(sum(col("__w")).as("__m"))
     val w = Window.partitionBy("__g", "__p").orderBy("__v")

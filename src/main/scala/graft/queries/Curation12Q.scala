@@ -11,10 +11,6 @@ import Q._
   */
 object Curation12Q extends QueryModule {
 
-  // per-prefix per-JVM reused scratch, deleted on JVM exit (both
-  // writers run mode=overwrite, so reuse is a rewrite — see IoQ)
-  private def scratchDir(prefix: String): String = Q.scratchDir(prefix)
-
   val queries: Map[String, QueryFn] = Map(
 
     // S15: recursive file discovery — ingest trees like
@@ -25,7 +21,7 @@ object Curation12Q extends QueryModule {
     // of files under dated prefixes. Listing parallelizes across the
     // cluster; the oracle is the flat source table.
     "s15_recursive" -> ((s, dir) => {
-      val base = scratchDir("graft_recur")
+      val base = Q.scratchDir("graft_recur")
       val d = documents(s, dir).select("doc_id", "lang", "n_chars")
       // nested tree: two levels, files at different depths
       d.filter(col("doc_id") % 2 === 0)
@@ -42,7 +38,7 @@ object Curation12Q extends QueryModule {
     // lossless bit-for-bit on the cent lattice and exercises the
     // writer option end to end. The oracle aggregates the source.
     "s16_zstd" -> ((s, dir) => {
-      val base = scratchDir("graft_zstd")
+      val base = Q.scratchDir("graft_zstd")
       lineitem(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("l_extendedprice") * 100).cast("long").as("cents"))

@@ -11,10 +11,6 @@ import Q._
   */
 object Curation15Q extends QueryModule {
 
-  // per-prefix per-JVM reused scratch, deleted on JVM exit (see IoQ;
-  // o20 pre-cleans its rename target below, s17 rewrites fixed names)
-  private def scratchDir(prefix: String): String = Q.scratchDir(prefix)
-
   val queries: Map[String, QueryFn] = Map(
 
     // O20: write-audit-publish — the safe-publication discipline every
@@ -25,7 +21,7 @@ object Curation15Q extends QueryModule {
     // downstream readers can never observe a bad snapshot. The audit
     // aggregates are one pass over the staged files.
     "o20_wap" -> ((s, dir) => {
-      val root = scratchDir("graft_wap")
+      val root = Q.scratchDir("graft_wap")
       val staging = s"$root/staging"
       val published = s"$root/published"
       // the publish below is a directory RENAME — with the reused
@@ -164,7 +160,7 @@ object Curation15Q extends QueryModule {
     // own object. 20 docs written as individual text files, read back
     // whole; per-doc byte counts prove no line-splitting happened.
     "s17_wholetext" -> ((s, dir) => {
-      val base = scratchDir("graft_whole")
+      val base = Q.scratchDir("graft_whole")
       val docs = documents(s, dir).filter(col("doc_id") < 20)
         .select(col("doc_id"), col("text"))
       docs.collect().foreach { r =>

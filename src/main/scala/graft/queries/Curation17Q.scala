@@ -53,7 +53,7 @@ object Curation17Q extends QueryModule {
         .cache()
       // transaction count as a broadcast SCALAR FRAME, not a
       // build-time .count(): keeps plan construction action-free
-      // (PlanGuardSpec and repeated bench builds paid a hidden job
+      // (PlanAuditSpec and repeated bench builds paid a hidden job
       // here through round 9). Threshold math stays in double —
       // ceil(0.01·n) — to preserve the original tie behavior.
       val ntx = ob.agg(countDistinct("l_orderkey").as("n_tx"))

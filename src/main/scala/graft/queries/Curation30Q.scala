@@ -22,12 +22,6 @@ object Curation30Q extends QueryModule {
     * counts <= k = 3, so 16 is a safe base. */
   private val VotePack = 16L
 
-  /** Exact floor division of two positive LONG columns: the numerator
-    * of (a - a%b) is divisible by b, so the double division is exact
-    * for quotients below 2^53 (same trick as DistRank.ldiv). */
-  private def ldiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
-
   /** Token bigrams WITH multiplicity (ROUGE counts clipped
     * occurrences, so no array_distinct — unlike
     * Contamination.tokenNgramsOf). `toks` must be a bound attribute
@@ -184,8 +178,8 @@ object Curation30Q extends QueryModule {
         Seq((col("w"), "cum_w")), inclusive = true,
         totalsSuffix = Some("_tot"))
       c.withColumn("n_tickets",
-          ldiv(col("cum_w") * k, col("cum_w_tot")) -
-            ldiv((col("cum_w") - col("w")) * k, col("cum_w_tot")))
+          DistRank.ldiv(col("cum_w") * k, col("cum_w_tot")) -
+            DistRank.ldiv((col("cum_w") - col("w")) * k, col("cum_w_tot")))
         .filter(col("n_tickets") > 0)
         .select(col("doc_id"), col("w"), col("cum_w"), col("n_tickets"))
     }))

@@ -31,9 +31,6 @@ object Curation32Q extends QueryModule {
   private val EH1 = 1609L; private val EL1 = 223L  // idle emits
   private val Inf = 100000L
 
-  private def ldiv(a: Column, b: Long): Column =
-    ((a - pmod(a, lit(b))) / b).cast("long")
-
   /** One DTW cell column name. */
   private def cn(i: Int, j: Int) = s"c_${i}_$j"
 
@@ -65,7 +62,7 @@ object Curation32Q extends QueryModule {
       val init = 0L * Lane + Inf
       val folded = byUser.withColumn("acc",
         aggregate(col("obs"), lit(init), (acc, o) => {
-          val v0 = ldiv(acc, Lane)
+          val v0 = DistRank.ldiv(acc, lit(Lane))
           val v1 = pmod(acc, lit(Lane))
           val e0 = when(o === 1L, lit(EH0)).otherwise(lit(EL0))
           val e1 = when(o === 1L, lit(EH1)).otherwise(lit(EL1))
@@ -73,11 +70,12 @@ object Curation32Q extends QueryModule {
             (least(v0 + T01, v1 + T11) + e1)
         }))
       folded.select(col("user_id"), col("n_obs"),
-        ldiv(col("acc"), Lane).as("cost_engaged"),
+        DistRank.ldiv(col("acc"), lit(Lane)).as("cost_engaged"),
         pmod(col("acc"), lit(Lane)).as("cost_idle"),
-        least(ldiv(col("acc"), Lane), pmod(col("acc"), lit(Lane)))
-          .as("best_cost"),
-        when(ldiv(col("acc"), Lane) <= pmod(col("acc"), lit(Lane)),
+        least(DistRank.ldiv(col("acc"), lit(Lane)),
+          pmod(col("acc"), lit(Lane))).as("best_cost"),
+        when(DistRank.ldiv(col("acc"), lit(Lane)) <=
+          pmod(col("acc"), lit(Lane)),
           lit("engaged")).otherwise(lit("idle")).as("best_state"))
     }),
 
@@ -196,7 +194,7 @@ object Curation32Q extends QueryModule {
         (col("l_orderkey") * 8L + col("l_linenumber")).as("rid"),
         col("l_returnflag"), col("l_quantity"))
       val words = li
-        .select(ldiv(col("rid"), 32L).as("bucket"),
+        .select(DistRank.ldiv(col("rid"), lit(32L)).as("bucket"),
           pmod(col("rid"), lit(32L)).as("bit"),
           col("l_returnflag"), col("l_quantity"))
         .groupBy("bucket")

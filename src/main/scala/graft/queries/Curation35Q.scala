@@ -20,9 +20,6 @@ object Curation35Q extends QueryModule {
     * both polarities — 2·16·2 = 64 candidates evaluated in ONE agg. */
   private val Thr = (0 until 16).map(i => -750L + 100L * i)
 
-  private def ldiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
-
   /** x·ln(x) with S(0) = 0 — the entropy term of Dunning's G². */
   private def sTerm(x: Column): Column =
     when(x > 0L, x.cast("double") * log(x.cast("double"))).otherwise(lit(0.0))
@@ -57,7 +54,7 @@ object Curation35Q extends QueryModule {
         .select(col("doc_id"), col("source"), col("n_chars"),
           (col("grk") - col("off")).as("r_src"), col("n_s"))
         .withColumn("q_pct",
-          ldiv((col("r_src") - 1L) * 100L, col("n_s") - 1L))
+          DistRank.ldiv((col("r_src") - 1L) * 100L, col("n_s") - 1L))
       val target = ranked.groupBy("q_pct")
         .agg(sum("n_chars").as("tsum"), count(lit(1)).as("tn"))
       ranked.join(broadcast(target), "q_pct")

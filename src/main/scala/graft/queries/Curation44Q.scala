@@ -14,9 +14,6 @@ import Q._
   */
 object Curation44Q extends QueryModule {
 
-  // one reused per-prefix dir per JVM, deleted on exit (see Q.scratchDir)
-  private def scratchDir(prefix: String): String = Q.scratchDir(prefix)
-
   val queries: Map[String, QueryFn] = Map(
 
     // A89: Cochran's Q — "does purchase propensity differ by weekday
@@ -84,7 +81,7 @@ object Curation44Q extends QueryModule {
     // and a full scan. Value equality vs the source proves the
     // filtered path lossless.
     "s19_parquet_bloom" -> ((s, dir) => {
-      val base = scratchDir("graft_bloom")
+      val base = Q.scratchDir("graft_bloom")
       orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"),
           round(col("o_totalprice") * 100).cast("long").as("cents"))

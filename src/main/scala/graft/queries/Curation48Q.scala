@@ -13,9 +13,6 @@ import Q._
   */
 object Curation48Q extends QueryModule {
 
-  // one reused per-prefix dir per JVM, deleted on exit (see Q.scratchDir)
-  private def scratchDir(prefix: String): String = Q.scratchDir(prefix)
-
   val queries: Map[String, QueryFn] = Map(
 
     // G19: bipartiteness of the g2 co-supply graph (same-nation
@@ -105,7 +102,7 @@ object Curation48Q extends QueryModule {
     // behavior). The oracle states the expected end state from the
     // source alone.
     "s20_dynamic_overwrite" -> ((s, dir) => {
-      val base = scratchDir("graft_dynow")
+      val base = Q.scratchDir("graft_dynow")
       val src = orders(s, dir).select(col("o_orderkey"),
         round(col("o_totalprice") * 100).cast("long").as("cents"),
         pmod(col("o_orderkey"), lit(7L)).as("part"))

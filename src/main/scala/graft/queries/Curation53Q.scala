@@ -161,9 +161,9 @@ object Curation53Q extends QueryModule {
         round(col("l_extendedprice") * 100).cast("long").as("y"))
       // medianDoubled replaces the former groupBy(y)→cumsum→aggregate
       // chain (3 row-scale groupBy shuffles of a 97%-distinct cent
-      // lattice — the round-11 cacheInput=false debate) with bucket
-      // metadata + a ~2/p-bucket refinement: no row-scale shuffle at
-      // any SF, same exact integers (round 12).
+      // lattice, whose cache cost more than the recompute it saved)
+      // with bucket metadata + a ~2/p-bucket refinement: no row-scale
+      // shuffle at any SF, same exact integers (round 12).
       val med = graft.operators.DistRank.medianDoubled(li, col("y"))
       val tab = li.crossJoin(broadcast(med)).groupBy("g").agg(
         sum(when(col("y") * 2 > col("med2"), 1L).otherwise(0L)).as("ab"),

@@ -18,13 +18,6 @@ object IoQ extends QueryModule {
     StructField("p_size", IntegerType),
     StructField("p_retailprice", DoubleType)))
 
-  /** Per-prefix per-JVM scratch dir (Q.scratchDir): unique per
-    * process so concurrent bench + tests never collide, REUSED across
-    * invocations in one JVM (every writer here runs mode=overwrite,
-    * so reuse is a rewrite), deleted on JVM exit — repeated sweeps no
-    * longer leak a directory per invocation (the s5 ADVICE class). */
-  private def scratchDir(prefix: String): String = Q.scratchDir(prefix)
-
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
@@ -37,7 +30,7 @@ object IoQ extends QueryModule {
     // aggregate — values must round-trip exactly.
     "s1_csv_roundtrip" -> ((s, dir) => {
       val p = part(s, dir).select("p_partkey", "p_brand", "p_size", "p_retailprice")
-      val base = scratchDir("graft_csv")
+      val base = Q.scratchDir("graft_csv")
       Tables.writeSubmission(p.filter(col("p_partkey") % 2 === 0), s"$base/even")
       Tables.writeSubmission(p.filter(col("p_partkey") % 2 =!= 0), s"$base/odd")
       Tables.csv(s, partSchema, s"$base/even", s"$base/odd")
@@ -55,7 +48,7 @@ object IoQ extends QueryModule {
     "s6_jsonl" -> ((s, dir) => {
       val d = documents(s, dir)
         .select("doc_id", "text", "lang", "source", "n_chars")
-      val base = scratchDir("graft_jsonl")
+      val base = Q.scratchDir("graft_jsonl")
       d.repartition(4).write.mode("overwrite").json(base)
       s.read.schema(d.schema).json(base)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -69,7 +62,7 @@ object IoQ extends QueryModule {
     // keep consuming every vintage. The fill sentinel keeps the
     // output hash-comparable.
     "s9_mergeschema" -> ((s, dir) => {
-      val base = scratchDir("graft_evolve")
+      val base = Q.scratchDir("graft_evolve")
       val d = documents(s, dir)
       d.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"))
@@ -88,7 +81,7 @@ object IoQ extends QueryModule {
     // between touching one partition and touching all of them
     // (ScaleTechniquesSpec asserts the plan's PartitionFilters).
     "s7_partitioned" -> ((s, dir) => {
-      val base = scratchDir("graft_part")
+      val base = Q.scratchDir("graft_part")
       documents(s, dir).select("doc_id", "text", "lang", "n_chars")
         .write.mode("overwrite").partitionBy("lang").parquet(base)
       s.read.parquet(base).filter(col("lang") === "en")
@@ -100,7 +93,7 @@ object IoQ extends QueryModule {
     // parquet). DuckDB can't read ORC, so the oracle reads the source
     // parquet: exact value equality proves the round-trip lossless.
     "s8_orc" -> ((s, dir) => {
-      val base = scratchDir("graft_orc")
+      val base = Q.scratchDir("graft_orc")
       val src = lineitem(s, dir)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       src.write.mode("overwrite").orc(base)
@@ -122,7 +115,7 @@ object IoQ extends QueryModule {
     // bucketed copies can be dropped before returning (repeated bench
     // iterations would otherwise accumulate both).
     "s10_bucketed" -> ((s, dir) => {
-      val base = scratchDir("graft_buck")
+      val base = Q.scratchDir("graft_buck")
       val tag = java.lang.Long.toHexString(System.nanoTime())
       val (ta, tb) = (s"graft_bli_$tag", s"graft_bord_$tag")
       try {
@@ -222,7 +215,7 @@ object IoQ extends QueryModule {
     // record, never kill the job or silently vanish). Every 7th line
     // is corrupted deterministically before the read.
     "s14_badrecords" -> ((s, dir) => {
-      val base = scratchDir("graft_bad")
+      val base = Q.scratchDir("graft_bad")
       documents(s, dir)
         .select(concat_ws(",",
           col("doc_id"),
@@ -247,7 +240,7 @@ object IoQ extends QueryModule {
     // parsed back relationally; the tab-joined layout survives
     // because the normalized payload has no tabs/newlines.
     "s11_text" -> ((s, dir) => {
-      val base = scratchDir("graft_text")
+      val base = Q.scratchDir("graft_text")
       documents(s, dir)
         .select(concat_ws("\t", col("doc_id"),
           regexp_replace(col("text"), "[\\t\\n\\r]", " ")).as("value"))
@@ -262,7 +255,7 @@ object IoQ extends QueryModule {
     // enterprise feed format; explicit schema on read (inference at
     // 100 TB is a non-starter), row-per-element layout.
     "s12_xml" -> ((s, dir) => {
-      val base = scratchDir("graft_xml")
+      val base = Q.scratchDir("graft_xml")
       documents(s, dir).select("doc_id", "lang", "n_chars")
         .write.mode("overwrite").format("xml")
         .option("rootTag", "docs").option("rowTag", "doc").save(base)
@@ -280,7 +273,7 @@ object IoQ extends QueryModule {
     // a Spark operator; at scale blobs arrive as files); the measured
     // operator is the distributed binaryFile SCAN + content hashing.
     "s13_binaryfile" -> ((s, dir) => {
-      val base = scratchDir("graft_bin")
+      val base = Q.scratchDir("graft_bin")
       val sample = documents(s, dir).where(col("doc_id") < 20)
         .select(col("doc_id"), col("text")).collect()
       sample.foreach { r =>

@@ -133,14 +133,8 @@ object Q {
   def scratchDir(prefix: String): String =
     scratchRoots.computeIfAbsent(prefix, p => {
       val d = java.nio.file.Files.createTempDirectory(p)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          val cs = f.listFiles()
-          if (cs != null) cs.foreach(del)
-          f.delete(): Unit
-        }
-        del(d.toFile)
-      }))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        IoQ.deleteRecursively(d.toFile)))
       d.toString
     })
 }

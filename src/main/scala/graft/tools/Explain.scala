@@ -5,7 +5,10 @@ import scala.util.control.NonFatal
 /** Dev-only plan auditor: prints the formatted physical plan of named
   * registered queries (or a compact red-flag summary with -s) so plan
   * regressions — unintended cartesians, missing pushdowns, missed
-  * broadcasts — are reviewable without running the data. */
+  * broadcasts — are reviewable without running the final query.
+  * Building a plan still runs the query's eager build-time jobs
+  * (boundary sketches, fits, per-round collects, IO round-trips), so
+  * an all-query pass costs minutes, not seconds. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val summary = args.headOption.contains("-s")

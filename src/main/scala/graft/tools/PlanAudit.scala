@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Shared plan red-flag detection for the Explain CLI and the
-  * PlanGuardSpec CI gate: unintended cartesians, broadcast
+  * PlanAuditSpec CI gate: unintended cartesians, broadcast
   * nested-loop joins, and single-partition ("global") windows — the
   * three plan shapes that silently stop scaling at 100 TB. */
 object PlanAudit {

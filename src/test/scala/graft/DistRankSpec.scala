@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -154,6 +155,39 @@ class DistRankSpec extends SparkSpec {
       .select("k", "r").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toMap
     assert(got == expect)
+    // cumsum with grand totals (the one eager pass at parts=1), cummin
+    // (no eager pass) and fused rowNumbers with totalAs, all against
+    // the single-partition window over the same aggregate
+    val wIn = Window.orderBy(ord: _*)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val wEx = Window.orderBy(ord: _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val ordK = Seq(col("k").desc)
+    val single = agg
+      .withColumn("cs", sum("sv").over(wIn))
+      .withColumn("cs_tot", sum("sv").over(Window.partitionBy()))
+      .withColumn("mk",
+        coalesce(min("k").over(wEx), lit(Long.MaxValue)))
+      .withColumn("r1", row_number().over(Window.orderBy(ord: _*))
+        .cast("long"))
+      .withColumn("r2", row_number().over(Window.orderBy(ordK: _*))
+        .cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy()))
+    def byK(d: DataFrame, c: String*) =
+      d.select("k", c: _*).collect()
+        .map(r => r.getLong(0) -> c.indices.map(i => r.getLong(i + 1)))
+        .toMap
+    assert(byK(DistRank.cumsum(agg, col("sv"), ord,
+        Seq((col("sv"), "cs")), totalsSuffix = Some("_tot"), parts = 1),
+      "cs", "cs_tot") == byK(single, "cs", "cs_tot"))
+    assert(byK(DistRank.cummin(agg, col("sv"), ord,
+        Seq((col("k"), "mk")), inclusive = false, parts = 1), "mk") ==
+      byK(single, "mk"))
+    assert(byK(DistRank.rowNumbers(agg, Seq(
+        DistRank.RankSpec(col("sv"), ord, "r1"),
+        DistRank.RankSpec(-col("k"), ordK, "r2")),
+        totalAs = Some("n"), parts = 1), "r1", "r2", "n") ==
+      byK(single, "r1", "r2", "n"))
     // row-scale input (a raw scan core) must be rejected
     intercept[IllegalArgumentException] {
       DistRank.rowNumber(base, col("k"), Seq(col("k"), col("id")),
@@ -166,6 +200,53 @@ class DistRankSpec extends SparkSpec {
       DistRank.rowNumber(exploded, col("x"), Seq(col("x"), col("k")),
         "r", parts = 1)
     }
+  }
+
+  test("input cache: aggregate-grain input with an eager pass only") {
+    val agg = base.groupBy("k").agg(sum("v").as("sv"))
+    val ord = Seq(col("sv"), col("k"))
+    // persistent RDDs a built-and-run frame adds over a clear cache
+    // (other suites' localCheckpoint RDDs are not catalog caches)
+    def cachedBy(build: => DataFrame): Int = {
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      build.collect()
+      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    }
+    def cumsum(d: DataFrame, o: Seq[Column],
+        parts: Int, tot: Option[String] = None) =
+      DistRank.cumsum(d, o.head, o, Seq((col("k"), "c")),
+        totalsSuffix = tot, parts = parts)
+    def cummin(d: DataFrame, o: Seq[Column],
+        parts: Int) =
+      DistRank.cummin(d, o.head, o, Seq((col("k"), "c")), parts = parts)
+    def rowNumbers(d: DataFrame, o: Seq[Column],
+        parts: Int) =
+      DistRank.rowNumbers(d, Seq(DistRank.RankSpec(o.head, o, "r")),
+        parts = parts)
+    def adjacentPairs(d: DataFrame, o: Seq[Column],
+        parts: Int) =
+      DistRank.adjacentPairs(d, o.head, o, Seq("k"), parts = parts)
+    val raw = Seq(col("k"), col("id"))
+    try {
+      assert(cachedBy(cumsum(agg, ord, 4)) > 0, "cumsum, aggregate")
+      assert(cachedBy(cummin(agg, ord, 4)) > 0, "cummin, aggregate")
+      assert(cachedBy(rowNumbers(agg, ord, 4)) > 0,
+        "rowNumbers, aggregate")
+      assert(cachedBy(adjacentPairs(agg, ord, 4)) > 0,
+        "adjacentPairs, aggregate")
+      // parts=1: grand totals are the one eager pass; without them
+      // there is none, so nothing is cached
+      assert(cachedBy(cumsum(agg, ord, 1, Some("_t"))) > 0,
+        "cumsum with totals at parts=1")
+      assert(cachedBy(cummin(agg, ord, 1)) == 0, "cummin at parts=1")
+      assert(cachedBy(cumsum(base, raw, 4)) == 0, "cumsum, raw scan")
+      assert(cachedBy(cummin(base, raw, 4)) == 0, "cummin, raw scan")
+      assert(cachedBy(rowNumbers(base, raw, 4)) == 0,
+        "rowNumbers, raw scan")
+      assert(cachedBy(adjacentPairs(base, raw, 4)) == 0,
+        "adjacentPairs, raw scan")
+    } finally spark.catalog.clearCache()
   }
 
   test("cummin matches single-partition running min, incl and excl") {
