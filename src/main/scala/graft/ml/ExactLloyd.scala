@@ -74,7 +74,7 @@ object ExactLloyd {
   /** [[centroids]] on the literal path: each round is ONE scan of the
     * (vec_id, q-array) frame (assignment via [[argminLit]],
     * update via posexplode→groupBy(cid, dim)) plus a ≤ k·dims-row
-    * driver collect (cluster metadata, the DistRank-offsets class);
+    * driver collect (cluster metadata);
     * the shifted-floor rounding runs in Scala with the identical
     * integer formula, so every round's centroids are bit-identical
     * to [[centroids]]'s. Returns the k centroid lattice vectors. */

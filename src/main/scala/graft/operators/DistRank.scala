@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.BucketIndex
 
 /** Distributed exact global order statistics — cumulative sums,
   * row_number, and ntile over a TOTAL order — without ever planning a
@@ -17,46 +19,45 @@ import org.apache.spark.sql.functions._
   * 100 TB bottleneck. This is the classic two-pass fix:
   *
   *   1. freeze p-1 ordered bucket boundaries of a numeric bucket key
-  *      (one `percentile_approx` job; boundaries become literals);
-  *   2. assign each row a deterministic bucket id with pure column
-  *      arithmetic over those literals — equal keys always land in
-  *      the same bucket, so boundary PLACEMENT affects only load
-  *      balance, never the result;
+  *      (one `percentile_approx` aggregate);
+  *   2. give each row a bucket id: the number of boundaries strictly
+  *      below its key ([[graft.functions.BucketIndex]], a binary
+  *      search) — equal keys always land in the same bucket, so
+  *      boundary PLACEMENT affects only load balance, never the
+  *      result;
   *   3. aggregate per-bucket value totals (≤ p rows — cluster
-  *      metadata, not data; fetched to the driver exactly like AQE's
-  *      own shuffle statistics) and prefix-sum them into per-bucket
+  *      metadata, not data) and prefix-fold them into per-bucket
   *      offsets;
   *   4. window WITHIN each bucket (`Window.partitionBy(bucket)` —
-  *      p-way parallel, spillable local sorts) and add the broadcast
+  *      p-way parallel, spillable local sorts) and add the bucket's
   *      offset.
+  *
+  * Steps 1 and 3 are ONE struct-valued scalar subquery per call, its
+  * meta (see [[meta]]): the boundaries are a subquery nested inside
+  * it, and the meta returns them next to the offsets, so the plan
+  * buckets its rows with the very boundaries the offsets were
+  * computed from. The meta runs when the plan executes: building a
+  * DistRank frame fires no Spark job and caches nothing. Its values
+  * reach generated code as array and struct objects, never as inlined
+  * literals, so the code does not change with the data.
   *
   * Why not `repartitionByRange` + `spark_partition_id()`: the range
   * partitioner re-samples its boundaries per job (seeded by the RDD
   * id), so the totals pass and the final pass could disagree on
-  * partition membership and the offsets would silently mis-align.
-  * Literal boundaries make every pass agree by construction.
+  * partition membership and the offsets would silently mis-align. Two
+  * runs of the sketch can disagree the same way (its merge order
+  * follows the shuffle), which is why one execution supplies both the
+  * boundaries and the offsets. The input frame itself is evaluated by
+  * the meta and again by the plan (exchange reuse shares its shuffles
+  * where the plans match), so it must be deterministic.
   *
   * Output is bitwise identical to the single-partition plan whenever
   * `order` is a total order — callers must include a unique
   * tiebreaker, as every graft call site already does.
   *
-  * Key contract: `bucketKey` must be NULL-free, and a NaN key is
-  * placed in the TOP bucket (Spark and DuckDB both sort NaN above
-  * every finite double, but `key > boundary` is false for NaN, so
-  * without the explicit guard NaN rows would mis-bucket to the
-  * bottom and corrupt every downstream offset). No graft call site
-  * can currently produce a NaN key (sigmoid scores, integer
-  * lattices, hashes), but the guard makes the primitive safe for
-  * ones that can.
-  *
-  * Cache lifecycle: cumsum/cummin/rowNumbers/adjacentPairs `.cache()`
-  * their tagged input under one rule (see [[cacheRule]]) and do NOT
-  * unpersist it — the cached relation lives until
-  * `spark.catalog.clearCache()` or session end (Bench and JobCount
-  * clear between queries). An embedding application calling these
-  * primitives many times in one session should clear the cache
-  * between calls. Each entry is bounded (aggregate-grain), but the
-  * COUNT of entries is unbounded.
+  * Key contract: `bucketKey` must be NULL-free. A NaN key lands in the
+  * TOP bucket, where Spark and DuckDB both sort NaN, and -0.0 shares
+  * 0.0's bucket (Catalyst's double order, which the bucket id uses).
   */
 object DistRank {
 
@@ -79,15 +80,6 @@ object DistRank {
     * any row count. */
   private[graft] def ldiv(a: Column, b: Column): Column =
     ((a - pmod(a, b)) / b).cast("long")
-
-  /** Bucket id = #boundaries strictly below the key — monotone in the
-    * key, equal keys share a bucket, pure codegen arithmetic. NaN
-    * (which Spark orders ABOVE every finite double) goes to the top
-    * bucket; the `>` comparisons alone would send it to bucket 0. */
-  private def pidFor(key: Column, bounds: Seq[Double]): Column =
-    if (bounds.isEmpty) lit(0)
-    else when(isnan(key), lit(bounds.size)).otherwise(
-      bounds.map(b => when(key > lit(b), 1).otherwise(0)).reduce(_ + _))
 
   /** Structural backstop for the `parts = 1` fast path: true when the
     * frame's grain is bounded by an aggregation/dedup/constant
@@ -124,84 +116,94 @@ object DistRank {
         "frame (the single-bucket window would otherwise one-task-sort " +
         "row-scale data); this frame's logical plan has a row-scale core")
 
-  /** The input-cache rule of cumsum/cummin/rowNumbers/adjacentPairs.
-    * The input chain is otherwise evaluated once per eager pass
-    * (boundary sketch, per-bucket totals) AND again by the caller's
-    * final action — for the common value-count inputs that is a
-    * row-scale groupBy recomputed 3x. So `tagged` is cached when `df`
-    * is provably aggregate-grain (bounded — a value lattice, never
-    * row-scale data, so the footprint is compact at every SF) and an
-    * eager pass will read it. Row-scale inputs stay uncached: at
-    * 100 TB caching them is a caller-level judgment (a102/a103 do it
-    * explicitly), not a primitive default. The medians read raw rows
-    * and never cache. The rule is applied BEFORE the sketch, so the
-    * sketch job is the one that materializes the cache. */
-  private def cacheRule(df: DataFrame, tagged: DataFrame,
-      eager: Boolean): DataFrame =
-    if (eager && boundedGrain(df.queryExecution.analyzed)) tagged.cache()
-    else tagged
-
-  /** Pass 0 of every primitive: ONE `percentile_approx` job over
-    * `frame` freezes p-1 boundaries for all `keys` together, returned
-    * sorted and distinct per key. ANY boundary set is correct (it only
-    * balances load), so the approximate sketch is fine; distinct-ing
-    * collapses heavy ties into one bucket, which an ordered
-    * partitioning could not split anyway. p = 1 (the aggregate-grain
-    * fast path) skips the job outright. */
-  private def sketch(frame: DataFrame, keys: Seq[Column],
-      p: Int): Seq[Seq[Double]] =
-    if (p == 1) keys.map(_ => Nil)
+  /** The boundary sketch: ONE `percentile_approx` aggregate over
+    * `frame` freezes p-1 boundaries for all `keys` (DOUBLE columns of
+    * `frame`) together, as a scalar subquery returning a struct with
+    * one ascending array per key under the key's name. ANY boundary
+    * set is correct (it only balances load), so the approximate sketch
+    * is fine. p = 1 (the aggregate-grain fast path) has no
+    * boundaries.
+    *
+    * A plan reads one call's boundaries at several sites, and Spark
+    * runs those reads once only under subquery reuse; two runs of the
+    * sketch could disagree, so the call refuses to build without it. */
+  private def sketch(frame: DataFrame, keys: Seq[String],
+      p: Int): Option[Column] =
+    if (p == 1) None
     else {
+      require(frame.sparkSession.conf
+          .get("spark.sql.execution.reuseSubquery", "true").toBoolean,
+        "DistRank needs spark.sql.execution.reuseSubquery=true: its " +
+          "boundaries must come from one execution of the sketch")
       val qs = array((1 until p).map(i => lit(i.toDouble / p)): _*)
-      val aggs = keys.zipWithIndex.map { case (k, j) =>
-        percentile_approx(k, qs, lit(2500)).as(s"b$j")
-      }
-      val row = frame.agg(aggs.head, aggs.tail: _*).head()
-      keys.indices.map(j =>
-        if (row.isNullAt(j)) Nil else row.getSeq[Double](j).distinct.sorted)
+      Some(frame.agg(struct(keys.map(k =>
+        percentile_approx(col(k), qs, lit(2500)).as(k)): _*)).scalar())
     }
+
+  /** Bucket ids of the key columns `keys` under a [[sketch]] result;
+    * with no boundaries every row is bucket 0. */
+  private def bucketIds(keys: Seq[String],
+      bounds: Option[Column]): Seq[Column] =
+    keys.map(k => bounds.fold(lit(0))(b => BucketIndex.of(col(k), b(k))))
+
+  /** One call's meta: ONE struct-valued scalar subquery over `frame`.
+    * The [[sketch]] is nested inside it; `summary` reduces `frame`
+    * bucketed by those boundaries (key j's id in `__drp$j`) to one row,
+    * and the meta is that row's columns plus the boundaries as field
+    * `bounds`. The plan reads its own bucket ids from that field
+    * ([[boundsOf]]), so the boundaries it buckets by and the summary
+    * come from one execution. */
+  private def meta(frame: DataFrame, keys: Seq[String], p: Int)(
+      summary: DataFrame => DataFrame): Column = {
+    val bounds = sketch(frame, keys, p)
+    val s = summary(frame.select(col("*") +: bucketIds(keys, bounds)
+      .zipWithIndex.map { case (c, j) => c.as(s"__drp$j") }: _*))
+    s.select(struct(bounds.map(_.as("bounds")).toSeq ++
+      s.columns.map(col): _*)).scalar()
+  }
+
+  private def boundsOf(meta: Column, p: Int): Option[Column] =
+    if (p == 1) None else Some(meta("bounds"))
 
   /** A running aggregate over LONG values: its SQL aggregate, its
-    * identity, its driver-side step, how a bucket-local result meets
-    * the bucket's offset, and the prefix of its scan's column tags. */
+    * identity, how two folded values combine, and the prefix of its
+    * scan's column tags. */
   private final case class Fold(agg: Column => Column, zero: Long,
-      step: (Long, Long) => Long, combine: (Column, Column) => Column,
-      tag: String)
-  private val SumFold = Fold(sum(_), 0L, _ + _, _ + _, "__dr")
-  private val MinFold =
-    Fold(min(_), Long.MaxValue, math.min(_, _), least(_, _), "__dm")
+      combine: (Column, Column) => Column, tag: String)
+  private val SumFold = Fold(sum(_), 0L, _ + _, "__dr")
+  private val MinFold = Fold(min(_), Long.MaxValue, least(_, _), "__dm")
 
-  /** Exclusive per-bucket prefix of `perBucket` (≤ p rows of driver
-    * metadata, `width` values each) under `fold`, as one LITERAL
-    * lookup per value on the bucket-id column `pid`, plus the grand
-    * fold. The offsets are ≤ p driver-known constants, so a codegen'd
-    * CASE chain on the bucket id replaces the former broadcast-join —
-    * one less exchange per call, and no join to degenerate into a
-    * BroadcastNestedLoop when the single-bucket fast path makes the
-    * key foldable. No buckets (a skipped totals pass, or an empty
-    * input) reads as bucket 0 holding the identity. */
-  private def offsets(perBucket: Map[Int, Array[Long]], width: Int,
-      fold: Fold, pid: String): (Seq[Column], Array[Long]) = {
-    val byPid =
-      if (perBucket.nonEmpty) perBucket
-      else Map(0 -> Array.fill(width)(fold.zero))
-    val running = Array.fill(width)(fold.zero)
-    val offs = byPid.keys.toSeq.sorted.map { b =>
-      val before = running.clone()
-      val t = byPid(b)
-      (0 until width).foreach(i => running(i) = fold.step(running(i), t(i)))
-      b -> before
+  /** The [[meta]] of the running folds: for key j and value `vals(i)`,
+    * field `f${j}_$i` holds `run` (the grand fold) and `offs` (the
+    * exclusive per-bucket prefix, an array indexed by bucket id). The
+    * per-(key, bucket) folds are ≤ k·p rows, collected sorted and
+    * scanned by one `aggregate` per field; a bucket with no rows gets
+    * the fold of the buckets below it, and an empty input gives the
+    * identity with no offsets. */
+  private def foldMeta(frame: DataFrame, keys: Seq[String],
+      vals: Seq[Column], fold: Fold, p: Int): Column =
+    meta(frame, keys, p) { b =>
+      val ts = vals.indices.map(i => s"t$i")
+      val folds = ts.map(t => coalesce(fold.agg(col(t)), lit(fold.zero)).as(t))
+      val cells = b
+        .select(inline(array(keys.indices.map(j => struct(
+          lit(j).as("j") +: col(s"__drp$j").as("b") +:
+            vals.zip(ts).map { case (v, t) => v.as(t) }: _*)): _*)))
+        .groupBy("j", "b").agg(folds.head, folds.tail: _*)
+        .agg(array_sort(collect_list(struct(("j" +: "b" +: ts).map(col): _*)))
+          .as("cells"))
+      cells.select((for (j <- keys.indices; (t, i) <- ts.zipWithIndex)
+        yield aggregate(filter(col("cells"), _("j") === j),
+          struct(lit(fold.zero).as("run"), typedLit(Seq.empty[Long]).as("offs")),
+          (acc, c) => struct(fold.combine(acc("run"), c(t)).as("run"),
+            concat(acc("offs"), array_repeat(acc("run"),
+              c("b") + 1 - size(acc("offs")))).as("offs")))
+          .as(s"f${j}_$i")): _*)
     }
-    val lookups = (0 until width).map(i =>
-      offs.foldLeft(lit(fold.zero)) { case (acc, (b, o)) =>
-        when(col(pid) === lit(b), lit(o(i))).otherwise(acc)
-      })
-    (lookups, running)
-  }
 
   /** [[cumsum]] and [[cummin]]: the two-pass shape of the class doc
     * under one [[Fold]]. `values` are (column, output name) pairs;
-    * each value's grand fold is appended as a literal column named
+    * each value's grand fold is appended as a column named
     * outputName + `totalsSuffix` when that is set. */
   private def scan(df: DataFrame, bucketKey: Column, order: Seq[Column],
       values: Seq[(Column, String)], inclusive: Boolean,
@@ -210,29 +212,17 @@ object DistRank {
     if (p == 1) requireFastPath(df)
     val keep = df.columns.toSeq
     val tags = values.indices.map(i => s"${fold.tag}v$i")
-    // With a single bucket the offsets are all identities, so the
-    // totals pass runs only when the caller wants grand totals.
-    val totalsPass = p > 1 || totalsSuffix.nonEmpty
-    val tagged = cacheRule(df, df.select(
+    val tagged = df.select(
       (keep.map(col) :+ bucketKey.cast("double").as("__drk")) ++
-        values.zip(tags).map { case ((c, _), t) => c.cast("long").as(t) }: _*),
-      eager = totalsPass)
-    val bounds = sketch(tagged, Seq(col("__drk")), p).head
-    val bucketed = tagged.withColumn("__drp", pidFor(col("__drk"), bounds))
+        values.zip(tags).map { case ((c, _), t) => c.cast("long").as(t) }: _*)
+    // With a single bucket the offsets are all identities, so the meta
+    // runs only when the caller wants grand totals.
+    val m = if (p > 1 || totalsSuffix.nonEmpty)
+      Some(foldMeta(tagged, Seq("__drk"), tags.map(col), fold, p)) else None
+    val bucketed = tagged.withColumn("__drp",
+      bucketIds(Seq("__drk"), m.flatMap(boundsOf(_, p))).head)
 
-    // Pass 1: per-bucket totals — ≤ p rows of metadata.
-    val perBucket: Map[Int, Array[Long]] =
-      if (!totalsPass) Map.empty
-      else {
-        val aggs = tags.map(t => fold.agg(col(t)).as(t))
-        bucketed.groupBy("__drp").agg(aggs.head, aggs.tail: _*).collect()
-          .map(r => r.getInt(0) -> tags.indices.map(i =>
-            if (r.isNullAt(i + 1)) fold.zero else r.getLong(i + 1)).toArray)
-          .toMap
-      }
-    val (lookups, grand) = offsets(perBucket, tags.size, fold, "__drp")
-
-    // Pass 2: bucket-local windows + the literal offset lookups.
+    // bucket-local windows + each bucket's offset from the meta
     val frameEnd = if (inclusive) 0L else -1L
     val w = Window.partitionBy("__drp").orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, frameEnd)
@@ -244,11 +234,13 @@ object DistRank {
         }: _*)
     val outCols = keep.map(col) ++
       values.zipWithIndex.map { case ((_, n), i) =>
-        fold.combine(col(s"${fold.tag}l$i"), lookups(i)).as(n)
+        val offset = m.fold(lit(fold.zero))(
+          _(s"f0_$i")("offs").getItem(col("__drp")))
+        fold.combine(col(s"${fold.tag}l$i"), offset).as(n)
       } ++
       totalsSuffix.toSeq.flatMap(suf =>
         values.zipWithIndex.map { case ((_, n), i) =>
-          lit(grand(i)).as(s"$n$suf")
+          m.get(s"f0_$i")("run").as(s"$n$suf")
         })
     withLocal.select(outCols: _*)
   }
@@ -266,7 +258,7 @@ object DistRank {
     * @param inclusive frame end: current row (true) or previous row
     *                  (false — exclusive prefix; 0 on the first row)
     * @param totalsSuffix if set, each value's grand total is appended
-    *                  as a literal column named outputName+suffix —
+    *                  as a column named outputName+suffix —
     *                  replaces `sum(x).over(Window.partitionBy())`,
     *                  which is ALSO a single-partition window
     * @param rowNumberAs if set, an exact global 1-based row number
@@ -283,33 +275,25 @@ object DistRank {
 
   /** Exact global running MINIMUM of `values` over the total order
     * `order` — the two-pass [[cumsum]] shape with min in place of
-    * sum: per-bucket minima are the ≤ p rows of driver metadata,
-    * their exclusive prefix-min becomes the literal per-bucket
-    * offset, and the final pass takes min(bucket-local running min,
-    * offset). Values must be LONG-castable and non-null; the first
-    * row's EXCLUSIVE min is Long.MaxValue (no predecessor — callers
-    * test `isFirst` or compare against it). Powers order-scan
-    * operators (2D skyline's "best y among strictly earlier x"),
-    * never a single-partition window. */
+    * sum: per-bucket minima are the ≤ p rows of metadata, their
+    * exclusive prefix-min is the per-bucket offset, and the final pass
+    * takes min(bucket-local running min, offset). Values must be
+    * LONG-castable and non-null; the first row's EXCLUSIVE min is
+    * Long.MaxValue (no predecessor — callers test `isFirst` or compare
+    * against it). Powers order-scan operators (2D skyline's "best y
+    * among strictly earlier x"), never a single-partition window. */
   def cummin(df: DataFrame, bucketKey: Column, order: Seq[Column],
       values: Seq[(Column, String)], inclusive: Boolean = true,
       parts: Int = 0): DataFrame =
     scan(df, bucketKey, order, values, inclusive, None, parts, MinFold)
 
-  /** Exact global 1-based row number over `order` — `cumsum` of a
-    * constant 1. `totalAs`, if set, appends the total row count as a
-    * literal column (feeds `ntileOf`). */
+  /** Exact global 1-based row number over `order` — [[rowNumbers]] with
+    * one order. `totalAs`, if set, appends the total row count as a
+    * column (feeds `ntileOf`). */
   def rowNumber(df: DataFrame, bucketKey: Column, order: Seq[Column],
       as: String, totalAs: Option[String] = None,
-      parts: Int = 0): DataFrame = {
-    val d = cumsum(df, bucketKey, order, Nil, inclusive = true,
-      totalsSuffix = totalAs.map(_ => "__tot"), rowNumberAs = Some(as),
-      parts = parts)
-    totalAs match {
-      case Some(t) => d.withColumnRenamed(s"${as}__tot", t)
-      case None => d
-    }
-  }
+      parts: Int = 0): DataFrame =
+    rowNumbers(df, Seq(RankSpec(bucketKey, order, as)), totalAs, parts)
 
   /** One global ranking to compute alongside others in a single
     * [[rowNumbers]] call: `bucketKey` must be ASC-congruent with
@@ -319,22 +303,21 @@ object DistRank {
       as: String)
 
   /** Several exact global row numbers over DIFFERENT total orders of
-    * the SAME frame, fused: one boundary-sketch job computes every
-    * order's bucket boundaries together, one metadata job counts the
-    * bucket-id TUPLE (≤ p^k rows — for the k=3 quintile scores at
-    * p=32 that is ≤ 32k rows of driver metadata, marginalized into
-    * per-order offsets), and the final plan runs the k bucket-local
-    * sort+window passes back to back over one scan — no per-order
-    * re-read of the input and no k-way self-join on the row key.
+    * the SAME frame, fused: one meta sketches every order's bucket
+    * boundaries together and counts each order's rows per bucket
+    * (≤ k·p rows, prefix-summed into per-order offsets), and the final
+    * plan runs the k bucket-local sort+window passes back to back over
+    * one scan — no per-order re-read of the input and no k-way
+    * self-join on the row key.
     *
-    * Replaces k independent [[rowNumber]] calls (2k eager jobs, k+1
+    * Replaces k independent [[rowNumber]] calls (k metas, k+1
     * computations of the input, k joins) for the RFM-style "rank the
     * same aggregate by several metrics" shape. Ranks are exact, so
     * the output is bitwise identical to the unfused form.
     *
     * @param totalAs if set, the total row count N is appended once as
-    *                a literal column under this name (shared by every
-    *                order — it is the same N).
+    *                a column under this name (shared by every order —
+    *                it is the same N).
     */
   def rowNumbers(df: DataFrame, specs: Seq[RankSpec],
       totalAs: Option[String] = None, parts: Int = 0): DataFrame = {
@@ -342,50 +325,30 @@ object DistRank {
     val p = partitions(df, parts)
     if (p == 1) requireFastPath(df)
     val keep = df.columns.toSeq
-    val js = specs.indices
-    val k = specs.size
-    val totalsPass = p > 1 || totalAs.isDefined
-    val tagged = cacheRule(df, df.select(keep.map(col) ++ specs.zip(js).map {
-      case (sp, j) => sp.bucketKey.cast("double").as(s"__drk$j")
-    }: _*), eager = totalsPass)
+    val keys = specs.indices.map(j => s"__drk$j")
+    val tagged = df.select(keep.map(col) ++ specs.zip(keys).map {
+      case (sp, k) => sp.bucketKey.cast("double").as(k)
+    }: _*)
+    // With a single bucket the offsets are all 0, so the meta runs
+    // only when the caller wants the total.
+    val m = if (p > 1 || totalAs.isDefined)
+      Some(foldMeta(tagged, keys, Seq(lit(1L)), SumFold, p)) else None
+    val bucketed = tagged.select(keep.map(col) ++
+      bucketIds(keys, m.flatMap(boundsOf(_, p))).zipWithIndex.map {
+        case (c, j) => c.as(s"__drp$j")
+      }: _*)
 
-    // Pass 0: every order's boundary sketch in ONE aggregate job.
-    val boundsPer = sketch(tagged, js.map(j => col(s"__drk$j")), p)
-    val bucketed = tagged.select(keep.map(col) ++ js.map(j =>
-      pidFor(col(s"__drk$j"), boundsPer(j)).as(s"__drp$j")): _*)
-
-    // Pass 1: ONE count job over GROUPING SETS ((__drp0), ..,
-    // (__drpk-1)) — each order's per-bucket marginal directly, ≤ k·p
-    // rows of driver metadata. (The former bucket-id TUPLE count was
-    // bounded only by min(p^k, distinct tuples) — row-scale in the
-    // worst case at large k; the marginals are all the offsets ever
-    // needed.) Every grouping set keys exactly one non-null column,
-    // so rows attribute to their order by the non-null index. That
-    // attribution is sound ONLY because pidFor structurally never
-    // returns NULL (its when/otherwise chain always falls through to
-    // a literal) — a pidFor edit that could yield NULL would silently
-    // drop rows from these marginals and corrupt every offset.
-    val cells: Array[Row] =
-      if (!totalsPass) Array.empty
-      else bucketed
-        .groupingSets(js.map(j => Seq(col(s"__drp$j"))),
-          js.map(j => col(s"__drp$j")): _*)
-        .agg(count(lit(1)).as("__n")).collect()
-    val total = cells.filter(r => k == 1 || !r.isNullAt(0))
-      .map(_.getLong(k)).sum
-
-    // Pass 2: k bucket-local windows over one scan, literal offsets.
-    val ranked = js.foldLeft(bucketed) { (d, j) =>
-      val marg = cells.filter(r => k == 1 || !r.isNullAt(j))
-        .map(r => r.getInt(j) -> Array(r.getLong(k))).toMap
-      val offset = offsets(marg, 1, SumFold, s"__drp$j")._1.head
+    // k bucket-local windows over one scan, offsets from the meta
+    val ranked = specs.indices.foldLeft(bucketed) { (d, j) =>
+      val offset =
+        m.fold(lit(0L))(_(s"f${j}_0")("offs").getItem(col(s"__drp$j")))
       val w = Window.partitionBy(s"__drp$j").orderBy(specs(j).order: _*)
         .rowsBetween(Window.unboundedPreceding, 0)
       d.withColumn(specs(j).as,
         coalesce(sum(lit(1L)).over(w), lit(0L)) + offset)
     }
     ranked.select(keep.map(col) ++ specs.map(sp => col(sp.as)) ++
-      totalAs.map(t => lit(total).as(t)).toSeq: _*)
+      totalAs.map(t => m.get("f0_0")("run").as(t)).toSeq: _*)
   }
 
   /** All ADJACENT row pairs (row_i, row_{i+1}) of the total order
@@ -396,8 +359,8 @@ object DistRank {
     * computes the full input chain twice and shuffles a row-scale
     * hash join, with ONE bucket-local sort pass:
     *
-    *   - within-bucket pairs: `lead()` over the cumsum Pass-2 window
-    *     (bucket-local sort, p-way parallel, spillable);
+    *   - within-bucket pairs: `lead()` over the cumsum bucket-local
+    *     window (bucket-local sort, p-way parallel, spillable);
     *   - the ≤ p−1 cross-boundary pairs: per-bucket first/last rows
     *     by `min_by`/`max_by` (aggregate-grain, ≤ p rows) joined to
     *     the next PRESENT bucket over a broadcast inequality —
@@ -407,8 +370,9 @@ object DistRank {
     * (row i+1); exactly N−1 rows for an N-row input. `order` must be
     * an ASCENDING total order; `bucketKey` ASC-congruent with its
     * leading column and NULL-free (the [[cumsum]] contract — NaN
-    * keys go to the top bucket). Build runs only the shared
-    * boundary-sketch job.
+    * keys go to the top bucket). Its one subquery is the boundary
+    * [[sketch]], which both passes read through one expression, so
+    * they agree on every row's bucket.
     */
   def adjacentPairs(df: DataFrame, bucketKey: Column, order: Seq[Column],
       cols: Seq[String], parts: Int = 0): DataFrame = {
@@ -417,14 +381,11 @@ object DistRank {
         s"name shadows another requested column (${cols.mkString(", ")})")
     val p = partitions(df, parts)
     val oNames = order.indices.map(i => s"__do$i")
-    // the sketch is the only eager pass; the cache also serves the
-    // in-bucket pass and the bucket-ends aggregate
-    val tagged = cacheRule(df, df.select(
+    val tagged = df.select(
       order.zip(oNames).map { case (c, n) => c.as(n) } ++
-        cols.map(col) :+ bucketKey.cast("double").as("__drk"): _*),
-      eager = p > 1)
-    val bounds = sketch(tagged, Seq(col("__drk")), p).head
-    val bucketed = tagged.withColumn("__drp", pidFor(col("__drk"), bounds))
+        cols.map(col) :+ bucketKey.cast("double").as("__drk"): _*)
+    val bucketed = tagged.withColumn("__drp",
+      bucketIds(Seq("__drk"), sketch(tagged, Seq("__drk"), p)).head)
     val w = Window.partitionBy("__drp").orderBy(oNames.map(col): _*)
     val ordStruct = struct(oNames.map(col): _*)
     val payload = struct(cols.map(col): _*)
@@ -456,153 +417,100 @@ object DistRank {
     inBucket.union(boundary)
   }
 
-
-  /** Where a running weight over `byPid` (bucket id → weight) first
-    * reaches half its total `tot`: bucket b1 holds the first c with
-    * 2·run ≥ tot, bucket b2 the first with 2·run > tot, and off1/off2
-    * are the weights below them. An empty input gives b1 = b2 = -1. */
-  private final case class Crossing(b1: Int, off1: Long, b2: Int,
-      off2: Long, tot: Long)
-
-  private def crossing(byPid: Seq[(Int, Long)]): Crossing = {
-    val sorted = byPid.sortBy(_._1)
-    val tot = sorted.map(_._2).sum
-    var run = 0L
-    var b1 = -1; var off1 = 0L; var b2 = -1; var off2 = 0L
-    sorted.foreach { case (pid, n) =>
-      val before = run; run += n
-      if (b1 < 0 && 2 * run >= tot) { b1 = pid; off1 = before }
-      if (b2 < 0 && 2 * run > tot) { b2 = pid; off2 = before }
-    }
-    Crossing(b1, off1, b2, off2, tot)
-  }
-
-  /** Keeps the rows of buckets [min b1, max b2] over the non-empty
-    * crossings `cs` (none: no row). Filter the crossing buckets by the
-    * VALUE RANGE they span, never by the bucket-id expression: a
-    * predicate on the bucket id gets pushed below the projection with
-    * the pid when-chain SUBSTITUTED into every term, so the caller's
-    * value expression (e.g. a BigDecimal round) re-evaluates ~2p times
-    * per row — measured 14 s for a plain filter+count at sf0.1
-    * (round 12). Bucket b holds exactly the keys in
-    * (bounds(b-1), bounds(b)], so the range keeps whole buckets and
-    * the callers' exact bucket-id conditions stay exact. */
-  private def crossingRange(key: Column, bounds: Seq[Double],
-      cs: Seq[Crossing]): Column = {
-    val live = cs.filter(_.tot > 0L)
-    if (live.isEmpty) lit(false)
-    else {
-      val loB = live.map(_.b1).min
-      val hiB = live.map(_.b2).max
-      Seq(
-        if (loB > 0) Some(key > lit(bounds(loB - 1))) else None,
-        if (hiB < bounds.size) Some(key <= lit(bounds(hiB))) else None
-      ).flatten.reduceOption(_ && _).getOrElse(lit(true))
-    }
+  /** Where a running weight over `cells` (struct(b: bucket id,
+    * n: weight), sorted by b) first reaches half its total `tot`: b1 is
+    * the bucket of the first cell with 2·run ≥ tot, b2 that of the
+    * first with 2·run > tot, and off1/off2 are the weights below them.
+    * One linear `aggregate`; an empty array gives b1 = b2 = -1. */
+  private def crossing(cells: Column): Column = {
+    val tot = aggregate(cells, lit(0L), (a, c) => a + c("n"))
+    aggregate(cells, struct(lit(0L).as("run"), lit(-1).as("b1"),
+        lit(0L).as("off1"), lit(-1).as("b2"), lit(0L).as("off2"),
+        tot.as("tot")),
+      (a, c) => {
+        val run = a("run") + c("n")
+        val at1 = a("b1") < 0 && run * 2 >= a("tot")
+        val at2 = a("b2") < 0 && run * 2 > a("tot")
+        struct(run.as("run"),
+          when(at1, c("b")).otherwise(a("b1")).as("b1"),
+          when(at1, a("run")).otherwise(a("off1")).as("off1"),
+          when(at2, c("b")).otherwise(a("b2")).as("b2"),
+          when(at2, a("run")).otherwise(a("off2")).as("off2"),
+          a("tot").as("tot"))
+      })
   }
 
   /** Exact DOUBLED median (vlo + vhi, the interpolation-free integer
     * form: vlo = min c with 2·#{v ≤ c} ≥ n, vhi = min c with
     * 2·#{v ≤ c} > n) of a LONG-castable column, without materializing
-    * the full value-count lattice cumsum. The former shape
-    * (groupBy(value) → cumsum → aggregate) recomputes a row-scale
-    * groupBy once per DistRank pass — for near-row-scale lattices
-    * (a101's cent prices: 97% of rows distinct at sf0.1) that is 3
-    * row-scale shuffles to extract two numbers. This primitive never
-    * shuffles row-scale data:
-    *
-    *   1. boundary sketch over the raw rows (one aggregate job, no
-    *      shuffle);
-    *   2. per-bucket row counts (one job; ≤ p rows survive map-side
-    *      partial aggregation, so the exchange moves ≤ p rows per map
-    *      task — metadata, not data);
-    *   3. the driver locates the ≤ 2 buckets where the cumulative
-    *      count crosses n/2, then the RETURNED (lazy) 1-row frame
-    *      aggregates a value-count cumsum over ONLY those buckets'
-    *      rows (~2/p of the input through one small exchange).
-    *
-    * Equal values share a bucket (pidFor is monotone), so each
-    * crossing is complete within its bucket and the result is exactly
-    * the full-lattice answer. Output: 1-row frame, `med2` LONG
-    * (NULL on empty input, matching the aggregate-over-empty shape of
-    * the cumsum form). `value` must be non-null. */
-  def medianDoubled(df: DataFrame, value: Column, parts: Int = 0): DataFrame = {
-    val p = partitions(df, parts)
-    val v = df.select(value.cast("long").as("__dmv"))
-    val key = col("__dmv").cast("double")
-    val bounds = sketch(v, Seq(key), p).head
-    val bucketed = v.withColumn("__drp", pidFor(key, bounds))
-    val c = crossing(bucketed.groupBy("__drp")
-      .agg(count(lit(1)).as("__n")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toSeq)
-    val sel = bucketed.filter(crossingRange(key, bounds, Seq(c)))
-      .groupBy(col("__drp"), col("__dmv")).agg(count(lit(1)).as("__m"))
-    val w = Window.partitionBy("__drp").orderBy("__dmv")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    sel.withColumn("__ci", sum(col("__m")).over(w))
-      .agg((min(when(col("__drp") === lit(c.b1) &&
-          (lit(c.off1) + col("__ci")) * 2 >= lit(c.tot), col("__dmv"))) +
-        min(when(col("__drp") === lit(c.b2) &&
-          (lit(c.off2) + col("__ci")) * 2 > lit(c.tot), col("__dmv"))))
-        .as("med2"))
-  }
+    * the full value-count lattice cumsum — [[groupedMedianDoubled]]
+    * over one group. Output: 1-row frame, `med2` LONG (NULL on empty
+    * input, matching the aggregate-over-empty shape of the cumsum
+    * form). `value` must be non-null. */
+  def medianDoubled(df: DataFrame, value: Column, parts: Int = 0): DataFrame =
+    groupedMedianDoubled(df, lit(0), value, parts = parts)
+      .agg(max(col("vlo") + col("vhi")).as("med2"))
 
   /** Per-group exact doubled median over RAW rows, with optional row
-    * weights — the grouped/weighted generalization of
-    * [[medianDoubled]] (same three-step shape: global boundary sketch
-    * over the value, per-(group, bucket) weight totals as driver
-    * metadata, then a lazy refinement over only each group's ≤ 2
-    * crossing buckets). Replaces the groupBy(group, value) →
-    * per-group window → aggregate chain, whose first step is a
-    * row-scale shuffle whenever values are near-distinct.
+    * weights. Replaces the groupBy(group, value) → per-group window →
+    * aggregate chain, whose first step is a row-scale shuffle whenever
+    * values are near-distinct (a101's cent prices: 97% of rows
+    * distinct at sf0.1). This never shuffles row-scale data:
     *
-    * Contract: `group` must be driver-bounded (the metadata pass
-    * collects #groups × p rows), `value` LONG-castable non-null,
-    * `weight` a POSITIVE LONG (use the default 1 for plain medians).
-    * Output: one row per group — (g, vlo, vhi, wtot) where
-    * vlo = min v with 2·cumw(v) ≥ wtot, vhi = min v with
-    * 2·cumw(v) > wtot, wtot = the group's total weight; the doubled
-    * median is vlo + vhi. Exact integers at any SF. */
+    *   1. the meta sketches boundaries over the raw values, sums the
+    *      weight per (group, bucket) — ≤ #groups × p rows survive
+    *      map-side partial aggregation, so the exchange moves metadata,
+    *      not data — and locates each group's ≤ 2 buckets where the
+    *      cumulative weight crosses half its total ([[crossing]]);
+    *   2. the plan aggregates a value-weight cumsum over ONLY the rows
+    *      of the buckets between the lowest and the highest crossing
+    *      (~2/p of the input through one small exchange), reading each
+    *      group's crossing from the meta's group map.
+    *
+    * Equal values share a bucket, so each crossing is complete within
+    * its bucket and the result is exactly the full-lattice answer.
+    *
+    * Contract: `group` must be bounded (the meta holds one crossing
+    * per group), `value` LONG-castable non-null, `weight` a POSITIVE
+    * LONG (use the default 1 for plain medians). Output: one row per
+    * group — (g, vlo, vhi, wtot) where vlo = min v with
+    * 2·cumw(v) ≥ wtot, vhi = min v with 2·cumw(v) > wtot, wtot = the
+    * group's total weight; the doubled median is vlo + vhi. Exact
+    * integers at any SF. */
   def groupedMedianDoubled(df: DataFrame, group: Column, value: Column,
       weight: Column = lit(1L), parts: Int = 0): DataFrame = {
     val p = partitions(df, parts)
     val v = df.select(group.as("__g"), value.cast("long").as("__v"),
-      weight.cast("long").as("__w"))
-    val key = col("__v").cast("double")
-    val bounds = sketch(v, Seq(key), p).head
-    val bucketed = v.withColumn("__p", pidFor(key, bounds))
-    // ≤ #groups × p rows; map-side partial aggregation keeps the
-    // exchange at metadata scale
-    val cnts = bucketed.groupBy(col("__g"), col("__p"))
-      .agg(sum(col("__w")).as("__n")).collect()
-    val metas: Seq[(Any, Crossing)] = cnts.groupBy(_.get(0)).toSeq.map {
-      case (g, rows) =>
-        g -> crossing(rows.map(r => r.getInt(1) -> r.getLong(2)).toSeq)
+      weight.cast("long").as("__w")).withColumn("__drk", col("__v").cast("double"))
+    val m = meta(v, Seq("__drk"), p) { b =>
+      val perGroup = b.groupBy(col("__g"), col("__drp0").as("b"))
+        .agg(sum(col("__w")).as("n"))
+        .groupBy("__g")
+        .agg(crossing(array_sort(collect_list(struct("b", "n")))).as("x"))
+      // a map key cannot be NULL: a NULL group keeps no crossing and
+      // so no median (it still widens [lo, hi])
+      perGroup.agg(
+        map_from_entries(collect_list(
+          when(col("__g").isNotNull, struct("__g", "x")))).as("groups"),
+        min(col("x.b1")).as("lo"), max(col("x.b2")).as("hi"))
     }
-    def chain(f: Crossing => Column, init: Column): Column =
-      metas.foldLeft(init) { case (acc, (g, m)) =>
-        when(col("__g") === lit(g), f(m)).otherwise(acc)
-      }
-    val b1C = chain(m => lit(m.b1), lit(-1))
-    val b2C = chain(m => lit(m.b2), lit(-1))
-    val off1C = chain(m => lit(m.off1), lit(0L))
-    val off2C = chain(m => lit(m.off2), lit(0L))
-    val totC = chain(m => lit(m.tot), lit(0L))
-    // one range over every group's crossing buckets — whole buckets,
-    // so the exact (__g, __p) conditions below are unaffected
-    val sel = bucketed.filter(crossingRange(key, bounds, metas.map(_._2)))
-      .groupBy(col("__g"), col("__p"), col("__v"))
+    val x = m("groups").getItem(col("__g"))
+    // whole buckets [lo, hi], so the exact (__g, __drp) conditions
+    // below are unaffected
+    val sel = v.withColumn("__drp", bucketIds(Seq("__drk"), boundsOf(m, p)).head)
+      .filter(col("__drp").between(m("lo"), m("hi")))
+      .groupBy(col("__g"), col("__drp"), col("__v"))
       .agg(sum(col("__w")).as("__m"))
-    val w = Window.partitionBy("__g", "__p").orderBy("__v")
+    val w = Window.partitionBy("__g", "__drp").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, 0)
     sel.withColumn("__ci", sum(col("__m")).over(w))
       .groupBy(col("__g").as("g"))
       .agg(
-        min(when(col("__p") === b1C &&
-          (off1C + col("__ci")) * 2 >= totC, col("__v"))).as("vlo"),
-        min(when(col("__p") === b2C &&
-          (off2C + col("__ci")) * 2 > totC, col("__v"))).as("vhi"),
-        max(totC).as("wtot"))
+        min(when(col("__drp") === x("b1") &&
+          (x("off1") + col("__ci")) * 2 >= x("tot"), col("__v"))).as("vlo"),
+        min(when(col("__drp") === x("b2") &&
+          (x("off2") + col("__ci")) * 2 > x("tot"), col("__v"))).as("vhi"),
+        coalesce(max(x("tot")), lit(0L)).as("wtot"))
   }
 
   /** ANSI ntile from an exact global rank: with N rows and n buckets,

@@ -787,8 +787,8 @@ object AggQ extends QueryModule {
       val g = e.groupBy("score").agg(count(lit(1)).as("cnt"),
         sum(col("y")).as("pos"))
       // descending cumsum distributes via a negated bucket key; the
-      // grand totals (n, tot_pos) are DistRank literals, not a
-      // global-partition window.
+      // grand totals (n, tot_pos) come from DistRank's metadata
+      // subquery, not a global-partition window.
       DistRank.cumsum(g, -col("score"), Seq(col("score").desc),
           Seq((col("cnt"), "cum_n"), (col("pos"), "cum_pos")),
           totalsSuffix = Some("_t"))

@@ -7,8 +7,9 @@ import scala.util.control.NonFatal
   * regressions — unintended cartesians, missing pushdowns, missed
   * broadcasts — are reviewable without running the final query.
   * Building a plan still runs the query's eager build-time jobs
-  * (boundary sketches, fits, per-round collects, IO round-trips), so
-  * an all-query pass costs minutes, not seconds. */
+  * (fits, per-round collects, IO round-trips; DistRank's sketches and
+  * totals are scalar subqueries that run with the query, not at
+  * build), so an all-query pass costs minutes, not seconds. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val summary = args.headOption.contains("-s")

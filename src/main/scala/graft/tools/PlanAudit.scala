@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Shared plan red-flag detection for the Explain CLI and the
@@ -31,8 +31,9 @@ object PlanAudit {
     // partition expression is foldable: partitionBy(lit(1)) hashes
     // all rows into one partition exactly like an empty spec, it just
     // spells differently after FoldablePropagation inlines constant
-    // aliases into the spec
-    val globalWin = root.collect {
+    // aliases into the spec. Subqueries count: a scalar subquery's
+    // global window sorts its whole input in one task all the same.
+    val globalWin = nodes(root).collect {
       case w: WindowExec
         if w.partitionSpec.isEmpty || w.partitionSpec.forall(_.foldable) => w
       case w: WindowGroupLimitExec
@@ -44,6 +45,17 @@ object PlanAudit {
       globalWindow = globalWin,
       exchanges = "Exchange".r.findAllIn(plan).length)
   }
+
+  /** Every node of `p`, its subqueries' included. Under AQE each
+    * subquery is wrapped in its own AdaptiveSparkPlanExec and, once
+    * run, each stage in a QueryStageExec leaf, unwrapped here in turn;
+    * a reused subquery or exchange is a leaf, counted once. */
+  private[graft] def nodes(p: SparkPlan): Seq[SparkPlan] =
+    unwrap(p).collectWithSubqueries { case n => n }.flatMap {
+      case a: AdaptiveSparkPlanExec => nodes(a)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case n => Seq(n)
+    }
 
   private def unwrap(p: SparkPlan): SparkPlan = p match {
     // executedPlan is the current physical plan — before any

@@ -1,16 +1,39 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graftshim.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Complete, Final}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.scalacheck.{Gen, Prop, Test}
 
+import graft.functions.BucketIndex
 import graft.operators.DistRank
+import graft.tools.PlanAudit
 
 /** DistRank must be bitwise-equal to the single-partition window
   * plans it replaces: every test pits the distributed two-pass
-  * against Spark's own `Window.orderBy(...)` on the same frame. */
+  * against Spark's own `Window.orderBy(...)` on the same frame, under
+  * AQE on and under AQE off. */
 class DistRankSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Runs `body` once with AQE on and once with it off. */
+  private def underAqe(body: => Unit): Unit = {
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    try Seq("true", "false").foreach { on =>
+      spark.conf.set(key, on)
+      withClue(s"AQE=$on: ")(body)
+    } finally spark.conf.set(key, was)
+  }
 
   // 999 rows, deliberately skewed + tie-heavy key (k = id % 7 has
   // ~143 rows per distinct value, so bucket boundaries MUST respect
@@ -19,7 +42,7 @@ class DistRankSpec extends SparkSpec {
     .select(col("id"), (col("id") % 7).as("k"),
       ((col("id") * 37) % 101).as("v"))
 
-  test("global row_number matches single-partition window") {
+  test("global row_number matches single-partition window") { underAqe {
     val expect = base.withColumn("r",
       row_number().over(Window.orderBy(col("k"), col("id"))).cast("long"))
       .select("id", "r").collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -29,9 +52,9 @@ class DistRankSpec extends SparkSpec {
       .select("id", "r").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toMap
     assert(got == expect)
-  }
+  }}
 
-  test("descending order via negated bucket key") {
+  test("descending order via negated bucket key") { underAqe {
     val ord = Seq(col("v").desc, col("id"))
     val expect = base.withColumn("r",
       row_number().over(Window.orderBy(ord: _*)).cast("long"))
@@ -41,9 +64,9 @@ class DistRankSpec extends SparkSpec {
       .select("id", "r").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toMap
     assert(got == expect)
-  }
+  }}
 
-  test("inclusive and exclusive cumsum + literal grand totals") {
+  test("inclusive and exclusive cumsum + literal grand totals") { underAqe {
     val wIn = Window.orderBy(col("k"), col("id"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val wEx = Window.orderBy(col("k"), col("id"))
@@ -68,9 +91,9 @@ class DistRankSpec extends SparkSpec {
       assert(gi(id)._2 == vTot, s"total at $id")
       assert(ge(id) == expect(id)._2, s"exclusive at $id")
     }
-  }
+  }}
 
-  test("ntileOf matches Spark ntile for every bucket count 1..9") {
+  test("ntileOf matches Spark ntile for every bucket count 1..9") { underAqe {
     // also at N not divisible by n, and on a 3-row frame (N < n)
     (1 to 9).foreach { n =>
       val ord = Seq(col("v"), col("id"))
@@ -95,15 +118,15 @@ class DistRankSpec extends SparkSpec {
       .select(col("id"), DistRank.ntileOf(col("r"), col("nn"), 5).as("t"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == expect, "ntile(5) with N < n")
-  }
+  }}
 
-  test("empty input yields empty output") {
+  test("empty input yields empty output") { underAqe {
     val empty = base.filter(col("id") < 0)
     assert(DistRank.rowNumber(empty, col("k"), Seq(col("k"), col("id")),
       "r", parts = 4).count() == 0L)
-  }
+  }}
 
-  test("NaN bucket keys rank at the global tail") {
+  test("NaN bucket keys rank at the global tail") { underAqe {
     // NaN sorts ABOVE every finite double in Spark's ordering; the
     // bucket assignment must agree or cross-bucket offsets corrupt.
     val df = base.withColumn("kd",
@@ -118,9 +141,24 @@ class DistRankSpec extends SparkSpec {
       .select("id", "r").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toMap
     assert(got == expect)
-  }
+  }}
 
-  test("rowNumbers fuses several orders, identical to rowNumber") {
+  test("signed zeros and NaN keys rank in Catalyst's order") { underAqe {
+    // -0.0 sorts equal to 0.0, so ties between them break on id alone
+    val df = base.withColumn("kd", element_at(array(lit(-0.0), lit(0.0),
+      lit(Double.NaN), lit(-1.5), lit(2.0)), (col("id") % 5 + 1).cast("int")))
+    val ord = Seq(col("kd"), col("id"))
+    val expect = df.withColumn("r",
+      row_number().over(Window.orderBy(ord: _*)).cast("long"))
+      .select("id", "r").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toMap
+    val got = DistRank.rowNumber(df, col("kd"), ord, "r", parts = 4)
+      .select("id", "r").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toMap
+    assert(got == expect)
+  }}
+
+  test("rowNumbers fuses several orders, identical to rowNumber") { underAqe {
     val specs = Seq(
       DistRank.RankSpec(col("k"), Seq(col("k"), col("id")), "rk"),
       DistRank.RankSpec(-col("v"), Seq(col("v").desc, col("id")), "rv"),
@@ -142,9 +180,9 @@ class DistRankSpec extends SparkSpec {
         fused(id)._3 == ei(id), s"fused ranks at $id")
       assert(fused(id)._4 == 999L, s"total at $id")
     }
-  }
+  }}
 
-  test("parts=1 fast path: aggregate-grain only, same results") {
+  test("parts=1 fast path: aggregate-grain only, same results") { underAqe {
     val agg = base.groupBy("k").agg(sum("v").as("sv"))
     val ord = Seq(col("sv"), col("k"))
     val expect = agg.withColumn("r",
@@ -200,56 +238,134 @@ class DistRankSpec extends SparkSpec {
       DistRank.rowNumber(exploded, col("x"), Seq(col("x"), col("k")),
         "r", parts = 1)
     }
-  }
+  }}
 
-  test("input cache: aggregate-grain input with an eager pass only") {
+  /** Every primitive over an aggregate-grain frame, by name, at a
+    * given `parts` (the parts = 1 fast path needs that grain). */
+  private lazy val primitives: Seq[(String, Int => DataFrame)] = {
     val agg = base.groupBy("k").agg(sum("v").as("sv"))
     val ord = Seq(col("sv"), col("k"))
-    // persistent RDDs a built-and-run frame adds over a clear cache
-    // (other suites' localCheckpoint RDDs are not catalog caches)
-    def cachedBy(build: => DataFrame): Int = {
-      spark.catalog.clearCache()
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      build.collect()
-      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
-    }
-    def cumsum(d: DataFrame, o: Seq[Column],
-        parts: Int, tot: Option[String] = None) =
-      DistRank.cumsum(d, o.head, o, Seq((col("k"), "c")),
-        totalsSuffix = tot, parts = parts)
-    def cummin(d: DataFrame, o: Seq[Column],
-        parts: Int) =
-      DistRank.cummin(d, o.head, o, Seq((col("k"), "c")), parts = parts)
-    def rowNumbers(d: DataFrame, o: Seq[Column],
-        parts: Int) =
-      DistRank.rowNumbers(d, Seq(DistRank.RankSpec(o.head, o, "r")),
-        parts = parts)
-    def adjacentPairs(d: DataFrame, o: Seq[Column],
-        parts: Int) =
-      DistRank.adjacentPairs(d, o.head, o, Seq("k"), parts = parts)
-    val raw = Seq(col("k"), col("id"))
-    try {
-      assert(cachedBy(cumsum(agg, ord, 4)) > 0, "cumsum, aggregate")
-      assert(cachedBy(cummin(agg, ord, 4)) > 0, "cummin, aggregate")
-      assert(cachedBy(rowNumbers(agg, ord, 4)) > 0,
-        "rowNumbers, aggregate")
-      assert(cachedBy(adjacentPairs(agg, ord, 4)) > 0,
-        "adjacentPairs, aggregate")
-      // parts=1: grand totals are the one eager pass; without them
-      // there is none, so nothing is cached
-      assert(cachedBy(cumsum(agg, ord, 1, Some("_t"))) > 0,
-        "cumsum with totals at parts=1")
-      assert(cachedBy(cummin(agg, ord, 1)) == 0, "cummin at parts=1")
-      assert(cachedBy(cumsum(base, raw, 4)) == 0, "cumsum, raw scan")
-      assert(cachedBy(cummin(base, raw, 4)) == 0, "cummin, raw scan")
-      assert(cachedBy(rowNumbers(base, raw, 4)) == 0,
-        "rowNumbers, raw scan")
-      assert(cachedBy(adjacentPairs(base, raw, 4)) == 0,
-        "adjacentPairs, raw scan")
-    } finally spark.catalog.clearCache()
+    Seq(
+      "cumsum" -> (pt => DistRank.cumsum(agg, col("sv"), ord,
+        Seq((col("k"), "c")), totalsSuffix = Some("_t"), parts = pt)),
+      "cummin" -> (pt => DistRank.cummin(agg, col("sv"), ord,
+        Seq((col("k"), "c")), parts = pt)),
+      "rowNumber" -> (pt => DistRank.rowNumber(agg, col("sv"), ord, "r",
+        totalAs = Some("n"), parts = pt)),
+      "rowNumbers" -> (pt => DistRank.rowNumbers(agg, Seq(
+        DistRank.RankSpec(col("sv"), ord, "r1"),
+        DistRank.RankSpec(-col("k"), Seq(col("k").desc), "r2")),
+        totalAs = Some("n"), parts = pt)),
+      "adjacentPairs" -> (pt => DistRank.adjacentPairs(agg, col("sv"), ord,
+        Seq("k"), parts = pt)),
+      "medianDoubled" -> (pt => DistRank.medianDoubled(agg, col("sv"),
+        parts = pt)),
+      "groupedMedianDoubled" -> (pt => DistRank.groupedMedianDoubled(agg,
+        col("k") % 2, col("sv"), parts = pt)))
   }
 
-  test("cummin matches single-partition running min, incl and excl") {
+  /** Builds a frame inside its own job group and returns it with the
+    * number of Spark jobs the build fired (the PlanAuditSpec method:
+    * job-group attribution, listener bus drained before reading). */
+  private def built(build: => DataFrame): (DataFrame, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(
+            _.getProperty("spark.jobGroup.id") == "distrank-build"))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("distrank-build", "build a DistRank frame")
+      val df = try build finally sc.clearJobGroup()
+      ListenerBusBridge.waitUntilEmpty(sc)
+      (df, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("every primitive builds with 0 jobs and leaves no persisted RDD") {
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet.toSet
+    for ((name, primitive) <- primitives; parts <- Seq(4, 1)) {
+      val (df, jobs) = built(primitive(parts))
+      assert(jobs == 0, s"$name at parts=$parts: $jobs job(s) at build")
+      df.collect()
+      assert((sc.getPersistentRDDs.keySet.toSet -- baseline).isEmpty,
+        s"$name at parts=$parts left a persisted RDD")
+    }
+  }
+
+  test("one execution supplies the bounds and the offsets") {
+    // the sketch's final percentile aggregate, counted over the
+    // executed plan and its subqueries (a reused subquery is a leaf):
+    // two executions could bucket the plan's rows and the meta's
+    // totals differently
+    def sketchRuns(df: DataFrame): Int =
+      PlanAudit.nodes(df.queryExecution.executedPlan).count {
+        case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
+          (e.mode == Final || e.mode == Complete) &&
+            e.aggregateFunction.isInstanceOf[ApproximatePercentile])
+        case _ => false
+      }
+    underAqe {
+      for ((name, primitive) <- primitives) {
+        val df = primitive(4)
+        df.collect()
+        assert(sketchRuns(df) == 1, name)
+      }
+    }
+    // without subquery reuse each read would run its own sketch
+    val reuse = "spark.sql.execution.reuseSubquery"
+    spark.conf.set(reuse, "false")
+    try for ((name, primitive) <- primitives)
+      withClue(name)(intercept[IllegalArgumentException](primitive(4)))
+    finally spark.conf.unset(reuse)
+  }
+
+  test("bucket id = #bounds strictly below the key, in Catalyst order") {
+    // a coarse lattice, so keys often equal a bound, plus the doubles
+    // whose order differs from IEEE comparison: NaN (above every
+    // number, equal to itself) and -0.0 (equal to 0.0)
+    val special = Gen.oneOf(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity)
+    val dbl = Gen.frequency(
+      4 -> Gen.chooseNum(-4, 4).map(_ / 2.0), 1 -> special)
+    // percentile_approx's output: ascending in Catalyst's order,
+    // repeats allowed, NULL for an empty input (no bounds)
+    val bounds = Gen.option(Gen.listOf(dbl).map(_.sortWith(
+      SQLOrderingUtil.compareDoubles(_, _) < 0)))
+    val cases = Gen.listOfN(30, Gen.zip(Gen.option(dbl), bounds))
+    val prop = Prop.forAll(cases) { cs =>
+      val df = cs.toDF("key", "bounds")
+      val got = df.select(
+        BucketIndex.of(col("key"), col("bounds")),
+        // the rule, evaluated by Spark's own comparison operator
+        aggregate(coalesce(col("bounds"), typedLit(Seq.empty[Double])),
+          lit(0), (n, b) => n + when(b < col("key"), 1).otherwise(0)))
+        .collect()
+      // the interpreted path agrees with the generated code
+      val interpreted = cs.map { case (k, b) =>
+        BucketIndex(Literal.create(k.map(Double.box).orNull, DoubleType),
+          Literal.create(b.map(x => new GenericArrayData(x.toArray)).orNull,
+            ArrayType(DoubleType))).eval()
+      }
+      got.map(_.getInt(0)).toSeq == got.map(_.getInt(1)).toSeq &&
+        got.map(r => r.getInt(0): Any).toSeq == interpreted
+    }
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(20), prop)
+    assert(result.passed, result.status.toString)
+    // empty input: percentile_approx returns NULL, read as no bounds
+    val empty = base.filter(col("id") < 0).select(col("v").cast("double"))
+      .agg(percentile_approx(col("v"), array(lit(0.5)), lit(100)).as("b"))
+    val one = spark.range(1).select(lit(1.5).as("key"))
+      .select(BucketIndex.of(col("key"), empty.scalar()))
+    assert(one.head().getInt(0) == 0)
+  }
+
+  test("cummin matches single-partition running min, incl and excl") { underAqe {
     val wIn = Window.orderBy(col("k"), col("id"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val wEx = Window.orderBy(col("k"), col("id"))
@@ -271,17 +387,19 @@ class DistRankSpec extends SparkSpec {
       assert(gi(id) == expect(id)._1, s"inclusive at $id")
       assert(ge(id) == expect(id)._2, s"exclusive at $id")
     }
-  }
+  }}
 
   test("plan has no single-partition window") {
-    val plan = DistRank.rowNumber(base, col("k"),
-      Seq(col("k"), col("id")), "r", parts = 4)
-      .queryExecution.executedPlan.toString
-    assert(!(plan.contains("Window") && plan.contains("SinglePartition")),
-      "distributed rank must not plan a global window")
+    // the window check walks the subqueries too: the meta's aggregates
+    // are global, its windows must not be
+    underAqe {
+      for ((name, primitive) <- primitives)
+        assert(!PlanAudit.audit(primitive(4)).globalWindow,
+          s"$name: distributed rank must not plan a global window")
+    }
   }
 
-  test("adjacentPairs equals the global-order lead, N-1 rows") {
+  test("adjacentPairs equals the global-order lead, N-1 rows") { underAqe {
     // (k, id) total order; payload v AND the order column k itself
     val expect = base
       .withColumn("vn", lead(col("v"), 1)
@@ -298,9 +416,9 @@ class DistRankSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
     assert(got.size == 998 && got == expect)
-  }
+  }}
 
-  test("adjacentPairs: sparse buckets, single row, empty input") {
+  test("adjacentPairs: sparse buckets, single row, empty input") { underAqe {
     // two far-apart key islands with p=8 leaves most buckets empty —
     // the boundary join must still chain across PRESENT buckets only
     val sparse = spark.range(0, 20)
@@ -320,7 +438,7 @@ class DistRankSpec extends SparkSpec {
       Seq(col("k"), col("id")), Seq("v"), parts = 4).count() == 0L)
     assert(DistRank.adjacentPairs(base.limit(0), col("k"),
       Seq(col("k"), col("id")), Seq("v"), parts = 4).count() == 0L)
-  }
+  }}
 
   /** Reference doubled median: vlo = min v with 2·cumw ≥ tot,
     * vhi = min v with 2·cumw > tot, over (v, w) pairs. */
@@ -337,7 +455,7 @@ class DistRankSpec extends SparkSpec {
     (vlo.get, vhi.get, tot)
   }
 
-  test("medianDoubled matches the full-lattice rule (odd/even/ties)") {
+  test("medianDoubled matches the full-lattice rule (odd/even/ties)") { underAqe {
     for (n <- Seq(999L, 1000L, 1L)) {
       val df = spark.range(0, n)
         .select(col("id"), ((col("id") * 37) % 101).as("v"))
@@ -353,9 +471,9 @@ class DistRankSpec extends SparkSpec {
       .head().getLong(0) == 84L)
     assert(DistRank.medianDoubled(const.limit(0), col("v"), parts = 4)
       .head().isNullAt(0))
-  }
+  }}
 
-  test("groupedMedianDoubled matches the per-group weighted rule") {
+  test("groupedMedianDoubled matches the per-group weighted rule") { underAqe {
     val df = spark.range(0, 999)
       .select(col("id"), (col("id") % 3).cast("string").as("g"),
         ((col("id") * 37) % 101).as("v"), (col("id") % 5 + 1L).as("w"))
@@ -379,5 +497,5 @@ class DistRankSpec extends SparkSpec {
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     byG2.foreach { case (g, rows) => assert(got2(g) == refMed2(rows), g) }
-  }
+  }}
 }

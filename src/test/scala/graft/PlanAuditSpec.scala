@@ -5,6 +5,8 @@ import scala.util.control.NonFatal
 import org.apache.spark.graftshim.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 import graft.tools.PlanAudit
 
@@ -213,51 +215,33 @@ class PlanAuditSpec extends SparkSpec {
     // m64: the 1-row argmax frame re-enters the 101-row lattice
     "m64_ks_stat")
 
-  /** Queries whose construction INTENTIONALLY runs jobs — five
+  /** Queries whose construction INTENTIONALLY runs jobs — four
     * classes, every one a documented multi-pass or materializing
     * operator. Anything NOT listed must build with ZERO jobs; add an
     * entry only with its class (or a new written justification).
     *
-    * (a) DistRank metadata passes: the distributed-rank operator
-    *     freezes range boundaries (approx-percentile sketch) and
-    *     collects ≤ shuffle-partitions rows of bucket totals at
-    *     build — bounded metadata, never row-scale (DistRank.scala).
-    * (b) Eager fits / iterative driver loops: the model or fixpoint
+    * (a) Eager fits / iterative driver loops: the model or fixpoint
     *     IS the query — MLlib GBT/isotonic/FP-Growth, Lloyd steps,
     *     power iteration, IPF raking, greedy MMR/k-center/mRMR,
     *     AdaBoost rounds, Holt-Winters/DTW/Markov packed-fold params,
     *     median polish. Each iteration is a distributed pass; only
     *     O(params) lands on the driver.
-    * (c) Graph/closure frontier loops: Pregel-shape iterate-until-
+    * (b) Graph/closure frontier loops: Pregel-shape iterate-until-
     *     fixpoint (PageRank, k-core, k-truss, components, PPR,
     *     harmonic, pseudo-diameter, TextRank) with a driver-side
     *     convergence check (1-row collect per round).
-    * (d) IO round-trips: the sink is the operator under test — the
+    * (c) IO round-trips: the sink is the operator under test — the
     *     query writes files then reads them back (s1/s6–s20 csv,
     *     jsonl, orc, text, xml, zstd, bucketed, partitioned,
     *     merge-schema, bloom, dynamic-overwrite, s5 model artifacts).
-    * (e) Structured-streaming batch-parity harnesses: a bounded
+    * (d) Structured-streaming batch-parity harnesses: a bounded
     *     memory-source stream must RUN its micro-batches to emit the
     *     sink table the query returns.
     * Plus bounded driver collects feeding literal/broadcast frames
     * (centroids, cut points, corpus scalars) — aggregate-grain or
     * capped by construction, never row-scale. */
   private val buildJobsAllowed: Set[String] = Set(
-    // (a) DistRank rank/quantile/cumsum metadata passes
-    // a29/a99 (round 12): DistRank.groupedMedianDoubled runs its two
-    // metadata jobs (boundary sketch; per-(group,bucket) weight totals
-    // — ≤ groups×p rows) at plan-build, the same class as a101's
-    // medianDoubled and every cumsum caller below.
-    "a29_wmedian", "a99_levene_bf",
-    "a101_mood_median", "a102_chatterjee_xi", "a103_bartels_rvn",
-    "a104_kuiper", "a17_binning", "a35_ks", "a74_quantile_norm",
-    "a76_cvm", "a84_kruskal_wallis", "a88_wasserstein",
-    "a92_changepoint", "m14_auc", "m16_gains", "m19_rfm", "m1_folds",
-    "m28_best_f1", "m33_prequential", "m40_shapley", "m43_conformal",
-    "m53_pr_auc", "m54_qini", "o20_wap", "o24_skew_audit",
-    "o32_skyline", "o33_overlap_depth", "t_pps_sample", "t_vocab",
-    "t_zipf_slope", "t_burstiness",
-    // (b) eager fits / iterative driver loops
+    // (a) eager fits / iterative driver loops
     "e1_rmse_gate", "e1_tree_ensemble", "m2_gbt", "m2_rmse_gate",
     "m25_isotonic", "m25_isotonic_gate", "m26_fpgrowth",
     "m27_perm_importance", "m29_gbt_importance", "m36_nb_clf",
@@ -268,22 +252,32 @@ class PlanAuditSpec extends SparkSpec {
     "s_mmr", "t_quality_clf", "a90_raking", "a95_entropy_rate",
     "a122_median_polish", "w66_dtw", "w68_markov_stationary",
     "w72_holt_winters",
-    // (b/bounded collects) IVF centroid / scalar parameter frames
+    // (a/bounded collects) IVF centroid / scalar parameter frames
     "s_brute_topk", "s_ivf_recall", "s_ivf_topk", "s_rrf",
     "v_proj_recall", "t_bm25", "t_ccnet_buckets", "t_kneser_ney",
     "t_kwic", "t_llr", "j16_bloom",
-    // (c) graph/closure frontier loops
+    // a74: the ≤ #sources-row per-source count collect that feeds the
+    // literal source-offset frame; t_burstiness: the 1-row corpus
+    // size `count()` that scales its moments
+    "a74_quantile_norm", "t_burstiness",
+    // m40: the AdaBoost fit it explains (m38_adaboost's rounds) plus
+    // its 1-row stump-sum fetch
+    "m40_shapley",
+    // (b) graph/closure frontier loops
     "c_curation", "d_components", "d_embclusters", "g10_ppr",
     "g13_modularity", "g16_ktruss", "g17_harmonic", "g19_bipartite",
     "g21_eigencentrality", "g23_pseudo_diameter", "g5_kcore",
     "g_pagerank", "t_textrank",
-    // (d) IO round-trips (the sink is the operator under test)
+    // (c) IO round-trips (the sink is the operator under test)
     "s10_bucketed", "s11_text", "s12_xml", "s13_binaryfile",
     "s14_badrecords", "s15_recursive", "s16_zstd", "s17_wholetext",
     "s18_multiline_csv", "s19_parquet_bloom", "s1_csv_roundtrip",
     "s20_dynamic_overwrite", "s5_artifacts", "s5_roundtrip_gate",
     "s6_jsonl", "s7_partitioned", "s8_orc", "s9_mergeschema",
-    // (e) streaming batch-parity harnesses
+    // o20: write-audit-publish writes the staged parquet, audits it
+    // with a 1-row fetch and reads the published directory back
+    "o20_wap",
+    // (d) streaming batch-parity harnesses
     "w10_stream_ema", "w11_stream_roll", "w12_stream_window",
     "w14_stream_join", "w15_stream_dedup", "w18_stream_enrich",
     "w19_stateful_v2", "w29_stream_cusum", "w36_stream_topk",
@@ -374,5 +368,19 @@ class PlanAuditSpec extends SparkSpec {
     assert(offenders.isEmpty,
       "hidden build-time actions (add to allow-list ONLY with a " +
         "written justification):\n" + offenders.mkString("\n"))
+  }
+
+  test("a global window inside a scalar subquery is flagged") {
+    // the frame's only window sorts the subquery's whole input in one
+    // task; the outer plan has none
+    val ranked = spark.range(50)
+      .withColumn("r", row_number().over(Window.orderBy("id")))
+      .agg(max("r")).scalar()
+    val df = spark.range(10).select(col("id"), ranked.as("top"))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try Seq("false", "true").foreach { on =>
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      assert(PlanAudit.audit(df).globalWindow, s"AQE=$on")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }
