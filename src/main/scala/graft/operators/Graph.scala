@@ -1,7 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components for duplicate-cluster resolution.
@@ -44,6 +44,11 @@ import org.apache.spark.sql.functions._
   *    round (the paper's load-balance argument). The star-forest test
   *    does key on roots, but through a map-side partial aggregate, so
   *    a hot root costs one row per map partition there.
+  *
+  * The link-analysis operators ([[pageRank]], [[personalizedPageRank]])
+  * run one exact-integer rank loop ([[rankLoop]]): each caller builds
+  * its node state and passes its own base mass and initial rank, and
+  * the loop carries that state through every round.
   */
 object Graph {
 
@@ -227,7 +232,9 @@ object Graph {
     * shuffle), nothing ever visits the driver; `localCheckpoint` per
     * round truncates the iterative plan exactly as in
     * [[connectedComponents]]. Edges and degrees are computed once and
-    * cached.
+    * cached. The rounds are [[rankLoop]], shared with
+    * [[personalizedPageRank]]: here every node's base mass is
+    * 15·scale/100 and every node starts at r = scale.
     *
     * Determinism: the textbook float recursion would inherit shuffle
     * summation order — instead ranks live on an integer lattice
@@ -249,30 +256,85 @@ object Graph {
                scale: Long = 1000000L,
                checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1 && scale >= 100)
+    val e = rankEdges(edges)
+    rankLoop(e, endpoints(e).join(outDegrees(e), Seq("node"), "left"),
+      lit(15L * scale / 100L), lit(scale), iters, checkpointDir)
+      .select(col("node"), col("r"))
+  }
+
+  /** Personalized PageRank on the same exact-integer lattice as
+    * [[pageRank]] — teleport mass flows ONLY to the seed set, so the
+    * fixed point measures proximity to the seeds (the "related
+    * items / similar users" primitive behind graph-based recommen-
+    * dation and expansion queries). The same [[rankLoop]] rounds,
+    * identical determinism argument: share = r DIV deg, incoming is
+    * an exact BIGINT sum; the node state carries `is_seed`, the base
+    * mass 15·scale/100 lands on seeds only and only seeds start with
+    * r = scale (every other node starts at 0). Bit-identical across
+    * engines and partitionings.
+    */
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+                           iters: Int, scale: Long = 1000000L,
+                           checkpointDir: Option[String] = None): DataFrame = {
+    require(iters >= 1 && scale >= 100)
+    val e = rankEdges(edges)
+    val sd = seeds.select(col("seed").cast("long").as("node"))
+      .distinct().withColumn("__isSeed", lit(1L))
+    val nodes = endpoints(e)
+      .join(sd, Seq("node"), "left")
+      .join(outDegrees(e), Seq("node"), "left")
+      .select(col("node"),
+        coalesce(col("__isSeed"), lit(0L)).as("is_seed"), col("__deg"))
+    val seed = col("is_seed") === 1L
+    rankLoop(e, nodes, when(seed, lit(15L * scale / 100L)).otherwise(lit(0L)),
+      when(seed, lit(scale)).otherwise(lit(0L)), iters, checkpointDir)
+      .select(col("node"), col("is_seed"), col("r"))
+  }
+
+  /** The rank loops' edge set: distinct, non-null (src, dst) LONG
+    * pairs, cached pre-partitioned on src (round 11): every iteration
+    * joins e⋈shares on src, and a cache partitioned on (src, dst) —
+    * distinct's layout — would re-Exchange the EDGE table per
+    * iteration. Partitioned on src, only the (node-scale) shares
+    * side moves; the edge side reads cached blocks in place. One
+    * extra exchange at build, iters exchanges of the edge table
+    * saved — the dominant byte-mover at 100 TB. */
+  private def rankEdges(edges: DataFrame): DataFrame = {
     val p = edges.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
-    // Edge cache pre-partitioned on src (round 11): every iteration
-    // joins e⋈shares on src, and a cache partitioned on (src, dst) —
-    // distinct's layout — would re-Exchange the EDGE table per
-    // iteration. Partitioned on src, only the (node-scale) shares
-    // side moves; the edge side reads cached blocks in place. One
-    // extra exchange at build, iters exchanges of the edge table
-    // saved — the dominant byte-mover at 100 TB.
-    val e = edges
+    edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct().repartition(p, col("src")).cache()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("__deg"))
-    // Rank state carries the node's out-degree (null = dangling) so
-    // the per-iteration share step is a narrow projection — the
-    // former ranks⋈degrees join re-shuffled the whole rank table
-    // once per iteration for a value that never changes (round 11).
-    val nodes = truncate(e.select(col("src").as("node"))
+  }
+
+  /** Every endpoint of the edge set `e`, once, as `node`. */
+  private def endpoints(e: DataFrame): DataFrame =
+    e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .join(deg.select(col("src").as("node"), col("__deg")),
-        Seq("node"), "left"), checkpointDir)
-    val base = lit(15L * scale / 100L)
-    var r = nodes.withColumn("r", lit(scale))
+
+  /** Out-degree of every node with an out-edge, as (node, __deg). */
+  private def outDegrees(e: DataFrame): DataFrame =
+    e.groupBy("src").agg(count(lit(1)).as("__deg"))
+      .select(col("src").as("node"), col("__deg"))
+
+  /** The exact-integer rank rounds of [[pageRank]] and
+    * [[personalizedPageRank]] over the cached edge set `e` (from
+    * [[rankEdges]]). `nodes` has one row per node with its out-degree
+    * `__deg` (null = dangling) next to the caller's own columns, and
+    * every round carries all of them: the per-iteration share step
+    * stays a narrow projection — the former ranks⋈degrees join
+    * re-shuffled the whole rank table once per iteration for a value
+    * that never changes (round 11). Ranks start at `init` and each
+    * round sets r = base + (85·incoming) DIV 100; `init` and `base`
+    * are columns over `nodes`, so the loop is the same for every
+    * caller. Returns `nodes`' columns plus `r`, and unpersists `e`. */
+  private def rankLoop(e: DataFrame, nodes: DataFrame, base: Column,
+                       init: Column, iters: Int,
+                       checkpointDir: Option[String]): DataFrame = {
+    val state = truncate(nodes, checkpointDir)
+    val carried = state.columns.toSeq.map(col)
+    var r = state.withColumn("r", init)
     for (_ <- 1 to iters) {
       // inner join semantics of the former ranks⋈degrees: nodes with
       // no out-edges contribute no share rows
@@ -286,65 +348,13 @@ object Graph {
       // warm) — each round's exchange then feeds AQE a concrete
       // size, and the deep chained-join alternative re-plans the
       // whole prefix per action.
-      r = truncate(nodes.join(inc, Seq("node"), "left")
-        .select(col("node"), col("__deg"),
-          (base + expr("85 * coalesce(__in, 0L) DIV 100")).as("r")),
+      r = truncate(state.join(inc, Seq("node"), "left")
+        .select(carried :+
+          (base + expr("85 * coalesce(__in, 0L) DIV 100")).as("r"): _*),
         checkpointDir)
     }
     e.unpersist()
-    r.select(col("node"), col("r"))
-  }
-
-  /** Personalized PageRank on the same exact-integer lattice as
-    * [[pageRank]] — teleport mass flows ONLY to the seed set, so the
-    * fixed point measures proximity to the seeds (the "related
-    * items / similar users" primitive behind graph-based recommen-
-    * dation and expansion queries). Identical Pregel-shape shuffles,
-    * identical determinism argument: share = r DIV deg, incoming is
-    * an exact BIGINT sum, base mass 15·scale/100 lands on seeds
-    * only. Bit-identical across engines and partitionings.
-    */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           iters: Int, scale: Long = 1000000L,
-                           checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 1 && scale >= 100)
-    val p = edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
-    // same round-11 shape as [[pageRank]]: edge cache pre-partitioned
-    // on src; degree carried in the rank state
-    val e = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().repartition(p, col("src")).cache()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("__deg"))
-    val sd = seeds.select(col("seed").cast("long").as("node"))
-      .distinct().withColumn("__isSeed", lit(1L))
-    val nodes = truncate(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-        .join(sd, Seq("node"), "left")
-        .join(deg.select(col("src").as("node"), col("__deg")),
-          Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("__isSeed"), lit(0L)).as("is_seed"), col("__deg")),
-      checkpointDir)
-    val base = when(col("is_seed") === 1L, lit(15L * scale / 100L))
-      .otherwise(lit(0L))
-    var r = nodes.withColumn("r",
-      when(col("is_seed") === 1L, lit(scale)).otherwise(lit(0L)))
-    for (_ <- 1 to iters) {
-      val shares = r.filter(col("__deg").isNotNull)
-        .select(col("node").as("src"), expr("r DIV __deg").as("__share"))
-      val inc = e.join(shares, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("__share")).as("__in"))
-      r = truncate(nodes.join(inc, Seq("node"), "left")
-        .select(col("node"), col("is_seed"), col("__deg"),
-          (base + expr("85 * coalesce(__in, 0L) DIV 100")).as("r")),
-        checkpointDir)
-    }
-    e.unpersist()
-    r.select(col("node"), col("is_seed"), col("r"))
+    r
   }
 
   /** Exact triangle enumeration of an undirected graph — the classic

@@ -58,17 +58,10 @@ object Curation25Q extends QueryModule {
     // Pregel shuffles as g_pagerank; oracle is the generated
     // 5-iteration CTE chain with the seed-conditional base.
     "g10_ppr" -> ((s, dir) => {
-      val pairs = lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-        .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").cast("long").as("cust"),
-          (col("l_suppkey") + GraphQ.SuppOffset).cast("long").as("supp"))
-        .distinct()
-      val edges = pairs.select(col("cust").as("src"), col("supp").as("dst"))
-        .union(pairs.select(col("supp").as("src"), col("cust").as("dst")))
-      val seeds = pairs.select(col("cust").as("seed"))
+      val seeds = GraphQ.bipartite(s, dir).select(col("a").as("seed"))
         .filter(col("seed") % 100 === 0).distinct()
-      Graph.personalizedPageRank(edges, seeds, iters = 5)
+      Graph.personalizedPageRank(GraphQ.symEdges(s, dir).toDF("src", "dst"),
+        seeds, iters = 5)
     }),
 
     // A69: Cronbach's alpha — the internal-consistency reliability
@@ -130,15 +123,6 @@ object Curation25Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private def pprIter(i: Int): String =
-    s"""r$i AS (SELECT n.node, n.is_seed,
-       |  (CASE WHEN n.is_seed = 1 THEN 150000 ELSE 0 END)
-       |    + (85 * COALESCE(inc.s, 0)) // 100 AS r
-       | FROM nodes n LEFT JOIN (
-       |  SELECT e.dst AS node, CAST(sum(p.r // deg.deg) AS BIGINT) AS s
-       |  FROM e JOIN deg ON e.src = deg.src JOIN r${i - 1} p ON p.node = e.src
-       |  GROUP BY e.dst) inc ON n.node = inc.node)""".stripMargin
-
   val oracle: Map[String, String] = Map(
 
     "w62_ewma_chart" ->
@@ -163,14 +147,10 @@ object Curation25Q extends QueryModule {
         |FROM m, st""".stripMargin,
 
     "g10_ppr" -> {
-      s"""WITH pairs AS (
-         |  SELECT DISTINCT o_custkey::BIGINT AS cust,
-         |    (l_suppkey + ${GraphQ.SuppOffset})::BIGINT AS supp
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |e AS (SELECT cust AS src, supp AS dst FROM pairs
-         |      UNION ALL SELECT supp, cust FROM pairs),
+      s"""WITH ${GraphQ.SymSql},
+         |e AS (SELECT a AS src, b AS dst FROM sym),
          |deg AS (SELECT src, count(*)::BIGINT AS deg FROM e GROUP BY src),
-         |sd AS (SELECT DISTINCT cust AS node FROM pairs WHERE cust % 100 = 0),
+         |sd AS (SELECT DISTINCT a AS node FROM pairs WHERE a % 100 = 0),
          |nodes AS (SELECT DISTINCT n.node,
          |  CASE WHEN sd.node IS NOT NULL THEN 1 ELSE 0 END::BIGINT AS is_seed
          | FROM (SELECT DISTINCT src AS node FROM e) n
@@ -178,7 +158,9 @@ object Curation25Q extends QueryModule {
          |r0 AS (SELECT node, is_seed,
          |  (CASE WHEN is_seed = 1 THEN 1000000 ELSE 0 END)::BIGINT AS r
          | FROM nodes),
-         |${(1 to 5).map(pprIter).mkString(",\n")}
+         |${GraphQ.rankRounds(5,
+             "(CASE WHEN n.is_seed = 1 THEN 150000 ELSE 0 END)",
+             Seq("is_seed"))}
          |SELECT node, is_seed, r FROM r5""".stripMargin
     },
 

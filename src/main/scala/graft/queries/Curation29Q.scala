@@ -25,28 +25,6 @@ object Curation29Q extends QueryModule {
 
   private val P = graft.functions.Text.P
 
-  /** Customer-supplier bipartite edge list, both directions (the
-    * ranges are disjoint so no dedup is needed after the union).
-    * Shared with Curation30Q's g13_modularity. */
-  private[graft] def symEdges(s: org.apache.spark.sql.SparkSession,
-                       dir: String): org.apache.spark.sql.DataFrame = {
-    val pairs = lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").cast("long").as("a"),
-        (col("l_suppkey") + GraphQ.SuppOffset).cast("long").as("b"))
-      .distinct()
-    pairs.union(pairs.select(col("b").as("a"), col("a").as("b")))
-  }
-
-  private[queries] val SymSql =
-    s"""pairs AS (SELECT DISTINCT o_custkey::BIGINT AS a,
-       |  (l_suppkey + ${GraphQ.SuppOffset})::BIGINT AS b
-       | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |sym AS (SELECT a, b FROM pairs
-       | UNION ALL SELECT b, a FROM pairs)""".stripMargin
-
   /** 3 synchronous LPA rounds over a symmetric edge list `sym`
     * (a, b); returns (node, lbl). Shared with g13_modularity.
     *
@@ -103,7 +81,7 @@ object Curation29Q extends QueryModule {
       // cache the edges ALREADY hash-partitioned on the join key: all
       // 3 rounds (and the size join) reuse the layout — the |E| side
       // exchanges once total, not once per round
-      val sym = symEdges(s, dir).repartition(col("b")).cache()
+      val sym = GraphQ.symEdges(s, dir).repartition(col("b")).cache()
       // cached: the size aggregation AND the final join both read the
       // 3-round result — uncached, the whole fixed-point chain ran
       // TWICE (no cross-join-side subtree reuse; the g13 precedent)
@@ -129,7 +107,7 @@ object Curation29Q extends QueryModule {
       // cache hash-partitioned on the per-step join key (a → cur;
       // rename preserves the layout): the 3 step joins reuse the
       // cached exchange — the g11 pattern (round 11)
-      val sym = symEdges(s, dir).repartition(col("a")).cache()
+      val sym = GraphQ.symEdges(s, dir).repartition(col("a")).cache()
       var walk = sym.select(col("a").as("start")).distinct()
         .filter(pmod(col("start"), lit(10L)) === 0)
         .select(col("start"), col("start").as("cur"))
@@ -208,7 +186,7 @@ object Curation29Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "g11_labelprop" ->
-      s"""WITH $SymSql,
+      s"""WITH ${GraphQ.SymSql},
          |l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM sym),
          |${lpaRound(1)},
          |${lpaRound(2)},
@@ -219,7 +197,7 @@ object Curation29Q extends QueryModule {
          |FROM l3 JOIN sz USING (lbl)""".stripMargin,
 
     "g12_randomwalk" ->
-      s"""WITH $SymSql,
+      s"""WITH ${GraphQ.SymSql},
          |w0 AS (SELECT DISTINCT a AS start, a AS cur FROM sym
          | WHERE a % 10 = 0),
          |${walkRound(1)},

@@ -46,7 +46,7 @@ object Curation30Q extends QueryModule {
     // keyed aggs — no all-pairs, no window.
     "g13_modularity" -> ((s, dir) => {
       // hash(b) layout at cache time — same reuse as g11 (see lpa3)
-      val sym = Curation29Q.symEdges(s, dir).repartition(col("b")).cache()
+      val sym = GraphQ.symEdges(s, dir).repartition(col("b")).cache()
       val lbl = Curation29Q.lpa3(sym).cache()
       // m: scalar graph-size PARAMETER (like s_knn_join's N) — sym
       // counts each undirected edge twice.
@@ -191,7 +191,7 @@ object Curation30Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "g13_modularity" ->
-      s"""WITH ${Curation29Q.SymSql},
+      s"""WITH ${GraphQ.SymSql},
          |l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM sym),
          |${Curation29Q.lpaRound(1)},
          |${Curation29Q.lpaRound(2)},

@@ -162,7 +162,7 @@ object Curation33Q extends QueryModule {
       // stays in execution memory, or drop the hint to fall back
       // to sort-merge
 
-      val sym = Curation29Q.symEdges(s, dir).repartition(col("b")).cache()
+      val sym = GraphQ.symEdges(s, dir).repartition(col("b")).cache()
       var lbl = sym.groupBy(col("a").as("node"))
         .agg(count(lit(1)).as("lbl"))
       for (_ <- 1 to 2) {
@@ -293,7 +293,7 @@ object Curation33Q extends QueryModule {
   private def oracle2: Map[String, String] = Map(
 
     "g14_wl_hash" ->
-      s"""WITH ${Curation29Q.SymSql},
+      s"""WITH ${GraphQ.SymSql},
          |l0 AS (SELECT a AS node, count(*)::BIGINT AS lbl
          | FROM sym GROUP BY 1),
          |m1 AS (SELECT s.a AS node,

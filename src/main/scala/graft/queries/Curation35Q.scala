@@ -39,13 +39,19 @@ object Curation35Q extends QueryModule {
     "a74_quantile_norm" -> ((s, dir) => {
       val d = documents(s, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
-      val counts = d.groupBy("source").agg(count(lit(1)).as("n_s"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-      val offs = counts.scanLeft(0L)(_ + _._2).dropRight(1)
-      val srcDf = s.createDataFrame(
-        counts.zip(offs).zipWithIndex.map { case (((src, n), off), i) =>
-          (src, i.toLong, off, n) }.toSeq)
-        .toDF("source", "src_idx", "off", "n_s")
+      // per source, in source order: its 0-based index and its offset
+      // (the rows of earlier sources), in the plan — one sorted list
+      // of the <= #sources count rows, exploded with positions (a
+      // window over those rows would be a single-partition window)
+      val srcDf = d.groupBy("source").agg(count(lit(1)).as("n_s"))
+        .agg(sort_array(collect_list(struct(col("source"), col("n_s"))))
+          .as("xs"))
+        .select(col("xs"), posexplode(col("xs")).as(Seq("i", "x")))
+        .select(col("x.source").as("source"),
+          col("i").cast("long").as("src_idx"),
+          aggregate(slice(col("xs"), lit(1), col("i")), lit(0L),
+            (acc, x) => acc + x.getField("n_s")).as("off"),
+          col("x.n_s").as("n_s"))
       val keyed = d.join(broadcast(srcDf), "source")
       val ranked = DistRank.rowNumber(keyed,
         (col("src_idx") * 10000000000L + col("n_chars")).cast("double"),

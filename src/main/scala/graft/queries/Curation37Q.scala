@@ -35,7 +35,8 @@ object Curation37Q extends QueryModule {
     // so even a collision is consistent); edges are document
     // co-occurrence pairs with support >= 5; the rank is
     // Graph.pageRank's EXACT integer fixed point (r DIV deg shares,
-    // 85/100 damping, 3 rounds) — Pregel-shape shuffles, bit-identical
+    // 85/100 damping, 3 rounds; the oracle unrolls the same rounds
+    // with GraphQ.rankRounds) — Pregel-shape shuffles, bit-identical
     // across partitionings. Top-50 on the (score, term) total order.
     "t_textrank" -> ((s, dir) => {
       val dt = documents(s, dir).select(col("doc_id"),
@@ -178,16 +179,6 @@ object Curation37Q extends QueryModule {
        |   j -> ascii(substr($e, j::INT, 1))::BIGINT)),
        | (a, b) -> (a * 31 + b) % $P) ELSE 0 END""".stripMargin
 
-  /** One exact-integer PageRank round (Graph.pageRank mirror). */
-  private def prIter(i: Int): String =
-    s"""sh$i AS (SELECT e.dst AS node, sum(r${i - 1}.r // deg.deg)::BIGINT
-       |   AS inc
-       | FROM e JOIN r${i - 1} ON e.src = r${i - 1}.node
-       |  JOIN deg ON deg.src = e.src GROUP BY e.dst),
-       |r$i AS (SELECT n.node,
-       |  (150000 + 85 * coalesce(sh$i.inc, 0) // 100)::BIGINT AS r
-       | FROM nodes n LEFT JOIN sh$i ON sh$i.node = n.node)""".stripMargin
-
   val oracle: Map[String, String] = Map(
 
     "t_textrank" ->
@@ -208,7 +199,7 @@ object Curation37Q extends QueryModule {
          |deg AS (SELECT src, count(*)::BIGINT AS deg FROM e GROUP BY src),
          |nodes AS (SELECT DISTINCT src AS node FROM e),
          |r0 AS (SELECT node, 1000000::BIGINT AS r FROM nodes),
-         |${(1 to 3).map(prIter).mkString(",\n")},
+         |${GraphQ.rankRounds(3)},
          |voc AS (SELECT DISTINCT term FROM
          |  (SELECT t1 AS term FROM prs UNION ALL SELECT t2 FROM prs)),
          |vh AS (SELECT term, ${hashSql("term")} AS node FROM voc)

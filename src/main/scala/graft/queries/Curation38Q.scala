@@ -41,17 +41,7 @@ object Curation38Q extends QueryModule {
     // wedge counts a union of 25 bounded subgraphs at every sf (the
     // g2_triangles argument).
     "g16_ktruss" -> ((s, dir) => {
-      val sn = supplier(s, dir).select(
-        col("s_suppkey").cast("long").as("sk"), col("s_nationkey").as("nk"))
-      val li = lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"),
-          col("l_suppkey").cast("long").as("sk"))
-        .join(sn, "sk")
-      val x = li.select(col("ok"), col("sk").as("a"), col("nk").as("na"))
-      val y = li.select(col("ok"), col("sk").as("b"), col("nk").as("nb"))
-      var e = x.join(y, "ok")
-        .filter(col("a") < col("b") && col("na") === col("nb"))
-        .select(col("a"), col("b")).distinct().cache()
+      var e = GraphQ.domesticCoSupply(s, dir).cache()
       for (_ <- 1 to 3)
         e = withSupport(e).filter(col("sup") >= 2L).select("a", "b")
           .localCheckpoint() // truncate the per-round plan growth
@@ -163,13 +153,7 @@ object Curation38Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "g16_ktruss" ->
-      s"""WITH sn AS (SELECT s_suppkey::BIGINT AS sk, s_nationkey AS nk
-         | FROM supplier),
-         |li AS (SELECT l_orderkey AS ok, sk, nk
-         | FROM lineitem JOIN sn ON l_suppkey = sk),
-         |e0 AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-         | FROM li x JOIN li y ON x.ok = y.ok
-         | WHERE x.sk < y.sk AND x.nk = y.nk),
+      s"""WITH ${GraphQ.domesticCoSupplySql("e0")},
          |${(0 until 3).map(trussRound).mkString(",\n")},
          |symf AS (SELECT a, b FROM e3 UNION ALL SELECT b, a FROM e3),
          |wedf AS (SELECT s1.a AS x, s2.a AS y, count(*)::BIGINT AS sup

@@ -15,8 +15,6 @@ import Q._
   */
 object Curation3Q extends QueryModule {
 
-  private val SuppOffset = 1000000000L
-
   val queries: Map[String, QueryFn] = Map(
 
     // Link prediction (common-neighbors + Adamic-Adar) on the

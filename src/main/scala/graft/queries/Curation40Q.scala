@@ -83,7 +83,8 @@ object Curation40Q extends QueryModule {
     // exact BIGINTs. Top-200 terms by (df desc, term).
     "t_burstiness" -> ((s, dir) => {
       val d = documents(s, dir)
-      val n = d.count()
+      // the corpus size N rides the plan as a one-row scalar subquery
+      val n = d.select(count(lit(1))).scalar()
       val tf = d.select(col("doc_id"),
           explode(Text.tokens(Text.normalizeAz(col("text")))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -92,8 +93,8 @@ object Curation40Q extends QueryModule {
         sum(col("tf") * col("tf")).as("s2"))
         .filter(col("df") >= 5L)
       // num = N·Σtf² − (Σtf)²  (= N(N−1)·var);  den = (N−1)·Σtf
-      val num = lit(n) * col("s2") - col("s1") * col("s1")
-      val den = lit(n - 1L) * col("s1")
+      val num = n * col("s2") - col("s1") * col("s1")
+      val den = (n - 1L) * col("s1")
       byTerm.select(col("term"), col("df"), col("s1").as("n_occ"),
           r6(num.cast("double") / den.cast("double")).as("vmr"),
           r6((num - den).cast("double") / (num + den).cast("double"))
@@ -166,7 +167,7 @@ object Curation40Q extends QueryModule {
     // score rides the LCM(1..4) = 12 lattice: score12 = Σ 12/d is an
     // exact BIGINT.
     "g17_harmonic" -> ((s, dir) => {
-      val sym = Curation29Q.symEdges(s, dir).cache()
+      val sym = GraphQ.symEdges(s, dir).cache()
       val seeds = sym.select(col("a").as("node")).distinct()
         .orderBy("node").limit(8)
         .select(col("node").as("seed"), col("node"))
@@ -300,7 +301,7 @@ object Curation40Q extends QueryModule {
     },
 
     "g17_harmonic" ->
-      s"""WITH ${Curation29Q.SymSql},
+      s"""WITH ${GraphQ.SymSql},
          |seeds AS (SELECT a AS seed, a AS node FROM
          |  (SELECT DISTINCT a FROM sym ORDER BY a LIMIT 8)),
          |f0 AS (SELECT seed, node FROM seeds),

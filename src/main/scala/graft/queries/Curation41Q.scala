@@ -97,17 +97,7 @@ object Curation41Q extends QueryModule {
     // one division. The nation restriction bounds density exactly as
     // in g2_triangles.
     "g18_clustcoef" -> ((s, dir) => {
-      val sn = supplier(s, dir).select(
-        col("s_suppkey").cast("long").as("sk"), col("s_nationkey").as("nk"))
-      val li = lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"),
-          col("l_suppkey").cast("long").as("sk"))
-        .join(sn, "sk")
-      val x = li.select(col("ok"), col("sk").as("a"), col("nk").as("na"))
-      val y = li.select(col("ok"), col("sk").as("b"), col("nk").as("nb"))
-      val e = x.join(y, "ok")
-        .filter(col("a") < col("b") && col("na") === col("nb"))
-        .select(col("a"), col("b")).distinct().cache()
+      val e = GraphQ.domesticCoSupply(s, dir).cache()
       // e is already canonical (a < b, distinct) — skip the operator's
       // normalize+distinct re-exchange (round 12)
       val tris = graft.operators.Graph.triangles(e, canonical = true)
@@ -170,13 +160,7 @@ object Curation41Q extends QueryModule {
         |FROM m""".stripMargin,
 
     "g18_clustcoef" ->
-      """WITH sn AS (SELECT s_suppkey::BIGINT AS sk, s_nationkey AS nk
-        |            FROM supplier),
-        |li AS (SELECT l_orderkey AS ok, sk, nk
-        |       FROM lineitem JOIN sn ON l_suppkey = sk),
-        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-        |      FROM li x JOIN li y ON x.ok = y.ok
-        |      WHERE x.sk < y.sk AND x.nk = y.nk),
+      s"""WITH ${GraphQ.domesticCoSupplySql("e")},
         |sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
         |deg AS (SELECT a AS n, count(*)::BIGINT AS d FROM sym GROUP BY a),
         |o AS (SELECT s.a AS src, s.b AS dst, db.d AS dd

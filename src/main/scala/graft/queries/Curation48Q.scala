@@ -27,18 +27,7 @@ object Curation48Q extends QueryModule {
     // reached. Per round: one frontier join + min-agg with
     // localCheckpoint lineage truncation — the g4_sssp playbook.
     "g19_bipartite" -> ((s, dir) => {
-      val sn = supplier(s, dir).select(
-        col("s_suppkey").cast("long").as("sk"),
-        col("s_nationkey").as("nk"))
-      val li = lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"),
-          col("l_suppkey").cast("long").as("sk"))
-        .join(sn, "sk")
-      val x = li.select(col("ok"), col("sk").as("a"), col("nk").as("na"))
-      val y = li.select(col("ok"), col("sk").as("b"), col("nk").as("nb"))
-      val edges = x.join(y, "ok")
-        .filter(col("a") < col("b") && col("na") === col("nb"))
-        .select(col("a"), col("b")).distinct().localCheckpoint()
+      val edges = GraphQ.domesticCoSupply(s, dir).localCheckpoint()
       val comp = graft.operators.Graph.connectedComponents(edges)
         .distinct()
       val sym = edges.select(col("a").as("u"), col("b").as("v"))
@@ -124,13 +113,7 @@ object Curation48Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "g19_bipartite" ->
-      """WITH RECURSIVE sn AS (SELECT s_suppkey::BIGINT AS sk,
-        |  s_nationkey AS nk FROM supplier),
-        |li AS (SELECT l_orderkey AS ok, sn.sk, nk FROM lineitem
-        | JOIN sn ON sn.sk = l_suppkey),
-        |edges AS (SELECT DISTINCT a.sk AS a, b.sk AS b
-        | FROM li a JOIN li b ON a.ok = b.ok AND a.sk < b.sk
-        |  AND a.nk = b.nk),
+      s"""WITH RECURSIVE ${GraphQ.domesticCoSupplySql("edges")},
         |sym AS (SELECT a AS u, b AS v FROM edges
         | UNION ALL SELECT b, a FROM edges),
         |nodes AS (SELECT DISTINCT u AS node FROM sym),

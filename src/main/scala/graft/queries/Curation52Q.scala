@@ -86,18 +86,7 @@ object Curation52Q extends QueryModule {
     // Plan: edge build (the g2 shape) → one degree agg → two
     // broadcast-size histograms → tiny cross with the ladder.
     "g20_richclub" -> ((s, dir) => {
-      val sn = supplier(s, dir).select(
-        col("s_suppkey").cast("long").as("sk"), col("s_nationkey").as("nk"))
-      val li = lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"),
-          col("l_suppkey").cast("long").as("sk"))
-        .join(sn, "sk")
-      val x = li.select(col("ok"), col("sk").as("a"), col("nk").as("na"))
-      val y = li.select(col("ok"), col("sk").as("b"), col("nk").as("nb"))
-      val edges = x.join(y, "ok")
-        .filter(col("a") < col("b") && col("na") === col("nb"))
-        .select(col("a"), col("b")).distinct()
-        .cache()
+      val edges = GraphQ.domesticCoSupply(s, dir).cache()
       val deg = edges.select(col("a").as("nid"))
         .union(edges.select(col("b").as("nid")))
         .groupBy("nid").agg(count(lit(1)).as("d"))
@@ -160,13 +149,7 @@ object Curation52Q extends QueryModule {
         |FROM d ORDER BY cook DESC, l_orderkey, l_linenumber LIMIT 20""".stripMargin,
 
     "g20_richclub" ->
-      """WITH sn AS (SELECT s_suppkey::BIGINT AS sk, s_nationkey AS nk
-        | FROM supplier),
-        |li AS (SELECT l_orderkey AS ok, sk, nk
-        | FROM lineitem JOIN sn ON l_suppkey = sk),
-        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-        | FROM li x JOIN li y ON x.ok = y.ok
-        | WHERE x.sk < y.sk AND x.nk = y.nk),
+      s"""WITH ${GraphQ.domesticCoSupplySql("e")},
         |deg AS (SELECT nid, count(*)::BIGINT AS d FROM
         |  (SELECT a AS nid FROM e UNION ALL SELECT b FROM e)
         | GROUP BY nid),

@@ -38,17 +38,7 @@ object Curation56Q extends QueryModule {
     // nonnegative, so DIV == //). 6 rounds, the oracle unrolls the
     // same 6 CTEs — even a non-converged cap matches bit-for-bit.
     "g21_eigencentrality" -> ((s, dir) => {
-      val sn = supplier(s, dir).select(
-        col("s_suppkey").cast("long").as("sk"), col("s_nationkey").as("nk"))
-      val li = lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"),
-          col("l_suppkey").cast("long").as("sk"))
-        .join(sn, "sk")
-      val x = li.select(col("ok"), col("sk").as("a"), col("nk").as("na"))
-      val y = li.select(col("ok"), col("sk").as("b"), col("nk").as("nb"))
-      val e0 = x.join(y, "ok")
-        .filter(col("a") < col("b") && col("na") === col("nb"))
-        .select(col("a"), col("b")).distinct()
+      val e0 = GraphQ.domesticCoSupply(s, dir)
       val sym = e0.select(col("a").as("src"), col("b").as("dst"))
         .union(e0.select(col("b").as("src"), col("a").as("dst")))
         .localCheckpoint()
@@ -134,13 +124,7 @@ object Curation56Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "g21_eigencentrality" ->
-      s"""WITH sn AS (SELECT s_suppkey::BIGINT AS sk, s_nationkey AS nk
-         | FROM supplier),
-         |li AS (SELECT l_orderkey AS ok, sk, nk
-         | FROM lineitem JOIN sn ON l_suppkey = sk),
-         |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-         | FROM li x JOIN li y ON x.ok = y.ok
-         | WHERE x.sk < y.sk AND x.nk = y.nk),
+      s"""WITH ${GraphQ.domesticCoSupplySql("e")},
          |sym AS MATERIALIZED (SELECT a AS src, b AS dst FROM e
          | UNION ALL SELECT b, a FROM e),
          |x0 AS (SELECT DISTINCT src AS node, $Scale::BIGINT AS x

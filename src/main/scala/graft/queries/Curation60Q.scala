@@ -28,14 +28,7 @@ object Curation60Q extends QueryModule {
     // shuffle (scores join edges on src, sum by dst); 4 rounds at
     // any scale. The final /4096.0 is exact (dyadic).
     "g22_katz" -> ((s, dir) => {
-      val pairs = lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-        .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").cast("long").as("cust"),
-          (col("l_suppkey") + GraphQ.SuppOffset).cast("long").as("supp"))
-        .distinct()
-      val edges = pairs.select(col("cust").as("src"), col("supp").as("dst"))
-        .union(pairs.select(col("supp").as("src"), col("cust").as("dst")))
+      val edges = GraphQ.symEdges(s, dir).toDF("src", "dst")
       var x = edges.select(col("src").as("node")).distinct()
         .withColumn("p", lit(1L))
       val paths = (1 to 4).map { _ =>
@@ -134,11 +127,8 @@ object Curation60Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "g22_katz" ->
-      s"""WITH pairs AS (SELECT DISTINCT o_custkey::BIGINT AS cust,
-         |  (l_suppkey + ${GraphQ.SuppOffset})::BIGINT AS supp
-         | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |edges AS (SELECT cust AS src, supp AS dst FROM pairs
-         |  UNION ALL SELECT supp AS src, cust AS dst FROM pairs),
+      s"""WITH ${GraphQ.SymSql},
+         |edges AS (SELECT a AS src, b AS dst FROM sym),
          |x0 AS (SELECT DISTINCT src AS node, 1::BIGINT AS p FROM edges),
          |x1 AS (SELECT e.dst AS node, CAST(sum(x.p) AS BIGINT) AS p
          | FROM edges e JOIN x0 x ON x.node = e.src GROUP BY e.dst),

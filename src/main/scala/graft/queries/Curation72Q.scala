@@ -42,13 +42,7 @@ object Curation72Q extends QueryModule {
     // (this graph's within-component diameter is ≤ 4 by
     // construction: co-supply neighborhoods are dense).
     "g23_pseudo_diameter" -> ((s, dir) => {
-      val li = lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"),
-          col("l_suppkey").cast("long").as("sk"))
-      val x = li.select(col("ok"), col("sk").as("a"))
-      val y = li.select(col("ok"), col("sk").as("b"))
-      val e0 = x.join(y, "ok").filter(col("a") < col("b"))
-        .select("a", "b").distinct()
+      val e0 = GraphQ.coSupply(s, dir)
       val sym = e0.select(col("a").as("src"), col("b").as("dst"))
         .union(e0.select(col("b").as("src"), col("a").as("dst")))
         .localCheckpoint()
@@ -173,10 +167,11 @@ object Curation72Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "g23_pseudo_diameter" -> {
-      // every CTE is MATERIALIZED: the sweep chain references each
-      // level twice and the final row re-reads both distance tables —
-      // inlined CTEs would recompute the edge build exponentially
-      // (the g21_eigencentrality lesson)
+      // every CTE past the shared co-supply fragment is MATERIALIZED:
+      // the sweep chain references each level twice and the final row
+      // re-reads both distance tables — inlined CTEs would recompute
+      // the edge build exponentially (the g21_eigencentrality lesson);
+      // `e` materializes once, so it builds `e0` twice at most
       def sweepSql(seedCte: String, p: String) =
         s"""${p}f1 AS MATERIALIZED (SELECT DISTINCT e.dst AS node FROM e
            |  JOIN $seedCte s ON e.src = s.node),
@@ -194,10 +189,7 @@ object Curation72Q extends QueryModule {
            |  UNION ALL SELECT node, 3 FROM ${p}f3
            |  UNION ALL SELECT node, 4 FROM ${p}f4) GROUP BY node)"""
           .stripMargin
-      s"""WITH li AS (SELECT l_orderkey AS ok, l_suppkey::BIGINT AS sk
-         |            FROM lineitem),
-         |e0 AS MATERIALIZED (SELECT DISTINCT x.sk AS a, y.sk AS b
-         |       FROM li x JOIN li y ON x.ok = y.ok WHERE x.sk < y.sk),
+      s"""WITH ${GraphQ.coSupplySql("e0")},
          |e AS MATERIALIZED (SELECT a AS src, b AS dst FROM e0
          |      UNION ALL SELECT b, a FROM e0),
          |deg AS (SELECT src AS n, count(*)::BIGINT AS d FROM e GROUP BY src),

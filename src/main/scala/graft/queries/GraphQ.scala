@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Graph
 import Q._
@@ -14,10 +15,113 @@ import Q._
   * Determinism: the whole computation is BIGINT lattice arithmetic
   * (operators/Graph.pageRank) — no float recursion, no summation-order
   * sensitivity; the oracle unrolls the same five exact iterations.
+  *
+  * The graph queries of every module read their graphs from here: the
+  * customer–supplier bipartite graph, the domestic co-supply graph and
+  * the co-supply graph, each one Spark frame and one oracle CTE
+  * fragment, plus the oracle's rank rounds ([[rankRounds]]).
   */
 object GraphQ extends QueryModule {
 
   private[queries] val SuppOffset = 1000000000L
+
+  /** Customer↔supplier bipartite graph from who-bought-from-whom:
+    * distinct (a = customer, b = supplier) pairs, supplier ids offset
+    * by [[SuppOffset]] to a disjoint node range. */
+  private[queries] def bipartite(s: SparkSession, dir: String): DataFrame =
+    lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
+      .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").cast("long").as("a"),
+        (col("l_suppkey") + SuppOffset).cast("long").as("b"))
+      .distinct()
+
+  /** [[bipartite]] edge list, both directions (the ranges are disjoint
+    * so no dedup is needed after the union). */
+  private[graft] def symEdges(s: SparkSession, dir: String): DataFrame = {
+    val pairs = bipartite(s, dir)
+    pairs.union(pairs.select(col("b").as("a"), col("a").as("b")))
+  }
+
+  /** Oracle CTE `pairs` (a, b): [[bipartite]]. */
+  private[queries] val BipartiteSql =
+    s"""pairs AS (SELECT DISTINCT o_custkey::BIGINT AS a,
+       |  (l_suppkey + $SuppOffset)::BIGINT AS b
+       | FROM lineitem JOIN orders ON l_orderkey = o_orderkey)""".stripMargin
+
+  /** Oracle CTEs `pairs` and `sym` (a, b): [[symEdges]]. */
+  private[queries] val SymSql =
+    s"""$BipartiteSql,
+       |sym AS (SELECT a, b FROM pairs
+       | UNION ALL SELECT b, a FROM pairs)""".stripMargin
+
+  /** Domestic co-supply graph: suppliers of the SAME nation are linked
+    * when they co-appear in an order; distinct (a, b) with a < b. The
+    * nation restriction keeps the graph a union of 25 moderately
+    * dense subgraphs at every sf (sf growth adds nodes per nation,
+    * not global density). */
+  private[queries] def domesticCoSupply(s: SparkSession,
+      dir: String): DataFrame = {
+    val sn = supplier(s, dir).select(
+      col("s_suppkey").cast("long").as("sk"), col("s_nationkey").as("nk"))
+    val li = lineitem(s, dir)
+      .select(col("l_orderkey").as("ok"), col("l_suppkey").cast("long").as("sk"))
+      .join(sn, "sk")
+    val x = li.select(col("ok"), col("sk").as("a"), col("nk").as("na"))
+    val y = li.select(col("ok"), col("sk").as("b"), col("nk").as("nb"))
+    x.join(y, "ok")
+      .filter(col("a") < col("b") && col("na") === col("nb"))
+      .select(col("a"), col("b")).distinct()
+  }
+
+  /** Oracle CTEs `sn`, `li` and `name` (a, b): [[domesticCoSupply]]. */
+  private[queries] def domesticCoSupplySql(name: String): String =
+    s"""sn AS (SELECT s_suppkey::BIGINT AS sk, s_nationkey AS nk
+       | FROM supplier),
+       |li AS (SELECT l_orderkey AS ok, sk, nk
+       | FROM lineitem JOIN sn ON l_suppkey = sk),
+       |$name AS (SELECT DISTINCT x.sk AS a, y.sk AS b
+       | FROM li x JOIN li y ON x.ok = y.ok
+       | WHERE x.sk < y.sk AND x.nk = y.nk)""".stripMargin
+
+  /** Co-supply graph over all suppliers (no nation filter): distinct
+    * (a, b) with a < b. */
+  private[queries] def coSupply(s: SparkSession, dir: String): DataFrame = {
+    val li = lineitem(s, dir)
+      .select(col("l_orderkey").as("ok"), col("l_suppkey").cast("long").as("sk"))
+    val x = li.select(col("ok"), col("sk").as("a"))
+    val y = li.select(col("ok"), col("sk").as("b"))
+    x.join(y, "ok").filter(col("a") < col("b"))
+      .select("a", "b").distinct()
+  }
+
+  /** Oracle CTEs `li` and `name` (a, b): [[coSupply]]. */
+  private[queries] def coSupplySql(name: String): String =
+    s"""li AS (SELECT l_orderkey AS ok, l_suppkey::BIGINT AS sk
+       | FROM lineitem),
+       |$name AS (SELECT DISTINCT x.sk AS a, y.sk AS b
+       | FROM li x JOIN li y ON x.ok = y.ok WHERE x.sk < y.sk)""".stripMargin
+
+  /** Oracle CTEs r1..r`iters` of the exact-integer rank loop (the SQL
+    * mirror of Graph.pageRank's and Graph.personalizedPageRank's
+    * shared rounds) at scale 1e6, over CTEs `e` (src, dst), `deg`
+    * (src, deg), `nodes` and `r0`: r = base + (85·incoming) // 100,
+    * where `base` is an SQL term over `nodes n` and `carry` names the
+    * `nodes` columns kept next to `node`. Unrolled: standard SQL
+    * forbids aggregating over a recursive CTE reference, and the
+    * iteration count is fixed anyway. DuckDB's sum(BIGINT) widens to
+    * HUGEINT — cast back before the damping multiply, per the overflow
+    * contract in Graph.pageRank's scaladoc. */
+  private[queries] def rankRounds(iters: Int, base: String = "150000",
+      carry: Seq[String] = Nil): String =
+    (1 to iters).map { i =>
+      s"""r$i AS (SELECT n.node,${carry.map(c => s" n.$c,").mkString}
+         |  $base + (85 * COALESCE(inc.s, 0)) // 100 AS r
+         | FROM nodes n LEFT JOIN (
+         |  SELECT e.dst AS node, CAST(sum(p.r // deg.deg) AS BIGINT) AS s
+         |  FROM e JOIN deg ON e.src = deg.src JOIN r${i - 1} p ON p.node = e.src
+         |  GROUP BY e.dst) inc ON n.node = inc.node)""".stripMargin
+    }.mkString(",\n")
 
   val queries: Map[String, QueryFn] = Map(
     // G5/net-new: k-core decomposition (k=34) by iterative peeling —
@@ -36,13 +140,7 @@ object GraphQ extends QueryModule {
     // (customer degrees only drop when a supplier dies), but the loop
     // is the general fixpoint and the cap covers deep cascades.
     "g5_kcore" -> ((s, dir) => {
-      val pairs = lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-        .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").cast("long").as("a"),
-          (col("l_suppkey") + SuppOffset).cast("long").as("b"))
-        .distinct()
-      var cur = pairs.localCheckpoint()
+      var cur = bipartite(s, dir).localCheckpoint()
       var n = cur.count()
       var converged = false
       var it = 0
@@ -65,40 +163,18 @@ object GraphQ extends QueryModule {
     // Customer↔supplier bipartite graph from who-bought-from-whom:
     // symmetric edges (undirected authority), supplier ids offset to a
     // disjoint node range, 5 exact fixed-point iterations.
-    "g_pagerank" -> ((s, dir) => {
-      val pairs = lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-        .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").cast("long").as("cust"),
-          (col("l_suppkey") + SuppOffset).cast("long").as("supp"))
-        .distinct()
-      val edges = pairs.select(col("cust").as("src"), col("supp").as("dst"))
-        .union(pairs.select(col("supp").as("src"), col("cust").as("dst")))
-      Graph.pageRank(edges, iters = 5)
-    }),
+    "g_pagerank" -> ((s, dir) =>
+      Graph.pageRank(symEdges(s, dir).toDF("src", "dst"), iters = 5)),
 
-    // Triangle enumeration of the domestic co-supply graph: suppliers
-    // of the SAME nation are linked when they co-appear in an order.
-    // The nation restriction keeps the graph a union of 25 moderately
-    // dense subgraphs at every sf (sf growth adds nodes per nation,
-    // not global density), and the degree-ordered algorithm in
-    // operators/Graph.triangles bounds the wedge blow-up on whatever
-    // hubs emerge.
-    "g2_triangles" -> ((s, dir) => {
-      val sn = supplier(s, dir).select(
-        col("s_suppkey").cast("long").as("sk"), col("s_nationkey").as("nk"))
-      val li = lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").cast("long").as("sk"))
-        .join(sn, "sk")
-      val x = li.select(col("ok"), col("sk").as("a"), col("nk").as("na"))
-      val y = li.select(col("ok"), col("sk").as("b"), col("nk").as("nb"))
-      val edges = x.join(y, "ok")
-        .filter(col("a") < col("b") && col("na") === col("nb"))
-        .select(col("a"), col("b")).distinct()
+    // Triangle enumeration of the domestic co-supply graph (same-
+    // nation suppliers linked when they co-appear in an order); the
+    // nation restriction bounds density at every sf, and the
+    // degree-ordered algorithm in operators/Graph.triangles bounds the
+    // wedge blow-up on whatever hubs emerge.
+    "g2_triangles" -> ((s, dir) =>
       // edges are already canonical (a < b, distinct) — skip the
       // operator's normalize+distinct re-exchange (round 12)
-      Graph.triangles(edges, canonical = true)
-    }),
+      Graph.triangles(domesticCoSupply(s, dir), canonical = true)),
 
     // Bounded-hop multi-source BFS: minimum co-supply distance from
     // nation-0's suppliers, 3 hops. Each hop is one keyed shuffle of
@@ -107,12 +183,7 @@ object GraphQ extends QueryModule {
     // oracle expressible (unrolled CTEs) and is itself the standard
     // production guard on traversal explosion.
     "g3_bfs" -> ((s, dir) => {
-      val li = lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").cast("long").as("sk"))
-      val x = li.select(col("ok"), col("sk").as("a"))
-      val y = li.select(col("ok"), col("sk").as("b"))
-      val e0 = x.join(y, "ok").filter(col("a") < col("b"))
-        .select("a", "b").distinct()
+      val e0 = coSupply(s, dir)
       val sym = e0.select(col("a").as("src"), col("b").as("dst"))
         .union(e0.select(col("b").as("src"), col("a").as("dst")))
       val seeds = supplier(s, dir).filter(col("s_nationkey") === 0)
@@ -139,12 +210,7 @@ object GraphQ extends QueryModule {
     // oracle expressible as unrolled CTEs (same rationale as g3_bfs);
     // all arithmetic is BIGINT (ORACLE_NOTES.md rule 1).
     "g4_sssp" -> ((s, dir) => {
-      val li = lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").cast("long").as("sk"))
-      val x = li.select(col("ok"), col("sk").as("a"))
-      val y = li.select(col("ok"), col("sk").as("b"))
-      val e0 = x.join(y, "ok").filter(col("a") < col("b"))
-        .select("a", "b").distinct()
+      val e0 = coSupply(s, dir)
         .withColumn("w", (col("a") + col("b")) % 5 + lit(1L))
       val sym = e0.select(col("a").as("src"), col("b").as("dst"), col("w"))
         .union(e0.select(col("b").as("src"), col("a").as("dst"), col("w")))
@@ -159,18 +225,6 @@ object GraphQ extends QueryModule {
       dist
     }))
 
-  // Oracle: the identical exact-integer recursion, unrolled (standard
-  // SQL forbids aggregating over a recursive CTE reference, and the
-  // iteration count is fixed anyway). DuckDB's sum(BIGINT) widens to
-  // HUGEINT — cast back before the damping multiply, per the overflow
-  // contract in Graph.pageRank's scaladoc.
-  private def prIter(i: Int): String =
-    s"""r$i AS (SELECT n.node, 150000 + (85 * COALESCE(inc.s, 0)) // 100 AS r
-       | FROM nodes n LEFT JOIN (
-       |  SELECT e.dst AS node, CAST(sum(p.r // deg.deg) AS BIGINT) AS s
-       |  FROM e JOIN deg ON e.src = deg.src JOIN r${i - 1} p ON p.node = e.src
-       |  GROUP BY e.dst) inc ON n.node = inc.node)""".stripMargin
-
   /** 30 peel rounds unrolled as a generated CTE chain (DuckDB's
     * recursive CTEs disallow aggregation in the recursive term, so the
     * degree groupBy per round forces unrolling). Identical round count
@@ -183,9 +237,8 @@ object GraphQ extends QueryModule {
     // "Too many open files"). Materialization makes each round
     // evaluate once.
     val base =
-      s"""e0 AS MATERIALIZED (SELECT DISTINCT o_custkey::BIGINT AS a,
-         |  (l_suppkey + $SuppOffset)::BIGINT AS b
-         | FROM lineitem JOIN orders ON l_orderkey = o_orderkey)""".stripMargin
+      s"""$BipartiteSql,
+         |e0 AS MATERIALIZED (SELECT a, b FROM pairs)""".stripMargin
     val rounds = (1 to 30).map { i =>
       s"""d$i AS MATERIALIZED (SELECT n, count(*)::BIGINT AS d FROM (
          |  SELECT a AS n FROM e${i - 1} UNION ALL SELECT b AS n FROM e${i - 1})
@@ -204,29 +257,20 @@ object GraphQ extends QueryModule {
   val oracle: Map[String, String] = Map(
     "g5_kcore" -> KcoreSql,
 
+    // the identical exact-integer recursion, unrolled (rankRounds)
     "g_pagerank" ->
-      s"""WITH pairs AS (
-         |  SELECT DISTINCT o_custkey::BIGINT AS cust,
-         |    (l_suppkey + $SuppOffset)::BIGINT AS supp
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |e AS (SELECT cust AS src, supp AS dst FROM pairs
-         |      UNION ALL SELECT supp, cust FROM pairs),
+      s"""WITH $SymSql,
+         |e AS (SELECT a AS src, b AS dst FROM sym),
          |deg AS (SELECT src, count(*)::BIGINT AS deg FROM e GROUP BY src),
          |nodes AS (SELECT DISTINCT src AS node FROM e),
          |r0 AS (SELECT node, 1000000::BIGINT AS r FROM nodes),
-         |${(1 to 5).map(prIter).mkString(",\n")}
+         |${rankRounds(5)}
          |SELECT node, r FROM r5""".stripMargin,
 
     // Same rank-ordered enumeration; every triangle appears once with
     // its apex at the lowest (degree, id) rank.
     "g2_triangles" ->
-      """WITH sn AS (SELECT s_suppkey::BIGINT AS sk, s_nationkey AS nk
-        |            FROM supplier),
-        |li AS (SELECT l_orderkey AS ok, sk, nk
-        |       FROM lineitem JOIN sn ON l_suppkey = sk),
-        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-        |      FROM li x JOIN li y ON x.ok = y.ok
-        |      WHERE x.sk < y.sk AND x.nk = y.nk),
+      s"""WITH ${domesticCoSupplySql("e")},
         |sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
         |deg AS (SELECT a AS n, count(*)::BIGINT AS d FROM sym GROUP BY a),
         |o AS (SELECT s.a AS src, s.b AS dst, db.d AS dd
@@ -243,10 +287,7 @@ object GraphQ extends QueryModule {
         |FROM t""".stripMargin,
 
     "g3_bfs" ->
-      """WITH li AS (SELECT l_orderkey AS ok, l_suppkey::BIGINT AS sk
-        |            FROM lineitem),
-        |e0 AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-        |       FROM li x JOIN li y ON x.ok = y.ok WHERE x.sk < y.sk),
+      s"""WITH ${coSupplySql("e0")},
         |e AS (SELECT a AS src, b AS dst FROM e0
         |      UNION ALL SELECT b, a FROM e0),
         |s0 AS (SELECT DISTINCT s_suppkey::BIGINT AS node FROM supplier
@@ -264,10 +305,7 @@ object GraphQ extends QueryModule {
     // Identical unrolled relaxation; DuckDB's % on positive BIGINTs
     // matches Spark's. min() widens stay in BIGINT via the CAST.
     "g4_sssp" ->
-      """WITH li AS (SELECT l_orderkey AS ok, l_suppkey::BIGINT AS sk
-        |            FROM lineitem),
-        |e0 AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-        |       FROM li x JOIN li y ON x.ok = y.ok WHERE x.sk < y.sk),
+      s"""WITH ${coSupplySql("e0")},
         |ew AS (SELECT a, b, (a + b) % 5 + 1 AS w FROM e0),
         |e AS (SELECT a AS src, b AS dst, w FROM ew
         |      UNION ALL SELECT b, a, w FROM ew),

@@ -23,6 +23,22 @@ object TemporalQ extends QueryModule {
   private def eventsRawUs(s: org.apache.spark.sql.SparkSession,
                           dir: String) = graft.io.Tables.eventsUs(s, dir)
 
+  /** Runs `body` with the RocksDB state-store provider set (the
+    * transformWithState queries need multi-column-family state), then
+    * restores the session's previous provider, or unsets the key when
+    * the session had none. */
+  private def withRocksDb[T](s: org.apache.spark.sql.SparkSession)(
+      body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(p) => s.conf.set(key, p)
+      case None => s.conf.unset(key)
+    }
+  }
+
   val queries: Map[String, QueryFn] = Map(
     "w1_lag" -> ((s, dir) => {
       val ww = w(s)
@@ -514,11 +530,7 @@ object TemporalQ extends QueryModule {
     // output row per key for the AvailableNow batch; aggregates are
     // order-free so the result is deterministic and oracled.
     "w19_stateful_v2" -> ((s, dir) => {
-      val prev = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withRocksDb(s) {
         import s.implicits._
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         val out = obsStream(s, dir)
@@ -528,11 +540,6 @@ object TemporalQ extends QueryModule {
         runStream(s, "w19_stateful_v2_sink", out)
           .select(col("key").cast("long").as("user_id"),
             col("n"), col("max_value"))
-      } finally prev match {
-        case Some(p) => s.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
       }
     }),
 
@@ -542,13 +549,7 @@ object TemporalQ extends QueryModule {
     // window would need the whole history). The oracle is the batch
     // top-3: hash-equality IS the batch-parity proof.
     "w36_stream_topk" -> ((s, dir) => {
-      // transformWithState needs multi-column-family state: RocksDB
-      // provider for the run, restored after (the w19 pattern).
-      val prev = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withRocksDb(s) {
         import s.implicits._
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         val out = obsStream(s, dir)
@@ -559,11 +560,6 @@ object TemporalQ extends QueryModule {
           .select(col("key").cast("long").as("user_id"),
             col("id").as("event_id"), col("value"),
             col("rnk").cast("long").as("rnk"))
-      } finally prev match {
-        case Some(p) => s.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
       }
     }),
 
@@ -572,11 +568,7 @@ object TemporalQ extends QueryModule {
     // w36 / Map here): one point-updated RocksDB entry per category,
     // never a full-map rewrite. Oracle = the batch two-key count.
     "w38_stream_typecounts" -> ((s, dir) => {
-      val prev = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withRocksDb(s) {
         import s.implicits._
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         val typed = eventsStream(s, dir)
@@ -589,11 +581,6 @@ object TemporalQ extends QueryModule {
         runStream(s, "w38_stream_typecounts_sink", out)
           .select(col("key").cast("long").as("user_id"),
             col("typ").as("event_type"), col("n"))
-      } finally prev match {
-        case Some(p) => s.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
       }
     }),
 
@@ -606,11 +593,7 @@ object TemporalQ extends QueryModule {
     // w37 sentinel-flush pattern pushes the final watermark past every
     // real session's timeout. Gap = 10 min (the w20 batch constant).
     "w50_stream_timer" -> ((s, dir) => {
-      val prev = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withRocksDb(s) {
         import s.implicits._
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         val ev = events(s, dir)
@@ -644,11 +627,6 @@ object TemporalQ extends QueryModule {
           .filter(col("session_first") >= 0)
           .select(col("key").cast("long").as("user_id"),
             col("session_first"), col("n_events"), col("sum_cents"))
-      } finally prev match {
-        case Some(p) => s.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
       }
     }),
 

@@ -14,7 +14,7 @@ class Curation30Spec extends SparkSpec {
       .cache()
     assert(r.count() > 0)
     // Σ internal_edges <= m and Σ degree_sum = 2m exactly
-    val sym = graft.queries.Curation29Q.symEdges(spark, dir)
+    val sym = graft.queries.GraphQ.symEdges(spark, dir)
     val m2 = sym.count()
     val degTot = r.agg(sum("degree_sum")).head().getLong(0)
     assert(degTot == m2, "community degree sums must partition 2m")

@@ -153,6 +153,45 @@ class GraphSpec extends SparkSpec {
     assert(five.values.forall(v => v >= 150000L && v <= 3000000L))
   }
 
+  test("personalizedPageRank: hand-computed, mass enters at the seeds only") {
+    // Path 1-2-3 symmetric, seed {1} (seed 9 is no endpoint and is
+    // dropped). r0 = (1e6, 0, 0). Iter 1: node 2 receives 1e6 from
+    // node 1 -> r1 = (150000, 850000, 0). Iter 2: node 2 splits
+    // 850000 into 425000 each way and receives 150000 from node 1 ->
+    // r2 = (150000 + 361250, 127500, 361250).
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
+    val seeds = Seq(1L, 9L).toDF("seed")
+    def ppr(iters: Int) = Graph.personalizedPageRank(edges, seeds, iters)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(ppr(1) == Map(1L -> (1L, 150000L), 2L -> (0L, 850000L),
+      3L -> (0L, 0L)))
+    assert(ppr(2) == Map(1L -> (1L, 511250L), 2L -> (0L, 127500L),
+      3L -> (0L, 361250L)))
+  }
+
+  test("personalizedPageRank with every node a seed is pageRank") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // directed edges over 12 nodes: dangling nodes, self-loops and
+    // duplicates included
+    val graphs = Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(0L, 11L),
+      Gen.chooseNum(0L, 11L))).map(_.take(30))
+    val prop = Prop.forAll(graphs) { es =>
+      val edges = es.toDF("src", "dst")
+      val seeds = es.flatMap { case (a, b) => Seq(a, b) }.toDF("seed")
+      Seq(1, 7).forall { parts =>
+        val in = edges.repartition(parts)
+        val pr = Graph.pageRank(in, iters = 4)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val ppr = Graph.personalizedPageRank(in, seeds, iters = 4)
+          .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+        pr == ppr
+      }
+    }
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(4), prop)
+    assert(result.passed, result.status.toString)
+  }
+
   test("dupClusters: transitive chain resolved, singletons kept") {
     // 1~2 and 2~3 are near-dups but 1~3 may not pair directly; all
     // three must share one cluster_rep = 1. Doc 4 is a singleton.

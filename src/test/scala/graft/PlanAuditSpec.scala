@@ -256,10 +256,6 @@ class PlanAuditSpec extends SparkSpec {
     "s_brute_topk", "s_ivf_recall", "s_ivf_topk", "s_rrf",
     "v_proj_recall", "t_bm25", "t_ccnet_buckets", "t_kneser_ney",
     "t_kwic", "t_llr", "j16_bloom",
-    // a74: the ≤ #sources-row per-source count collect that feeds the
-    // literal source-offset frame; t_burstiness: the 1-row corpus
-    // size `count()` that scales its moments
-    "a74_quantile_norm", "t_burstiness",
     // m40: the AdaBoost fit it explains (m38_adaboost's rounds) plus
     // its 1-row stump-sum fetch
     "m40_shapley",

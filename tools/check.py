@@ -14,10 +14,22 @@ present in <outDirA> (or the named ones). Rows are sorted before values
 are compared, so a query that writes its rows in a run-dependent order
 still compares equal.
 
+With --plans it compares two graft.tools.Explain dumps (its stdout, or
+the sbt log of `runMain graft.tools.Explain`, formatted or -s) query by
+query, after masking what differs between two runs of one commit:
+expression ids (#123), JVM lambda class names, object and array
+identities (TopKAgg@272979b4, [J@1f2e3d), ML uids
+(VectorAssembler_0123456789ab), the random suffix of a temporary
+directory (/tmp/graft_text2688608093) and the source line of an RDD's
+call site (localCheckpoint at Graph.scala:72), which moves with any
+edit above it. It prints the masked diff of every query
+whose plan differs, or that only one dump has.
+
 Usage: python3 tools/check.py <sfDir> <outDir> [query ...]
        python3 tools/check.py --spark <outDirA> <outDirB> [query ...]
+       python3 tools/check.py --plans <dumpA> <dumpB> [query ...]
 """
-import json, os, struct, sys, math
+import difflib, json, os, re, struct, sys, math
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -61,11 +73,11 @@ def compare(exp, got):
     return errs
 
 
-def report(name, errs, rows):
+def report(name, errs, rows, unit="rows"):
     if errs:
         print(f"FAIL {name}: " + "; ".join(errs[:4]))
     else:
-        print(f"PASS {name} ({rows} rows)")
+        print(f"PASS {name} ({rows} {unit})")
     return not errs
 
 
@@ -140,10 +152,76 @@ def against_duckdb(sf_dir, out_dir, only):
     return n_pass, n_fail
 
 
+PLAN_MASKS = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"\$\$Lambda[$/][\w$/]*(@[0-9a-f]+)?"), "$$Lambda"),
+    (re.compile(r"([\w;])@[0-9a-f]+\b"), r"\1@"),
+    (re.compile(r"\b([A-Za-z]\w*)_[0-9a-f]{12}\b"), r"\1_uid"),
+    (re.compile(r"\b(graft_\w*?)\d{6,}"), r"\1"),
+    (re.compile(r"(\.scala):\d+"), r"\1:"),
+]
+FORMATTED = re.compile(r"^==== (\S+) ====$")
+SUMMARY = re.compile(r"^== (\S+?)(:| +exchanges=)")
+
+
+def read_plans(path):
+    """{query: masked plan lines} of one Explain dump. sbt's `[info] `
+    prefix is dropped; its other log lines (and Spark's, which sbt
+    prints as `[error]`) are skipped."""
+    plans, cur = {}, None
+    for line in open(path, errors="replace"):
+        line = line.rstrip("\n")
+        if line.startswith("[info] "):
+            line = line[len("[info] "):]
+        elif re.match(r"^\[(error|warn|success)\]", line):
+            continue
+        for rx, to in PLAN_MASKS:
+            line = rx.sub(to, line)
+        m = FORMATTED.match(line)
+        if m:
+            cur = plans.setdefault(m.group(1), [])
+            continue
+        m = SUMMARY.match(line)
+        if m:
+            plans.setdefault(m.group(1), []).append(line)
+            cur = None
+        elif cur is not None:
+            cur.append(line)
+    # Explain prints a blank line before each formatted section
+    for lines in plans.values():
+        while lines and not lines[-1].strip():
+            lines.pop()
+    return plans
+
+
+def plans_vs_plans(path_a, path_b, only):
+    a, b = read_plans(path_a), read_plans(path_b)
+    names = sorted(n for n in set(a) | set(b) if not only or n in only)
+    n_pass = n_fail = 0
+    for name in names:
+        if name not in a or name not in b:
+            ok = report(name, [f"only in {path_a if name in a else path_b}"], 0)
+        else:
+            diff = list(difflib.unified_diff(a[name], b[name], lineterm="",
+                                             n=0))[2:]
+            changed = [d for d in diff if d[:1] in "+-"]
+            ok = report(name, [f"{len(changed)} lines differ"] if diff else [],
+                        len(a[name]), "lines")
+            for d in diff:
+                print("    " + d)
+        n_pass, n_fail = n_pass + ok, n_fail + (not ok)
+    missing = sorted(only - set(names))
+    for name in missing:
+        report(name, ["in neither dump"], 0)
+    return n_pass, n_fail + len(missing)
+
+
 def main():
     args = sys.argv[1:]
     if args[0] == "--spark":
         n_pass, n_fail = spark_vs_spark(args[1], args[2], set(args[3:]))
+    elif args[0] == "--plans":
+        n_pass, n_fail = plans_vs_plans(args[1], args[2], set(args[3:]))
     else:
         n_pass, n_fail = against_duckdb(args[0], args[1], set(args[2:]))
     print(f"== {n_pass} pass, {n_fail} fail ==")
