@@ -43,8 +43,8 @@ object Temporal {
     max(c).over(rollingFrame(w, k))
 
   /** W2 engine-portable variants: rolling mean/std computed in an exact
-    * integer domain. `c` must be an exact-integer LONG column (e.g.
-    * `round(s * 1000).cast("long")` for a value on a 3-decimal lattice):
+    * integer domain. `c` must be an exact-integer LONG column lifted by
+    * `Q.lattice` (`Q.latticeSql` in the oracle), e.g. `Q.lattice(s, 1000)`:
     * the frame's sum(c), sum(c*c) and count are then exact integers in
     * EVERY engine regardless of summation order — the segment-tree-vs-
     * running-frame float drift that made rolled doubles tick differently

@@ -51,7 +51,7 @@ object AggQ extends QueryModule {
     // no second shuffle.
     "a25_outliers" -> ((s, dir) => {
       val o = events(s, dir).select(col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
+        lattice(col("value"), 100).as("cents"))
       val cd = col("cents").cast("decimal(38,0)")
       val stats = o.groupBy("event_type").agg(
         count(lit(1)).cast("decimal(38,0)").as("n"),
@@ -77,8 +77,7 @@ object AggQ extends QueryModule {
     // bit-identical inputs. Skew/kurtosis are scale-invariant, so
     // the cents lattice cancels out of the results.
     "a26_moments" -> ((s, dir) => {
-      val cd = round(col("value") * 100).cast("long")
-        .cast("decimal(38,0)")
+      val cd = lattice(col("value"), 100).cast("decimal(38,0)")
       val agg = events(s, dir)
         .select(col("event_type"), cd.as("c"))
         .groupBy("event_type")
@@ -112,7 +111,7 @@ object AggQ extends QueryModule {
     // side yield null (no epsilon fudge). Scale: one groupBy on a
     // ~20-row bin table; totals broadcast back.
     "a27_psi" -> ((s, dir) => {
-      val cents = round(col("value") * 100).cast("long")
+      val cents = lattice(col("value"), 100)
       val b = events(s, dir)
         .withColumn("cents", cents)
         .select(least(expr("cents DIV 2500"), lit(19L)).as("bin"),
@@ -137,7 +136,7 @@ object AggQ extends QueryModule {
     // on ~100 rows); pmi = ln((n_cell·N)/(n_row·n_col)) divides exact
     // longs and takes one ln.
     "m11_pmi" -> ((s, dir) => {
-      val cents = round(col("value") * 100).cast("long")
+      val cents = lattice(col("value"), 100)
       val cells = events(s, dir)
         .withColumn("cents", cents)
         .select(col("event_type"),
@@ -185,7 +184,7 @@ object AggQ extends QueryModule {
     // INTEGER cents' decimal string — never via log10, which is not
     // correctly rounded and can misbucket exact powers of ten.
     "a28_benford" -> ((s, dir) => {
-      val cents = round(col("l_extendedprice") * 100).cast("long")
+      val cents = lattice(col("l_extendedprice"), 100)
       val d = lineitem(s, dir)
         .select(substring(cents.cast("string"), 1, 1).cast("long").as("digit"))
         .groupBy("digit").agg(count(lit(1)).as("n"))
@@ -204,7 +203,7 @@ object AggQ extends QueryModule {
     // engine and any summation order — no float-rounding boundary.
     "a3_transform" -> ((s, dir) => {
       val w = Window.partitionBy("user_id")
-      val c = round(col("value") * 100).cast("long")
+      val c = lattice(col("value"), 100)
       val n = count(c).over(w)
       val s1 = sum(c).over(w).cast("double")
       val s2 = sum(c * c).over(w).cast("double")
@@ -237,7 +236,7 @@ object AggQ extends QueryModule {
       val masked = when(col("event_type") === "error", lit(null))
         .otherwise(col("value"))
       val cents = when(col("event_type") =!= "error",
-        round(col("value") * 100).cast("long"))
+        lattice(col("value"), 100))
       events(s, dir)
         .withColumn("masked", masked)
         .withColumn("gmean",
@@ -396,8 +395,7 @@ object AggQ extends QueryModule {
         urgent, "o_orderkey", expectedItems = 200000L)
       lineitem(s, dir)
         .filter(graft.functions.BloomKeyFilter.mightContain(col("l_orderkey"), bytes))
-        .select(col("l_orderkey"),
-          round(col("l_quantity") * 100).cast("long").as("qc"))
+        .select(col("l_orderkey"), lattice(col("l_quantity"), 100).as("qc"))
         .join(urgent, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_lines"), sum(col("qc")).as("qty_cents"))
@@ -434,7 +432,7 @@ object AggQ extends QueryModule {
     // theta-join, feasible only at oracle scale — which is the point.
     "j8_range" -> ((s, dir) => {
       val e = events(s, dir).select(col("user_id"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cv"))
+        lattice(col("value"), 100).as("cv"))
       val a = e.select(col("user_id"), col("event_id").as("id_a"),
         col("cv").as("cv_a"))
       val b = e.select(col("user_id"), col("event_id").as("id_b"),
@@ -641,8 +639,8 @@ object AggQ extends QueryModule {
     // interpolation, bit-portable.
     "a29_wmedian" -> ((s, dir) => {
       val b = lineitem(s, dir).select(col("l_returnflag").as("flag"),
-        round(col("l_extendedprice") * 100).cast("long").as("pc"),
-        round(col("l_quantity") * 100).cast("long").as("wc"))
+        lattice(col("l_extendedprice"), 100).as("pc"),
+        lattice(col("l_quantity"), 100).as("wc"))
       // groupedMedianDoubled's vlo IS the weighted-median rule
       // (min pc with 2·cumw ≥ totw): bucket metadata + 2/p-bucket
       // refinement replaces the row-scale (flag, pc) lattice shuffle
@@ -660,7 +658,7 @@ object AggQ extends QueryModule {
     "a32_kappa" -> ((s, dir) => {
       val e = events(s, dir).select(
         col("event_type").isin("purchase", "signup").cast("long").as("a"),
-        (round(col("value") * 100).cast("long") >= 5000L).cast("long").as("b"))
+        (lattice(col("value"), 100) >= 5000L).cast("long").as("b"))
       val g = e.agg(count(lit(1)).as("n"),
         sum(col("a")).as("na"), sum(col("b")).as("nb"),
         sum(when(col("a") === col("b"), 1L).otherwise(0L)).as("agree"))
@@ -680,7 +678,7 @@ object AggQ extends QueryModule {
     "m13_confusion" -> ((s, dir) => {
       val e = events(s, dir).select(
         col("event_type").isin("purchase", "signup").cast("long").as("actual"),
-        (round(col("value") * 100).cast("long") >= 5000L).cast("long").as("pred"))
+        (lattice(col("value"), 100) >= 5000L).cast("long").as("pred"))
       val g = e.agg(
         sum(when(col("pred") === 1 && col("actual") === 1, 1L).otherwise(0L)).as("tp"),
         sum(when(col("pred") === 1 && col("actual") === 0, 1L).otherwise(0L)).as("fp"),
@@ -703,7 +701,7 @@ object AggQ extends QueryModule {
     "a35_ks" -> ((s, dir) => {
       val e = events(s, dir)
         .filter(col("event_type").isin("view", "click"))
-        .select(round(col("value") * 100).cast("long").as("c"),
+        .select(lattice(col("value"), 100).as("c"),
           (col("event_type") === "view").cast("long").as("isA"))
       val g = e.groupBy("c").agg(sum(col("isA")).as("ca"),
         sum(lit(1L) - col("isA")).as("cb"))
@@ -732,8 +730,7 @@ object AggQ extends QueryModule {
     // exact until ONE final division. The standard eval for a binary
     // scorer, no sort of raw rows (aggregate per score value first).
     "m14_auc" -> ((s, dir) => {
-      val e = events(s, dir).select(
-        round(col("value") * 100).cast("long").as("score"),
+      val e = events(s, dir).select(lattice(col("value"), 100).as("score"),
         col("event_type").isin("purchase", "signup").cast("long").as("y"))
       val g = e.groupBy("score").agg(count(lit(1)).as("cnt"),
         sum(col("y")).as("pos"))
@@ -758,8 +755,7 @@ object AggQ extends QueryModule {
     // emitted rates are single divisions of exact operands — the
     // m14_auc portability class. One hash-agg exchange on the bin key.
     "m15_calibration" -> ((s, dir) => {
-      val e = events(s, dir).select(
-        round(col("value") * 100).cast("long").as("cents"),
+      val e = events(s, dir).select(lattice(col("value"), 100).as("cents"),
         col("event_type").isin("purchase", "signup").cast("long").as("y"))
       e.groupBy(expr("cents DIV 1000").as("bin"))
         .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
@@ -781,8 +777,7 @@ object AggQ extends QueryModule {
     // over the per-score aggregate (lattice-bounded), not raw rows —
     // same scale contract as m14_auc.
     "m16_gains" -> ((s, dir) => {
-      val e = events(s, dir).select(
-        round(col("value") * 100).cast("long").as("score"),
+      val e = events(s, dir).select(lattice(col("value"), 100).as("score"),
         col("event_type").isin("purchase", "signup").cast("long").as("y"))
       val g = e.groupBy("score").agg(count(lit(1)).as("cnt"),
         sum(col("y")).as("pos"))
@@ -850,7 +845,7 @@ object AggQ extends QueryModule {
     // aggregate and the tiny cuts frame broadcast back.
     "a37_winsor" -> ((s, dir) => {
       val b = lineitem(s, dir).select(col("l_returnflag").as("flag"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"))
+        lattice(col("l_extendedprice"), 100).as("cents"))
       val g = b.groupBy("flag", "cents").agg(count(lit(1)).as("cnt"))
       val wCum = Window.partitionBy("flag").orderBy("cents")
         .rowsBetween(Window.unboundedPreceding, 0)
@@ -879,7 +874,7 @@ object AggQ extends QueryModule {
     // region are broadcast.
     "a38_contribution" -> ((s, dir) => {
       val rev = orders(s, dir).select(col("o_custkey"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
+          lattice(col("o_totalprice"), 100).as("cents"))
         .join(customer(s, dir).select(col("c_custkey").as("o_custkey"),
           col("c_nationkey")), Seq("o_custkey"))
         .join(broadcast(nation(s, dir).select(
@@ -906,7 +901,7 @@ object AggQ extends QueryModule {
     // way the exact-quantile path does.
     "a39_pareto" -> ((s, dir) => {
       val rev = orders(s, dir).select(col("o_custkey"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
+          lattice(col("o_totalprice"), 100).as("cents"))
         .groupBy("o_custkey").agg(sum(col("cents")).as("cents"))
         .join(customer(s, dir).select(col("c_custkey").as("o_custkey"),
           col("c_nationkey")), Seq("o_custkey"))
@@ -940,7 +935,7 @@ object AggQ extends QueryModule {
     // correctly-rounded decimal→double casts.
     "a31_gini" -> ((s, dir) => {
       val b = lineitem(s, dir).select(col("l_returnflag").as("flag"),
-        round(col("l_extendedprice") * 100).cast("long").as("pc"))
+        lattice(col("l_extendedprice"), 100).as("pc"))
       val i = row_number()
         .over(Window.partitionBy("flag").orderBy("pc")).cast("long")
       val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
@@ -1022,7 +1017,7 @@ object AggQ extends QueryModule {
     "a35_ab" -> ((s, dir) => {
       val big = "decimal(38,0)"
       val g = events(s, dir)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", lattice(col("value"), 100))
         .withColumn("variant", col("user_id") % 2)
         .groupBy("event_type", "variant")
         .agg(count(lit(1)).cast(big).as("n"),
@@ -1065,8 +1060,7 @@ object AggQ extends QueryModule {
       // 46x wall at the 10x scale step. Stats are one broadcast row;
       // the formula is exact integer math mirrored in the oracle.
       val c = customer(s, dir).select(col("c_custkey"), col("c_name"),
-        col("c_nationkey"),
-        round(col("c_acctbal") * 100).cast("long").as("bal_cents"))
+        col("c_nationkey"), lattice(col("c_acctbal"), 100).as("bal_cents"))
       val stats = c.agg(min("bal_cents").as("mn"),
         (max("bal_cents") - min("bal_cents") + 1).as("rng"),
         greatest(lit(1L), (count(lit(1)) / 250).cast("long")).as("nb"))
@@ -1249,7 +1243,7 @@ object AggQ extends QueryModule {
         lineitem(s, dir), Seq("l_suppkey"), Seq(
           "qty" -> col("l_quantity").cast("long"),
           "price" -> floor(col("l_extendedprice")).cast("long"),
-          "disc" -> round(col("l_discount") * 100).cast("long")))
+          "disc" -> lattice(col("l_discount"), 100)))
     }))
 
   val oracle: Map[String, String] = Map(
@@ -1266,8 +1260,8 @@ object AggQ extends QueryModule {
         |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
 
     "a25_outliers" ->
-      """WITH o AS (SELECT event_id, event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH o AS (SELECT event_id, event_type,
+        |  ${latticeSql("value", 100)} AS cents FROM events),
         |st AS (SELECT event_type, count(*)::HUGEINT AS n,
         |  sum(cents)::HUGEINT AS s1, sum(cents * cents)::HUGEINT AS s2
         | FROM o GROUP BY event_type)
@@ -1278,8 +1272,8 @@ object AggQ extends QueryModule {
         |FROM o JOIN st USING (event_type)""".stripMargin,
 
     "a26_moments" ->
-      """WITH o AS (SELECT event_type,
-        |  CAST(round(value * 100) AS HUGEINT) AS c FROM events),
+      s"""WITH o AS (SELECT event_type,
+        |  ${latticeSql("value", 100, "HUGEINT")} AS c FROM events),
         |st AS (SELECT event_type, count(*)::BIGINT AS n,
         |  sum(c) AS sl1, sum(c * c) AS sl2,
         |  sum(c * c * c) AS sl3, sum(c * c * c * c) AS sl4
@@ -1301,8 +1295,8 @@ object AggQ extends QueryModule {
         |FROM m""".stripMargin,
 
     "a27_psi" ->
-      """WITH b AS (SELECT
-        |  least(CAST(round(value * 100) AS BIGINT) // 2500, 19) AS bin,
+      s"""WITH b AS (SELECT
+        |  least(${latticeSql("value", 100)} // 2500, 19) AS bin,
         |  event_id % 2 = 0 AS is_a FROM events),
         |agg AS (SELECT bin,
         |  sum(CASE WHEN is_a THEN 1 ELSE 0 END)::BIGINT AS na,
@@ -1317,8 +1311,8 @@ object AggQ extends QueryModule {
         |FROM agg CROSS JOIN tot""".stripMargin,
 
     "m11_pmi" ->
-      """WITH c AS (SELECT event_type,
-        |  least(CAST(round(value * 100) AS BIGINT) // 2500, 19) AS bin
+      s"""WITH c AS (SELECT event_type,
+        |  least(${latticeSql("value", 100)} // 2500, 19) AS bin
         | FROM events),
         |cells AS (SELECT event_type, bin, count(*)::BIGINT AS n_cell
         | FROM c GROUP BY event_type, bin)
@@ -1351,8 +1345,8 @@ object AggQ extends QueryModule {
         |FROM c""".stripMargin,
 
     "a3_transform" ->
-      """WITH t AS (SELECT event_id, user_id, value,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH t AS (SELECT event_id, user_id, value,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |s AS (SELECT event_id, value, c,
         |  count(c) OVER w AS n,
         |  CAST(sum(c) OVER w AS BIGINT) AS s1i,
@@ -1368,10 +1362,10 @@ object AggQ extends QueryModule {
         |FROM s""".stripMargin,
 
     "a4_impute" ->
-      """WITH t AS (SELECT event_id, user_id,
+      s"""WITH t AS (SELECT event_id, user_id,
         |  CASE WHEN event_type = 'error' THEN NULL ELSE value END AS masked,
         |  CASE WHEN event_type != 'error'
-        |    THEN CAST(round(value * 100) AS BIGINT) END AS cents
+        |    THEN ${latticeSql("value", 100)} END AS cents
         | FROM events)
         |SELECT event_id,
         | coalesce(masked,
@@ -1461,10 +1455,10 @@ object AggQ extends QueryModule {
     // The bloom pre-filter is transparent to semantics: the oracle is
     // the plain exact join.
     "j16_bloom" ->
-      """WITH u AS (SELECT o_orderkey, o_custkey FROM orders
+      s"""WITH u AS (SELECT o_orderkey, o_custkey FROM orders
         |           WHERE o_orderpriority = '1-URGENT')
         |SELECT o_custkey, count(*)::BIGINT AS n_lines,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_cents
+        |  CAST(sum(${latticeSql("l_quantity", 100)}) AS BIGINT) AS qty_cents
         |FROM lineitem JOIN u ON l_orderkey = o_orderkey
         |GROUP BY o_custkey""".stripMargin,
 
@@ -1487,8 +1481,8 @@ object AggQ extends QueryModule {
         |SELECT l_orderkey, 'big_only' AS tag FROM (SELECT * FROM big EXCEPT SELECT * FROM disc)""".stripMargin,
 
     "j8_range" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS cv FROM events)
+      s"""WITH e AS (SELECT user_id, event_id,
+        |  ${latticeSql("value", 100)} AS cv FROM events)
         |SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b,
         | b.cv - a.cv AS dcents
         |FROM e a JOIN e b
@@ -1578,7 +1572,7 @@ object AggQ extends QueryModule {
         |FROM customer JOIN sk USING (c_mktsegment, c_nationkey)""".stripMargin,
 
     "a35_ks" ->
-      """WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH e AS (SELECT ${latticeSql("value", 100)} AS c,
         |  CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS isA
         | FROM events WHERE event_type IN ('view', 'click')),
         |g AS (SELECT c, CAST(sum(isA) AS BIGINT) AS ca,
@@ -1598,7 +1592,7 @@ object AggQ extends QueryModule {
         |FROM a""".stripMargin,
 
     "m14_auc" ->
-      """WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS score,
+      s"""WITH e AS (SELECT ${latticeSql("value", 100)} AS score,
         |  CASE WHEN event_type IN ('purchase', 'signup') THEN 1 ELSE 0 END AS y
         | FROM events),
         |g AS (SELECT score, count(*)::BIGINT AS cnt,
@@ -1619,9 +1613,9 @@ object AggQ extends QueryModule {
         |FROM a""".stripMargin,
 
     "m13_confusion" ->
-      """WITH e AS (SELECT
+      s"""WITH e AS (SELECT
         |  CASE WHEN event_type IN ('purchase', 'signup') THEN 1 ELSE 0 END AS actual,
-        |  CASE WHEN CAST(round(value * 100) AS BIGINT) >= 5000
+        |  CASE WHEN ${latticeSql("value", 100)} >= 5000
         |    THEN 1 ELSE 0 END AS pred FROM events),
         |g AS (SELECT
         |  CAST(sum(CASE WHEN pred = 1 AND actual = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -1639,7 +1633,7 @@ object AggQ extends QueryModule {
         |FROM g""".stripMargin,
 
     "m15_calibration" ->
-      """WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS cents,
+      s"""WITH e AS (SELECT ${latticeSql("value", 100)} AS cents,
         |  CAST(CASE WHEN event_type IN ('purchase', 'signup')
         |    THEN 1 ELSE 0 END AS BIGINT) AS y FROM events)
         |SELECT cents // 1000 AS bin, count(*)::BIGINT AS n,
@@ -1650,7 +1644,7 @@ object AggQ extends QueryModule {
         |FROM e GROUP BY 1""".stripMargin,
 
     "m16_gains" ->
-      """WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS score,
+      s"""WITH e AS (SELECT ${latticeSql("value", 100)} AS score,
         |  CAST(CASE WHEN event_type IN ('purchase', 'signup')
         |    THEN 1 ELSE 0 END AS BIGINT) AS y FROM events),
         |g AS (SELECT score, count(*)::BIGINT AS cnt,
@@ -1686,8 +1680,8 @@ object AggQ extends QueryModule {
         |FROM events JOIN i USING (event_type)""".stripMargin,
 
     "a37_winsor" ->
-      """WITH b AS (SELECT l_returnflag AS flag,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
+      s"""WITH b AS (SELECT l_returnflag AS flag,
+        |  ${latticeSql("l_extendedprice", 100)} AS cents
         | FROM lineitem),
         |g AS (SELECT flag, cents, count(*)::BIGINT AS cnt
         | FROM b GROUP BY flag, cents),
@@ -1707,8 +1701,8 @@ object AggQ extends QueryModule {
         |FROM b JOIN cuts USING (flag) GROUP BY flag""".stripMargin,
 
     "a38_contribution" ->
-      """WITH g AS (SELECT r_name, n_name,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+      s"""WITH g AS (SELECT r_name, n_name,
+        |  CAST(sum(${latticeSql("o_totalprice", 100)}) AS BIGINT)
         |    AS cents
         | FROM orders
         | JOIN customer ON o_custkey = c_custkey
@@ -1722,8 +1716,8 @@ object AggQ extends QueryModule {
         |FROM g""".stripMargin,
 
     "a39_pareto" ->
-      """WITH rev AS (SELECT o_custkey,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+      s"""WITH rev AS (SELECT o_custkey,
+        |  CAST(sum(${latticeSql("o_totalprice", 100)}) AS BIGINT)
         |    AS cents
         | FROM orders GROUP BY o_custkey),
         |r AS (SELECT r_name, cents, o_custkey
@@ -1744,9 +1738,9 @@ object AggQ extends QueryModule {
         |FROM c GROUP BY r_name""".stripMargin,
 
     "a32_kappa" ->
-      """WITH e AS (SELECT
+      s"""WITH e AS (SELECT
         |  CASE WHEN event_type IN ('purchase', 'signup') THEN 1 ELSE 0 END AS a,
-        |  CASE WHEN CAST(round(value * 100) AS BIGINT) >= 5000
+        |  CASE WHEN ${latticeSql("value", 100)} >= 5000
         |    THEN 1 ELSE 0 END AS b FROM events),
         |g AS (SELECT count(*)::BIGINT AS n,
         |  CAST(sum(a) AS BIGINT) AS na, CAST(sum(b) AS BIGINT) AS nb,
@@ -1768,8 +1762,8 @@ object AggQ extends QueryModule {
     // division's two operands cast correctly-rounded to double on both
     // engines (the a26_moments parity).
     "a31_gini" ->
-      """WITH b AS (SELECT l_returnflag AS flag,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS pc FROM lineitem),
+      s"""WITH b AS (SELECT l_returnflag AS flag,
+        |  ${latticeSql("l_extendedprice", 100)} AS pc FROM lineitem),
         |r AS (SELECT flag, pc,
         |  row_number() OVER (PARTITION BY flag ORDER BY pc)::BIGINT AS i
         | FROM b),
@@ -1783,9 +1777,9 @@ object AggQ extends QueryModule {
         |FROM a""".stripMargin,
 
     "a29_wmedian" ->
-      """WITH b AS (SELECT l_returnflag AS flag,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS pc,
-        |  CAST(round(l_quantity * 100) AS BIGINT) AS wc FROM lineitem),
+      s"""WITH b AS (SELECT l_returnflag AS flag,
+        |  ${latticeSql("l_extendedprice", 100)} AS pc,
+        |  ${latticeSql("l_quantity", 100)} AS wc FROM lineitem),
         |g AS (SELECT flag, pc, CAST(sum(wc) AS BIGINT) AS w
         |      FROM b GROUP BY flag, pc),
         |c AS (SELECT flag, pc, w,
@@ -1815,8 +1809,8 @@ object AggQ extends QueryModule {
 
     // Identical cross-multiplied Welch decision in HUGEINT.
     "a35_ab" ->
-      """WITH e AS (SELECT event_type, user_id % 2 AS variant,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_type, user_id % 2 AS variant,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |g AS (SELECT event_type, variant, count(*)::HUGEINT AS n,
         |  sum(c)::HUGEINT AS s, sum(c * c)::HUGEINT AS q
         | FROM e GROUP BY event_type, variant),
@@ -1834,8 +1828,8 @@ object AggQ extends QueryModule {
         |FROM a JOIN b ON a.event_type = b.event_type""".stripMargin,
 
     "j19_entity_res" ->
-      """WITH c AS (SELECT c_custkey, c_name, c_nationkey,
-        |  CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents FROM customer),
+      s"""WITH c AS (SELECT c_custkey, c_name, c_nationkey,
+        |  ${latticeSql("c_acctbal", 100)} AS bal_cents FROM customer),
         |st AS (SELECT min(bal_cents) AS mn,
         |  (max(bal_cents) - min(bal_cents) + 1)::BIGINT AS rng,
         |  greatest(1, count(*) // 250)::BIGINT AS nb FROM c),

@@ -27,7 +27,7 @@ object Curation10Q extends QueryModule {
     "a50_mannwhitney" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_type"), (col("user_id") % 2 === 0).as("armA"),
-          round(col("value") * 100).cast("long").as("c"),
+          lattice(col("value"), 100).as("c"),
           col("event_id"))
       val wVal = Window.partitionBy("event_type").orderBy("c")
       val wTie = Window.partitionBy("event_type", "c")
@@ -93,7 +93,7 @@ object Curation10Q extends QueryModule {
     "w53_lttb" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("ts_us"), col("event_id"),
-          round(col("value") * 100).cast("long").as("y"))
+          lattice(col("value"), 100).as("y"))
       val wSeq = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
       val pts = e.withColumn("rn", row_number().over(wSeq).cast("long"))
         .withColumn("bkt", expr("(rn - 1) DIV 10"))
@@ -140,8 +140,8 @@ object Curation10Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a50_mannwhitney" ->
-      """WITH e AS (SELECT event_type, user_id % 2 = 0 AS arma,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_type, user_id % 2 = 0 AS arma,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |r AS (SELECT event_type, arma,
         |  rank() OVER (PARTITION BY event_type ORDER BY c)::BIGINT * 2
         |   + count(*) OVER (PARTITION BY event_type, c) - 1 AS dr
@@ -181,8 +181,8 @@ object Curation10Q extends QueryModule {
     },
 
     "w53_lttb" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS y FROM events),
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |  ${latticeSql("value", 100)} AS y FROM events),
         |p AS (SELECT user_id, event_id, y,
         |  row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |    ::BIGINT AS rn

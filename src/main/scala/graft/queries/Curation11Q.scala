@@ -63,7 +63,7 @@ object Curation11Q extends QueryModule {
       import org.apache.spark.ml.regression.GBTRegressor
       import org.apache.spark.ml.feature.VectorAssembler
       val e = graft.io.Tables.eventsUs(s, dir).select(
-        round(col("value") * 100).cast("long").as("c"),
+        lattice(col("value"), 100).as("c"),
         (col("event_id") % 7).cast("double").as("f_noise1"),
         (col("user_id") % 5).cast("double").as("f_noise2"))
         .withColumn("f_signal", (col("c") % 97).cast("double"))

@@ -41,7 +41,7 @@ object Curation12Q extends QueryModule {
       val base = Q.scratchDir("graft_zstd")
       lineitem(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents"))
+          lattice(col("l_extendedprice"), 100).as("cents"))
         .write.mode("overwrite").option("compression", "zstd").parquet(base)
       s.read.parquet(base)
         .groupBy(expr("l_orderkey % 10").as("bucket"))
@@ -58,8 +58,8 @@ object Curation12Q extends QueryModule {
         |FROM documents GROUP BY lang""".stripMargin,
 
     "s16_zstd" ->
-      """SELECT l_orderkey % 10 AS bucket, count(*) AS n,
-        | sum(CAST(round(l_extendedprice * 100) AS BIGINT))::BIGINT
+      s"""SELECT l_orderkey % 10 AS bucket, count(*) AS n,
+        | sum(${latticeSql("l_extendedprice", 100)})::BIGINT
         |   AS sum_cents
         |FROM lineitem GROUP BY 1""".stripMargin)
 }

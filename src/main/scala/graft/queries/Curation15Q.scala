@@ -29,8 +29,7 @@ object Curation15Q extends QueryModule {
       // first or Files.move throws FileAlreadyExists
       IoQ.deleteRecursively(new java.io.File(published))
       val src = orders(s, dir).select(col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
+        col("o_custkey"), lattice(col("o_totalprice"), 100).as("cents"))
       // the conservation check needs the SOURCE row count — observe it
       // on the staging write itself instead of re-scanning the source
       // in a second job (guide §1.2: one pass where one pass suffices)
@@ -113,7 +112,7 @@ object Curation15Q extends QueryModule {
         .partitionBy("user_id").orderBy("c").rangeBetween(-500L, 500L)
       graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .select(col("event_id"), col("user_id"), col("c"),
           count(lit(1)).over(w).as("n_near"),
           sum("c").over(w).as("sum_near"))
@@ -178,8 +177,8 @@ object Curation15Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "o20_wap" ->
-      """SELECT o_orderkey % 7 AS bucket, count(*) AS n,
-        | sum(CAST(round(o_totalprice * 100) AS BIGINT))::BIGINT
+      s"""SELECT o_orderkey % 7 AS bucket, count(*) AS n,
+        | sum(${latticeSql("o_totalprice", 100)})::BIGINT
         |   AS sum_cents
         |FROM orders GROUP BY 1""".stripMargin,
 
@@ -216,8 +215,8 @@ object Curation15Q extends QueryModule {
         |FROM m""".stripMargin,
 
     "w57_valuerange" ->
-      """WITH e AS (SELECT event_id, user_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events)
+      s"""WITH e AS (SELECT event_id, user_id,
+        |  ${latticeSql("value", 100)} AS c FROM events)
         |SELECT event_id, user_id, c,
         | count(*) OVER (PARTITION BY user_id ORDER BY c
         |   RANGE BETWEEN 500 PRECEDING AND 500 FOLLOWING)::BIGINT

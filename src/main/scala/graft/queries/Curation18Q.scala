@@ -76,7 +76,7 @@ object Curation18Q extends QueryModule {
     val wu = Window.partitionBy("user_id")
     val e = graft.io.Tables.eventsUs(s, dir)
       .select(col("user_id"), col("ts_us"), col("event_id"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       .withColumn("i", row_number().over(w).cast("long"))
       .withColumn("n_obs", count(lit(1)).over(wu))
     val a = e.select(col("user_id"), col("n_obs"),
@@ -130,7 +130,7 @@ object Curation18Q extends QueryModule {
     // the PairBudget doc for the divergence contract.
     "a58_theilsen" ->
       s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |r AS (SELECT user_id, c,
         |  row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |    ::BIGINT AS i

@@ -93,8 +93,7 @@ object Curation20Q extends QueryModule {
     // map-side; the shuffle carries 32 partial-agg rows.
     "a61_bootstrap" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
-        .select(col("event_id"),
-          round(col("value") * 100).cast("long").as("cents"))
+        .select(col("event_id"), lattice(col("value"), 100).as("cents"))
         .select(col("event_id"), col("cents"),
           explode(sequence(lit(0L), lit(31L))).as("b"))
       val u = (col("event_id") * lit(2654435761L) + col("b") * lit(104729L)) % 1000000L
@@ -172,8 +171,8 @@ object Curation20Q extends QueryModule {
          |FROM m WHERE event_type = 'purchase'""".stripMargin,
 
     "a61_bootstrap" ->
-      """WITH e AS (SELECT event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH e AS (SELECT event_id,
+        |  ${latticeSql("value", 100)} AS cents FROM events),
         |x AS (SELECT event_id, cents, b
         | FROM e CROSS JOIN (SELECT unnest(range(0, 32)) AS b)),
         |w AS (SELECT b, cents,

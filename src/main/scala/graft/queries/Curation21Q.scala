@@ -28,7 +28,7 @@ object Curation21Q extends QueryModule {
       val comps = embeddings(s, dir)
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
         .select(col("vec_id"), col("dim").cast("long").as("dim"),
-          round(col("x").cast("double") * 1000).cast("long").as("q"))
+          lattice(col("x").cast("double"), 1000).as("q"))
       val cents = comps.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("dim"), col("q").as("cq"))
       val cand = comps.filter(col("vec_id") >= 8)
@@ -128,11 +128,11 @@ object Curation21Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "m32_lloyd_step" ->
-      """WITH L AS (SELECT vec_id,
+      s"""WITH L AS (SELECT vec_id,
         |  unnest(list_transform(range(1, len(embedding) + 1),
         |    i -> {'d': i - 1, 'x': embedding[i]})) AS s FROM embeddings),
         |p AS (SELECT vec_id, s.d::BIGINT AS dim,
-        |  CAST(round(s.x::DOUBLE * 1000) AS BIGINT) AS q FROM L),
+        |  ${latticeSql("s.x::DOUBLE", 1000)} AS q FROM L),
         |c AS (SELECT vec_id AS cid, dim, q AS cq FROM p WHERE vec_id < 8),
         |d AS (SELECT p.vec_id, c.cid,
         |  sum((p.q - c.cq) * (p.q - c.cq))::BIGINT AS d2

@@ -27,7 +27,7 @@ object Curation23Q extends QueryModule {
         (col("user_id") % 2 === 0).cast("long").as("treated"),
         (col("ts_us") >= lit(1704067200000000L) + lit(15L) * DayUs)
           .cast("long").as("post"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       def cell(t: Int, p: Int, agg: String) = {
         val m = col("treated") === t && col("post") === p
         if (agg == "n") sum(when(m, 1L).otherwise(0L))
@@ -58,7 +58,7 @@ object Curation23Q extends QueryModule {
       val d = graft.io.Tables.eventsUs(s, dir)
         .groupBy(col("user_id"),
           expr("(ts_us - 1704067200000000) DIV 86400000000").as("day"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("c"))
+        .agg(sum(lattice(col("value"), 100)).as("c"))
       val s7 = d.select(col("user_id"), (col("day") + 7).as("day"),
         col("c").as("c7"))
       val s1 = d.select(col("user_id"), (col("day") + 1).as("day"),
@@ -87,7 +87,7 @@ object Curation23Q extends QueryModule {
       // DIV truncates toward zero while DuckDB's // floors — the
       // standard offset-positive-first rule (ORACLE_NOTES.md).
       customer(s, dir).select(col("c_nationkey"),
-          expr("(CAST(round(c_acctbal * 100) AS BIGINT) + 1000000) DIV 100000")
+          expr(s"(${latticeSql("c_acctbal", 100)} + 1000000) DIV 100000")
             .as("bal_bucket"),
           col("c_mktsegment"))
         .groupBy("c_nationkey", "bal_bucket")
@@ -105,7 +105,7 @@ object Curation23Q extends QueryModule {
          |  CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS treated,
          |  CASE WHEN epoch_us(ts) >= 1704067200000000 + 15 * $DayUs
          |    THEN 1 ELSE 0 END AS post,
-         |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+         |  ${latticeSql("value", 100)} AS c FROM events),
          |g AS (SELECT event_type,
          |  sum(CASE WHEN treated = 1 AND post = 0 THEN 1 ELSE 0 END)::BIGINT AS n_t_pre,
          |  sum(CASE WHEN treated = 1 AND post = 0 THEN c ELSE 0 END)::BIGINT AS s_t_pre,
@@ -124,9 +124,9 @@ object Curation23Q extends QueryModule {
          |FROM g""".stripMargin,
 
     "w61_seasonal_naive" ->
-      """WITH d AS (SELECT user_id,
+      s"""WITH d AS (SELECT user_id,
         |  (epoch_us(ts) - 1704067200000000) // 86400000000 AS day,
-        |  sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS c
+        |  sum(${latticeSql("value", 100)})::BIGINT AS c
         | FROM events GROUP BY 1, 2),
         |j AS (SELECT d.user_id, d.c, s7.c AS c7, s1.c AS c1
         | FROM d
@@ -140,8 +140,8 @@ object Curation23Q extends QueryModule {
         |FROM j GROUP BY user_id""".stripMargin,
 
     "a65_ldiv" ->
-      """SELECT c_nationkey,
-        | (CAST(round(c_acctbal * 100) AS BIGINT) + 1000000) // 100000
+      s"""SELECT c_nationkey,
+        | (${latticeSql("c_acctbal", 100)} + 1000000) // 100000
         |   AS bal_bucket,
         | count(*)::BIGINT AS n,
         | count(DISTINCT c_mktsegment)::BIGINT AS l_div,

@@ -75,7 +75,7 @@ object Curation24Q extends QueryModule {
     // cent-scale values).
     "a68_neyman" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir).select(col("event_type"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       e.groupBy("event_type").agg(
           count(lit(1)).as("n"), sum("c").as("s"),
           sum(col("c") * col("c")).as("ss"))
@@ -206,8 +206,8 @@ object Curation24Q extends QueryModule {
         |FROM pairs GROUP BY 1, 2""".stripMargin,
 
     "a68_neyman" ->
-      """WITH e AS (SELECT event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_type,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |g AS (SELECT event_type, count(*)::BIGINT AS n,
         |  sum(c)::BIGINT AS s, sum(c * c)::BIGINT AS ss
         | FROM e GROUP BY event_type)

@@ -27,7 +27,7 @@ object Curation25Q extends QueryModule {
     "w62_ewma_chart" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val stats = e.agg(count(lit(1)).as("n"), sum("c").as("sc"),
         sum(col("c") * col("c")).as("sc2"))
       val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
@@ -74,7 +74,7 @@ object Curation25Q extends QueryModule {
       val types = Seq("click", "error", "purchase", "signup", "view")
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val items = e.groupBy("user_id").agg(
         types.map(t => sum(when(col("event_type") === t, col("c"))
           .otherwise(0L)).as(s"x_$t")).head,
@@ -126,8 +126,8 @@ object Curation25Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "w62_ewma_chart" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |st AS (SELECT count(*)::BIGINT AS n, sum(c)::BIGINT AS sc,
         |  sum(c * c)::BIGINT AS sc2 FROM e),
         |m AS (SELECT event_id,
@@ -176,7 +176,7 @@ object Curation25Q extends QueryModule {
         s"($ssc::DOUBLE / n::DOUBLE - ($sc::DOUBLE / n::DOUBLE) * ($sc::DOUBLE / n::DOUBLE))"
       val sumVars = types.map(t => v(s"s_$t", s"ss_$t")).mkString(" + ")
       s"""WITH e AS (SELECT user_id, event_type,
-         |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+         |  ${latticeSql("value", 100)} AS c FROM events),
          |items AS (SELECT user_id,
          |  $itemCols
          | FROM e GROUP BY user_id),

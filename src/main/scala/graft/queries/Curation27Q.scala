@@ -76,7 +76,7 @@ object Curation27Q extends QueryModule {
     "w64_period_detect" -> ((s, dir) => {
       val hourly = graft.io.Tables.eventsUs(s, dir)
         .groupBy(expr("ts_us DIV 3600000000").as("h"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("c"))
+        .agg(sum(lattice(col("value"), 100)).as("c"))
       val lags = s.range(1, 49).select(col("id").as("lag"))
       val pairs = hourly.select(col("h"), col("c"))
         .crossJoin(broadcast(lags))
@@ -146,8 +146,8 @@ object Curation27Q extends QueryModule {
          |FROM r GROUP BY day""".stripMargin,
 
     "w64_period_detect" ->
-      """WITH h AS (SELECT epoch_us(ts) // 3600000000 AS h,
-        |  sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS c
+      s"""WITH h AS (SELECT epoch_us(ts) // 3600000000 AS h,
+        |  sum(${latticeSql("value", 100)})::BIGINT AS c
         | FROM events GROUP BY 1),
         |lags AS (SELECT unnest(range(1, 49)) AS lag),
         |p AS (SELECT lag, a.c AS c, b.c AS c2

@@ -24,7 +24,7 @@ object Curation28Q extends QueryModule {
       val versions = s.range(0, 5).select(col("id").as("tx_v"))
       val dim = part(s, dir).filter(col("p_partkey") < 100)
         .select(col("p_partkey"),
-          round(col("p_retailprice") * 100).cast("long").as("base_cents"))
+          lattice(col("p_retailprice"), 100).as("base_cents"))
         .crossJoin(broadcast(versions))
         .select(col("p_partkey"), col("tx_v"),
           (col("tx_v") * 365L).as("valid_from_day"),
@@ -77,10 +77,10 @@ object Curation28Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "j24_bitemporal" ->
-      """WITH v AS (SELECT unnest(range(0, 5)) AS tx_v),
+      s"""WITH v AS (SELECT unnest(range(0, 5)) AS tx_v),
         |dim AS (SELECT p_partkey, tx_v,
         |  tx_v * 365 AS valid_from_day,
-        |  CAST(round(p_retailprice * 100) AS BIGINT) + tx_v * 17
+        |  ${latticeSql("p_retailprice", 100)} + tx_v * 17
         |    AS price_cents
         | FROM part CROSS JOIN v WHERE p_partkey < 100),
         |vis AS (SELECT * FROM dim

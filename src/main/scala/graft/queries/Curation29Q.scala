@@ -138,7 +138,7 @@ object Curation29Q extends QueryModule {
       val rows = lineitem(s, dir).select(
         pmod(col("l_orderkey"), lit(256L)).as("bucket"),
         pmod(col("l_orderkey") * 2654435761L + col("l_linenumber") * 97L
-          + round(col("l_extendedprice") * 100).cast("long") * 40503L,
+          + lattice(col("l_extendedprice"), 100) * 40503L,
           lit(P)).as("rh"))
       val leaves = rows.groupBy("bucket")
         .agg(count(lit(1)).as("n_rows"), pmod(sum("rh"), lit(P)).as("digest"))
@@ -208,7 +208,7 @@ object Curation29Q extends QueryModule {
     "o26_merkle" ->
       s"""WITH r AS (SELECT l_orderkey % 256 AS bucket,
          |  (l_orderkey * 2654435761 + l_linenumber * 97
-         |   + CAST(round(l_extendedprice * 100) AS BIGINT) * 40503) % $P
+         |   + ${latticeSql("l_extendedprice", 100)} * 40503) % $P
          |    AS rh
          | FROM lineitem),
          |leaves AS (SELECT bucket, count(*)::BIGINT AS n_rows,

@@ -136,7 +136,7 @@ object Curation2Q extends QueryModule {
       val wg = Window.partitionBy("user_id")
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val ranked = e
         .withColumn("__n", count(lit(1)).over(wg))
         .withColumn("__rnc", row_number().over(wg.orderBy("c")))
@@ -168,7 +168,7 @@ object Curation2Q extends QueryModule {
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
         .select(col("vec_id"), col("dim").cast("long").as("dim"),
           expr("dim DIV 8").cast("long").as("sub"),
-          round(col("x").cast("double") * 1000).cast("long").as("q"))
+          lattice(col("x").cast("double"), 1000).as("q"))
       val cents = comps.filter(col("vec_id") < 16)
         .select(col("vec_id").as("code"), col("dim").as("cdim"),
           col("q").as("qc"))
@@ -268,8 +268,8 @@ object Curation2Q extends QueryModule {
          |SELECT rk::BIGINT AS rk, pair, cnt FROM r WHERE rk <= 20""".stripMargin,
 
     "m24_robust" ->
-      """WITH e AS (SELECT event_id, user_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_id, user_id,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |s AS (SELECT event_id, user_id, c,
         |  list_sort(list(c) OVER (PARTITION BY user_id)) AS l,
         |  count(*) OVER (PARTITION BY user_id) AS n FROM e),
@@ -282,11 +282,11 @@ object Curation2Q extends QueryModule {
         |FROM q""".stripMargin,
 
     "s_pq_topk" ->
-      """WITH L AS (SELECT vec_id,
+      s"""WITH L AS (SELECT vec_id,
         |  unnest(list_transform(range(1, len(embedding) + 1),
         |    i -> {'d': i - 1, 'x': embedding[i]})) AS s FROM embeddings),
         |p AS (SELECT vec_id, s.d::BIGINT AS dim, s.d::BIGINT // 8 AS sub,
-        |  CAST(round(s.x::DOUBLE * 1000) AS BIGINT) AS q FROM L),
+        |  ${latticeSql("s.x::DOUBLE", 1000)} AS q FROM L),
         |cents AS (SELECT vec_id AS code, dim AS cdim, q AS qc
         | FROM p WHERE vec_id < 16),
         |enc0 AS (SELECT c.vec_id, c.sub, k.code,

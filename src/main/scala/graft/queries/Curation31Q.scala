@@ -20,7 +20,7 @@ object Curation31Q extends QueryModule {
     * the v_mips_topk lattice: every pairwise dot/distance over these
     * is an exact BIGINT, so no float comparison decides anything. */
   private def milli(v: Column): Column =
-    transform(v, x => round(x.cast("double") * 1000).cast("long"))
+    transform(v, x => lattice(x.cast("double"), 1000))
 
   /** Exact BIGINT squared L2 distance between two milli-lattice
     * arrays (integer sums are associative — no fold-order pin

@@ -50,7 +50,7 @@ object Curation32Q extends QueryModule {
         .partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
       val tail = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("event_id"), col("ts_us"),
-          (round(col("value") * 100).cast("long") >= 10000L).cast("long")
+          (lattice(col("value"), 100) >= 10000L).cast("long")
             .as("o"))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") <= 16)
@@ -93,7 +93,7 @@ object Curation32Q extends QueryModule {
         .partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
       val tail = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("event_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") <= 8)
       val series = tail.groupBy("user_id")
@@ -254,7 +254,7 @@ object Curation32Q extends QueryModule {
 
     "w65_viterbi" ->
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         |  (CAST(round(value * 100) AS BIGINT) >= 10000)::BIGINT AS o,
+         |  (${latticeSql("value", 100)} >= 10000)::BIGINT AS o,
          |  row_number() OVER (PARTITION BY user_id
          |    ORDER BY ts DESC, event_id DESC) AS rn
          | FROM events),
@@ -279,7 +279,7 @@ object Curation32Q extends QueryModule {
 
     "w66_dtw" ->
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         |  CAST(round(value * 100) AS BIGINT) AS c,
+         |  ${latticeSql("value", 100)} AS c,
          |  row_number() OVER (PARTITION BY user_id
          |    ORDER BY ts DESC, event_id DESC) AS rn
          | FROM events),

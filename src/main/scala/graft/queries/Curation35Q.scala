@@ -178,10 +178,8 @@ object Curation35Q extends QueryModule {
 
   private[queries] def adaboostFit(s: SparkSession, dir: String): AdaFit = {
     val e = embeddings(s, dir).select(col("vec_id"),
-      round(col("embedding").getItem(0).cast("double") * 1000)
-        .cast("long").as("x0"),
-      round(col("embedding").getItem(1).cast("double") * 1000)
-        .cast("long").as("x1"),
+      lattice(col("embedding").getItem(0).cast("double"), 1000).as("x0"),
+      lattice(col("embedding").getItem(1).cast("double"), 1000).as("x1"),
       (pmod(col("label").cast("long"), lit(2L)) * 2L - 1L).as("y"))
       .cache()
     def pred(f: Int, t: Long, pol: Int): Column = {
@@ -232,8 +230,8 @@ object Curation35Q extends QueryModule {
       f <- 0 to 1; t <- Thr; pol <- 0 to 1
     } yield s"($f, $t, $pol)").mkString(", ")
     s"""e AS (SELECT vec_id,
-       |  CAST(round(embedding[1]::DOUBLE * 1000) AS BIGINT) AS x0,
-       |  CAST(round(embedding[2]::DOUBLE * 1000) AS BIGINT) AS x1,
+       |  ${latticeSql("embedding[1]::DOUBLE", 1000)} AS x0,
+       |  ${latticeSql("embedding[2]::DOUBLE", 1000)} AS x1,
        |  (label % 2) * 2 - 1 AS y FROM embeddings),
        |grid(f, thr, pol) AS (VALUES $gridVals),
        |n AS (SELECT count(*)::BIGINT AS n FROM e),

@@ -35,7 +35,7 @@ object Curation36Q extends QueryModule {
     "a76_cvm" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"),
-          round(col("value") * 100).cast("long").as("c"),
+          lattice(col("value"), 100).as("c"),
           (pmod(col("user_id"), lit(2L)) === 0L).cast("long").as("in_a"))
       // one pass: global rank r over (c, event_id); per-sample index
       // via cumsum of the sample indicator on the same order
@@ -253,8 +253,8 @@ object Curation36Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a76_cvm" ->
-      """WITH e AS (SELECT event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH e AS (SELECT event_id,
+        |  ${latticeSql("value", 100)} AS c,
         |  (user_id % 2 = 0)::BIGINT AS in_a FROM events),
         |r AS (SELECT in_a,
         |  row_number() OVER (ORDER BY c, event_id)::BIGINT AS r,

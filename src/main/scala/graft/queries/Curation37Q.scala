@@ -84,7 +84,7 @@ object Curation37Q extends QueryModule {
       val dec = "decimal(38,0)"
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"),
-          round(col("value") * 100).cast("long").as("c"),
+          lattice(col("value"), 100).as("c"),
           (col("event_type") === "click").cast("long").as("obs_a"))
       val aggs =
         Seq(sum(when(col("obs_a") === 1L, col("c")).otherwise(0L)).as("s_obs"),
@@ -126,7 +126,7 @@ object Curation37Q extends QueryModule {
       val li = lineitem(s, dir).select(
         (col("l_orderkey") * 8L + col("l_linenumber")).as("rid"),
         col("l_returnflag").as("v_flag"),
-        round(col("l_quantity") * 100).cast("long").cast("string")
+        lattice(col("l_quantity"), 100).cast("string")
           .as("v_qty"))
         .withColumn("bucket",
           ((col("rid") - pmod(col("rid"), lit(8192L))) / 8192L).cast("long"))
@@ -220,7 +220,7 @@ object Curation37Q extends QueryModule {
         s"  >= ${tNum("s_obs", "n_obs")} * (n_$p::HUGEINT * (n_all - n_$p))\n" +
         s"  THEN 1 ELSE 0 END").mkString(" + ")
       s"""WITH e AS (SELECT event_id,
-         |  CAST(round(value * 100) AS BIGINT) AS c,
+         |  ${latticeSql("value", 100)} AS c,
          |  (event_type = 'click')::BIGINT AS obs_a FROM events),
          |agg AS (SELECT
          |  sum(CASE WHEN obs_a = 1 THEN c ELSE 0 END)::BIGINT AS s_obs,
@@ -251,7 +251,7 @@ object Curation37Q extends QueryModule {
            |    $vExpr AS v FROM lineitem))
            |GROUP BY bucket""".stripMargin
       auditSql("l_returnflag", "returnflag") + "\nUNION ALL\n" +
-        auditSql("CAST(CAST(round(l_quantity * 100) AS BIGINT) AS VARCHAR)",
+        auditSql(s"CAST(${latticeSql("l_quantity", 100)} AS VARCHAR)",
           "quantity")
     },
 

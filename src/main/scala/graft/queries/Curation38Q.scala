@@ -114,7 +114,7 @@ object Curation38Q extends QueryModule {
     "a80_cohens_d" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir).select(col("event_type"),
         (pmod(col("user_id"), lit(2L)) === 0L).cast("long").as("ia"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       val g = e.groupBy("event_type").agg(
         sum("ia").as("na"),
         sum(col("ia") * col("c")).as("sa1"),
@@ -212,9 +212,9 @@ object Curation38Q extends QueryModule {
     },
 
     "a80_cohens_d" ->
-      """WITH e AS (SELECT event_type,
+      s"""WITH e AS (SELECT event_type,
         |  (user_id % 2 = 0)::BIGINT AS ia,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |g AS (SELECT event_type,
         |  sum(ia)::BIGINT AS na,
         |  sum(ia * c)::BIGINT AS sa1, sum(ia * c * c)::BIGINT AS sa2,

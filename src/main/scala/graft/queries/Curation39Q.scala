@@ -41,7 +41,7 @@ object Curation39Q extends QueryModule {
       val dec = "decimal(38,0)"
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_type"), col("event_id"),
-          round(col("value") * 100).cast("long").as("c"),
+          lattice(col("value"), 100).as("c"),
           (pmod(col("user_id"), lit(2L)) === 0L).cast("long").as("obs_a"))
       val aggs =
         Seq(sum(when(col("obs_a") === 1L, col("c")).otherwise(0L)).as("s_obs"),
@@ -103,7 +103,7 @@ object Curation39Q extends QueryModule {
           col("embedding").as("qemb"))
       // coarse: same-cluster candidates ranked by exact milli dot
       val comps = (x: Column) =>
-        transform(x, v => round(v.cast("double") * 1000).cast("long"))
+        transform(x, v => lattice(v.cast("double"), 1000))
       val cand = asg.join(broadcast(qs),
           col("centroid_id") === col("qcid") && col("vec_id") =!= col("qid"))
         .withColumn("dot6",
@@ -217,7 +217,7 @@ object Curation39Q extends QueryModule {
         s"  >= ${tNum("s_obs", "n_obs")} * (n_$p::HUGEINT * (n_all - n_$p))\n" +
         s"  THEN 1 ELSE 0 END").mkString(" + ")
       s"""WITH e AS (SELECT event_type, event_id,
-         |  CAST(round(value * 100) AS BIGINT) AS c,
+         |  ${latticeSql("value", 100)} AS c,
          |  (user_id % 2 = 0)::BIGINT AS obs_a FROM events),
          |agg AS (SELECT event_type,
          |  sum(CASE WHEN obs_a = 1 THEN c ELSE 0 END)::BIGINT AS s_obs,

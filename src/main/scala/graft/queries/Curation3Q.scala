@@ -64,7 +64,7 @@ object Curation3Q extends QueryModule {
     "a46_spearman" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val wSeq = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
       val wVal = Window.partitionBy("user_id").orderBy("c")
       val wTie = Window.partitionBy("user_id", "c")
@@ -97,7 +97,7 @@ object Curation3Q extends QueryModule {
     "o18_incr_agg" -> ((s, dir) => {
       val li = lineitem(s, dir).select(col("l_suppkey"),
         col("l_orderkey"), col("l_linenumber"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"))
+        lattice(col("l_extendedprice"), 100).as("cents"))
       val bAgg = li.filter(col("l_orderkey") % 10 =!= 0)
         .groupBy("l_suppkey")
         .agg(count(lit(1)).as("n_base"), sum("cents").as("s_base"))
@@ -126,7 +126,7 @@ object Curation3Q extends QueryModule {
     "w49_sax" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val wSeq = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
       val chunks = e
         .withColumn("chunk", ((row_number().over(wSeq) - 1) / 4).cast("long"))
@@ -179,8 +179,8 @@ object Curation3Q extends QueryModule {
         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
 
     "a46_spearman" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |r AS (SELECT user_id,
         |  row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |    ::BIGINT * 2 AS dx,
@@ -201,8 +201,8 @@ object Curation3Q extends QueryModule {
         |FROM g""".stripMargin,
 
     "o18_incr_agg" ->
-      """WITH li AS (SELECT l_suppkey, l_orderkey, l_linenumber,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
+      s"""WITH li AS (SELECT l_suppkey, l_orderkey, l_linenumber,
+        |  ${latticeSql("l_extendedprice", 100)} AS cents
         | FROM lineitem),
         |b AS (SELECT l_suppkey, count(*) AS n_base, sum(cents)::BIGINT AS s_base
         | FROM li WHERE l_orderkey % 10 != 0 GROUP BY 1),
@@ -220,8 +220,8 @@ object Curation3Q extends QueryModule {
         |FROM b FULL OUTER JOIN d USING (l_suppkey)""".stripMargin,
 
     "w49_sax" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |ch AS (SELECT user_id,
         |  (row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |    - 1) // 4 AS chunk, c

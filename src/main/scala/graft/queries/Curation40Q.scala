@@ -33,7 +33,7 @@ object Curation40Q extends QueryModule {
     "a82_meta_analysis" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir).select(col("event_type"),
         (pmod(col("user_id"), lit(2L)) === 0L).cast("long").as("ia"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       val g = e.groupBy("event_type").agg(
         sum("ia").as("na"),
         sum(col("ia") * col("c")).as("sa1"),
@@ -118,7 +118,7 @@ object Curation40Q extends QueryModule {
         .partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
       val tail = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("event_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") <= 32)
       val series = tail.groupBy("user_id")
@@ -213,9 +213,9 @@ object Curation40Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a82_meta_analysis" ->
-      """WITH e AS (SELECT event_type,
+      s"""WITH e AS (SELECT event_type,
         |  (user_id % 2 = 0)::BIGINT AS ia,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |g AS (SELECT event_type,
         |  sum(ia)::BIGINT AS na,
         |  sum(ia * c)::BIGINT AS sa1, sum(ia * c * c)::BIGINT AS sa2,
@@ -285,7 +285,7 @@ object Curation40Q extends QueryModule {
       val mx = (lx(0) + lx(1) + lx(2)) / 3.0
       val sxx = lx.map(x => (x - mx) * (x - mx)).sum
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         |  CAST(round(value * 100) AS BIGINT) AS c,
+         |  ${latticeSql("value", 100)} AS c,
          |  row_number() OVER (PARTITION BY user_id
          |    ORDER BY ts DESC, event_id DESC) AS rn
          | FROM events),

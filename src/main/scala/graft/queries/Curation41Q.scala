@@ -64,7 +64,7 @@ object Curation41Q extends QueryModule {
     "m42_replay_eval" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("event_type"),
-          (round(col("value") * 100).cast("long") >= 10000L).cast("long")
+          (lattice(col("value"), 100) >= 10000L).cast("long")
             .as("reward"))
       val arms = e.select("event_type").distinct()
         .orderBy("event_type").collect().map(_.getString(0)).toSeq
@@ -138,10 +138,10 @@ object Curation41Q extends QueryModule {
          |FROM r GROUP BY 1, 2""".stripMargin,
 
     "m42_replay_eval" ->
-      """WITH arms AS (SELECT list(DISTINCT event_type ORDER BY event_type)
+      s"""WITH arms AS (SELECT list(DISTINCT event_type ORDER BY event_type)
         |   AS a FROM events),
         |e AS (SELECT event_id, event_type,
-        |  (CAST(round(value * 100) AS BIGINT) >= 10000)::BIGINT AS reward,
+        |  (${latticeSql("value", 100)} >= 10000)::BIGINT AS reward,
         |  ((event_id % 720720) * 48271 + 7) % 10 AS d1,
         |  ((event_id % 720720) * 69621 + 11)
         |    % (SELECT len(a) FROM arms) AS d2

@@ -36,7 +36,7 @@ object Curation42Q extends QueryModule {
     // value shared by millions of rows would cube past BIGINT).
     "a84_kruskal_wallis" -> ((s, dir) => {
       val e = events(s, dir).select(col("event_type"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       val vc = e.groupBy("c").agg(count(lit(1)).as("m"))
       val cum = graft.operators.DistRank.cumsum(vc, col("c"),
         Seq(col("c")), Seq((col("m"), "clo")), inclusive = false)
@@ -157,7 +157,7 @@ object Curation42Q extends QueryModule {
     "a87_friedman" -> ((s, dir) => {
       val cell = events(s, dir)
         .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("user_id", "event_type")
         .agg(sum(col("c")).as("sc"), count(lit(1)).as("nc"))
       val kAll = cell.select(col("event_type")).distinct()
@@ -222,8 +222,8 @@ object Curation42Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a84_kruskal_wallis" ->
-      """WITH e AS (SELECT event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_type,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |vc AS (SELECT c, count(*)::BIGINT AS m FROM e GROUP BY c),
         |cum AS (SELECT c, m, coalesce(sum(m) OVER (ORDER BY c
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
@@ -307,8 +307,8 @@ object Curation42Q extends QueryModule {
         |FROM f""".stripMargin,
 
     "a87_friedman" ->
-      """WITH cell AS (SELECT user_id, event_type,
-        |  sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS sc,
+      s"""WITH cell AS (SELECT user_id, event_type,
+        |  sum(${latticeSql("value", 100)})::BIGINT AS sc,
         |  count(*)::BIGINT AS nc
         | FROM events GROUP BY user_id, event_type),
         |kk AS (SELECT count(DISTINCT event_type)::BIGINT AS k FROM cell),

@@ -31,8 +31,7 @@ object Curation43Q extends QueryModule {
     "a88_wasserstein" -> ((s, dir) => {
       val e = events(s, dir)
         .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
+        .select(col("event_type"), lattice(col("value"), 100).as("c"))
       val vc = e.groupBy("c").agg(
         sum(when(col("event_type") === "click", 1L).otherwise(0L))
           .as("m1"),
@@ -72,7 +71,7 @@ object Curation43Q extends QueryModule {
       import graft.operators.DistRank
       val e = graft.io.Tables.eventsUs(s, dir).select(
         col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       val cal = e.filter(pmod(col("event_id"), lit(2)) === 0)
       val tst = e.filter(pmod(col("event_id"), lit(2)) === 1)
       val pred = cal.groupBy("event_type")
@@ -128,7 +127,7 @@ object Curation43Q extends QueryModule {
       val w = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"),
           expr(s"ts_us DIV $WeekUs").as("wk"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("user_id", "wk").agg(sum("c").as("cw"))
       val a = w.select(col("user_id"), col("wk").as("wa"),
         col("cw").as("ca"))
@@ -170,8 +169,8 @@ object Curation43Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a88_wasserstein" ->
-      """WITH e AS (SELECT event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events
+      s"""WITH e AS (SELECT event_type,
+        |  ${latticeSql("value", 100)} AS c FROM events
         | WHERE event_type IN ('click', 'purchase')),
         |vc AS (SELECT c,
         |  sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT
@@ -195,8 +194,8 @@ object Curation43Q extends QueryModule {
         |FROM s, t""".stripMargin,
 
     "m43_conformal" ->
-      """WITH e AS (SELECT event_id, event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_id, event_type,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |cal AS (SELECT * FROM e WHERE event_id % 2 = 0),
         |tst AS (SELECT * FROM e WHERE event_id % 2 = 1),
         |pred AS (SELECT event_type, sum(c)::BIGINT AS sc,
@@ -220,8 +219,8 @@ object Curation43Q extends QueryModule {
         |GROUP BY t.event_type, nc, q_scaled""".stripMargin,
 
     "w67_mannkendall" ->
-      """WITH w AS (SELECT user_id, epoch_us(ts) // 604800000000 AS wk,
-        |  sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS cw
+      s"""WITH w AS (SELECT user_id, epoch_us(ts) // 604800000000 AS wk,
+        |  sum(${latticeSql("value", 100)})::BIGINT AS cw
         | FROM events GROUP BY user_id, wk),
         |st AS (SELECT a.user_id,
         |  sum(CASE WHEN b.cw > a.cw THEN 1 WHEN b.cw < a.cw THEN -1

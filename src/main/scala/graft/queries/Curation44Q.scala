@@ -84,7 +84,7 @@ object Curation44Q extends QueryModule {
       val base = Q.scratchDir("graft_bloom")
       orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
+          lattice(col("o_totalprice"), 100).as("cents"))
         .write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#o_custkey", "true")
         .option("parquet.bloom.filter.expected.ndv#o_custkey", "100000")
@@ -159,8 +159,8 @@ object Curation44Q extends QueryModule {
         | (SELECT DISTINCT i FROM dense) d""".stripMargin,
 
     "s19_parquet_bloom" ->
-      """SELECT count(*)::BIGINT AS n_orders,
-        | sum(CAST(round(o_totalprice * 100) AS BIGINT))::BIGINT
+      s"""SELECT count(*)::BIGINT AS n_orders,
+        | sum(${latticeSql("o_totalprice", 100)})::BIGINT
         |   AS sum_cents,
         | min(o_orderkey) AS min_orderkey
         |FROM orders WHERE o_custkey = 7""".stripMargin)

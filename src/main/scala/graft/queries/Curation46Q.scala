@@ -62,7 +62,7 @@ object Curation46Q extends QueryModule {
     "a93_hodges_lehmann" -> ((s, dir) => {
       val w = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), expr("ts_us DIV 604800000000").as("wk"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("user_id", "wk").agg(sum("c").as("cw"))
       val a = w.select(col("user_id"), col("wk").as("wa"),
         col("cw").as("ca"))
@@ -95,9 +95,9 @@ object Curation46Q extends QueryModule {
     // to the weighted 5×5 grid.
     "m44_qwk" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir).select(
-        least(expr("CAST(round(value * 100) AS BIGINT) DIV 2000"),
+        least(expr(s"${latticeSql("value", 100)} DIV 2000"),
           lit(4L)).as("ra"),
-        least(greatest((expr("CAST(round(value * 100) AS BIGINT)") +
+        least(greatest((lattice(col("value"), 100) +
           (pmod(col("event_id"), lit(7L)) - 3L) * 500L)
           .cast("long"), lit(0L)), lit(9999L)).as("cb"))
         .select(col("ra"), expr("cb DIV 2000").as("rb"))
@@ -144,8 +144,8 @@ object Curation46Q extends QueryModule {
         |FROM d ORDER BY dstat DESC, t LIMIT 1""".stripMargin,
 
     "a93_hodges_lehmann" ->
-      """WITH w AS (SELECT user_id, epoch_us(ts) // 604800000000 AS wk,
-        |  sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS cw
+      s"""WITH w AS (SELECT user_id, epoch_us(ts) // 604800000000 AS wk,
+        |  sum(${latticeSql("value", 100)})::BIGINT AS cw
         | FROM events GROUP BY user_id, wk),
         |walsh AS (SELECT a.user_id, (a.cw + b.cw)::BIGINT AS w2
         | FROM w a JOIN w b ON a.user_id = b.user_id AND a.wk <= b.wk),
@@ -163,9 +163,9 @@ object Curation46Q extends QueryModule {
         |FROM g JOIN nn USING (user_id)""".stripMargin,
 
     "m44_qwk" ->
-      """WITH e AS (SELECT
-        |  least(CAST(round(value * 100) AS BIGINT) // 2000, 4) AS ra,
-        |  least(greatest(CAST(round(value * 100) AS BIGINT) +
+      s"""WITH e AS (SELECT
+        |  least(${latticeSql("value", 100)} // 2000, 4) AS ra,
+        |  least(greatest(${latticeSql("value", 100)} +
         |    (event_id % 7 - 3) * 500, 0), 9999) // 2000 AS rb
         | FROM events),
         |o AS (SELECT ra, rb, count(*)::BIGINT AS obs FROM e

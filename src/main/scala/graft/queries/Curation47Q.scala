@@ -34,7 +34,7 @@ object Curation47Q extends QueryModule {
     "o32_skyline" -> ((s, dir) => {
       val pts = lineitem(s, dir).select(
         col("l_orderkey"), col("l_linenumber"),
-        round(col("l_extendedprice") * 100).cast("long").as("p"),
+        lattice(col("l_extendedprice"), 100).as("p"),
         col("l_quantity").cast("long").as("q"))
       val perP = pts.groupBy("p").agg(min("q").as("minq_same"))
       val cm = DistRank.cummin(perP, col("p"), Seq(col("p")),
@@ -58,7 +58,7 @@ object Curation47Q extends QueryModule {
       val tol = 200000L
       val ev = graft.io.Tables.eventsUs(s, dir)
         .select(expr("ts_us DIV 3600000000").as("h"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val hourly = ev.groupBy("h").agg(sum("c").as("y"))
       val idx = DistRank.rowNumber(hourly, col("h"), Seq(col("h")),
         "t", totalAs = Some("n"))
@@ -149,8 +149,8 @@ object Curation47Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "o32_skyline" ->
-      """WITH pts AS (SELECT l_orderkey, l_linenumber,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS p,
+      s"""WITH pts AS (SELECT l_orderkey, l_linenumber,
+        |  ${latticeSql("l_extendedprice", 100)} AS p,
         |  CAST(l_quantity AS BIGINT) AS q FROM lineitem),
         |perp AS (SELECT p, min(q)::BIGINT AS minq_same FROM pts
         | GROUP BY p),
@@ -165,8 +165,8 @@ object Curation47Q extends QueryModule {
         |WHERE NOT (minq_lt <= q OR minq_same < q)""".stripMargin,
 
     "m45_ransac" ->
-      """WITH ev AS (SELECT epoch_us(ts) // 3600000000 AS h,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH ev AS (SELECT epoch_us(ts) // 3600000000 AS h,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |hourly AS (SELECT h, sum(c)::BIGINT AS y FROM ev GROUP BY h),
         |idx AS (SELECT h, y,
         |  row_number() OVER (ORDER BY h)::BIGINT AS t FROM hourly),

@@ -93,7 +93,7 @@ object Curation48Q extends QueryModule {
     "s20_dynamic_overwrite" -> ((s, dir) => {
       val base = Q.scratchDir("graft_dynow")
       val src = orders(s, dir).select(col("o_orderkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"),
+        lattice(col("o_totalprice"), 100).as("cents"),
         pmod(col("o_orderkey"), lit(7L)).as("part"))
       src.write.mode("overwrite").partitionBy("part").parquet(base)
       src.filter(col("part") === 3L)
@@ -153,8 +153,8 @@ object Curation48Q extends QueryModule {
         | LEFT JOIN conf USING (component)""".stripMargin,
 
     "s20_dynamic_overwrite" ->
-      """SELECT o_orderkey % 7 AS part, count(*)::BIGINT AS n,
-        | sum(CAST(round(o_totalprice * 100) AS BIGINT) *
+      s"""SELECT o_orderkey % 7 AS part, count(*)::BIGINT AS n,
+        | sum(${latticeSql("o_totalprice", 100)} *
         |   CASE WHEN o_orderkey % 7 = 3 THEN 2 ELSE 1 END)::BIGINT
         |  AS sum_cents
         |FROM orders GROUP BY 1""".stripMargin)

@@ -68,11 +68,11 @@ object Curation49Q extends QueryModule {
     "a94_fleiss_kappa" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir).select(
         col("event_id"),
-        expr("least(CAST(round(value * 100) AS BIGINT) DIV 2000, 4)")
+        expr(s"least(${latticeSql("value", 100)} DIV 2000, 4)")
           .as("r1"),
-        expr("""least(greatest(CAST(round(value * 100) AS BIGINT) +
+        expr(s"""least(greatest(${latticeSql("value", 100)} +
           (event_id % 7 - 3) * 500, 0), 9999) DIV 2000""").as("r2"),
-        expr("""least(greatest(CAST(round(value * 100) AS BIGINT) +
+        expr(s"""least(greatest(${latticeSql("value", 100)} +
           (event_id % 5 - 2) * 700, 0), 9999) DIV 2000""").as("r3"))
       val long = e.select(col("event_id"),
         explode(array(col("r1"), col("r2"), col("r3"))).as("cat"))
@@ -121,11 +121,11 @@ object Curation49Q extends QueryModule {
         |  sum(conc2)::BIGINT AS conc2 FROM pairs)""".stripMargin,
 
     "a94_fleiss_kappa" ->
-      """WITH e AS (SELECT event_id,
-        |  least(CAST(round(value * 100) AS BIGINT) // 2000, 4) AS r1,
-        |  least(greatest(CAST(round(value * 100) AS BIGINT) +
+      s"""WITH e AS (SELECT event_id,
+        |  least(${latticeSql("value", 100)} // 2000, 4) AS r1,
+        |  least(greatest(${latticeSql("value", 100)} +
         |    (event_id % 7 - 3) * 500, 0), 9999) // 2000 AS r2,
-        |  least(greatest(CAST(round(value * 100) AS BIGINT) +
+        |  least(greatest(${latticeSql("value", 100)} +
         |    (event_id % 5 - 2) * 700, 0), 9999) // 2000 AS r3
         | FROM events),
         |lng AS (SELECT event_id, unnest([r1, r2, r3]) AS cat FROM e),

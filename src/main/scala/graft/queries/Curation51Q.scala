@@ -31,7 +31,7 @@ object Curation51Q extends QueryModule {
     // no window, scale-safe at any row count.
     "a96_grubbs" -> ((s, dir) => {
       val e = events(s, dir).select(col("event_type"), col("event_id"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       val g = e.groupBy("event_type").agg(
         count(lit(1)).as("n"), sum(col("c")).as("sc"),
         sum(col("c").cast("decimal(38,0)") * col("c")).as("scc"))
@@ -69,7 +69,7 @@ object Curation51Q extends QueryModule {
       val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("ts_us"), col("event_id"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .withColumn("d", col("c") - lag(col("c"), 1).over(w))
       e.groupBy("user_id").agg(
           count(lit(1)).as("n"), sum(col("c")).as("sc"),
@@ -88,8 +88,8 @@ object Curation51Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a96_grubbs" ->
-      """WITH e AS (SELECT event_type, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_type, event_id,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |g AS (SELECT event_type, count(*)::BIGINT AS n,
         |  sum(c)::BIGINT AS sc, sum(c::DECIMAL(38,0) * c) AS scc
         | FROM e GROUP BY 1),
@@ -111,8 +111,8 @@ object Curation51Q extends QueryModule {
         |WHERE g.n >= 3 AND num > 0""".stripMargin,
 
     "a97_dw" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |d AS (SELECT user_id, c,
         |  c - lag(c) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |    AS d

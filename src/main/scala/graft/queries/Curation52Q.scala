@@ -36,7 +36,7 @@ object Curation52Q extends QueryModule {
       val li = lineitem(s, dir).select(
         col("l_orderkey"), col("l_linenumber"),
         col("l_quantity").cast("long").as("x"),
-        round(col("l_extendedprice") * 100).cast("long").as("y"))
+        lattice(col("l_extendedprice"), 100).as("y"))
       val mom = li.agg(
         count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("y")).as("sy"),
@@ -115,9 +115,9 @@ object Curation52Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "m49_cooks" ->
-      """WITH li AS (SELECT l_orderkey, l_linenumber,
+      s"""WITH li AS (SELECT l_orderkey, l_linenumber,
         |  l_quantity::BIGINT AS x,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS y
+        |  ${latticeSql("l_extendedprice", 100)} AS y
         | FROM lineitem),
         |mom AS (SELECT count(*)::BIGINT AS n, sum(x)::BIGINT AS sx,
         |  sum(y)::BIGINT AS sy,

@@ -70,7 +70,7 @@ object Curation53Q extends QueryModule {
     // effect size. Plan: one partial-agg groupBy to 3 rows, one fold.
     "a98_anova_f" -> ((s, dir) => {
       val li = lineitem(s, dir).select(col("l_returnflag").as("g"),
-        round(col("l_extendedprice") * 100).cast("long").as("y"))
+        lattice(col("l_extendedprice"), 100).as("y"))
       val gs = li.groupBy("g").agg(
         count(lit(1)).as("n"), sum(col("y")).as("sv"),
         sum(col("y").cast("decimal(38,0)") * col("y")).as("qv"))
@@ -85,7 +85,7 @@ object Curation53Q extends QueryModule {
     // Brown-Forsythe statistic). med2 is a 3-row broadcast join.
     "a99_levene_bf" -> ((s, dir) => {
       val li = lineitem(s, dir).select(col("l_returnflag").as("g"),
-        round(col("l_extendedprice") * 100).cast("long").as("y"))
+        lattice(col("l_extendedprice"), 100).as("y"))
       // groupedMedianDoubled replaces the former groupBy(g, y) lattice
       // + per-flag windows (a row-scale shuffle of a 97%-distinct cent
       // lattice) with bucket metadata + a 2/p-bucket refinement — the
@@ -112,7 +112,7 @@ object Curation53Q extends QueryModule {
     // m2^1.5 = sqrt(m2)³ is bit-portable; pow() stays banned.
     "a100_jarque_bera" -> ((s, dir) => {
       val li = lineitem(s, dir).select(
-        round(col("l_extendedprice") * 100).cast("long").as("y"))
+        lattice(col("l_extendedprice"), 100).as("y"))
       val base = li.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
         .select(col("n"), expr("sy DIV n").as("mu0"),
           (col("sy") % col("n")).as("r"))
@@ -158,7 +158,7 @@ object Curation53Q extends QueryModule {
     // n reported is the tie-free count.
     "a101_mood_median" -> ((s, dir) => {
       val li = lineitem(s, dir).select(col("l_returnflag").as("g"),
-        round(col("l_extendedprice") * 100).cast("long").as("y"))
+        lattice(col("l_extendedprice"), 100).as("y"))
       // medianDoubled replaces the former groupBy(y)→cumsum→aggregate
       // chain (3 row-scale groupBy shuffles of a 97%-distinct cent
       // lattice, whose cache cost more than the recompute it saved)
@@ -220,7 +220,7 @@ object Curation53Q extends QueryModule {
 
     "a98_anova_f" ->
       s"""WITH li AS (SELECT l_returnflag AS g,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS y
+        |  ${latticeSql("l_extendedprice", 100)} AS y
         | FROM lineitem),
         |gs AS (SELECT g, count(*)::BIGINT AS n, sum(y)::BIGINT AS sv,
         |  sum(y::DECIMAL(38,0) * y) AS qv FROM li GROUP BY g),
@@ -232,7 +232,7 @@ object Curation53Q extends QueryModule {
 
     "a99_levene_bf" ->
       s"""WITH li AS (SELECT l_returnflag AS g,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS y
+        |  ${latticeSql("l_extendedprice", 100)} AS y
         | FROM lineitem),
         |vc AS (SELECT g, y AS c, count(*)::BIGINT AS m FROM li
         | GROUP BY g, y),
@@ -255,8 +255,8 @@ object Curation53Q extends QueryModule {
         |FROM res""".stripMargin,
 
     "a100_jarque_bera" ->
-      """WITH li AS (SELECT
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS y
+      s"""WITH li AS (SELECT
+        |  ${latticeSql("l_extendedprice", 100)} AS y
         | FROM lineitem),
         |base AS (SELECT count(*)::BIGINT AS n,
         |  sum(y)::BIGINT // count(*)::BIGINT AS mu0,
@@ -297,8 +297,8 @@ object Curation53Q extends QueryModule {
         |FROM jbq""".stripMargin,
 
     "a101_mood_median" ->
-      """WITH li AS (SELECT l_returnflag AS g,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS y
+      s"""WITH li AS (SELECT l_returnflag AS g,
+        |  ${latticeSql("l_extendedprice", 100)} AS y
         | FROM lineitem),
         |vc AS (SELECT y AS c, count(*)::BIGINT AS m FROM li GROUP BY y),
         |cum AS (SELECT c, sum(m) OVER (ORDER BY c

@@ -39,7 +39,7 @@ object Curation54Q extends QueryModule {
     val qarr = embeddings(s, dir)
       .select(col("vec_id"),
         transform(col("embedding"),
-          x => round(x.cast("double") * 1000).cast("long")).as("q"))
+          x => lattice(x.cast("double"), 1000)).as("q"))
       .cache()
     (qarr, graft.ml.ExactLloyd.centroidsLit(qarr, K, iters = 3))
   }
@@ -144,7 +144,7 @@ object Curation54Q extends QueryModule {
        |  unnest(list_transform(range(1, len(embedding) + 1),
        |    i -> {'d': i - 1, 'x': embedding[i]})) AS s FROM embeddings),
        |comps AS (SELECT vec_id, s.d::BIGINT AS dim,
-       |  CAST(round(s.x::DOUBLE * 1000) AS BIGINT) AS q FROM L),
+       |  ${latticeSql("s.x::DOUBLE", 1000)} AS q FROM L),
        |${graft.ml.ExactLloyd.sql(k = 8, iters = 3)}""".stripMargin
 
   val oracle: Map[String, String] = Map(

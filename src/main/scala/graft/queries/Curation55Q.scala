@@ -37,7 +37,7 @@ object Curation55Q extends QueryModule {
     "a102_chatterjee_xi" -> ((s, dir) => {
       val li = lineitem(s, dir).select(
         col("l_quantity").cast("long").as("x"),
-        round(col("l_extendedprice") * 100).cast("long").as("y"),
+        lattice(col("l_extendedprice"), 100).as("y"),
         col("l_orderkey").as("ok"), col("l_linenumber").as("ln"))
       val vc = li.groupBy(col("y").as("c")).agg(count(lit(1)).as("m"))
       // cum is VALUE-LATTICE grain (distinct cents — saturates ~10M
@@ -94,8 +94,7 @@ object Curation55Q extends QueryModule {
     // division.
     "a103_bartels_rvn" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir).select(
-        col("ts_us"), col("event_id"),
-        round(col("value") * 100).cast("long").as("c"))
+        col("ts_us"), col("event_id"), lattice(col("value"), 100).as("c"))
       val vc = e.groupBy("c").agg(count(lit(1)).as("m"))
       // mr is VALUE-LATTICE grain (bounded at any SF) — cache it,
       // broadcast it into the rank join (no row-scale shuffle), and
@@ -137,7 +136,7 @@ object Curation55Q extends QueryModule {
     // (tp_b/P)·(TPcum_b/cum_b) a pinned two-division product.
     "m53_pr_auc" -> ((s, dir) => {
       val e = events(s, dir).select(
-        expr("CAST(round(value * 100) AS BIGINT) DIV 1000").as("bin"),
+        expr(s"${latticeSql("value", 100)} DIV 1000").as("bin"),
         col("event_type").isin("purchase", "signup").cast("long").as("y"))
       val g = e.groupBy("bin").agg(count(lit(1)).as("cnt"),
         sum(col("y")).as("pos"))
@@ -161,8 +160,8 @@ object Curation55Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a102_chatterjee_xi" ->
-      """WITH li AS (SELECT l_quantity::BIGINT AS x,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS y,
+      s"""WITH li AS (SELECT l_quantity::BIGINT AS x,
+        |  ${latticeSql("l_extendedprice", 100)} AS y,
         |  l_orderkey AS ok, l_linenumber AS ln FROM lineitem),
         |vc AS (SELECT y AS c, count(*)::BIGINT AS m FROM li GROUP BY y),
         |cum AS (SELECT c,
@@ -184,8 +183,8 @@ object Curation55Q extends QueryModule {
         |FROM den, adj""".stripMargin,
 
     "a103_bartels_rvn" ->
-      """WITH e AS (SELECT epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT epoch_us(ts) AS ts_us, event_id,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |vc AS (SELECT c, count(*)::BIGINT AS m FROM e GROUP BY c),
         |mr AS (SELECT c,
         |  coalesce(sum(m) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED
@@ -206,8 +205,8 @@ object Curation55Q extends QueryModule {
         |FROM den, num""".stripMargin,
 
     "m53_pr_auc" ->
-      """WITH e AS (SELECT
-        |  CAST(round(value * 100) AS BIGINT) // 1000 AS bin,
+      s"""WITH e AS (SELECT
+        |  ${latticeSql("value", 100)} // 1000 AS bin,
         |  CASE WHEN event_type IN ('purchase', 'signup')
         |    THEN 1 ELSE 0 END::BIGINT AS y FROM events),
         |g AS (SELECT bin, count(*)::BIGINT AS cnt, sum(y)::BIGINT AS pos

@@ -63,7 +63,7 @@ object Curation56Q extends QueryModule {
     "a104_kuiper" -> ((s, dir) => {
       val e = events(s, dir)
         .filter(col("event_type").isin("view", "click"))
-        .select(round(col("value") * 100).cast("long").as("c"),
+        .select(lattice(col("value"), 100).as("c"),
           (col("event_type") === "view").cast("long").as("isA"))
       val g = e.groupBy("c").agg(sum(col("isA")).as("ca"),
         sum(lit(1L) - col("isA")).as("cb"))
@@ -91,7 +91,7 @@ object Curation56Q extends QueryModule {
     "w71_xbar_chart" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir).select(
         expr(s"ts_us DIV ${DayUs}L").as("day"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       val days = e.groupBy("day").agg(
         count(lit(1)).as("n"), sum(col("c")).as("s"))
       val tot = e.agg(count(lit(1)).as("nn"), sum(col("c")).as("ss"),
@@ -133,7 +133,7 @@ object Curation56Q extends QueryModule {
          |SELECT node, x FROM x$Iters ORDER BY node""".stripMargin,
 
     "a104_kuiper" ->
-      """WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH e AS (SELECT ${latticeSql("value", 100)} AS c,
         |  CASE WHEN event_type = 'view' THEN 1 ELSE 0 END::BIGINT
         |    AS isA
         | FROM events WHERE event_type IN ('view', 'click')),
@@ -154,8 +154,8 @@ object Curation56Q extends QueryModule {
         |FROM cum""".stripMargin,
 
     "w71_xbar_chart" ->
-      """WITH e AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT epoch_us(ts) // 86400000000 AS day,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |days AS (SELECT day, count(*)::BIGINT AS n, sum(c)::BIGINT AS s
         | FROM e GROUP BY day),
         |tot AS (SELECT count(*)::BIGINT AS nn, sum(c)::BIGINT AS ss,

@@ -42,7 +42,7 @@ object Curation57Q extends QueryModule {
     "a105_page_trend" -> ((s, dir) => {
       val cell = events(s, dir)
         .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("user_id", "event_type")
         .agg(sum(col("c")).as("sc"), count(lit(1)).as("nc"))
       val kAll = cell.select(col("event_type")).distinct()
@@ -131,8 +131,8 @@ object Curation57Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a105_page_trend" ->
-      """WITH cell AS (SELECT user_id, event_type,
-        |  sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS sc,
+      s"""WITH cell AS (SELECT user_id, event_type,
+        |  sum(${latticeSql("value", 100)})::BIGINT AS sc,
         |  count(*)::BIGINT AS nc
         | FROM events GROUP BY user_id, event_type),
         |kall AS (SELECT count(DISTINCT event_type)::BIGINT AS k

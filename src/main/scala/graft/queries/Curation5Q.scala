@@ -24,7 +24,7 @@ object Curation5Q extends QueryModule {
     "a48_cuped" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val bounds = e.agg(min("ts_us").as("lo"), max("ts_us").as("hi"))
       val users = e.crossJoin(broadcast(bounds))
         .withColumn("pre_part",
@@ -97,8 +97,8 @@ object Curation5Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a48_cuped" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |b AS (SELECT min(ts_us) AS lo, max(ts_us) AS hi FROM e),
         |u AS (SELECT user_id,
         |  sum(CASE WHEN ts_us * 2 < lo + hi THEN c ELSE 0 END)::BIGINT AS x,

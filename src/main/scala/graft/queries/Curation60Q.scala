@@ -95,7 +95,7 @@ object Curation60Q extends QueryModule {
       import graft.operators.DistRank
       val e = graft.io.Tables.eventsUs(s, dir)
       val g = e.groupBy("user_id").agg(
-        sum(round(col("value") * 100).cast("long")).as("cents"),
+        sum(lattice(col("value"), 100)).as("cents"),
         max((col("event_type") === "purchase").cast("long")).as("y"))
         .select(col("user_id"), col("cents"), col("y"),
           (pmod(col("user_id"), lit(2L)) === 0L).cast("long").as("t"))
@@ -167,8 +167,8 @@ object Curation60Q extends QueryModule {
          |FROM f""".stripMargin,
 
     "m54_qini" ->
-      """WITH g AS (SELECT user_id,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
+      s"""WITH g AS (SELECT user_id,
+        |  CAST(sum(${latticeSql("value", 100)}) AS BIGINT) AS cents,
         |  max((event_type = 'purchase')::BIGINT) AS y,
         |  (user_id % 2 = 0)::BIGINT AS t
         | FROM events GROUP BY user_id),

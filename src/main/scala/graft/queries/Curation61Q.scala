@@ -28,7 +28,7 @@ object Curation61Q extends QueryModule {
     "w73_rsi" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val e = graft.io.Tables.events(s, dir)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", lattice(col("value"), 100))
         .withColumn("d", col("c") - lag("c", 1).over(w))
         .filter(col("d").isNotNull)
       val entity = Seq(col("user_id"))
@@ -51,8 +51,7 @@ object Curation61Q extends QueryModule {
     // bit-identical to DuckDB's jaro_winkler_similarity; emitted r6.
     "j26_jw_entity" -> ((s, dir) => {
       val p = part(s, dir).select(col("p_partkey"), col("p_name"),
-        col("p_type"),
-        round(col("p_retailprice") * 100).cast("long").as("pc"))
+        col("p_type"), lattice(col("p_retailprice"), 100).as("pc"))
       val stats = p.agg(min("pc").as("mn"),
         (max("pc") - min("pc") + 1).as("rng"),
         greatest(lit(1L), (count(lit(1)) / 50).cast("long")).as("nb"))
@@ -92,7 +91,7 @@ object Curation61Q extends QueryModule {
     "o33_overlap_depth" -> ((s, dir) => {
       val zones = lineitem(s, dir)
         .select(expr("l_orderkey DIV 1000").as("zone"),
-          round(col("l_extendedprice") * 100).cast("long").as("c"))
+          lattice(col("l_extendedprice"), 100).as("c"))
         .groupBy("zone").agg(min("c").as("min_c"), max("c").as("max_c"))
       val ev = zones.select(col("zone"), col("min_c").as("pos"),
           lit(1L).as("delta"))
@@ -114,8 +113,8 @@ object Curation61Q extends QueryModule {
 
     "w73_rsi" ->
       s"""WITH d AS (SELECT event_id, user_id, ts,
-         |  CAST(round(value * 100) AS BIGINT) -
-         |  lag(CAST(round(value * 100) AS BIGINT), 1)
+         |  ${latticeSql("value", 100)} -
+         |  lag(${latticeSql("value", 100)}, 1)
          |    OVER (PARTITION BY user_id ORDER BY ts, event_id) AS d
          | FROM events),
          |f AS (SELECT event_id, user_id, ts, d FROM d WHERE d IS NOT NULL),
@@ -130,8 +129,8 @@ object Curation61Q extends QueryModule {
          |FROM r""".stripMargin,
 
     "j26_jw_entity" ->
-      """WITH p AS (SELECT p_partkey, p_name, p_type,
-        |  CAST(round(p_retailprice * 100) AS BIGINT) AS pc FROM part),
+      s"""WITH p AS (SELECT p_partkey, p_name, p_type,
+        |  ${latticeSql("p_retailprice", 100)} AS pc FROM part),
         |st AS (SELECT min(pc) AS mn, max(pc) - min(pc) + 1 AS rng,
         |  greatest(1, count(*) // 50) AS nb FROM p),
         |pb AS (SELECT p_partkey, p_name,
@@ -157,9 +156,9 @@ object Curation61Q extends QueryModule {
         |FROM pb JOIN kept USING (blk) JOIN dirty USING (blk)""".stripMargin,
 
     "o33_overlap_depth" ->
-      """WITH zones AS (SELECT l_orderkey // 1000 AS zone,
-        |  min(CAST(round(l_extendedprice * 100) AS BIGINT)) AS min_c,
-        |  max(CAST(round(l_extendedprice * 100) AS BIGINT)) AS max_c
+      s"""WITH zones AS (SELECT l_orderkey // 1000 AS zone,
+        |  min(${latticeSql("l_extendedprice", 100)}) AS min_c,
+        |  max(${latticeSql("l_extendedprice", 100)}) AS max_c
         | FROM lineitem GROUP BY 1),
         |ev AS (SELECT zone, min_c AS pos, 1::BIGINT AS delta FROM zones
         | UNION ALL

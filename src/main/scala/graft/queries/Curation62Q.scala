@@ -78,7 +78,7 @@ object Curation62Q extends QueryModule {
     "w74_pettitt" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("ts_us"), col("event_id"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val wRank = Window.partitionBy("user_id").orderBy("c")
       val wTies = Window.partitionBy("user_id", "c")
       val wTime = Window.partitionBy("user_id")
@@ -116,8 +116,7 @@ object Curation62Q extends QueryModule {
     // DECIMAL(38,0), ONE division per bin (the m12 contract: terms
     // out, caller sums). One hash-agg exchange.
     "m55_hosmer" -> ((s, dir) => {
-      val e = events(s, dir).select(
-        round(col("value") * 100).cast("long").as("cents"),
+      val e = events(s, dir).select(lattice(col("value"), 100).as("cents"),
         col("event_type").isin("purchase", "signup").cast("long").as("y"))
       val g = e.groupBy(expr("cents DIV 5000").as("bin"))
         .agg(count(lit(1)).as("n"), sum("y").as("obs"),
@@ -161,8 +160,8 @@ object Curation62Q extends QueryModule {
     },
 
     "w74_pettitt" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |d AS (SELECT user_id, ts_us, event_id,
         |  2 * rank() OVER (PARTITION BY user_id ORDER BY c)
         |    + count(*) OVER (PARTITION BY user_id, c) - 1 AS r2
@@ -189,7 +188,7 @@ object Curation62Q extends QueryModule {
         |FROM k""".stripMargin,
 
     "m55_hosmer" ->
-      """WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS cents,
+      s"""WITH e AS (SELECT ${latticeSql("value", 100)} AS cents,
         |  (event_type IN ('purchase', 'signup'))::BIGINT AS y
         | FROM events),
         |g AS (SELECT cents // 5000 AS bin, count(*)::BIGINT AS n,

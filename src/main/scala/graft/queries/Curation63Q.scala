@@ -76,7 +76,7 @@ object Curation63Q extends QueryModule {
         .orderBy(col("ts_us").desc, col("event_id").desc)
       val tail = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("ts_us"), col("event_id"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .withColumn("__rn", row_number().over(wDesc))
         .filter(col("__rn") <= 64)
       val g = tail.groupBy("user_id").agg(
@@ -149,8 +149,8 @@ object Curation63Q extends QueryModule {
     },
 
     "w75_kalman" ->
-      """WITH t AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH t AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |  ${latticeSql("value", 100)} AS c,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
         | FROM events),

@@ -145,8 +145,8 @@ object Curation64Q extends QueryModule {
          |FROM est CROSS JOIN ex""".stripMargin,
 
     "w76_stream_kalman" ->
-      """WITH t AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH t AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |g AS (SELECT user_id,
         |  list(struct_pack(ts_us := ts_us, event_id := event_id,
         |    z := c::DOUBLE) ORDER BY ts_us, event_id) AS xs

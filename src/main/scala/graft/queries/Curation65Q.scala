@@ -30,7 +30,7 @@ object Curation65Q extends QueryModule {
     "a112_brunner_munzel" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_type"), (col("user_id") % 2 === 0).as("armA"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val wVal = Window.partitionBy("event_type").orderBy("c")
       val wTie = Window.partitionBy("event_type", "c")
       val wValW = Window.partitionBy("event_type", "armA").orderBy("c")
@@ -103,8 +103,8 @@ object Curation65Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a112_brunner_munzel" ->
-      """WITH e AS (SELECT event_type, user_id % 2 = 0 AS arma,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_type, user_id % 2 = 0 AS arma,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |r AS (SELECT event_type, arma,
         |  rank() OVER (PARTITION BY event_type ORDER BY c)::BIGINT * 2
         |   + count(*) OVER (PARTITION BY event_type, c) - 1 AS dr,

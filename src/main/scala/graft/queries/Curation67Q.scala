@@ -27,7 +27,7 @@ object Curation67Q extends QueryModule {
     // caller sums (the m12 contract).
     "m57_woe_iv" -> ((s, dir) => {
       val e = events(s, dir).select(
-        expr("CAST(round(value * 100) AS BIGINT) DIV 5000").as("bin"),
+        expr(s"${latticeSql("value", 100)} DIV 5000").as("bin"),
         (col("event_type") === "purchase").cast("long").as("y"))
       val g = e.groupBy("bin").agg(
         (sum("y") + 1L).as("g1"),
@@ -55,7 +55,7 @@ object Curation67Q extends QueryModule {
     "a113_chow" -> ((s, dir) => {
       val daily = graft.io.Tables.eventsUs(s, dir)
         .select(expr("ts_us DIV 86400000000").as("day"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("day").agg(sum("c").as("cents"))
       val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
       val t = daily.crossJoin(broadcast(bounds))
@@ -113,8 +113,8 @@ object Curation67Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "m57_woe_iv" ->
-      """WITH e AS (SELECT
-        |  CAST(round(value * 100) AS BIGINT) // 5000 AS bin,
+      s"""WITH e AS (SELECT
+        |  ${latticeSql("value", 100)} // 5000 AS bin,
         |  (event_type = 'purchase')::BIGINT AS y FROM events),
         |g AS (SELECT bin, CAST(sum(y) + 1 AS BIGINT) AS g1,
         |  CAST(count(*) - sum(y) + 1 AS BIGINT) AS b1
@@ -137,7 +137,7 @@ object Curation67Q extends QueryModule {
            |    / (n$tag * sxx$tag - sx$tag * sx$tag)::DOUBLE)
            | / n$tag::DOUBLE)""".stripMargin
       s"""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         |  CAST(sum(${latticeSql("value", 100)}) AS BIGINT) AS cents
          | FROM events GROUP BY 1),
          |bd AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
          |t AS (SELECT day - d0 AS x, cents AS y, (d1 - d0) // 2 AS mid,

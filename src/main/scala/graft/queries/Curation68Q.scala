@@ -47,7 +47,7 @@ object Curation68Q extends QueryModule {
       val lat = events(s, dir)
         .select(col("event_type").as("tp"),
           (col("user_id") % 2 === 0).as("arma"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("tp", "c")
         .agg(sum(when(col("arma"), 1L).otherwise(0L)).as("ma"),
           sum(when(!col("arma"), 1L).otherwise(0L)).as("mb"))
@@ -133,7 +133,7 @@ object Curation68Q extends QueryModule {
       val lat = events(s, dir)
         .select(col("event_type").as("tp"),
           (col("user_id") % 2 === 0).as("arma"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("tp", "c")
         .agg(sum(when(col("arma"), 1L).otherwise(0L)).as("ma"),
           sum(when(!col("arma"), 1L).otherwise(0L)).as("mb"))
@@ -172,7 +172,7 @@ object Curation68Q extends QueryModule {
            |         * (na + nb - x.ba - x.bb))::VARCHAR)::DOUBLE)
            |  ELSE 0.0 END)), (a, b) -> a + b)""".stripMargin
       s"""WITH e AS (SELECT event_type AS tp, (user_id % 2 = 0) AS arma,
-         |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+         |  ${latticeSql("value", 100)} AS c FROM events),
          |lat AS (SELECT tp, c,
          |  CAST(sum(CASE WHEN arma THEN 1 ELSE 0 END) AS BIGINT) AS ma,
          |  CAST(sum(CASE WHEN NOT arma THEN 1 ELSE 0 END) AS BIGINT) AS mb
@@ -220,8 +220,8 @@ object Curation68Q extends QueryModule {
         |FROM p CROSS JOIN m CROSS JOIN mx CROSS JOIN my""".stripMargin,
 
     "a116_cliffs_delta" ->
-      """WITH e AS (SELECT event_type AS tp, (user_id % 2 = 0) AS arma,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_type AS tp, (user_id % 2 = 0) AS arma,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |lat AS (SELECT tp, c,
         |  CAST(sum(CASE WHEN arma THEN 1 ELSE 0 END) AS BIGINT) AS ma,
         |  CAST(sum(CASE WHEN NOT arma THEN 1 ELSE 0 END) AS BIGINT) AS mb

@@ -34,7 +34,7 @@ object Curation69Q extends QueryModule {
     // (not dollars) changes nothing.
     "a117_inequality" -> ((s, dir) => {
       val lat = events(s, dir)
-        .select(round(col("value") * 100).cast("long").as("c"))
+        .select(lattice(col("value"), 100).as("c"))
         .filter(col("c") >= 1L)
         .groupBy("c").agg(count(lit(1)).as("m"))
       val g = lat.agg(
@@ -73,7 +73,7 @@ object Curation69Q extends QueryModule {
       val lat = events(s, dir)
         .select(col("event_type").as("tp"),
           (col("user_id") % 2 === 0).as("arma"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("tp", "c")
         .agg(sum(when(col("arma"), 1L).otherwise(0L)).as("ma"),
           count(lit(1)).as("m"))
@@ -149,9 +149,9 @@ object Curation69Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "a117_inequality" ->
-      """WITH lat AS (SELECT CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH lat AS (SELECT ${latticeSql("value", 100)} AS c,
         |  count(*)::BIGINT AS m FROM events
-        | WHERE CAST(round(value * 100) AS BIGINT) >= 1 GROUP BY c),
+        | WHERE ${latticeSql("value", 100)} >= 1 GROUP BY c),
         |g AS (SELECT list(struct_pack(c := c, m := m) ORDER BY c) AS xs,
         |  CAST(sum(m) AS BIGINT) AS n, CAST(sum(m * c) AS BIGINT) AS x
         | FROM lat)
@@ -167,8 +167,8 @@ object Curation69Q extends QueryModule {
         |FROM g""".stripMargin,
 
     "a118_ansari_bradley" ->
-      """WITH e AS (SELECT event_type AS tp, (user_id % 2 = 0) AS arma,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_type AS tp, (user_id % 2 = 0) AS arma,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |lat AS (SELECT tp, c,
         |  CAST(sum(CASE WHEN arma THEN 1 ELSE 0 END) AS BIGINT) AS ma,
         |  count(*)::BIGINT AS m FROM e GROUP BY tp, c),

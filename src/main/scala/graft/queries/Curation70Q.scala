@@ -31,12 +31,12 @@ object Curation70Q extends QueryModule {
   private def daily(s: org.apache.spark.sql.SparkSession, dir: String) =
     graft.io.Tables.eventsUs(s, dir)
       .select(expr("ts_us DIV 86400000000").as("day"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       .groupBy("day").agg(sum("c").as("cents"))
 
   private val dailySql =
-    """SELECT epoch_us(ts) // 86400000000 AS day,
-      |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+    s"""SELECT epoch_us(ts) // 86400000000 AS day,
+      |  CAST(sum(${latticeSql("value", 100)}) AS BIGINT) AS cents
       | FROM events GROUP BY 1""".stripMargin
 
   /** Durbin-Levinson ladder to lag 5 over g0..g5 (double columns):

@@ -32,7 +32,7 @@ object Curation71Q extends QueryModule {
                         dir: String) = {
     val e = graft.io.Tables.eventsUs(s, dir)
       .select(col("ts_us"), col("event_id"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       .withColumn("day", expr("ts_us DIV 86400000000"))
     // the w51 pack: order key = epoch-second·2^10 + id mod 1024, then
     // ·2^21 + (c + 10^6) decodes first/last cents via min/max
@@ -47,14 +47,14 @@ object Curation71Q extends QueryModule {
   }
 
   private val dailyOhlcSql =
-    """SELECT ts_us // 86400000000 AS day, count(*) AS n,
+    s"""SELECT ts_us // 86400000000 AS day, count(*) AS n,
       |  min(c) AS low, max(c) AS high,
       |  min(((ts_us // 1000000) * 1024 + event_id % 1024) * 2097152
       |      + (c + 1000000)) % 2097152 - 1000000 AS open,
       |  max(((ts_us // 1000000) * 1024 + event_id % 1024) * 2097152
       |      + (c + 1000000)) % 2097152 - 1000000 AS close
       | FROM (SELECT epoch_us(ts) AS ts_us, event_id,
-      |   CAST(round(value * 100) AS BIGINT) AS c FROM events)
+      |   ${latticeSql("value", 100)} AS c FROM events)
       | GROUP BY 1""".stripMargin
 
   /** Granger tail: pinned chain over the double moment columns, as
@@ -100,7 +100,7 @@ object Curation71Q extends QueryModule {
       val wd = Window.orderBy("day")
       val d = graft.io.Tables.eventsUs(s, dir)
         .select(expr("ts_us DIV 86400000000").as("day"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("day").agg(sum("c").as("cents"),
           count(lit(1)).as("cnt"))
       val t = d.select(col("day"), col("cents").as("y"),
@@ -162,7 +162,7 @@ object Curation71Q extends QueryModule {
       val wu = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("ts_us"), col("event_id"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .withColumn("rn", row_number().over(wu).cast("long"))
       val cal = e.filter(col("rn") <= 8L)
         .groupBy("user_id").agg(count(lit(1)).as("n_cal"),
@@ -213,7 +213,7 @@ object Curation71Q extends QueryModule {
         s"(SELECT *, $e AS $n FROM $inner)"
       }
       s"""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+         |  CAST(sum(${latticeSql("value", 100)}) AS BIGINT)
          |    AS cents,
          |  count(*)::BIGINT AS cnt FROM events GROUP BY 1),
          |t AS (SELECT cents AS y,
@@ -259,8 +259,8 @@ object Curation71Q extends QueryModule {
          |FROM k""".stripMargin,
 
     "w84_page_hinkley" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |  ${latticeSql("value", 100)} AS c,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY epoch_us(ts), event_id) AS rn FROM events),
         |cal AS (SELECT user_id, count(*)::BIGINT AS n_cal,

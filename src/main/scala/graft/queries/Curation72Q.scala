@@ -103,8 +103,8 @@ object Curation72Q extends QueryModule {
       val dec = "decimal(38,0)"
       val f = lineitem(s, dir).select(
         col("l_quantity").cast("long").as("x1"),
-        round(col("l_discount") * 100).cast("long").as("x2"),
-        round(col("l_tax") * 100).cast("long").as("x3"))
+        lattice(col("l_discount"), 100).as("x2"),
+        lattice(col("l_tax"), 100).as("x3"))
       val aggs = Seq(count(lit(1)).as("n"),
         sum("x1").as("s1"), sum("x2").as("s2"), sum("x3").as("s3")) ++
         Seq((1, 1), (2, 2), (3, 3), (1, 2), (1, 3), (2, 3)).map {
@@ -137,7 +137,7 @@ object Curation72Q extends QueryModule {
       val dec = "decimal(38,0)"
       val e = graft.io.Tables.eventsUs(s, dir).select(
         col("event_id"),
-        round(col("value") * 100).cast("long").as("x"),
+        lattice(col("value"), 100).as("x"),
         expr("(ts_us DIV 3600000000) % 24").as("h"))
       val m = e.agg(count(lit(1)).as("n"),
         sum("x").as("sx"), sum("h").as("sh"),
@@ -217,8 +217,8 @@ object Curation72Q extends QueryModule {
         s"(SELECT *, $e AS $n FROM $inner)"
       }
       s"""WITH f AS (SELECT CAST(l_quantity AS BIGINT) AS x1,
-         |  CAST(round(l_discount * 100) AS BIGINT) AS x2,
-         |  CAST(round(l_tax * 100) AS BIGINT) AS x3 FROM lineitem),
+         |  ${latticeSql("l_discount", 100)} AS x2,
+         |  ${latticeSql("l_tax", 100)} AS x3 FROM lineitem),
          |m AS (SELECT count(*)::BIGINT AS n,
          |  CAST(sum(x1) AS BIGINT) AS s1, CAST(sum(x2) AS BIGINT) AS s2,
          |  CAST(sum(x3) AS BIGINT) AS s3,
@@ -239,8 +239,8 @@ object Curation72Q extends QueryModule {
     },
 
     "m60_mahalanobis" ->
-      """WITH e AS (SELECT event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS x,
+      s"""WITH e AS (SELECT event_id,
+        |  ${latticeSql("value", 100)} AS x,
         |  (epoch_us(ts) // 3600000000) % 24 AS h FROM events),
         |m AS (SELECT count(*)::BIGINT AS n,
         |  CAST(sum(x) AS BIGINT) AS sx, CAST(sum(h) AS BIGINT) AS sh,

@@ -40,7 +40,7 @@ object Curation73Q extends QueryModule {
     // caller (the ladder IS the deliverable, m39-style).
     "a120_boxcox" -> ((s, dir) => {
       val lat = events(s, dir)
-        .select(round(col("value") * 100).cast("long").as("c"))
+        .select(lattice(col("value"), 100).as("c"))
         .filter(col("c") >= 1L)
         .groupBy("c").agg(count(lit(1)).as("m"))
       val g = lat.agg(
@@ -218,9 +218,9 @@ object Curation73Q extends QueryModule {
            |  / n::DOUBLE) + ($lam - 1.0) * slog, 6) AS $name"""
           .stripMargin
       }
-      s"""WITH lat AS (SELECT CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH lat AS (SELECT ${latticeSql("value", 100)} AS c,
          |  count(*)::BIGINT AS m FROM events
-         | WHERE CAST(round(value * 100) AS BIGINT) >= 1 GROUP BY c),
+         | WHERE ${latticeSql("value", 100)} >= 1 GROUP BY c),
          |g AS (SELECT list(struct_pack(c := c, m := m) ORDER BY c) AS xs,
          |  CAST(sum(m) AS BIGINT) AS n FROM lat),
          |s AS (SELECT n, xs,

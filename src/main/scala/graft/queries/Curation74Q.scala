@@ -32,8 +32,7 @@ object Curation74Q extends QueryModule {
     // division.
     "j27_dl_entity" -> ((s, dir) => {
       val p = part(s, dir).select(col("p_partkey"), col("p_name"),
-        col("p_type"),
-        round(col("p_retailprice") * 100).cast("long").as("pc"))
+        col("p_type"), lattice(col("p_retailprice"), 100).as("pc"))
       val stats = p.agg(min("pc").as("mn"),
         (max("pc") - min("pc") + 1).as("rng"),
         greatest(lit(1L), (count(lit(1)) / 50).cast("long")).as("nb"))
@@ -155,8 +154,8 @@ object Curation74Q extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "j27_dl_entity" ->
-      """WITH p AS (SELECT p_partkey, p_name, p_type,
-        |  CAST(round(p_retailprice * 100) AS BIGINT) AS pc FROM part),
+      s"""WITH p AS (SELECT p_partkey, p_name, p_type,
+        |  ${latticeSql("p_retailprice", 100)} AS pc FROM part),
         |stats AS (SELECT min(pc) AS mn, max(pc) - min(pc) + 1 AS rng,
         |  greatest(1, (count(*) // 50)::BIGINT) AS nb FROM p),
         |pb AS (SELECT p_partkey, p_name, p_type,

@@ -86,9 +86,9 @@ object Curation75Q extends QueryModule {
       val feats = Seq("f_q", "f_d", "f_t", "f_p")
       val joint = lineitem(s, dir).select(
         expr("CAST(l_quantity AS BIGINT) DIV 10").as("f_q"),
-        round(col("l_discount") * 100).cast("long").as("f_d"),
-        round(col("l_tax") * 100).cast("long").as("f_t"),
-        expr("CAST(round(l_extendedprice * 100) AS BIGINT) DIV 1000000")
+        lattice(col("l_discount"), 100).as("f_d"),
+        lattice(col("l_tax"), 100).as("f_t"),
+        expr(s"${latticeSql("l_extendedprice", 100)} DIV 1000000")
           .as("f_p"),
         col("l_returnflag").as("y"))
         .groupBy("f_q", "f_d", "f_t", "f_p", "y")
@@ -210,9 +210,9 @@ object Curation75Q extends QueryModule {
       }
       s"""WITH joint AS MATERIALIZED (SELECT
          |  CAST(l_quantity AS BIGINT) // 10 AS f_q,
-         |  CAST(round(l_discount * 100) AS BIGINT) AS f_d,
-         |  CAST(round(l_tax * 100) AS BIGINT) AS f_t,
-         |  CAST(round(l_extendedprice * 100) AS BIGINT) // 1000000 AS f_p,
+         |  ${latticeSql("l_discount", 100)} AS f_d,
+         |  ${latticeSql("l_tax", 100)} AS f_t,
+         |  ${latticeSql("l_extendedprice", 100)} // 1000000 AS f_p,
          |  l_returnflag AS y, count(*)::BIGINT AS obs
          | FROM lineitem GROUP BY 1, 2, 3, 4, 5),
          |${entCtes.mkString(",\n")}

@@ -68,7 +68,7 @@ object Curation77Q extends QueryModule {
       val cells = graft.io.Tables.eventsUs(s, dir).select(
         col("event_type").as("tp"),
         pmod(expr("ts_us DIV 86400000000"), lit(7L)).as("dow"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
         .groupBy("tp", "dow").agg(sum("c").as("cents"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       require(cells.length <= 64,
@@ -109,7 +109,7 @@ object Curation77Q extends QueryModule {
       val w = org.apache.spark.sql.expressions.Window.orderBy("day")
       graft.io.Tables.eventsUs(s, dir)
         .select(expr("ts_us DIV 86400000000").as("day"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .groupBy("day").agg(sum("c").as("cents"))
         .withColumn("cum", sum("cents").over(w))
         .withColumn("runmax", max("cum").over(w))
@@ -145,9 +145,9 @@ object Curation77Q extends QueryModule {
         |FROM d CROSS JOIN mx WHERE d_scaled = mx""".stripMargin,
 
     "a122_median_polish" ->
-      """WITH RECURSIVE cells AS (SELECT event_type AS tp,
+      s"""WITH RECURSIVE cells AS (SELECT event_type AS tp,
         |  (epoch_us(ts) // 86400000000) % 7 AS dow,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+        |  CAST(sum(${latticeSql("value", 100)}) AS BIGINT)
         |    AS cents
         | FROM events GROUP BY 1, 2),
         |r1 AS (SELECT tp, dow, cents,
@@ -173,8 +173,8 @@ object Curation77Q extends QueryModule {
         |FROM c2""".stripMargin,
 
     "w86_drawdown" ->
-      """WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+      s"""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
+        |  CAST(sum(${latticeSql("value", 100)}) AS BIGINT)
         |    AS cents
         | FROM events GROUP BY 1),
         |c AS (SELECT day, cents,

@@ -26,7 +26,7 @@ object Curation7Q extends QueryModule {
       val hourUs = 3600L * 1000000L
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("user_id"), col("ts_us"), col("event_id"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .withColumn("hour", expr(s"ts_us DIV $hourUs"))
       // rank within hour is unknown pre-agg, so pack an order key and
       // the offset cent value into one BIGINT: ordKey = epoch-second
@@ -57,7 +57,7 @@ object Curation7Q extends QueryModule {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_type"),
           pmod(expr(s"ts_us DIV $dayUs"), lit(7L)).as("dow"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val cells = e.groupBy("event_type", "dow")
         .agg(count(lit(1)).as("nc"), sum("c").as("sc"))
       val types = cells.groupBy("event_type")
@@ -196,8 +196,8 @@ object Curation7Q extends QueryModule {
         |UNION ALL SELECT 'f_wlen', 0::BIGINT, 0::BIGINT""".stripMargin,
 
     "w51_ohlc" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |p AS (SELECT user_id, ts_us // 3600000000 AS hour, c,
         |  ((ts_us // 1000000) * 1024 + event_id % 1024) * 2097152
         |    + (c + 1000000) AS pk
@@ -209,9 +209,9 @@ object Curation7Q extends QueryModule {
         |FROM p GROUP BY user_id, hour""".stripMargin,
 
     "a49_seasonal_index" ->
-      """WITH e AS (SELECT event_type,
+      s"""WITH e AS (SELECT event_type,
         |  (epoch_us(ts) // 86400000000) % 7 AS dow,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |cells AS (SELECT event_type, dow, count(*) AS nc,
         |  sum(c)::BIGINT AS sc FROM e GROUP BY 1, 2),
         |types AS (SELECT event_type, sum(nc)::BIGINT AS nt,

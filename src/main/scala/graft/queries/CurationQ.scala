@@ -85,7 +85,7 @@ object CurationQ extends QueryModule {
     // (balance cents ≥ 0). IG itself = H(label) − Σ terms — left to
     // the caller, keeping every hashed value single-ln.
     "m20_infogain" -> ((s, dir) => {
-      val cents = round(col("c_acctbal") * 100).cast("long")
+      val cents = lattice(col("c_acctbal"), 100)
       val agg = customer(s, dir)
         .select(col("c_mktsegment").as("seg"), (cents >= 0).as("pos"))
         .groupBy("seg").agg(
@@ -165,7 +165,7 @@ object CurationQ extends QueryModule {
     "w44_rollmad" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("cents"))
+          lattice(col("value"), 100).as("cents"))
       val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
         .rowsBetween(-4, 0)
       // The window list is materialized ONCE as a column before any
@@ -234,7 +234,7 @@ object CurationQ extends QueryModule {
     // cent lattice; the scan/skip decision is pure integer interval
     // logic. One map-side-combinable groupBy.
     "o16_zonemap" -> ((s, dir) => {
-      val cents = round(col("l_extendedprice") * 100).cast("long")
+      val cents = lattice(col("l_extendedprice"), 100)
       val lo = lit(10000000L); val hi = lit(40000000L) // 100k..400k dollars-cents
       lineitem(s, dir)
         .select(expr("l_orderkey DIV 1000").as("zone"), cents.as("c"))
@@ -256,7 +256,7 @@ object CurationQ extends QueryModule {
         .select(col("label"), (col("vec_id") % 2 === 0).as("ha"),
           posexplode(col("embedding")).as(Seq("dim", "x")))
         .select(col("label"), col("ha"), col("dim"),
-          round(col("x").cast("double") * 1000).cast("long").as("q"))
+          lattice(col("x").cast("double"), 1000).as("q"))
       val byDim = comps.groupBy("label", "dim").agg(
         sum(when(col("ha"), col("q")).otherwise(0L)).as("sa"),
         sum(when(!col("ha"), col("q")).otherwise(0L)).as("sb"))
@@ -327,7 +327,7 @@ object CurationQ extends QueryModule {
     // WITHOUT itself, (S − x)/(n − 1) over exact integer sums. One
     // window exchange on the group key, no self-join.
     "m23_loo" -> ((s, dir) => {
-      val cents = round(col("value") * 100).cast("long")
+      val cents = lattice(col("value"), 100)
       val wg = Window.partitionBy("user_id", "event_type")
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -352,7 +352,7 @@ object CurationQ extends QueryModule {
         .rowsBetween(Window.unboundedPreceding, 0)
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("cents"))
+          lattice(col("value"), 100).as("cents"))
       // offset keeps the pack positive for any cents >= -10^6; the id
       // field is 24 bits (ids here are < 10^5; widen the shift before
       // ids reach 16.7M)
@@ -392,7 +392,7 @@ object CurationQ extends QueryModule {
       val comps = embeddings(s, dir)
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
         .select(col("vec_id"), col("dim"),
-          round(col("x").cast("double") * 1000).cast("long").as("q"))
+          lattice(col("x").cast("double"), 1000).as("q"))
       val queries = comps.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("dim"), col("q").as("qq"))
       val dots = comps.filter(col("vec_id") >= 5)
@@ -416,7 +416,7 @@ object CurationQ extends QueryModule {
     "a45_runs" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
       val wMed = Window.partitionBy("user_id")
       val wSeq = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
       // Rank-based type-1 lower median (row_number + conditional max
@@ -495,9 +495,9 @@ object CurationQ extends QueryModule {
          |FROM gs a JOIN gs b ON b.doc_id = a.doc_id + 1""".stripMargin,
 
     "m20_infogain" ->
-      """WITH agg AS (SELECT c_mktsegment AS seg,
+      s"""WITH agg AS (SELECT c_mktsegment AS seg,
         |  count(*) AS n_f,
-        |  sum(CASE WHEN CAST(round(c_acctbal * 100) AS BIGINT) >= 0
+        |  sum(CASE WHEN ${latticeSql("c_acctbal", 100)} >= 0
         |      THEN 1 ELSE 0 END)::BIGINT AS n_pos
         | FROM customer GROUP BY 1),
         |tot AS (SELECT sum(n_f)::BIGINT AS nn FROM agg)
@@ -546,8 +546,8 @@ object CurationQ extends QueryModule {
          |GROUP BY doc_id""".stripMargin,
 
     "w44_rollmad" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS cents FROM events),
         |t1 AS (SELECT event_id, user_id,
         |  list_sort(list(cents) OVER (PARTITION BY user_id
         |    ORDER BY ts_us, event_id
@@ -588,20 +588,20 @@ object CurationQ extends QueryModule {
         |FROM total, top""".stripMargin,
 
     "o16_zonemap" ->
-      """SELECT l_orderkey // 1000 AS zone, count(*) AS n,
-        | min(CAST(round(l_extendedprice * 100) AS BIGINT)) AS min_c,
-        | max(CAST(round(l_extendedprice * 100) AS BIGINT)) AS max_c,
-        | NOT (max(CAST(round(l_extendedprice * 100) AS BIGINT)) < 10000000
-        |   OR min(CAST(round(l_extendedprice * 100) AS BIGINT)) > 40000000)
+      s"""SELECT l_orderkey // 1000 AS zone, count(*) AS n,
+        | min(${latticeSql("l_extendedprice", 100)}) AS min_c,
+        | max(${latticeSql("l_extendedprice", 100)}) AS max_c,
+        | NOT (max(${latticeSql("l_extendedprice", 100)}) < 10000000
+        |   OR min(${latticeSql("l_extendedprice", 100)}) > 40000000)
         |   AS would_scan
         |FROM lineitem GROUP BY 1""".stripMargin,
 
     "v_centroid_drift" ->
-      """WITH L AS (SELECT vec_id, label,
+      s"""WITH L AS (SELECT vec_id, label,
         |  unnest(list_transform(range(1, len(embedding) + 1),
         |    i -> {'d': i - 1, 'x': embedding[i]})) AS s FROM embeddings),
         |p AS (SELECT label, vec_id % 2 = 0 AS ha, s.d::BIGINT AS dim,
-        |  CAST(round(s.x::DOUBLE * 1000) AS BIGINT) AS q FROM L),
+        |  ${latticeSql("s.x::DOUBLE", 1000)} AS q FROM L),
         |g AS (SELECT label, dim,
         |  sum(CASE WHEN ha THEN q ELSE 0 END)::BIGINT AS sa,
         |  sum(CASE WHEN NOT ha THEN q ELSE 0 END)::BIGINT AS sb
@@ -645,8 +645,8 @@ object CurationQ extends QueryModule {
     },
 
     "m23_loo" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events)
+      s"""WITH e AS (SELECT event_id, user_id, event_type,
+        |  ${latticeSql("value", 100)} AS c FROM events)
         |SELECT event_id, user_id, event_type,
         | count(*) OVER (PARTITION BY user_id, event_type) AS n_g,
         | CASE WHEN count(*) OVER (PARTITION BY user_id, event_type) > 1 THEN
@@ -656,8 +656,8 @@ object CurationQ extends QueryModule {
         |FROM e""".stripMargin,
 
     "w48_runmax_id" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS cents FROM events),
         |p AS (SELECT event_id, user_id,
         |  max((cents + 1000000) * 16777216 + event_id) OVER (
         |    PARTITION BY user_id ORDER BY ts_us, event_id
@@ -678,11 +678,11 @@ object CurationQ extends QueryModule {
     },
 
     "v_mips_topk" ->
-      """WITH L AS (SELECT vec_id,
+      s"""WITH L AS (SELECT vec_id,
         |  unnest(list_transform(range(1, len(embedding) + 1),
         |    i -> {'d': i - 1, 'x': embedding[i]})) AS s FROM embeddings),
         |p AS (SELECT vec_id, s.d::BIGINT AS dim,
-        |  CAST(round(s.x::DOUBLE * 1000) AS BIGINT) AS q FROM L),
+        |  ${latticeSql("s.x::DOUBLE", 1000)} AS q FROM L),
         |dots AS (SELECT qv.vec_id AS qid, cv.vec_id AS vec_id,
         |  sum(cv.q * qv.q)::BIGINT AS dot6
         | FROM p cv JOIN p qv ON qv.dim = cv.dim
@@ -696,8 +696,8 @@ object CurationQ extends QueryModule {
         |FROM r WHERE rk <= 5""".stripMargin,
 
     "a45_runs" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |m AS (SELECT *, (list_sort(list(c) OVER (PARTITION BY user_id)))
         |  [(count(*) OVER (PARTITION BY user_id) + 1) // 2] AS med FROM e),
         |k AS (SELECT *, (CASE WHEN c > med THEN 1 ELSE 0 END)::BIGINT

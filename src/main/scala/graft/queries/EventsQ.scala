@@ -43,7 +43,7 @@ object EventsQ extends QueryModule {
         .when(col("event_type") === "signup", 3L)
         .otherwise(4L)
       eventsUs(s, dir)
-        .withColumn("cents", round(col("value") * 100).cast("long"))
+        .withColumn("cents", lattice(col("value"), 100))
         // rn materializes BEFORE the max frame (window functions don't
         // nest); both windows share one exchange+sort on the same spec.
         .withColumn("rn", row_number().over(ww).cast("long"))
@@ -67,7 +67,7 @@ object EventsQ extends QueryModule {
       // Gap-based sessionization (gap > 10 min ⇒ new session) +
       // per-session summary; one shuffle on user_id end-to-end.
       val e = eventsUs(s, dir)
-        .withColumn("cents", round(col("value") * 100).cast("long"))
+        .withColumn("cents", lattice(col("value"), 100))
       Sessions.sessionize(e, col("user_id"), col("ts_us"),
           col("event_id"), GapUs)
         .groupBy(col("user_id"), col("session_idx"))
@@ -97,7 +97,7 @@ object EventsQ extends QueryModule {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       val e = eventsUs(s, dir)
-        .withColumn("cents", round(col("value") * 100).cast("long"))
+        .withColumn("cents", lattice(col("value"), 100))
         .withColumn("dt_us", lead(col("ts_us"), 1).over(w) - col("ts_us"))
         .where(col("dt_us").isNotNull) // last observation has no duration
       e.groupBy("user_id")
@@ -142,7 +142,7 @@ object EventsQ extends QueryModule {
     // length is |cents| % 120 + 30 seconds so sf growth densifies
     // overlaps instead of widening them.
     "j17_intervals" -> ((s, dir) => {
-      val len = (abs(round(col("value") * 100).cast("long")) % 120 + 30) *
+      val len = (abs(lattice(col("value"), 100)) % 120 + 30) *
         lit(1000000L)
       val e = eventsUs(s, dir).select(col("user_id"), col("event_id"),
         col("ts_us").as("start_us"), (col("ts_us") + len).as("end_us"))
@@ -181,9 +181,9 @@ object EventsQ extends QueryModule {
     // Same packed-BIGINT argmax recursion-free attribution; rn·8+code
     // stays far under 2^53 so the packing is exact in both engines.
     "j20_attribution" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
+      s"""WITH e AS (SELECT event_id, user_id, event_type,
         |  epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+        |  ${latticeSql("value", 100)} AS cents FROM events),
         |r AS (SELECT *,
         |  row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |    ::BIGINT AS rn FROM e),
@@ -204,8 +204,8 @@ object EventsQ extends QueryModule {
         |GROUP BY 1""".stripMargin,
 
     "w20_sessionize" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS cents FROM events),
         |g AS (SELECT *, CASE WHEN ts_us - lag(ts_us) OVER
         |   (PARTITION BY user_id ORDER BY ts_us, event_id) > 600000000
         |   OR lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
@@ -230,8 +230,8 @@ object EventsQ extends QueryModule {
         |ORDER BY cohort, "offset"""".stripMargin,
 
     "a22_twap" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS cents FROM events),
         |d AS (SELECT user_id, cents,
         |  lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |    - ts_us AS dt_us FROM e),
@@ -294,8 +294,8 @@ object EventsQ extends QueryModule {
         |  (2, 'purchase')) AS s(stage_idx, stage)""".stripMargin,
 
     "j17_intervals" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS start_us,
-        |  epoch_us(ts) + (abs(CAST(round(value * 100) AS BIGINT)) % 120 + 30)
+      s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS start_us,
+        |  epoch_us(ts) + (abs(${latticeSql("value", 100)}) % 120 + 30)
         |    * 1000000 AS end_us FROM events),
         |g AS (SELECT *, max(end_us) OVER (PARTITION BY user_id
         |   ORDER BY start_us, event_id

@@ -57,8 +57,8 @@ object FeatureStageQ extends QueryModule {
     // so round(s*1000) is exact; dir sits on a 0.05-degree lattice so
     // dir_change (a difference of lattice points, ±360) is exact in
     // centi-degrees. All rolling/group stats below ride these longs.
-    val c = round(col("s") * 1000).cast("long")
-    val cd = round(col("dir_change") * 100).cast("long")
+    val c = lattice(col("s"), 1000)
+    val cd = lattice(col("dir_change"), 100)
     val n = count(c).over(wSide)
     val s1 = sum(c).over(wSide).cast("double")
     val s2 = sum(c * c).over(wSide).cast("double")
@@ -132,14 +132,14 @@ object FeatureStageQ extends QueryModule {
     s"""WITH ${TrackingQ.FramesSql},
        |b AS (SELECT *,
        |  dir - lag(dir, 1) OVER w AS raw_dc,
-       |  CAST(round(s * 1000) AS BIGINT) AS c
+       |  ${latticeSql("s", 1000)} AS c
        | FROM frames
        | WINDOW w AS (PARTITION BY game_id, play_id, nfl_id ORDER BY frame_id)),
        |d AS (SELECT *,
        |  CASE WHEN abs(raw_dc) >= 180.0 THEN raw_dc - 360.0 * sign(raw_dc)
        |       ELSE raw_dc END AS dir_change
        | FROM b),
-       |e AS (SELECT *, CAST(round(dir_change * 100) AS BIGINT) AS cd FROM d)
+       |e AS (SELECT *, ${latticeSql("dir_change", 100)} AS cd FROM d)
        |SELECT game_id, play_id, nfl_id, frame_id,
        | round(s * sin(radians(dir)), 6) AS vx,
        | round(s * cos(radians(dir)), 6) AS vy,

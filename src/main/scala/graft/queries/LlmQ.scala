@@ -734,7 +734,7 @@ object LlmQ extends QueryModule {
       val qarr = embeddings(s, dir)
         .select(col("vec_id"),
           transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")).as("q"))
+            x => lattice(x.cast("double"), 1000)).as("q"))
         .cache()
       val cents = graft.ml.ExactLloyd.centroidsLit(qarr, 8, iters = 3)
       qarr.select(graft.ml.ExactLloyd.argminLit(col("q"), cents)("cid")
@@ -1427,7 +1427,7 @@ object LlmQ extends QueryModule {
          |  unnest(list_transform(range(1, len(embedding) + 1),
          |    i -> {'d': i - 1, 'x': embedding[i]})) AS s FROM embeddings),
          |comps AS (SELECT vec_id, s.d::BIGINT AS dim,
-         |  CAST(round(s.x::DOUBLE * 1000) AS BIGINT) AS q FROM L),
+         |  ${latticeSql("s.x::DOUBLE", 1000)} AS q FROM L),
          |${graft.ml.ExactLloyd.sql(k = 8, iters = 3)}
          |SELECT cid AS centroid_id, count(*)::BIGINT AS n_vecs
          |FROM a4 GROUP BY cid""".stripMargin,

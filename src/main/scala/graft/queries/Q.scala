@@ -37,6 +37,14 @@ object Q {
   def r6(c: Column): Column = round(c, 6)
   def r2(c: Column): Column = round(c, 2)
 
+  /** ORACLE_NOTES rule 1: `c` on its exact-integer lattice, the long
+    * round(c · scale) for a k-decimal value and scale = 10^k, so later
+    * sums are exact in both engines. [[latticeSql]] is the oracle's same
+    * lift of SQL `x` (`as` = HUGEINT where BIGINT products overflow). */
+  def lattice(c: Column, scale: Int): Column = round(c * scale).cast("long")
+  def latticeSql(x: String, scale: Int, as: String = "BIGINT"): String =
+    s"CAST(round($x * $scale) AS $as)"
+
   /** Pinned left fold over a sorted collected struct list: a fixed
     * association order, so Spark and the oracle sum identically. */
   def fold(xs: Column)(f: (Column, Column) => Column): Column =

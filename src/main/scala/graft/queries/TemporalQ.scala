@@ -55,7 +55,7 @@ object TemporalQ extends QueryModule {
     "w26_ffill" -> ((s, dir) => {
       val ww = w(s)
       val gap = when(col("event_id") % 7 === 0, lit(null).cast("long"))
-        .otherwise(round(col("value") * 100).cast("long"))
+        .otherwise(lattice(col("value"), 100))
       events(s, dir).withColumn("cents_gap", gap).select(
         col("event_id"), col("user_id"), col("cents_gap"),
         Temporal.ffill(col("cents_gap"), ww).as("cents_ffill"),
@@ -73,7 +73,7 @@ object TemporalQ extends QueryModule {
     // h = 30000 flags the top ~1% excursions (calibrated on the
     // driver tables).
     "w27_cusum" -> ((s, dir) => {
-      val cents = round(col("value") * 100).cast("long")
+      val cents = lattice(col("value"), 100)
       events(s, dir)
         .withColumn("cents", cents)
         .select(
@@ -118,7 +118,7 @@ object TemporalQ extends QueryModule {
     "a34_decompose" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir)
         .select(col("event_id"), col("user_id"), col("ts_us"),
-          round(col("value") * 100).cast("long").as("c"))
+          lattice(col("value"), 100).as("c"))
         .withColumn("phase", expr("(ts_us DIV 3600000000) % 24"))
       val wk = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
         .rowsBetween(-12, 12)
@@ -182,7 +182,7 @@ object TemporalQ extends QueryModule {
     "a33_autocorr" -> ((s, dir) => {
       val ww = w(s)
       val b = events(s, dir)
-        .withColumn("a", round(col("value") * 100).cast("long"))
+        .withColumn("a", lattice(col("value"), 100))
         .withColumn("bl", Temporal.lagK(col("a"), 3, ww))
         .filter(col("bl").isNotNull)
       val g = b.groupBy("user_id").agg(count(lit(1)).as("n"),
@@ -209,7 +209,7 @@ object TemporalQ extends QueryModule {
       val wk = Window.partitionBy("user_id").orderBy("ts", "event_id")
         .rowsBetween(-15, 0)
       val b = events(s, dir).select(col("event_id"), col("user_id"),
-        col("ts"), round(col("value") * 100).cast("long").as("c"))
+        col("ts"), lattice(col("value"), 100).as("c"))
       val n = count(col("c")).over(wk)
       val s1 = sum(col("c")).over(wk)
       val s2 = sum(col("c") * col("c")).over(wk)
@@ -236,9 +236,8 @@ object TemporalQ extends QueryModule {
         .orderBy("l_orderkey", "l_linenumber", "xc", "yc").rowsBetween(-7, 0)
       val b = lineitem(s, dir).select(
         col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-        col("l_suppkey"),
-        round(col("l_quantity") * 100).cast("long").as("xc"),
-        round(col("l_extendedprice") * 100).cast("long").as("yc"))
+        col("l_suppkey"), lattice(col("l_quantity"), 100).as("xc"),
+        lattice(col("l_extendedprice"), 100).as("yc"))
       val n = count(col("xc")).over(wk)
       val sx = sum(col("xc")).over(wk)
       val sy = sum(col("yc")).over(wk)
@@ -358,7 +357,7 @@ object TemporalQ extends QueryModule {
       val ww = w(s)
       val k = 7
       events(s, dir)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", lattice(col("value"), 100))
         .withColumn("rn", row_number().over(ww))
         .withColumn("arr",
           collect_list(col("c")).over(Temporal.rollingFrame(ww, k)))
@@ -737,7 +736,7 @@ object TemporalQ extends QueryModule {
       runStream(s, "w56_stream_update_sink",
         stream.groupBy("event_type")
           .agg(count(lit(1)).as("n"),
-            sum(round(col("value") * 100).cast("long")).as("sum_cents")),
+            sum(lattice(col("value"), 100)).as("sum_cents")),
         mode = "update")
         // latest update per key = the row with the highest running n
         // (struct max carries its sum along — no only-grows assumption
@@ -908,7 +907,7 @@ object TemporalQ extends QueryModule {
     "w33_rollslope" -> ((s, dir) => {
       val pos = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val b = events(s, dir).select(col("event_id"), col("user_id"),
-          col("ts"), round(col("value") * 100).cast("long").as("c"))
+          col("ts"), lattice(col("value"), 100).as("c"))
         .withColumn("i", row_number().over(pos).cast("long"))
       val wk = Window.partitionBy("user_id").orderBy("ts", "event_id")
         .rowsBetween(-7, 0)
@@ -1001,7 +1000,7 @@ object TemporalQ extends QueryModule {
     "w39_rollskew" -> ((s, dir) => {
       val wk = Window.partitionBy("user_id").orderBy("ts", "event_id")
         .rowsBetween(-7, 0)
-      val cd = round(col("value") * 100).cast("long").cast("decimal(38,0)")
+      val cd = lattice(col("value"), 100).cast("decimal(38,0)")
       val b = events(s, dir).select(col("event_id"), col("user_id"),
           col("ts"), cd.as("c"))
         .select(col("event_id"),
@@ -1029,7 +1028,7 @@ object TemporalQ extends QueryModule {
     // integer micros), one hash-agg exchange on the composite bin key.
     "a40_hist2d" -> ((s, dir) => {
       eventsRawUs(s, dir)
-        .select(expr("CAST(round(value * 100) AS BIGINT) DIV 1000").as("vbin"),
+        .select(expr(s"${latticeSql("value", 100)} DIV 1000").as("vbin"),
           (expr("ts_us DIV 3600000000") % 24).as("hod"))
         .groupBy("vbin", "hod")
         .agg(count(lit(1)).as("n"))
@@ -1044,7 +1043,7 @@ object TemporalQ extends QueryModule {
     "w43_streak" -> ((s, dir) => {
       val wOrd = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val b = events(s, dir).select(col("event_id"), col("user_id"),
-          col("ts"), round(col("value") * 100).cast("long").as("c"))
+          col("ts"), lattice(col("value"), 100).as("c"))
         .withColumn("i", row_number().over(wOrd).cast("long"))
         .withColumn("inc",
           (lag(col("c"), 1).over(wOrd).isNotNull &&
@@ -1076,7 +1075,7 @@ object TemporalQ extends QueryModule {
       val g = e.groupBy("user_id").agg(
         max(col("ts_us")).as("last_us"),
         count(lit(1)).as("freq"),
-        sum(round(col("value") * 100).cast("long")).as("cents"))
+        sum(lattice(col("value"), 100)).as("cents"))
       val mx = g.agg(max(col("last_us")).as("__mx"))
       val gm = g.crossJoin(broadcast(mx)).select(col("user_id"),
         (col("__mx") - col("last_us")).as("recency_us"),
@@ -1104,7 +1103,7 @@ object TemporalQ extends QueryModule {
     "m17_minmax" -> ((s, dir) => {
       val wAll = Window.partitionBy("user_id")
       val b = events(s, dir).select(col("event_id"), col("user_id"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
       b.select(col("event_id"),
         min(col("c")).over(wAll).as("lo"),
         max(col("c")).over(wAll).as("hi"), col("c"))
@@ -1124,7 +1123,7 @@ object TemporalQ extends QueryModule {
       val m = events(s, dir).select(
         col("user_id"),
         date_trunc("month", col("ts")).as("mon"),
-        round(col("value") * 100).cast("long").as("c"))
+        lattice(col("value"), 100).as("c"))
         .groupBy("user_id", "mon")
         .agg(sum(col("c")).as("cents"))
       val wm = Window.partitionBy("user_id").orderBy("mon")
@@ -1151,7 +1150,7 @@ object TemporalQ extends QueryModule {
       val b = events(s, dir).select(col("event_id"), col("user_id"),
           col("ts"),
           when(col("event_id") % 5 =!= 0,
-            round(col("value") * 100).cast("long")).as("c"))
+            lattice(col("value"), 100)).as("c"))
         .withColumn("i", row_number().over(wOrd).cast("long"))
       val known = when(col("c").isNotNull, col("i"))
       val pv = Temporal.ffill(col("c"), wOrd)
@@ -1176,7 +1175,7 @@ object TemporalQ extends QueryModule {
     "w40_rollkurt" -> ((s, dir) => {
       val wk = Window.partitionBy("user_id").orderBy("ts", "event_id")
         .rowsBetween(-7, 0)
-      val cd = round(col("value") * 100).cast("long").cast("decimal(38,0)")
+      val cd = lattice(col("value"), 100).cast("decimal(38,0)")
       val b = events(s, dir).select(col("event_id"), col("user_id"),
           col("ts"), cd.as("c"))
         .select(col("event_id"),
@@ -1300,8 +1299,8 @@ object TemporalQ extends QueryModule {
 
   val oracle: Map[String, String] = Map(
     "a34_decompose" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS c,
         |  (epoch_us(ts) // 3600000000) % 24 AS phase FROM events),
         |f AS (SELECT phase, c,
         |  count(c) OVER wk AS fn, CAST(sum(c) OVER wk AS BIGINT) AS fs
@@ -1348,8 +1347,8 @@ object TemporalQ extends QueryModule {
 
     "a33_autocorr" ->
       s"""WITH b AS (SELECT user_id,
-         |  CAST(round(value * 100) AS BIGINT) AS a,
-         |  lag(CAST(round(value * 100) AS BIGINT), 3) $over) AS bl
+         |  ${latticeSql("value", 100)} AS a,
+         |  lag(${latticeSql("value", 100)}, 3) $over) AS bl
          | FROM events),
          |g AS (SELECT user_id, count(*)::BIGINT AS n,
          |  CAST(sum(a) AS BIGINT) AS sa, CAST(sum(bl) AS BIGINT) AS sb,
@@ -1366,8 +1365,8 @@ object TemporalQ extends QueryModule {
          |FROM g""".stripMargin,
 
     "w31_anomaly" ->
-      """WITH b AS (SELECT event_id, user_id, ts,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH b AS (SELECT event_id, user_id, ts,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |r AS (SELECT event_id, user_id, c,
         |  count(c) OVER wk AS n,
         |  CAST(sum(c) OVER wk AS BIGINT) AS s1,
@@ -1380,10 +1379,10 @@ object TemporalQ extends QueryModule {
         |FROM r""".stripMargin,
 
     "w30_rollcorr" ->
-      """WITH b AS (SELECT l_suppkey, l_orderkey,
+      s"""WITH b AS (SELECT l_suppkey, l_orderkey,
         |  CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |  CAST(round(l_quantity * 100) AS BIGINT) AS xc,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS yc FROM lineitem),
+        |  ${latticeSql("l_quantity", 100)} AS xc,
+        |  ${latticeSql("l_extendedprice", 100)} AS yc FROM lineitem),
         |r AS (SELECT l_orderkey, l_linenumber, l_suppkey,
         |  count(*) OVER wk AS n,
         |  CAST(sum(xc) OVER wk AS BIGINT) AS sx,
@@ -1415,9 +1414,9 @@ object TemporalQ extends QueryModule {
     // element_at(…, 4) for k=7.
     "w35_hampel" ->
       s"""WITH m AS (SELECT event_id,
-         | CAST(round(value * 100) AS BIGINT) AS c,
+         | ${latticeSql("value", 100)} AS c,
          | row_number() $over) AS rn,
-         | list(CAST(round(value * 100) AS BIGINT)) $over
+         | list(${latticeSql("value", 100)}) $over
          |   ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS arr
          |FROM events),
          |h AS (SELECT event_id, c, arr, list_sort(arr)[4] AS med
@@ -1496,7 +1495,7 @@ object TemporalQ extends QueryModule {
     "w26_ffill" ->
       s"""WITH e AS (SELECT event_id, user_id, ts,
          |  CASE WHEN event_id % 7 = 0 THEN NULL
-         |       ELSE CAST(round(value * 100) AS BIGINT) END AS cents_gap
+         |       ELSE ${latticeSql("value", 100)} END AS cents_gap
          | FROM events)
          |SELECT event_id, user_id, cents_gap,
          | last_value(cents_gap IGNORE NULLS) $over
@@ -1515,7 +1514,7 @@ object TemporalQ extends QueryModule {
 
     "w27_cusum" ->
       s"""WITH e AS (SELECT event_id, user_id, ts,
-         |  CAST(round(value * 100) AS BIGINT) AS cents FROM events)
+         |  ${latticeSql("value", 100)} AS cents FROM events)
          |SELECT event_id, user_id, cents,
          | list_reduce(list_prepend(0::BIGINT,
          |   list(cents - 6000) $over
@@ -1550,7 +1549,7 @@ object TemporalQ extends QueryModule {
 
     "w29_stream_cusum" ->
       s"""WITH e AS (SELECT event_id, user_id, ts,
-         |  CAST(round(value * 100) AS BIGINT) AS cents FROM events)
+         |  ${latticeSql("value", 100)} AS cents FROM events)
          |SELECT event_id, cents,
          | list_reduce(list_prepend(0::BIGINT,
          |   list(cents - 6000) $over
@@ -1671,8 +1670,8 @@ object TemporalQ extends QueryModule {
          |FROM s GROUP BY user_id, sid""".stripMargin,
 
     "w50_stream_timer" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+        |  ${latticeSql("value", 100)} AS cents FROM events),
         |g AS (SELECT *, CASE WHEN lag(ts_us) OVER
         |   (PARTITION BY user_id ORDER BY ts_us, event_id) IS NULL
         |   OR ts_us - lag(ts_us) OVER
@@ -1730,8 +1729,8 @@ object TemporalQ extends QueryModule {
       "SELECT event_id, user_id, value FROM events",
 
     "w56_stream_update" ->
-      """SELECT event_type, count(*) AS n,
-        | sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS sum_cents
+      s"""SELECT event_type, count(*) AS n,
+        | sum(${latticeSql("value", 100)})::BIGINT AS sum_cents
         |FROM events GROUP BY event_type""".stripMargin,
 
     "w16_sliding" ->
@@ -1841,9 +1840,9 @@ object TemporalQ extends QueryModule {
     // exact integers is order-free. Values match Spark's
     // last/first(ignoreNulls) fills exactly.
     "w42_interpolate" ->
-      """WITH b AS (SELECT event_id, user_id, ts,
+      s"""WITH b AS (SELECT event_id, user_id, ts,
         |  CASE WHEN event_id % 5 <> 0
-        |    THEN CAST(round(value * 100) AS BIGINT) END AS c,
+        |    THEN ${latticeSql("value", 100)} END AS c,
         |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)::BIGINT AS i
         | FROM events),
         |p AS (SELECT event_id, c, i,
@@ -1865,14 +1864,14 @@ object TemporalQ extends QueryModule {
         |FROM p""".stripMargin,
 
     "a40_hist2d" ->
-      """SELECT CAST(round(value * 100) AS BIGINT) // 1000 AS vbin,
+      s"""SELECT ${latticeSql("value", 100)} // 1000 AS vbin,
         | (epoch_us(ts) // 3600000000) % 24 AS hod,
         | count(*)::BIGINT AS n
         |FROM events GROUP BY 1, 2""".stripMargin,
 
     "w43_streak" ->
       s"""WITH b AS (SELECT event_id, user_id, ts,
-         |  CAST(round(value * 100) AS BIGINT) AS c,
+         |  ${latticeSql("value", 100)} AS c,
          |  row_number() $over)::BIGINT AS i
          | FROM events),
          |m AS (SELECT event_id, i,
@@ -1886,9 +1885,9 @@ object TemporalQ extends QueryModule {
          |FROM m""".stripMargin,
 
     "m19_rfm" ->
-      """WITH g AS (SELECT user_id,
+      s"""WITH g AS (SELECT user_id,
         |  max(epoch_us(ts)) AS last_us, count(*)::BIGINT AS freq,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+        |  CAST(sum(${latticeSql("value", 100)}) AS BIGINT) AS cents
         | FROM events GROUP BY user_id),
         |m AS (SELECT user_id,
         |  max(last_us) OVER () - last_us AS recency_us, freq, cents
@@ -1900,8 +1899,8 @@ object TemporalQ extends QueryModule {
         |FROM m""".stripMargin,
 
     "m17_minmax" ->
-      """WITH b AS (SELECT event_id, user_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH b AS (SELECT event_id, user_id,
+        |  ${latticeSql("value", 100)} AS c FROM events),
         |g AS (SELECT event_id, c,
         |  min(c) OVER (PARTITION BY user_id) AS lo,
         |  max(c) OVER (PARTITION BY user_id) AS hi
@@ -1912,8 +1911,8 @@ object TemporalQ extends QueryModule {
         |FROM g""".stripMargin,
 
     "w41_pct_change" ->
-      """WITH m AS (SELECT user_id, date_trunc('month', ts) AS mon,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+      s"""WITH m AS (SELECT user_id, date_trunc('month', ts) AS mon,
+        |  CAST(sum(${latticeSql("value", 100)}) AS BIGINT) AS cents
         | FROM events GROUP BY user_id, date_trunc('month', ts)),
         |l AS (SELECT user_id, epoch_us(mon) AS mon_us, cents,
         |  lag(cents, 1) OVER (PARTITION BY user_id ORDER BY mon) AS prev
@@ -1926,7 +1925,7 @@ object TemporalQ extends QueryModule {
 
     "w40_rollkurt" ->
       s"""WITH o AS (SELECT event_id, user_id, ts,
-         |  CAST(round(value * 100) AS HUGEINT) AS c FROM events),
+         |  ${latticeSql("value", 100, "HUGEINT")} AS c FROM events),
          |st AS (SELECT event_id,
          |  count(c) OVER wk AS n,
          |  sum(c) OVER wk AS sl1,
@@ -1952,7 +1951,7 @@ object TemporalQ extends QueryModule {
 
     "w39_rollskew" ->
       s"""WITH o AS (SELECT event_id, user_id, ts,
-         |  CAST(round(value * 100) AS HUGEINT) AS c FROM events),
+         |  ${latticeSql("value", 100, "HUGEINT")} AS c FROM events),
          |st AS (SELECT event_id,
          |  count(c) OVER wk AS n,
          |  sum(c) OVER wk AS sl1,
@@ -1975,7 +1974,7 @@ object TemporalQ extends QueryModule {
 
     "w33_rollslope" ->
       s"""WITH b AS (SELECT event_id, user_id, ts,
-         |  CAST(round(value * 100) AS BIGINT) AS c,
+         |  ${latticeSql("value", 100)} AS c,
          |  row_number() $over)::BIGINT AS i FROM events),
          |r AS (SELECT event_id, user_id,
          |  count(c) OVER wk AS n,

@@ -49,6 +49,42 @@ class ContractSpec extends SparkSpec {
     intercept[IllegalArgumentException](SparkEntry.union(modules.map(_.oracle)))
   }
 
+  /** Every main source file under `graft/`, with its text. */
+  private lazy val sources: Seq[(java.io.File, String)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
+    walk(root).map(f => f -> java.nio.file.Files.readString(f.toPath))
+  }
+
+  test("sources: the exact-integer lattice is spelled only in Q.scala") {
+    val lattice = Seq(
+      """round\(col\("\w+"\) \* 10+\)\.cast\("long"\)""".r,
+      """CAST\(round\([^()]+ \* 10+\) AS (BIGINT|HUGEINT)\)""".r)
+    val copies = for {
+      (f, text) <- sources if f.getName != "Q.scala"
+      re <- lattice
+      m <- re.findAllIn(text)
+    } yield s"${f.getName}: $m"
+    assert(copies.isEmpty,
+      s"use Q.lattice / Q.latticeSql instead of: ${copies.take(10).mkString("; ")}")
+  }
+
+  test("sources: no query name repeats inside one module's Map literal") {
+    // A repeated key in one Map(...) literal silently keeps the later
+    // entry, which SparkEntry.union cannot see.
+    val key = """"(\w+)" -> \(\(""".r
+    val names = sources.map { case (f, text) =>
+      f.getName -> key.findAllMatchIn(text).map(_.group(1)).toSeq }
+    for ((file, ns) <- names) {
+      val dup = ns.diff(ns.distinct).distinct
+      assert(dup.isEmpty, s"$file registers twice: ${dup.mkString(", ")}")
+    }
+    assert(names.map(_._2.size).sum == SparkEntry.queries.size)
+  }
+
   private val expected: Map[String, Seq[(String, DataType)]] = Map(
     "region" -> Seq("r_regionkey" -> IntegerType, "r_name" -> StringType),
     "nation" -> Seq("n_nationkey" -> IntegerType, "n_name" -> StringType,

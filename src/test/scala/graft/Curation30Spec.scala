@@ -48,12 +48,13 @@ class Curation30Spec extends SparkSpec {
       (1L, "the cat sat on the mat")).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("rouge").toString
-    two.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val self = graft.queries.Curation30Q.queries("t_rouge")(spark, tmp)
-    val row = self.filter(col("doc_a") === 0).head()
-    assert(row.getAs[Double]("rouge1") == 1.0)
-    assert(row.getAs[Double]("rouge2") == 1.0)
+    withTempDir("rouge") { tmp =>
+      two.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val self = graft.queries.Curation30Q.queries("t_rouge")(spark, tmp)
+      val row = self.filter(col("doc_a") === 0).head()
+      assert(row.getAs[Double]("rouge1") == 1.0)
+      assert(row.getAs[Double]("rouge2") == 1.0)
+    }
   }
 
   test("m34_knn_clf: one prediction per vector, labels from the domain") {

@@ -10,10 +10,10 @@ class Curation32Spec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** Write a tiny events table and return its dir (t_rouge pattern). */
-  private def eventsFixture(rows: Seq[(Long, Long, Long, Double)]): String = {
+  /** Run `body` on the dir of a tiny events table (t_rouge pattern). */
+  private def withEvents[T](rows: Seq[(Long, Long, Long, Double)])(
+      body: String => T): T = withTempDir("c32") { tmp =>
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("c32").toString
     rows.toDF("event_id", "user_id", "ts_off", "value")
       .select(col("event_id"), col("user_id"),
         timestamp_micros(
@@ -21,7 +21,7 @@ class Curation32Spec extends SparkSpec {
         col("user_id").cast("string").as("event_type"), col("value"),
         lit("{}").as("props"))
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    tmp
+    body(tmp)
   }
 
   test("w65_viterbi: cost identities and a hand-computed golden") {
@@ -37,12 +37,13 @@ class Curation32Spec extends SparkSpec {
     // step1: v0 = T00+EH0 = 223+511 = 734; v1 = T01+EH1 = 1609+1609 = 3218
     // step2: v0 = min(734+223, 3218+1204)+916 = 957+916 = 1873
     //        v1 = min(734+1609, 3218+357)+223 = 2343+223 = 2566
-    val tmp = eventsFixture(Seq((1L, 7L, 10L, 150.0), (2L, 7L, 20L, 3.0)))
-    val g = graft.queries.Curation32Q.queries("w65_viterbi")(spark, tmp)
-      .head()
-    assert(g.getAs[Long]("cost_engaged") == 1873L)
-    assert(g.getAs[Long]("cost_idle") == 2566L)
-    assert(g.getAs[String]("best_state") == "engaged")
+    withEvents(Seq((1L, 7L, 10L, 150.0), (2L, 7L, 20L, 3.0))) { tmp =>
+      val g = graft.queries.Curation32Q.queries("w65_viterbi")(spark, tmp)
+        .head()
+      assert(g.getAs[Long]("cost_engaged") == 1873L)
+      assert(g.getAs[Long]("cost_idle") == 2566L)
+      assert(g.getAs[String]("best_state") == "engaged")
+    }
   }
 
   test("w66_dtw: non-negative, zero iff aligned-identical series") {
@@ -56,12 +57,13 @@ class Curation32Spec extends SparkSpec {
       (u, off) <- Seq((1L, 0.0), (2L, 0.0), (3L, 1.0))
       (v, i) <- vals.zipWithIndex
     } yield ((u * 100 + i).toLong, u, (i * 10).toLong, v + off)
-    val tmp = eventsFixture(rows)
-    val g = graft.queries.Curation32Q.queries("w66_dtw")(spark, tmp)
-      .orderBy("user_a").collect()
-    assert(g.length == 2)
-    assert(g(0).getAs[Long]("dtw") == 0L, "identical series align at 0")
-    assert(g(1).getAs[Long]("dtw") > 0L, "shifted series cost > 0")
+    withEvents(rows) { tmp =>
+      val g = graft.queries.Curation32Q.queries("w66_dtw")(spark, tmp)
+        .orderBy("user_a").collect()
+      assert(g.length == 2)
+      assert(g(0).getAs[Long]("dtw") == 0L, "identical series align at 0")
+      assert(g(1).getAs[Long]("dtw") > 0L, "shifted series cost > 0")
+    }
   }
 
   test("s_mmr: 4 distinct picks, first is pure relevance, scores bounded") {

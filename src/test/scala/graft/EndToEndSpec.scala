@@ -58,51 +58,52 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("reference-schema CSVs: scan → features → ensemble → submission → score") {
-    val dir = Files.createTempDirectory("graft_e2e").toString
-    writeFixtures(dir)
+    withTempDir("graft_e2e") { dir =>
+      writeFixtures(dir)
 
-    // S1/S2: multi-week explicit-schema scans.
-    val input = Tables.csv(spark, TrackingSchemas.trackingInput,
-      s"$dir/input_w01.csv", s"$dir/input_w02.csv")
-    val output = Tables.csv(spark, TrackingSchemas.trackingOutput,
-      s"$dir/output_w01.csv", s"$dir/output_w02.csv")
-    assert(input.count() == 2L * 3 * 8 * 12)
-    assert(output.count() == 2L * 3 * 8 * 3)
+      // S1/S2: multi-week explicit-schema scans.
+      val input = Tables.csv(spark, TrackingSchemas.trackingInput,
+        s"$dir/input_w01.csv", s"$dir/input_w02.csv")
+      val output = Tables.csv(spark, TrackingSchemas.trackingOutput,
+        s"$dir/output_w01.csv", s"$dir/output_w02.csv")
+      assert(input.count() == 2L * 3 * 8 * 12)
+      assert(output.count() == 2L * 3 * 8 * 3)
 
-    // P7: ft-in parse with malformed fallback; P6: role one-hot.
-    val heights = input.select(
-      graft.functions.Scalars.heightToInches(col("player_height"), Some(72.0))
-        .as("h")).distinct().collect().map(_.getDouble(0))
-    assert(heights.forall(h => h >= 72.0 && h < 84.0))
+      // P7: ft-in parse with malformed fallback; P6: role one-hot.
+      val heights = input.select(
+        graft.functions.Scalars.heightToInches(col("player_height"), Some(72.0))
+          .as("h")).distinct().collect().map(_.getDouble(0))
+      assert(heights.forall(h => h >= 72.0 && h < 84.0))
 
-    // Training rows from the reference-shaped truth.
-    val truth = output.select(
-      col("game_id"), col("play_id"), col("nfl_id"),
-      col("frame_id").cast("long").as("frame_id_out"),
-      col("x").as("x_true"), col("y").as("y_true"))
-    val frames = input.select("game_id", "play_id", "frame_id", "nfl_id",
-      "x", "y", "s", "dir", "player_side")
-    val r = TreeEnsemblePipeline.run(frames, truth,
-      TreeEnsemblePipeline.Config(k = 2,
-        gbt = GbtPair.Params(maxIter = 8, maxDepth = 3, fitPartitions = 4)))
-    assert(r.rmsePhysics > 0 && r.rmsePhysics < 5.0)
-    assert(r.rmseEnsemble < r.rmsePhysics)
+      // Training rows from the reference-shaped truth.
+      val truth = output.select(
+        col("game_id"), col("play_id"), col("nfl_id"),
+        col("frame_id").cast("long").as("frame_id_out"),
+        col("x").as("x_true"), col("y").as("y_true"))
+      val frames = input.select("game_id", "play_id", "frame_id", "nfl_id",
+        "x", "y", "s", "dir", "player_side")
+      val r = TreeEnsemblePipeline.run(frames, truth,
+        TreeEnsemblePipeline.Config(k = 2,
+          gbt = GbtPair.Params(maxIter = 8, maxDepth = 3, fitPartitions = 4)))
+      assert(r.rmsePhysics > 0 && r.rmsePhysics < 5.0)
+      assert(r.rmseEnsemble < r.rmsePhysics)
 
-    // S4 + M9: submission sink, read back, score against the solution.
-    val submission = r.oof.select(
-      concat_ws("_", col("game_id"), col("play_id"), col("nfl_id"),
-        col("frame_id_out")).as("id"),
-      col("pred_x").as("x"), col("pred_y").as("y"))
-    Tables.writeSubmission(submission, s"$dir/submission")
-    val restored = Tables.csv(spark, TrackingSchemas.submission,
-      s"$dir/submission")
-    assert(restored.count() == submission.count())
-    val solution = truth.select(
-      concat_ws("_", col("game_id"), col("play_id"), col("nfl_id"),
-        col("frame_id_out")).as("id"),
-      col("x_true").as("x"), col("y_true").as("y"))
-    val rmse = Score.rmse(solution, restored)
-    assert(math.abs(rmse - r.rmseEnsemble) < 1e-4) // CSV roundtrip preserved
+      // S4 + M9: submission sink, read back, score against the solution.
+      val submission = r.oof.select(
+        concat_ws("_", col("game_id"), col("play_id"), col("nfl_id"),
+          col("frame_id_out")).as("id"),
+        col("pred_x").as("x"), col("pred_y").as("y"))
+      Tables.writeSubmission(submission, s"$dir/submission")
+      val restored = Tables.csv(spark, TrackingSchemas.submission,
+        s"$dir/submission")
+      assert(restored.count() == submission.count())
+      val solution = truth.select(
+        concat_ws("_", col("game_id"), col("play_id"), col("nfl_id"),
+          col("frame_id_out")).as("id"),
+        col("x_true").as("x"), col("y_true").as("y"))
+      val rmse = Score.rmse(solution, restored)
+      assert(math.abs(rmse - r.rmseEnsemble) < 1e-4) // CSV roundtrip preserved
+    }
   }
 
   // ------------------------------------------------------------------

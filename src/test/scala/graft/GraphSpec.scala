@@ -84,19 +84,19 @@ class GraphSpec extends SparkSpec {
     // on the fault-tolerant store) instead of executor-local blocks.
     // Same labeling as the default path, and the dir must actually
     // receive checkpoint data.
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft_ck").toString
-    val docs = graft.queries.Q.documents(spark, "/root/testdata/sf0.001")
-    val expected = Graph.dupClusters(docs, "doc_id", "text",
-        threshold = 0.6, bandRows = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val got = Graph.dupClusters(docs, "doc_id", "text",
-        threshold = 0.6, bandRows = 6, checkpointDir = Some(ckDir))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == expected, "reliable-checkpoint run must match default")
-    val written = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(written > 0, "checkpoint dir must contain checkpoint files")
+    withTempDir("graft_ck") { ckDir =>
+      val docs = graft.queries.Q.documents(spark, "/root/testdata/sf0.001")
+      val expected = Graph.dupClusters(docs, "doc_id", "text",
+          threshold = 0.6, bandRows = 6)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val got = Graph.dupClusters(docs, "doc_id", "text",
+          threshold = 0.6, bandRows = 6, checkpointDir = Some(ckDir))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == expected, "reliable-checkpoint run must match default")
+      val written = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(written > 0, "checkpoint dir must contain checkpoint files")
+    }
   }
 
   test("long path (worst case for naive propagation) converges") {

@@ -60,14 +60,15 @@ class PipelineSpec extends SparkSpec {
       .na.drop(Seq("x_true", "y_true", "phys_x", "phys_y"))
     val m = graft.ml.GbtPair.train(rows, TreeEnsemblePipeline.FeatureCols,
       "res_x", "res_y", graft.ml.GbtPair.Params(maxIter = 3, maxDepth = 3))
-    val dir = java.nio.file.Files.createTempDirectory("gbt_rt").toString
-    graft.ml.GbtPair.save(m, dir)
-    val m2 = graft.ml.GbtPair.load(dir, TreeEnsemblePipeline.FeatureCols)
-    val a = graft.ml.GbtPair.predict(rows, m)
-      .select("game_id", "play_id", "nfl_id", "frame_id_out", "pred_x", "pred_y")
-    val b = graft.ml.GbtPair.predict(rows, m2)
-      .select("game_id", "play_id", "nfl_id", "frame_id_out", "pred_x", "pred_y")
-    assert(a.except(b).count() == 0 && b.except(a).count() == 0)
+    withTempDir("gbt_rt") { dir =>
+      graft.ml.GbtPair.save(m, dir)
+      val m2 = graft.ml.GbtPair.load(dir, TreeEnsemblePipeline.FeatureCols)
+      val a = graft.ml.GbtPair.predict(rows, m)
+        .select("game_id", "play_id", "nfl_id", "frame_id_out", "pred_x", "pred_y")
+      val b = graft.ml.GbtPair.predict(rows, m2)
+        .select("game_id", "play_id", "nfl_id", "frame_id_out", "pred_x", "pred_y")
+      assert(a.except(b).count() == 0 && b.except(a).count() == 0)
+    }
   }
 
   test("M8: trained MLP behind the scorer seam beats physics, deterministically") {

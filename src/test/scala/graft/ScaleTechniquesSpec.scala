@@ -59,54 +59,57 @@ class ScaleTechniquesSpec extends SparkSpec {
   }
 
   test("bucketed tables co-locate: join plan has NO shuffle exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val a = (1L to 5000L).map(i => (i, i * 2.0)).toDF("id", "va")
-      val b = (1L to 5000L).map(i => (i, s"s$i")).toDF("id", "vb")
-      a.write.mode("overwrite")
-        .option("path", s"$wh/ta").bucketBy(8, "id").saveAsTable("graft_ta")
-      b.write.mode("overwrite")
-        .option("path", s"$wh/tb").bucketBy(8, "id").saveAsTable("graft_tb")
-      val j = spark.table("graft_ta").join(spark.table("graft_tb"), "id")
-      val shuffles = j.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec => e
+    withTempDir("graft_wh") { wh =>
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val a = (1L to 5000L).map(i => (i, i * 2.0)).toDF("id", "va")
+        val b = (1L to 5000L).map(i => (i, s"s$i")).toDF("id", "vb")
+        a.write.mode("overwrite")
+          .option("path", s"$wh/ta").bucketBy(8, "id").saveAsTable("graft_ta")
+        b.write.mode("overwrite")
+          .option("path", s"$wh/tb").bucketBy(8, "id").saveAsTable("graft_tb")
+        val j = spark.table("graft_ta").join(spark.table("graft_tb"), "id")
+        val shuffles = j.queryExecution.executedPlan.collect {
+          case e: ShuffleExchangeExec => e
+        }
+        assert(shuffles.isEmpty,
+          s"bucketed join must be exchange-free, found: $shuffles")
+        assert(j.count() == 5000)
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS graft_ta")
+        spark.sql("DROP TABLE IF EXISTS graft_tb")
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
-      assert(shuffles.isEmpty,
-        s"bucketed join must be exchange-free, found: $shuffles")
-      assert(j.count() == 5000)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_ta")
-      spark.sql("DROP TABLE IF EXISTS graft_tb")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
   test("partitioned parquet write prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    val df = (1 to 1000).map(i => (s"type${i % 5}", i, i * 1.5))
-      .toDF("event_type", "id", "v")
-    df.write.mode("overwrite").partitionBy("event_type").parquet(dir)
-    val read = spark.read.parquet(dir).filter(col("event_type") === "type3")
-    val scan = read.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head
-    // Pruning happened at planning: only 1 of 5 partition dirs selected.
-    assert(scan.relation.location.listFiles(scan.partitionFilters, Nil).size == 1)
-    assert(read.count() == 200)
+    withTempDir("graft_part") { dir =>
+      val df = (1 to 1000).map(i => (s"type${i % 5}", i, i * 1.5))
+        .toDF("event_type", "id", "v")
+      df.write.mode("overwrite").partitionBy("event_type").parquet(dir)
+      val read = spark.read.parquet(dir).filter(col("event_type") === "type3")
+      val scan = read.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.head
+      // Pruning happened at planning: only 1 of 5 partition dirs selected.
+      assert(scan.relation.location.listFiles(scan.partitionFilters, Nil).size == 1)
+      assert(read.count() == 200)
+    }
   }
 
   test("filter and column pruning reach the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_push").toString
-    (1 to 1000).map(i => (i.toLong, i * 2.0, s"s$i")).toDF("id", "v", "s")
-      .write.mode("overwrite").parquet(dir)
-    val q = spark.read.parquet(dir).filter(col("id") > 900).select("v")
-    val scan = q.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head
-    assert(scan.metadata("PushedFilters").contains("GreaterThan(id,900)"))
-    // ReadSchema carries only the needed columns, not `s`.
-    assert(scan.requiredSchema.fieldNames.toSet == Set("id", "v"))
+    withTempDir("graft_push") { dir =>
+      (1 to 1000).map(i => (i.toLong, i * 2.0, s"s$i")).toDF("id", "v", "s")
+        .write.mode("overwrite").parquet(dir)
+      val q = spark.read.parquet(dir).filter(col("id") > 900).select("v")
+      val scan = q.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.head
+      assert(scan.metadata("PushedFilters").contains("GreaterThan(id,900)"))
+      // ReadSchema carries only the needed columns, not `s`.
+      assert(scan.requiredSchema.fieldNames.toSet == Set("id", "v"))
+    }
   }
 
   test("dynamic partition pruning: dim filter prunes the fact scan at runtime") {
@@ -115,32 +118,32 @@ class ScaleTechniquesSpec extends SparkSpec {
     // predicate only known at plan time. The fact scan must receive a
     // runtime `dynamicpruning` subquery filter so only the matching
     // partition directories are read, not the whole fact table.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
-    val fact = (1 to 10000).map(i => (i % 20, i.toLong, i * 1.1))
-      .toDF("part_key", "id", "v")
-    fact.write.mode("overwrite").partitionBy("part_key").parquet(dir)
-    // The dim must be a real scan: a local Seq constant-folds its
-    // Filter into a LocalRelation, and the DPP rule requires a
-    // selective predicate NODE on the pruning side.
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dppd").toString
-    (0 until 20).map(i => (i, s"grp${i % 4}")).toDF("part_key", "grp")
-      .write.mode("overwrite").parquet(dimDir)
-    // AQE wraps the join in AdaptiveSparkPlanExec, which hides the scan
-    // from collect() until execution — assert on the static plan.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val j = spark.read.parquet(dir)
-        .join(spark.read.parquet(dimDir).filter(col("grp") === "grp1"),
-          "part_key")
-      val scan = j.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.requiredSchema.fieldNames.contains("id") => f
-      }.head
-      assert(scan.partitionFilters.exists(_.toString.contains("dynamicpruning")),
-        s"fact scan must carry a DPP filter, got: ${scan.partitionFilters}")
-      // grp1 selects part_key in {1, 5, 9, 13, 17}: 5 of 20 partitions.
-      assert(j.count() == 2500)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    withTempDir("graft_dpp") { dir =>
+      val fact = (1 to 10000).map(i => (i % 20, i.toLong, i * 1.1))
+        .toDF("part_key", "id", "v")
+      fact.write.mode("overwrite").partitionBy("part_key").parquet(s"$dir/fact")
+      // The dim must be a real scan: a local Seq constant-folds its
+      // Filter into a LocalRelation, and the DPP rule requires a
+      // selective predicate NODE on the pruning side.
+      (0 until 20).map(i => (i, s"grp${i % 4}")).toDF("part_key", "grp")
+        .write.mode("overwrite").parquet(s"$dir/dim")
+      // AQE wraps the join in AdaptiveSparkPlanExec, which hides the scan
+      // from collect() until execution — assert on the static plan.
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val j = spark.read.parquet(s"$dir/fact")
+          .join(spark.read.parquet(s"$dir/dim").filter(col("grp") === "grp1"),
+            "part_key")
+        val scan = j.queryExecution.executedPlan.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.requiredSchema.fieldNames.contains("id") => f
+        }.head
+        assert(scan.partitionFilters.exists(_.toString.contains("dynamicpruning")),
+          s"fact scan must carry a DPP filter, got: ${scan.partitionFilters}")
+        // grp1 selects part_key in {1, 5, 9, 13, 17}: 5 of 20 partitions.
+        assert(j.count() == 2500)
+      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("broadcast hint pins the small side (no shuffle of the big side)") {
@@ -159,31 +162,32 @@ class ScaleTechniquesSpec extends SparkSpec {
     // so fact rows are dropped at the scan, before the shuffle. At
     // 100 TB this is the difference between shuffling the full fact
     // table and shuffling the ~matching slice.
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
-    (1 to 200000).map(i => (i % 1000, i.toLong, i * 1.1))
-      .toDF("k", "id", "v").write.mode("overwrite").parquet(s"$dir/fact")
-    (0 until 1000).map(i => (i, s"g${i % 5}"))
-      .toDF("k", "g").write.mode("overwrite").parquet(s"$dir/dim")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    // production default only arms the filter when the probe side scans
-    // >10GB — scale the threshold down to the fixture instead of the
-    // fixture up to 10GB
-    spark.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "1KB")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = spark.read.parquet(s"$dir/fact")
-        .join(spark.read.parquet(s"$dir/dim").filter(col("g") === "g1"), "k")
-      val opt = j.queryExecution.optimizedPlan.toString
-      assert(opt.contains("bloom_filter") || opt.contains("BloomFilter"),
-        s"expected an injected bloom runtime filter, plan:\n${opt.take(2000)}")
-      assert(j.count() == 40000)
-    } finally {
-      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
-      spark.conf.unset(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    withTempDir("graft_bloom") { dir =>
+      (1 to 200000).map(i => (i % 1000, i.toLong, i * 1.1))
+        .toDF("k", "id", "v").write.mode("overwrite").parquet(s"$dir/fact")
+      (0 until 1000).map(i => (i, s"g${i % 5}"))
+        .toDF("k", "g").write.mode("overwrite").parquet(s"$dir/dim")
+      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      // production default only arms the filter when the probe side scans
+      // >10GB — scale the threshold down to the fixture instead of the
+      // fixture up to 10GB
+      spark.conf.set(
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
+        "1KB")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val j = spark.read.parquet(s"$dir/fact")
+          .join(spark.read.parquet(s"$dir/dim").filter(col("g") === "g1"), "k")
+        val opt = j.queryExecution.optimizedPlan.toString
+        assert(opt.contains("bloom_filter") || opt.contains("BloomFilter"),
+          s"expected an injected bloom runtime filter, plan:\n${opt.take(2000)}")
+        assert(j.count() == 40000)
+      } finally {
+        spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
+        spark.conf.unset(
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
     }
   }
 
@@ -263,15 +267,14 @@ class ScaleTechniquesSpec extends SparkSpec {
     val big = (0 until 16).map(i =>
       base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
       .reduce(_.unionByName(_))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus16x")
-    big.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    try {
-      val got = graft.queries.CorpusQ.queries("c_corpus")(spark, tmp.toString)
+    withTempDir("graft_corpus16x") { tmp =>
+      big.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = graft.queries.CorpusQ.queries("c_corpus")(spark, tmp)
       val want = graft.queries.CorpusQ.queries("c_corpus")(spark, dir)
       assert(got.count() == want.count(), "16x must dedup down to the 1x corpus")
       assert(got.except(want).isEmpty && want.except(got).isEmpty,
         "surviving rows (ids, quality, split) must match the 1x run exactly")
-    } finally graft.queries.IoQ.deleteRecursively(tmp.toFile)
+    }
   }
 
   test("scale smoke: sessionize→funnel at 16x — one data exchange, balanced, 16x counts") {

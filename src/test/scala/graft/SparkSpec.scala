@@ -19,4 +19,12 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     (a.isNaN && b.isNaN) || math.abs(a - b) <= tol
+
+  /** Runs `body` on a fresh temp dir named `prefix…` and deletes the
+    * dir afterwards, whether `body` passes or throws. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(d.toString)
+    finally graft.queries.IoQ.deleteRecursively(d)
+  }
 }

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Dev-only local mirror of the driver's correctness gate.
 
-Runs each oracle SQL from <outDir>/oracle_sql.json in DuckDB against the
-same sf tables, loads the Spark parquet result written by graft.Verify,
+Runs the oracle SQL from <outDir>/oracle_sql.json in DuckDB against the
+same sf tables for each query directory present in <outDir> (or the
+named ones), loads the Spark parquet result written by graft.Verify,
 and compares row count, column names, and values (columns sorted by
 name, rows sorted by all columns). Dev tooling only — the shipped
 library is pure Scala/Spark.
@@ -133,8 +134,9 @@ def against_duckdb(sf_dir, out_dir, only):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    wanted = only or {n for n in oracle if os.path.isdir(f"{out_dir}/{n}")}
     for name, sql in sorted(oracle.items()):
-        if only and name not in only:
+        if name not in wanted:
             continue
         try:
             exp = con.sql(sql).df()
