@@ -52,20 +52,8 @@ case class CusumLong(child: Expression, allowance: Long)
 }
 
 object CusumLong {
-  /** Column wrapper with the running RowFrame(UnboundedPreceding,
-    * CurrentRow) spec a window aggregate requires. */
+  /** `cusum(col, k)` over the running frame. */
   def cusum(c: Column, allowance: Long,
-            partitionBy: Seq[Column], orderBy: Seq[Column]): Column = {
-    import org.apache.spark.sql.graftshim.ColumnBridge
-    val order = orderBy.map(ColumnBridge.expression(_) match {
-      case s: SortOrder => s
-      case e => SortOrder(e, Ascending)
-    })
-    ColumnBridge.column(WindowExpression(
-      CusumLong(ColumnBridge.expression(c), allowance),
-      WindowSpecDefinition(
-        partitionBy.map(ColumnBridge.expression),
-        order,
-        SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))))
-  }
+            partitionBy: Seq[Column], orderBy: Seq[Column]): Column =
+    RunningFrame(CusumLong(_, allowance), c, partitionBy, orderBy)
 }

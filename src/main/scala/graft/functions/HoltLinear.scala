@@ -13,10 +13,11 @@ import org.apache.spark.sql.types._
   *   l_t = α·x_t + (1−α)·(l_{t-1} + b_{t-1})
   *   b_t = β·(l_t − l_{t-1}) + (1−β)·b_{t-1}
   *
-  * Where [[EwmAvg]] and [[CusumLong]] carry one value of frame state,
-  * this carries two coupled ones — the `aggBufferAttributes` mechanism
-  * generalizes cleanly, and the evaluate step packs both into a struct
-  * so one ordered pass yields level AND trend.
+  * Where [[CusumLong]] and the default [[EwmAvg]] carry one value of
+  * frame state, this carries two coupled ones — the
+  * `aggBufferAttributes` mechanism generalizes cleanly, and the
+  * evaluate step packs both into a struct so one ordered pass yields
+  * level AND trend.
   *
   * Engine-portability (ORACLE_NOTES.md rule 2): with DYADIC α and β
   * (0.5, 0.25, …) every multiply is exact and every add/subtract is a
@@ -66,17 +67,6 @@ object HoltLinear {
   /** `holt(col, α, β)` over the running frame; returns a
     * struct(level, trend) column. */
   def holt(c: Column, alpha: Double, beta: Double,
-           partitionBy: Seq[Column], orderBy: Seq[Column]): Column = {
-    import org.apache.spark.sql.graftshim.ColumnBridge
-    val order = orderBy.map(ColumnBridge.expression(_) match {
-      case s: SortOrder => s
-      case e => SortOrder(e, Ascending)
-    })
-    ColumnBridge.column(WindowExpression(
-      HoltLinear(ColumnBridge.expression(c), alpha, beta),
-      WindowSpecDefinition(
-        partitionBy.map(ColumnBridge.expression),
-        order,
-        SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))))
-  }
+           partitionBy: Seq[Column], orderBy: Seq[Column]): Column =
+    RunningFrame(HoltLinear(_, alpha, beta), c, partitionBy, orderBy)
 }

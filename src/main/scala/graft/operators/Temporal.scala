@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * Reference: lags `main_cuda.py:212-215`; rolling stats
   * `main_cuda.py:217-227` (pandas min_periods=1, ddof=1);
   * diff/delta2 `main_cuda.py:229-231`, `main_mps.py:211-223`;
-  * EMA `main_mps.py:231-240` (adjust=False recursion);
+  * EMA `main_mps.py:231-240` (adjust=False recursion) is the window
+  * function [[graft.functions.EwmAvg]];
   * rank/top-K `main_cuda.py:345-347`; cumcount `nn/nn-mps.py:235-238`.
   *
   * Scale note: all of these shuffle once on the partition keys; a
@@ -97,98 +98,6 @@ object Temporal {
   /** W4: second difference c_t - 2c_{t-1} + c_{t-2} (jerk). */
   def delta2(c: Column, w: WindowSpec): Column =
     c - lit(2) * lag(c, 1).over(w) + lag(c, 2).over(w)
-
-  /** W5: exponential moving average, pandas `ewm(alpha, adjust=False)`:
-    * y_0 = x_0; y_t = a*x_t + (1-a)*y_{t-1}.
-    *
-    * No Spark built-in. This expression form folds the running prefix
-    * (collect_list over an unbounded-preceding frame) — O(n^2) work per
-    * group, fine for the reference's <=~70-frame groups. For long
-    * groups use [[emaScan]], a single-pass per-group scan.
-    */
-  def emaWindowed(c: Column, alpha: Double, w: WindowSpec): Column = {
-    val prefix = collect_list(c)
-      .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    foldEma(prefix, alpha)
-  }
-
-  /** Fold an ordered array into its final EMA value (adjust=False). */
-  def foldEma(values: Column, alpha: Double): Column =
-    when(size(values) > lit(0),
-      aggregate(
-        slice(values, lit(2), greatest(size(values) - lit(1), lit(0))),
-        element_at(values, 1).cast("double"),
-        (acc, x) => lit(alpha) * x.cast("double") + lit(1.0 - alpha) * acc))
-      .otherwise(lit(null).cast("double"))
-
-  /** W5 scale path: one-pass EMA scan per group via flatMapGroups —
-    * linear in group size, constant state. `keyCols` partition, `ordCol`
-    * must be a deterministic total order within the group. Appends
-    * `outCol` to the frame. For very large groups prefer this over
-    * [[emaWindowed]].
-    *
-    * `ignoreNa` selects the pandas null semantics:
-    *  - true: a null carries the previous state unchanged
-    *    (`ewm(ignore_na=True)`).
-    *  - false (the pandas DEFAULT, used by the reference's
-    *    `ewm(alpha, adjust=False)`): a gap of g missing periods decays
-    *    the PREVIOUS mean's weight to (1−α)^(g+1) for the next blend,
-    *    and the weight resets after every valid observation (pandas
-    *    `old_wt = 1` when adjust=False):
-    *      y = ((1−α)^δ·y_prev + α·x) / ((1−α)^δ + α), δ = periods
-    *    since the last valid observation. Nulls emit y unchanged.
-    *    Identical to ignore_na=True on null-free input (δ=1 gives the
-    *    plain recursion).
-    */
-  def emaScan(df: DataFrame, keyCols: Seq[String], ordCols: Seq[String],
-              valueCol: String, alpha: Double, outCol: String,
-              ignoreNa: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-
-    val outSchema = StructType(df.schema.fields :+ StructField(outCol, DoubleType))
-    implicit val enc: Encoder[Row] = Encoders.row(outSchema)
-    val keyIdx = keyCols.map(df.schema.fieldIndex)
-    val ordIdx = ordCols.map(df.schema.fieldIndex)
-    val valIdx = df.schema.fieldIndex(valueCol)
-
-    df.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ ordCols).map(col): _*)
-      .mapPartitions { it =>
-        var curKey: Seq[Any] = null
-        var ema: Double = Double.NaN
-        var delta: Long = 1L
-        var has = false
-        it.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; has = false; delta = 1L }
-          val isNull = r.isNullAt(valIdx)
-          val out: Any =
-            if (ignoreNa) {
-              if (isNull) { if (has) ema else null }
-              else {
-                val v = r.getDouble(valIdx)
-                ema = if (has) alpha * v + (1 - alpha) * ema else v
-                has = true
-                ema
-              }
-            } else {
-              if (isNull) {
-                if (has) { delta += 1; ema } else null
-              } else {
-                val v = r.getDouble(valIdx)
-                if (has) {
-                  val w = math.pow(1 - alpha, delta.toDouble)
-                  ema = (w * ema + alpha * v) / (w + alpha)
-                } else { ema = v; has = true }
-                delta = 1L
-                ema
-              }
-            }
-          Row.fromSeq(r.toSeq :+ out)
-        }
-      }(enc)
-  }
 
   /** W6 / O2: top-K rows per group with pandas rank(method="first")
     * tie-breaking — row_number over a deterministic total order. */

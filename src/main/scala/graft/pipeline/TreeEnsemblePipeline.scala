@@ -32,28 +32,15 @@ object TreeEnsemblePipeline {
   case class Result(oof: DataFrame, rmsePhysics: Double,
                     rmseEnsemble: Double, weights: Seq[Double])
 
-  /** Feature block over the last observed frame per entity. `last` is
-    * cached: the GNN branch derives from it AND joins back onto it —
-    * without the cache the scan+group-tail lineage runs twice. Returns
-    * (features, cachedLast); the caller owns `cachedLast.unpersist()`
-    * once the features' terminal action has run. */
-  def lastWithFeaturesTracked(frames: DataFrame): (DataFrame, DataFrame) = {
-    val last = Temporal.groupTail(frames,
+  /** Last observed frame per entity with its scalar features. */
+  private def lastFrames(frames: DataFrame): DataFrame =
+    Temporal.groupTail(frames,
       Seq(col("game_id"), col("play_id"), col("nfl_id")), Seq(col("frame_id")))
       .withColumn("vx", Scalars.velocityX(col("s"), col("dir")))
       .withColumn("vy", Scalars.velocityY(col("s"), col("dir")))
       .withColumn("dist_center", Scalars.distFromCenter(col("x"), col("y")))
       .withColumn("dist_sideline", Scalars.distFromSideline(col("y")))
       .withColumn("is_offense", Scalars.oneHot(col("player_side"), "Offense"))
-      .cache()
-    val gnn = Spatial.gnnLiteFeatures(last)
-    val feats = last
-      .join(gnn, Seq("game_id", "play_id", "frame_id", "nfl_id"), "left")
-      .na.fill(0.0, Seq("gnn_w_speed", "gnn_mean_dist", "gnn_min_dist",
-        "gnn_d1", "gnn_d2", "gnn_d3"))
-      .na.fill(0, Seq("gnn_n_neighbors", "gnn_n_opp"))
-    (feats, last)
-  }
 
   val FeatureCols: Seq[String] = Seq(
     "x", "y", "s", "vx", "vy", "dist_center", "dist_sideline", "is_offense",
@@ -61,26 +48,36 @@ object TreeEnsemblePipeline {
     "gnn_d1", "delta_t")
 
   /** J1 + M7: training rows with physics baseline and residual targets.
-    * `truth` columns: game_id, play_id, nfl_id, frame_id_out, x_true, y_true. */
+    * `truth` columns: game_id, play_id, nfl_id, frame_id_out, x_true,
+    * y_true. Caches nothing: the caller's own cache or fit decides how
+    * often the group-tail lineage runs. */
   def trainingRows(frames: DataFrame, truth: DataFrame): DataFrame =
-    trainingRowsTracked(frames, truth)._1
+    trainingRowsFrom(lastFrames(frames), truth)
 
-  private def trainingRowsTracked(frames: DataFrame,
-                                  truth: DataFrame): (DataFrame, DataFrame) = {
-    val (last, lastCached) = lastWithFeaturesTracked(frames)
-    val rows = truth.join(last, Seq("game_id", "play_id", "nfl_id"), "left")
+  /** Training rows over `last` (see [[lastFrames]]): the GNN branch
+    * derives from `last` AND joins back onto it, so a caller that runs
+    * several jobs over the rows caches `last` first. */
+  private def trainingRowsFrom(last: DataFrame, truth: DataFrame): DataFrame = {
+    val gnn = Spatial.gnnLiteFeatures(last)
+    val feats = last
+      .join(gnn, Seq("game_id", "play_id", "frame_id", "nfl_id"), "left")
+      .na.fill(0.0, Seq("gnn_w_speed", "gnn_mean_dist", "gnn_min_dist",
+        "gnn_d1", "gnn_d2", "gnn_d3"))
+      .na.fill(0, Seq("gnn_n_neighbors", "gnn_n_opp"))
+    truth.join(feats, Seq("game_id", "play_id", "nfl_id"), "left")
       .withColumn("delta_t", col("frame_id_out").cast("double") / 10)
       .withColumn("phys_x", Scalars.clampX(col("x") + col("vx") * col("delta_t")))
       .withColumn("phys_y", Scalars.clampY(col("y") + col("vy") * col("delta_t")))
       .withColumn("res_x", col("x_true") - col("phys_x"))
       .withColumn("res_y", col("y_true") - col("phys_y"))
-    (rows, lastCached)
   }
 
   /** Full run: returns OOF predictions with `pred_x/pred_y` (ensemble)
     * and `phys_x/phys_y` (baseline) plus both RMSEs. */
   def run(frames: DataFrame, truth: DataFrame, cfg: Config = Config()): Result = {
-    val (trainRows, lastCached) = trainingRowsTracked(frames, truth)
+    // released below once the OOF table's jobs have run
+    val lastCached = lastFrames(frames).cache()
+    val trainRows = trainingRowsFrom(lastCached, truth)
     val rows = Folds.withFold(
       trainRows.na.drop(Seq("x_true", "y_true", "phys_x", "phys_y")),
       Seq("game_id", "play_id", "nfl_id"), cfg.k).cache()

@@ -1337,8 +1337,8 @@ object AggQ extends QueryModule {
         |FROM t""".stripMargin,
 
     "a28_benford" ->
-      """WITH d AS (SELECT CAST(substr(CAST(CAST(round(l_extendedprice * 100)
-        |    AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit FROM lineitem),
+      s"""WITH d AS (SELECT CAST(substr(CAST(${latticeSql("l_extendedprice", 100)}
+        |    AS VARCHAR), 1, 1) AS BIGINT) AS digit FROM lineitem),
         |c AS (SELECT digit, count(*)::BIGINT AS n FROM d GROUP BY digit)
         |SELECT digit, n,
         | CAST(n AS DOUBLE) / CAST(CAST(sum(n) OVER () AS BIGINT) AS DOUBLE) AS share
@@ -1972,10 +1972,10 @@ object AggQ extends QueryModule {
         |FROM lineitem, cuts""".stripMargin,
 
     "a18_corrmat" ->
-      """WITH t AS (SELECT l_suppkey,
+      s"""WITH t AS (SELECT l_suppkey,
         |  l_quantity::BIGINT AS x,
         |  floor(l_extendedprice)::BIGINT AS y,
-        |  round(l_discount * 100)::BIGINT AS z FROM lineitem),
+        |  ${latticeSql("l_discount", 100)} AS z FROM lineitem),
         |a AS (SELECT l_suppkey, count(*)::BIGINT AS n,
         |  sum(x)::BIGINT AS sx, sum(y)::BIGINT AS sy, sum(z)::BIGINT AS sz,
         |  sum(x*x)::BIGINT AS sxx, sum(x*y)::BIGINT AS sxy,

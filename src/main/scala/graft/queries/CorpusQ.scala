@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Text
+import graft.functions.Text.P
 import graft.operators.{Contamination, Dedup, Graph, Sampling}
 import Q._
 
@@ -343,19 +344,6 @@ object CorpusQ extends QueryModule {
   // Mirrors LlmQ's CTE builders over the pipeline's intermediate sets
   // (those constants are hard-wired to `FROM documents`; the pipeline
   // needs them over `keep1`).
-  private val P = Text.P
-  private def foldSql(e: String) =
-    s"""CASE WHEN length($e) > 0 THEN list_reduce(
-       | list_prepend(0::BIGINT, list_transform(range(1, length($e) + 1),
-       |   j -> ascii(substr($e, j::INT, 1))::BIGINT)),
-       | (a, b) -> (a * 31 + b) % $P) ELSE 0 END""".stripMargin
-  private val GramsSql =
-    s"""list_distinct(list_transform(
-       | CASE WHEN length(t) >= 3
-       |  THEN list_transform(range(1, length(t) - 1), i -> substr(t, i::INT, 3))
-       |  ELSE [] END,
-       | s -> list_reduce(list_transform(range(1, 4), j -> ascii(substr(s, j::INT, 1))::BIGINT),
-       |   (a, b) -> (a * 31 + b) % $P)))""".stripMargin
   private def slotSql(k: Int): String = {
     val (a, b) = Dedup.seeds(k)
     s"coalesce(list_min(list_transform(grams, h -> ($a::BIGINT * h + $b) % $P)), $P)"
@@ -417,7 +405,7 @@ object CorpusQ extends QueryModule {
          |GROUP BY gram ORDER BY n_docs DESC, gram LIMIT 20""".stripMargin,
 
     "t_bottomk" ->
-      s"""WITH p AS (SELECT doc_id, ${foldSql("t")} AS pri
+      s"""WITH p AS (SELECT doc_id, ${polyHashSql("t")} AS pri
          |  FROM (SELECT doc_id, $NormSql AS t FROM documents))
          |SELECT doc_id, pri FROM p ORDER BY pri, doc_id LIMIT 50""".stripMargin,
 
@@ -434,7 +422,7 @@ object CorpusQ extends QueryModule {
          | FROM counts, z),
          |norm AS (SELECT doc_id, lang, $NormSql AS t FROM documents)
          |SELECT doc_id, norm.lang, rate_ppm,
-         | (${foldSql("t")} % 1000000) < rate_ppm AS kept
+         | (${polyHashSql("t")} % 1000000) < rate_ppm AS kept
          |FROM norm JOIN rates ON norm.lang IS NOT DISTINCT FROM rates.lang""".stripMargin,
 
     "t_tfidf" ->
@@ -506,7 +494,7 @@ object CorpusQ extends QueryModule {
     "t_feathash" ->
       s"""WITH $TokCte,
          |e AS (SELECT doc_id, unnest(toks) AS token FROM tok),
-         |h AS (SELECT doc_id, (${foldSql("token")}) % 64 AS idx FROM e)
+         |h AS (SELECT doc_id, (${polyHashSql("token")}) % 64 AS idx FROM e)
          |SELECT doc_id, idx, count(*)::BIGINT AS cnt
          |FROM h GROUP BY doc_id, idx""".stripMargin,
 
@@ -604,8 +592,8 @@ object CorpusQ extends QueryModule {
          |SELECT doc_id, lang, n AS n_tokens,
          | round(least(1.0, n / 50.0) * (1.0 - (len_raw - len_norm)::DOUBLE / len_raw)
          |   * (0.5 + st::DOUBLE / n), 6) AS quality,
-         | CASE WHEN ${foldSql("t")} % 100 < 80 THEN 'train'
-         |      WHEN ${foldSql("t")} % 100 < 90 THEN 'val'
+         | CASE WHEN ${polyHashSql("t")} % 100 < 80 THEN 'train'
+         |      WHEN ${polyHashSql("t")} % 100 < 90 THEN 'val'
          |      ELSE 'test' END AS split
          |FROM keep1
          |WHERE doc_id NOT IN (SELECT doc_b FROM ver)""".stripMargin)

@@ -135,7 +135,7 @@ object Curation10Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  import LlmQ.{GramsSql, slotSql}
+  import LlmQ.slotSql
 
   val oracle: Map[String, String] = Map(
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.functions.Text.P
 import Q._
 
 /** Round-5 batch 17: Kendall rank correlation and association-rule
@@ -86,7 +87,6 @@ object Curation17Q extends QueryModule {
     // itself is engine-exact; the accuracy gate is the a30-style
     // integer-decided ±25% band vs the exact count.
     "a57_kmv" -> ((s, dir) => {
-      val P = graft.functions.Text.P
       val h = pmod(col("l_partkey") * 2654435761L + 104729L, lit(P))
       val keys = lineitem(s, dir)
         .select(col("l_returnflag"), col("l_partkey")).distinct()
@@ -170,7 +170,6 @@ object Curation17Q extends QueryModule {
         |FROM g""".stripMargin,
 
     "a57_kmv" -> {
-      val P = graft.functions.Text.P
       s"""WITH keys AS (SELECT DISTINCT l_returnflag, l_partkey FROM lineitem),
          |hh AS (SELECT l_returnflag, l_partkey,
          |  (l_partkey * 2654435761 + 104729) % $P AS h FROM keys),

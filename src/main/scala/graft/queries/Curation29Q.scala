@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.functions.Text.P
 import Q._
 
 /** Round-7 batch 29: label-propagation communities, deterministic
@@ -22,8 +23,6 @@ object Curation29Q extends QueryModule {
     * tested SF; a 100 TB deployment with wider ids bumps this to the
     * next power of two (the draw still fits: P < 2^30). */
   private val WalkB = 1L << 31
-
-  private val P = graft.functions.Text.P
 
   /** 3 synchronous LPA rounds over a symmetric edge list `sym`
     * (a, b); returns (node, lbl). Shared with g13_modularity.

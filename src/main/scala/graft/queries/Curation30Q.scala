@@ -186,8 +186,6 @@ object Curation30Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private val P = Text.P
-
   val oracle: Map[String, String] = Map(
 
     "g13_modularity" ->

@@ -286,7 +286,7 @@ object Curation31Q extends QueryModule {
 
     "s_rrf" ->
       s"""WITH p AS (SELECT vec_id, embedding,
-         |  list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT)
+         |  list_transform(embedding, x -> ${latticeSql("x::DOUBLE", 1000)})
          |    AS q FROM embeddings),
          |qv AS (SELECT embedding AS qemb, q AS qq FROM p WHERE vec_id = 0),
          |sc AS (SELECT vec_id,
@@ -304,7 +304,7 @@ object Curation31Q extends QueryModule {
 
     "s_kcenter" ->
       s"""WITH p AS (SELECT vec_id,
-         |  list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT)
+         |  list_transform(embedding, x -> ${latticeSql("x::DOUBLE", 1000)})
          |    AS q FROM embeddings),
          |c0 AS (SELECT q AS q0 FROM p WHERE vec_id = 0),
          |${(1 to 7).map(kcRound).mkString(",\n")},

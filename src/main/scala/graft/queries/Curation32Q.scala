@@ -220,7 +220,7 @@ object Curation32Q extends QueryModule {
     val sims =
       if (r == 1) "0"
       else (1 until r).map(i =>
-        s"round(${LlmQ.cosSql("p.embedding", s"m$i.emb$i")} * 1000000)::BIGINT")
+        latticeSql(LlmQ.cosSql("p.embedding", s"m$i.emb$i"), 1000000))
         .mkString("greatest(", ", ", ")")
     val joins = (1 until r).map(i => s"CROSS JOIN m$i").mkString(" ")
     val notSel =
@@ -297,7 +297,7 @@ object Curation32Q extends QueryModule {
 
     "s_mmr" ->
       s"""WITH sc AS (SELECT e.vec_id, e.embedding,
-         |  round(${LlmQ.cosSql("e.embedding", "q.embedding")} * 1000000)::BIGINT
+         |  ${latticeSql(LlmQ.cosSql("e.embedding", "q.embedding"), 1000000)}
          |    AS rel6
          | FROM embeddings e CROSS JOIN
          |  (SELECT embedding FROM embeddings WHERE vec_id = 0) q

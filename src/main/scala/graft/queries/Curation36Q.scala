@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.functions.Text.P
 import graft.operators.DistRank
 import Q._
 
@@ -15,8 +16,6 @@ import Q._
   * Cramer's RULE, a different thing).
   */
 object Curation36Q extends QueryModule {
-
-  private val P = Text.P
 
   val queries: Map[String, QueryFn] = Map(
 

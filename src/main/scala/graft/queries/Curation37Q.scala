@@ -16,7 +16,6 @@ import Q._
   */
 object Curation37Q extends QueryModule {
 
-  private val P = Text.P
   private val NPerm = 100
 
   /** Per-permutation lattice assignment: row `event_id` joins arm A
@@ -172,13 +171,6 @@ object Curation37Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  /** Poly-hash fold of a string expression (Text.polyHash mirror). */
-  private def hashSql(e: String) =
-    s"""CASE WHEN length($e) > 0 THEN list_reduce(
-       | list_prepend(0::BIGINT, list_transform(range(1, length($e) + 1),
-       |   j -> ascii(substr($e, j::INT, 1))::BIGINT)),
-       | (a, b) -> (a * 31 + b) % $P) ELSE 0 END""".stripMargin
-
   val oracle: Map[String, String] = Map(
 
     "t_textrank" ->
@@ -193,16 +185,16 @@ object Curation37Q extends QueryModule {
          | FROM kept a JOIN kept b ON a.doc_id = b.doc_id
          |  AND a.term < b.term
          | GROUP BY 1, 2 HAVING count(*) >= 5),
-         |e AS (SELECT ${hashSql("t1")} AS src, ${hashSql("t2")} AS dst
+         |e AS (SELECT ${polyHashSql("t1")} AS src, ${polyHashSql("t2")} AS dst
          |  FROM prs
-         | UNION ALL SELECT ${hashSql("t2")}, ${hashSql("t1")} FROM prs),
+         | UNION ALL SELECT ${polyHashSql("t2")}, ${polyHashSql("t1")} FROM prs),
          |deg AS (SELECT src, count(*)::BIGINT AS deg FROM e GROUP BY src),
          |nodes AS (SELECT DISTINCT src AS node FROM e),
          |r0 AS (SELECT node, 1000000::BIGINT AS r FROM nodes),
          |${GraphQ.rankRounds(3)},
          |voc AS (SELECT DISTINCT term FROM
          |  (SELECT t1 AS term FROM prs UNION ALL SELECT t2 FROM prs)),
-         |vh AS (SELECT term, ${hashSql("term")} AS node FROM voc)
+         |vh AS (SELECT term, ${polyHashSql("term")} AS node FROM voc)
          |SELECT term, r AS rank6 FROM vh JOIN r3 USING (node)
          |ORDER BY rank6 DESC, term LIMIT 50""".stripMargin,
 
@@ -262,7 +254,7 @@ object Curation37Q extends QueryModule {
          |  -2.0 * (CASE WHEN u >= 0.5 THEN 1.0 ELSE -1.0 END)
          |    * ln(1.0 - 2.0 * abs(u - 0.5)) AS noise
          | FROM (SELECT source, true_count,
-         |   (((${hashSql("source")} * 1103515245 + 12345) % 1000000)
+         |   (((${polyHashSql("source")} * 1103515245 + 12345) % 1000000)
          |     ::DOUBLE + 0.5) / 1000000.0 AS u
          |  FROM g))
          |SELECT source, true_count, round(noise, 6) AS noise,

@@ -254,8 +254,8 @@ object Curation39Q extends QueryModule {
          | FROM asg WHERE vec_id < 5),
          |cand AS (SELECT q.qid, a.vec_id, a.embedding, q.qemb,
          |  list_sum(list_transform(range(1, len(a.embedding) + 1),
-         |   i -> round(a.embedding[i]::DOUBLE * 1000)::BIGINT
-         |      * round(q.qemb[i]::DOUBLE * 1000)::BIGINT))::BIGINT AS dot6
+         |   i -> ${latticeSql("a.embedding[i]::DOUBLE", 1000)}
+         |      * ${latticeSql("q.qemb[i]::DOUBLE", 1000)}))::BIGINT AS dot6
          | FROM asg a JOIN q ON a.cid = q.qcid AND a.vec_id <> q.qid),
          |coarse AS (SELECT qid, vec_id, embedding, qemb FROM (
          |  SELECT *, row_number() OVER (PARTITION BY qid

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.functions.Text.P
 import Q._
 
 /** Round-9 batch 64: theta-sketch set operations (the mergeable
@@ -14,7 +15,6 @@ import Q._
   */
 object Curation64Q extends QueryModule {
 
-  private val P = graft.functions.Text.P // 1e9+7 hash lattice
   private val K = 64
 
   val queries: Map[String, QueryFn] = Map(

@@ -119,7 +119,7 @@ object Curation66Q extends QueryModule {
     "d_incremental" -> {
       val sigCte =
         s"""norm AS (SELECT doc_id, $NormSql AS t FROM documents),
-           |g AS (SELECT doc_id, ${LlmQ.GramsSql} AS grams FROM norm),
+           |g AS (SELECT doc_id, $GramsSql AS grams FROM norm),
            |sig AS (SELECT doc_id, ${(0 until 12).map(k =>
               s"${LlmQ.slotSql(k)} AS m$k").mkString(", ")}
            | FROM g WHERE len(grams) > 0)""".stripMargin

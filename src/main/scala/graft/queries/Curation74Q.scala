@@ -144,13 +144,6 @@ object Curation74Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private val P = graft.functions.Text.P
-  private val FoldSql =
-    s"""CASE WHEN length(t) > 0 THEN list_reduce(
-       | list_prepend(0::BIGINT, list_transform(range(1, length(t) + 1),
-       |   j -> ascii(substr(t, j::INT, 1))::BIGINT)),
-       | (a, b) -> (a * 31 + b) % $P) ELSE 0 END""".stripMargin
-
   val oracle: Map[String, String] = Map(
 
     "j27_dl_entity" ->
@@ -201,7 +194,7 @@ object Curation74Q extends QueryModule {
     "d_bloom_handshake" ->
       s"""WITH d AS (SELECT doc_id, doc_id % 4 AS shard, h,
          |  h % 65536 AS p1, (h * 2654435761) % 65536 AS p2
-         | FROM (SELECT doc_id, $FoldSql AS h
+         | FROM (SELECT doc_id, ${polyHashSql("t")} AS h
          |   FROM (SELECT doc_id, $NormSql AS t FROM documents))),
          |bloom AS MATERIALIZED (
          | SELECT DISTINCT bshard, pos FROM (

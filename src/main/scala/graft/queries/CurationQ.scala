@@ -454,12 +454,6 @@ object CurationQ extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private val P = Text.P
-  private val FoldSql =
-    s"""CASE WHEN length(t) > 0 THEN list_reduce(
-       | list_prepend(0::BIGINT, list_transform(range(1, length(t) + 1),
-       |   j -> ascii(substr(t, j::INT, 1))::BIGINT)),
-       | (a, b) -> (a * 31 + b) % $P) ELSE 0 END""".stripMargin
   private val Gram3Sql =
     """list_distinct(CASE WHEN length(t) >= 3
       | THEN list_transform(range(1, length(t) - 1), i -> substr(t, i::INT, 3))
@@ -468,7 +462,7 @@ object CurationQ extends QueryModule {
   val oracle: Map[String, String] = Map(
 
     "t_negsample" ->
-      s"""WITH d AS (SELECT doc_id, $FoldSql AS h
+      s"""WITH d AS (SELECT doc_id, ${polyHashSql("t")} AS h
          |  FROM (SELECT doc_id, $NormSql AS t FROM documents)),
          |ring AS (SELECT doc_id, h, h % 8 AS shard,
          |  row_number() OVER (PARTITION BY h % 8 ORDER BY h, doc_id) AS rn,

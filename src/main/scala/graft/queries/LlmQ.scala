@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{Text, Vectors}
+import graft.functions.Text.P
 import graft.operators.{Dedup, Multimodal, Sampling, Similarity}
 import Q._
 
@@ -752,15 +753,7 @@ object LlmQ extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private val P = Text.P
   private def inList(ws: Seq[String]) = ws.mkString("['", "', '", "']")
-  /** Poly-hash fold of a string expression `e` (init 0, mult m). */
-  private def foldSql(e: String, m: Long = 31L) =
-    s"""CASE WHEN length($e) > 0 THEN list_reduce(
-       | list_prepend(0::BIGINT, list_transform(range(1, length($e) + 1),
-       |   j -> ascii(substr($e, j::INT, 1))::BIGINT)),
-       | (a, b) -> (a * $m + b) % $P) ELSE 0 END""".stripMargin
-  /** Distinct char-3-gram poly-hashes of normalized text `t`. */
   /** Winnow fingerprint table as DuckDB CTEs (mirrors
     * Dedup.winnowFingerprints: packed-key rolling min, w=4, char
     * 5-grams); terminal CTE `fp` = (doc_id, pos, fingerprint). */
@@ -785,13 +778,6 @@ object LlmQ extends QueryModule {
        | (sel // 1048576)::BIGINT AS fingerprint
        |FROM ws)""".stripMargin
 
-  private[queries] val GramsSql =
-    s"""list_distinct(list_transform(
-       | CASE WHEN length(t) >= 3
-       |  THEN list_transform(range(1, length(t) - 1), i -> substr(t, i::INT, 3))
-       |  ELSE [] END,
-       | s -> list_reduce(list_transform(range(1, 4), j -> ascii(substr(s, j::INT, 1))::BIGINT),
-       |   (a, b) -> (a * 31 + b) % $P)))""".stripMargin
   /** MinHash slot k from a `grams` list column. */
   /** Analytic dHash oracle: reproduces decodeImageDHash's 9×8 box
     * downsample and cross-multiplied gradient-sign bits straight from
@@ -1054,7 +1040,7 @@ object LlmQ extends QueryModule {
          |FROM c""".stripMargin,
 
     "t_fingerprint" ->
-      s"""SELECT doc_id, ${foldSql("t")} AS fingerprint
+      s"""SELECT doc_id, ${polyHashSql("t")} AS fingerprint
          |FROM (SELECT doc_id, $NormSql AS t FROM documents)""".stripMargin,
 
     "t_editdist" ->
@@ -1087,7 +1073,7 @@ object LlmQ extends QueryModule {
          |  array_to_string(flatten(list(piece ORDER BY cum_before)), ' ') AS t
          | FROM p GROUP BY lang, chunk_id)
          |SELECT lang, chunk_id, n_docs, n_tokens,
-         | ${foldSql("t")} AS content_fp
+         | ${polyHashSql("t")} AS content_fp
          |FROM g""".stripMargin,
 
     "t_repetition" ->
@@ -1117,7 +1103,7 @@ object LlmQ extends QueryModule {
         |FROM l""".stripMargin,
 
     "t_split" ->
-      s"""WITH f AS (SELECT doc_id, ${foldSql("t")} AS fp
+      s"""WITH f AS (SELECT doc_id, ${polyHashSql("t")} AS fp
          | FROM (SELECT doc_id, $NormSql AS t FROM documents))
          |SELECT doc_id, fp % 100 AS bucket,
          | CASE WHEN fp % 100 < 80 THEN 'train'
@@ -1152,14 +1138,14 @@ object LlmQ extends QueryModule {
         |FROM x""".stripMargin,
 
     "t_shard" ->
-      s"""WITH f AS (SELECT doc_id, ${foldSql("t")} AS fp
+      s"""WITH f AS (SELECT doc_id, ${polyHashSql("t")} AS fp
          | FROM (SELECT doc_id, $NormSql AS t FROM documents))
          |SELECT doc_id, fp % 16 AS shard,
          | row_number() OVER (PARTITION BY fp % 16 ORDER BY fp, doc_id) - 1 AS pos
          |FROM f""".stripMargin,
 
     "t_stratified" ->
-      s"""WITH f AS (SELECT doc_id, lang, ${foldSql("t")} AS fp
+      s"""WITH f AS (SELECT doc_id, lang, ${polyHashSql("t")} AS fp
          | FROM (SELECT doc_id, lang, $NormSql AS t FROM documents)),
          |r AS (SELECT doc_id, lang, fp,
          |  row_number() OVER (PARTITION BY lang ORDER BY fp, doc_id) AS rn,
@@ -1243,7 +1229,7 @@ object LlmQ extends QueryModule {
 
     "mm_framesample" ->
       s"""WITH n AS (SELECT doc_id, $NormSql AS t FROM documents),
-         |h AS (SELECT doc_id, 1 + ${foldSql("t")} % 240 AS n_frames FROM n)
+         |h AS (SELECT doc_id, 1 + ${polyHashSql("t")} % 240 AS n_frames FROM n)
          |SELECT doc_id, CAST(n_frames AS BIGINT) AS n_frames,
          | array_to_string(list_filter(range(1, n_frames + 1),
          |   i -> (i - 1) % CAST(ceil(n_frames / 8.0) AS BIGINT) = 0), ',') AS sampled
@@ -1251,7 +1237,7 @@ object LlmQ extends QueryModule {
 
     "mm_resize" ->
       s"""WITH n AS (SELECT doc_id, $NormSql AS t FROM documents),
-         |h AS (SELECT doc_id, ${foldSql("t")} AS hv FROM n),
+         |h AS (SELECT doc_id, ${polyHashSql("t")} AS hv FROM n),
          |d AS (SELECT doc_id, 64 + hv % 1920 AS width, 64 + (hv // 7) % 1080 AS height FROM h)
          |SELECT doc_id,
          | CAST(width AS BIGINT) AS width, CAST(height AS BIGINT) AS height,

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Text
 import graft.io.Tables
 
 /** Shared helpers for the registered correctness/bench queries.
@@ -65,6 +66,22 @@ object Q {
        | list_filter(string_split($NormSql, ' '),
        |   w -> length(w) > 0) AS toks
        | FROM documents)""".stripMargin
+
+  /** Oracle mirror of [[Text.polyHash]] over the SQL string `e`:
+    * fold(acc·31 + ascii code) mod P from 0; 0 for the empty string. */
+  def polyHashSql(e: String): String =
+    s"""CASE WHEN length($e) > 0 THEN list_reduce(
+       | list_prepend(0::BIGINT, list_transform(range(1, length($e) + 1),
+       |   j -> ascii(substr($e, j::INT, 1))::BIGINT)),
+       | (a, b) -> (a * 31 + b) % ${Text.P}) ELSE 0 END""".stripMargin
+  /** Distinct char-3-gram poly-hashes of a normalized column `t`. */
+  val GramsSql =
+    s"""list_distinct(list_transform(
+       | CASE WHEN length(t) >= 3
+       |  THEN list_transform(range(1, length(t) - 1), i -> substr(t, i::INT, 3))
+       |  ELSE [] END,
+       | s -> list_reduce(list_transform(range(1, 4), j -> ascii(substr(s, j::INT, 1))::BIGINT),
+       |   (a, b) -> (a * 31 + b) % ${Text.P})))""".stripMargin
 
   private val ivfKCache =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.EwmAvg
 import graft.operators.Temporal
 import Q._
 
@@ -38,6 +39,22 @@ object TemporalQ extends QueryModule {
       case None => s.conf.unset(key)
     }
   }
+
+  /** W5 (w5_ema and w5_ema_native): pandas `ewm(0.5, adjust=False)`
+    * per user in (ts, event_id) order through the native window
+    * function, one ordered pass per partition. alpha = 0.5 is in the
+    * reference's alpha set, and multiplying by a power of two is EXACT,
+    * so the recursion is bitwise identical across engines; non-dyadic
+    * alphas drift apart under DuckDB's fused multiply-add and are
+    * property-tested in GraftProps against the sequential fold
+    * instead. No rounding: with the dyadic alpha the raw doubles match,
+    * while round() itself disagrees between engines on tie-looking
+    * values (DuckDB rounds the shortest decimal repr, Spark the exact
+    * one). */
+  private def ema05(s: org.apache.spark.sql.SparkSession, dir: String) =
+    events(s, dir).select(col("event_id"),
+      EwmAvg.ewmAvg(col("value"), 0.5, Seq(col("user_id")),
+        Seq(col("ts"), col("event_id"))).as("ema"))
 
   val queries: Map[String, QueryFn] = Map(
     "w1_lag" -> ((s, dir) => {
@@ -145,8 +162,8 @@ object TemporalQ extends QueryModule {
       val entity = Seq(col("user_id"))
       val ord = Seq(col("ts"), col("event_id"))
       val e = events(s, dir).withColumn("v2", col("value") * col("value"))
-      val m = graft.functions.EwmAvg.ewmAvg(col("value"), 0.5, entity, ord)
-      val m2 = graft.functions.EwmAvg.ewmAvg(col("v2"), 0.5, entity, ord)
+      val m = EwmAvg.ewmAvg(col("value"), 0.5, entity, ord)
+      val m2 = EwmAvg.ewmAvg(col("v2"), 0.5, entity, ord)
       e.select(col("event_id"), m.as("ewm_mean"), (m2 - m * m).as("ewm_var"))
     }),
 
@@ -162,7 +179,7 @@ object TemporalQ extends QueryModule {
       val entity = Seq(col("user_id"))
       val ord = Seq(col("ts"), col("event_id"))
       def ewm(c: org.apache.spark.sql.Column) =
-        graft.functions.EwmAvg.ewmAvg(c, 0.5, entity, ord)
+        EwmAvg.ewmAvg(c, 0.5, entity, ord)
       val e = events(s, dir)
         .withColumn("y", ((col("event_id") * 13) % 89).cast("double"))
       val mx = ewm(col("value")); val my = ewm(col("y"))
@@ -385,69 +402,34 @@ object TemporalQ extends QueryModule {
         Temporal.delta2(col("value"), ww).as("d2"))
     }),
 
-    "w5_ema" -> ((s, dir) => {
-      // Scale path: linear one-pass per-group scan (emaScan), not the
-      // O(n^2) windowed fold. Cross-checked against emaWindowed in the
-      // test suite.
-      Temporal.emaScan(
-        events(s, dir).select("event_id", "user_id", "ts", "value"),
-        // alpha = 0.5 (in the reference's alpha set): multiplying by
-        // a power of two is EXACT, so the recursion is bitwise
-        // identical across engines — non-dyadic alphas drift apart
-        // under DuckDB's fused multiply-add and no rounding is safe
-        // for a recursion. Other alphas are property-tested in
-        // GraftProps against the sequential fold.
-        Seq("user_id"), Seq("ts", "event_id"), "value", 0.5, "ema")
-        // No rounding: with the dyadic alpha the raw doubles are
-        // bitwise identical across engines, while round() itself
-        // disagrees between engines on tie-looking values (DuckDB
-        // rounds the shortest decimal repr, Spark the exact one).
-        .select(col("event_id"), col("ema"))
-    }),
-
-    "w5_ema_native" -> ((s, dir) => {
-      // The custom Catalyst AggregateWindowFunction: one ordered pass
-      // per partition inside the window engine (no O(n^2) fold, no
-      // mapPartitions row juggling) — the idiomatic Spark form.
-      events(s, dir).select(
-        col("event_id"),
-        graft.functions.EwmAvg.ewmAvg(col("value"), 0.5,
-          Seq(col("user_id")), Seq(col("ts"), col("event_id"))).as("ema"))
-    }),
+    "w5_ema" -> ((s, dir) => ema05(s, dir)),
+    "w5_ema_native" -> ((s, dir) => ema05(s, dir)),
 
     // W5 with the pandas DEFAULT null semantics (ignore_na=False, what
     // the reference's ewm(alpha, adjust=False) actually does): nulls
-    // (masked error events) decay older weights by absolute position
-    // via the num/den recursion. alpha=0.5 keeps every product dyadic
-    // and n/d divides identical operands — raw doubles hash-match.
+    // (masked error events) decay older weights by absolute position.
+    // alpha=0.5 keeps every weight dyadic and the blend divides
+    // identical operands — raw doubles hash-match.
     "w5_ema_nafalse" -> ((s, dir) => {
-      val masked = events(s, dir).select(
-        col("event_id"), col("user_id"), col("ts"),
-        when(col("event_type") === "error", lit(null).cast("double"))
-          .otherwise(col("value")).as("mv"))
-      Temporal.emaScan(masked, Seq("user_id"), Seq("ts", "event_id"),
-        "mv", 0.5, "ema_nf", ignoreNa = false)
-        .select(col("event_id"), col("ema_nf"))
+      val mv = when(col("event_type") === "error", lit(null).cast("double"))
+        .otherwise(col("value"))
+      events(s, dir).select(col("event_id"),
+        EwmAvg.ewmAvg(mv, 0.5, Seq(col("user_id")),
+          Seq(col("ts"), col("event_id")), ignoreNa = false).as("ema_nf"))
     }),
 
-    "w5_ema_75" -> ((s, dir) => {
-      // Dyadic-alpha coverage beyond 0.5: 0.75 = 3/4 and 0.25 = 1/4
-      // are exact in binary, so both recursions stay bitwise identical
-      // across engines — they bracket the reference's {0.3, 0.5, 0.7}
-      // set (`main_mps.py:231-240`) whose non-dyadic members are
-      // property-tested in GraftProps instead.
-      Temporal.emaScan(
-        events(s, dir).select("event_id", "user_id", "ts", "value"),
-        Seq("user_id"), Seq("ts", "event_id"), "value", 0.75, "ema75")
-        .select(col("event_id"), col("ema75"))
-    }),
+    // Dyadic-alpha coverage beyond 0.5: 0.75 = 3/4 and 0.25 = 1/4 are
+    // exact in binary, so both recursions stay bitwise identical across
+    // engines — they bracket the reference's {0.3, 0.5, 0.7} set
+    // (`main_mps.py:231-240`) whose non-dyadic members are
+    // property-tested in GraftProps instead.
+    "w5_ema_75" -> ((s, dir) => events(s, dir).select(col("event_id"),
+      EwmAvg.ewmAvg(col("value"), 0.75, Seq(col("user_id")),
+        Seq(col("ts"), col("event_id"))).as("ema75"))),
 
-    "w5_ema_25" -> ((s, dir) => {
-      events(s, dir).select(
-        col("event_id"),
-        graft.functions.EwmAvg.ewmAvg(col("value"), 0.25,
-          Seq(col("user_id")), Seq(col("ts"), col("event_id"))).as("ema25"))
-    }),
+    "w5_ema_25" -> ((s, dir) => events(s, dir).select(col("event_id"),
+      EwmAvg.ewmAvg(col("value"), 0.25, Seq(col("user_id")),
+        Seq(col("ts"), col("event_id"))).as("ema25"))),
 
     // W5/streaming: the SAME EMA recursion run through Structured
     // Streaming — file-source read of the events parquet (no
@@ -1296,6 +1278,12 @@ object TemporalQ extends QueryModule {
   }
 
   private val over = "OVER (PARTITION BY user_id ORDER BY ts, event_id"
+  /** Oracle of [[ema05]] and of its streaming twin w10_stream_ema. */
+  private val Ema05Sql =
+    s"""SELECT event_id,
+       | list_reduce(list(value) $over ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+       |   (acc, x) -> 0.5 * x + 0.5 * acc) AS ema
+       |FROM events""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "a34_decompose" ->
@@ -1576,17 +1564,9 @@ object TemporalQ extends QueryModule {
     "w4_delta2" ->
       s"SELECT event_id, value - 2 * lag(value, 1) $over) + lag(value, 2) $over) AS d2 FROM events",
 
-    "w5_ema" ->
-      s"""SELECT event_id,
-         | list_reduce(list(value) $over ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |   (acc, x) -> 0.5 * x + 0.5 * acc) AS ema
-         |FROM events""".stripMargin,
+    "w5_ema" -> Ema05Sql,
 
-    "w5_ema_native" ->
-      s"""SELECT event_id,
-         | list_reduce(list(value) $over ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |   (acc, x) -> 0.5 * x + 0.5 * acc) AS ema
-         |FROM events""".stripMargin,
+    "w5_ema_native" -> Ema05Sql,
 
     // NOTE: a struct-accumulator list_reduce formulation of this fold
     // returned DIFFERENT values run-to-run in DuckDB 1.0 (lambda +
@@ -1628,11 +1608,7 @@ object TemporalQ extends QueryModule {
          |   (acc, x) -> 0.25 * x + 0.75 * acc) AS ema25
          |FROM events""".stripMargin,
 
-    "w10_stream_ema" ->
-      s"""SELECT event_id,
-         | list_reduce(list(value) $over ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |   (acc, x) -> 0.5 * x + 0.5 * acc) AS ema
-         |FROM events""".stripMargin,
+    "w10_stream_ema" -> Ema05Sql,
 
     "w11_stream_roll" ->
       s"""SELECT event_id,

@@ -212,9 +212,9 @@ object StreamingTemporal {
   /** Streaming EMA (pandas ewm adjust=False, W5): y_t = a·x_t +
     * (1-a)·y_{t-1}, continued across micro-batches via GroupState.
     * Rows inside a batch are folded in (ts, id) order — the same total
-    * order as the batch scan's (ts, event_id) sort, so parity with
-    * [[graft.operators.Temporal.emaScan]] is exact provided events
-    * arrive in (or before) the micro-batch their successors do. */
+    * order as the batch window's (ts, event_id) order, so parity with
+    * [[graft.functions.EwmAvg]] is exact provided events arrive in (or
+    * before) the micro-batch their successors do. */
   def emaStream(ds: Dataset[Obs], alpha: Double): Dataset[EmaOut] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_.key)

@@ -60,9 +60,12 @@ class ContractSpec extends SparkSpec {
   }
 
   test("sources: the exact-integer lattice is spelled only in Q.scala") {
+    // Any operand, on one line: the Spark lift, the oracle's CAST (its
+    // AS may wrap onto the next margin line) and its `::` cast.
     val lattice = Seq(
-      """round\(col\("\w+"\) \* 10+\)\.cast\("long"\)""".r,
-      """CAST\(round\([^()]+ \* 10+\) AS (BIGINT|HUGEINT)\)""".r)
+      """round\([^\n]+? \* 10+\)\.cast\("long"\)""".r,
+      """CAST\(round\([^\n]+? \* 10+\)[\s|]*AS (BIGINT|HUGEINT)\)""".r,
+      """round\([^\n]+? \* 10+\)::(BIGINT|HUGEINT)""".r)
     val copies = for {
       (f, text) <- sources if f.getName != "Q.scala"
       re <- lattice

@@ -130,26 +130,46 @@ object GraftProps extends Properties("graft") {
         }
     }
 
-  property("emaScan output equals the sequential fold, any group sizes") =
-    forAll(Gen.listOfN(3, Gen.chooseNum(1, 15)),
-      Gen.chooseNum(0.05, 0.95)) { (sizes, alpha) =>
-      val rows = sizes.zipWithIndex.flatMap { case (n, g) =>
-        (0 until n).map(t => (s"g$g", t, (g * 31 + t * 7 % 13) * 1.0))
+  /** Pure-Scala sequential fold of pandas `ewm(alpha, adjust=False)`,
+    * the reference for [[graft.functions.EwmAvg]]: the first valid
+    * value starts the state and is emitted as is, a null emits the
+    * state (null before the first valid value); with `ignoreNa = false`
+    * each null also decays the old state's weight by (1 - alpha), and
+    * the weight resets after every valid value. */
+  private def ewmFold(xs: Seq[Option[Double]], alpha: Double,
+                      ignoreNa: Boolean): Seq[Option[Double]] = {
+    var y = Option.empty[Double]
+    var w = 1 - alpha
+    xs.map { x =>
+      (x, y) match {
+        case (None, Some(_)) => if (!ignoreNa) w *= 1 - alpha
+        case (Some(v), None) => y = Some(v)
+        case (Some(v), Some(e)) =>
+          y = Some(if (ignoreNa) alpha * v + (1 - alpha) * e
+                   else (w * e + alpha * v) / (w + alpha))
+          w = 1 - alpha
+        case (None, None) =>
+      }
+      y
+    }
+  }
+
+  property("EwmAvg equals the sequential fold in both null modes, groups with nulls") =
+    forAll(Gen.listOfN(3, Gen.listOfN(12, Gen.option(Gen.chooseNum(-50.0, 50.0)))),
+      Gen.chooseNum(0.05, 0.95), Gen.oneOf(true, false)) { (groups, alpha, ignoreNa) =>
+      val rows = groups.zipWithIndex.flatMap { case (xs, g) =>
+        xs.zipWithIndex.map { case (x, t) => (s"g$g", t, x) }
       }
       rows.isEmpty || {
-        val got = Temporal.emaScan(rows.toDF("k", "t", "v"),
-          Seq("k"), Seq("t"), "v", alpha, "ema")
-          .orderBy("k", "t").select("k", "ema").collect()
-          .groupBy(_.getString(0)).view.mapValues(_.map(_.getDouble(1)).toList)
-        val expect = rows.groupBy(_._1).view.mapValues { rs =>
-          rs.sortBy(_._2).map(_._3)
-            .scanLeft(Option.empty[Double]) {
-              case (None, x) => Some(x)
-              case (Some(e), x) => Some(alpha * x + (1 - alpha) * e)
-            }.flatten.toList
-        }
-        expect.forall { case (k, exp) =>
-          got(k).zip(exp).forall { case (a, b) => math.abs(a - b) < 1e-9 }
+        val got = rows.toDF("k", "t", "v")
+          .select(col("k"), col("t"), graft.functions.EwmAvg.ewmAvg(col("v"),
+            alpha, Seq(col("k")), Seq(col("t")), ignoreNa).as("e"))
+          .collect().map(r => ((r.getString(0), r.getInt(1)),
+            Option(r.get(2)).map(_.asInstanceOf[Double]))).toMap
+        rows.groupBy(_._1).forall { case (k, rs) =>
+          val sorted = rs.sortBy(_._2)
+          sorted.map(_._2).zip(ewmFold(sorted.map(_._3), alpha, ignoreNa))
+            .forall { case (t, want) => got((k, t)) == want }
         }
       }
     }

@@ -54,6 +54,16 @@ class PipelineSpec extends SparkSpec {
     assert(r.rmseEnsemble < r.rmsePhysics)
   }
 
+  test("trainingRows caches nothing: consuming it leaves no RDD persisted") {
+    val sc = spark.sparkContext
+    val f = frames
+    val baseline = sc.getPersistentRDDs.keySet.toSet
+    val n = TreeEnsemblePipeline.trainingRows(f, PipelineQ.syntheticTruth(f)).count()
+    assert(n > 0)
+    assert((sc.getPersistentRDDs.keySet.toSet -- baseline).isEmpty,
+      s"left persisted: ${sc.getPersistentRDDs.keySet.toSet -- baseline}")
+  }
+
   test("GbtPair save/load round-trip predicts identically") {
     val f = frames
     val rows = TreeEnsemblePipeline.trainingRows(f, PipelineQ.syntheticTruth(f))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.EwmAvg
 import graft.operators.Temporal
 
 /** Pandas-semantics checks for the temporal operators (SURVEY §5
@@ -66,25 +67,28 @@ class TemporalSpec extends SparkSpec {
     assert(approx(r(2).getDouble(3), 11.0 - 2 * 12.0 + 10.0))
   }
 
-  test("W5 emaScan matches the pandas adjust=False recursion by hand") {
+  private def ewm(df: org.apache.spark.sql.DataFrame, alpha: Double,
+                  ignoreNa: Boolean = true) =
+    df.select(col("k"), col("t"), EwmAvg.ewmAvg(col("v"), alpha,
+      Seq(col("k")), Seq(col("t")), ignoreNa).as("e")).orderBy("k", "t")
+
+  test("W5 EwmAvg matches the pandas adjust=False recursion by hand") {
     val a = 0.3
     val vals = List(12.0, 11.0, 15.0)
     val hand = vals.scanLeft(10.0)((acc, x) => a * x + (1 - a) * acc)
-    val r = Temporal.emaScan(ts, Seq("k"), Seq("t"), "v", a, "ema")
-      .filter(col("k") === "a").orderBy("t").select("ema").as[Double].collect()
-    hand.zip(r).foreach { case (h, g) => assert(approx(h, g)) }
+    val r = ewm(ts, a).filter(col("k") === "a").select("e").as[Double].collect()
+    assert(r.length == hand.length)
+    hand.zip(r).foreach { case (h, g) => assert(h == g) }
   }
 
-  test("W5 emaScan ignore_na=False matches pandas position-decay weights") {
+  test("W5 EwmAvg ignore_na=False matches pandas position-decay weights") {
     // pandas: s = pd.Series([1.0, None, 5.0]); s.ewm(alpha=0.5,
     // adjust=False).mean() -> [1.0, 1.0, 3.6666...]: weights of x0, x2
     // at t=2 are (1-a)^2 and a, normalized.
     val df = Seq(("a", 1, Some(1.0)), ("a", 2, None), ("a", 3, Some(5.0)),
       ("a", 4, Some(9.0)),
       ("b", 1, None), ("b", 2, Some(7.0))).toDF("k", "t", "v")
-    val r = Temporal.emaScan(df, Seq("k"), Seq("t"), "v", 0.5, "e",
-      ignoreNa = false)
-      .orderBy("k", "t").select("e").collect()
+    val r = ewm(df, 0.5, ignoreNa = false).select("e").collect()
     assert(approx(r(0).getDouble(0), 1.0))
     assert(approx(r(1).getDouble(0), 1.0))     // gap: mean unchanged
     val y3 = (0.25 * 1.0 + 0.5 * 5.0) / 0.75
@@ -95,53 +99,11 @@ class TemporalSpec extends SparkSpec {
     assert(approx(r(3).getDouble(0), 0.5 * y3 + 0.5 * 9.0))
     assert(r(4).isNullAt(0))                   // leading null
     assert(approx(r(5).getDouble(0), 7.0))
-    // on null-free input both semantics agree
+    // on null-free input both rules give the same bits
     val clean = Seq(("a", 1, 2.0), ("a", 2, 4.0), ("a", 3, 8.0)).toDF("k", "t", "v")
-    val y1 = Temporal.emaScan(clean, Seq("k"), Seq("t"), "v", 0.3, "e")
-      .orderBy("t").select("e").as[Double].collect()
-    val y2 = Temporal.emaScan(clean, Seq("k"), Seq("t"), "v", 0.3, "e",
-      ignoreNa = false).orderBy("t").select("e").as[Double].collect()
-    y1.zip(y2).foreach { case (p, q) => assert(approx(p, q)) }
-  }
-
-  test("W5 emaScan == emaWindowed on a randomized frame") {
-    val rng = new scala.util.Random(42)
-    val rows = for (k <- 0 until 7; t <- 0 until 40)
-      yield (s"g$k", t, rng.nextDouble() * 100)
-    val df = rows.toDF("k", "t", "v")
-    val scan = Temporal.emaScan(df, Seq("k"), Seq("t"), "v", 0.5, "ema")
-      .select("k", "t", "ema")
-    val win = df.select(col("k"), col("t"),
-      Temporal.emaWindowed(col("v"), 0.5,
-        Temporal.spec(Seq(col("k")), Seq(col("t")))).as("ema2"))
-    val joined = scan.join(win, Seq("k", "t"))
-      .select(abs(col("ema") - col("ema2")).as("d")).agg(max("d")).head()
-    assert(joined.getDouble(0) < 1e-9)
-  }
-
-  test("W5 emaScan: nulls carry the previous EMA (pandas ffill-like)") {
-    val df = Seq(("a", 1, Some(10.0)), ("a", 2, None), ("a", 3, Some(20.0)))
-      .toDF("k", "t", "v")
-    val r = Temporal.emaScan(df, Seq("k"), Seq("t"), "v", 0.5, "ema")
-      .orderBy("t").select("ema").collect()
-    assert(approx(r(0).getDouble(0), 10.0))
-    assert(approx(r(1).getDouble(0), 10.0))   // null input -> hold state
-    assert(approx(r(2).getDouble(0), 15.0))   // recursion continues
-  }
-
-  test("W5 native EwmAvg window function == emaScan on a randomized frame") {
-    val rng = new scala.util.Random(9)
-    val rows = (for (k <- 0 until 5; t <- 0 until 60)
-      yield (s"g$k", t, rng.nextDouble() * 50)).toList
-    val df = rows.toDF("k", "t", "v")
-    val native = df.select(col("k"), col("t"),
-      graft.functions.EwmAvg.ewmAvg(col("v"), 0.3,
-        Seq(col("k")), Seq(col("t"))).as("ema_n"))
-    val scan = Temporal.emaScan(df, Seq("k"), Seq("t"), "v", 0.3, "ema_s")
-      .select("k", "t", "ema_s")
-    val d = native.join(scan, Seq("k", "t"))
-      .agg(max(abs(col("ema_n") - col("ema_s")))).head().getDouble(0)
-    assert(d < 1e-12)
+    val y1 = ewm(clean, 0.3).select("e").as[Double].collect()
+    val y2 = ewm(clean, 0.3, ignoreNa = false).select("e").as[Double].collect()
+    assert(y1.toSeq == y2.toSeq)
   }
 
   test("W5 native EwmAvg: null inputs carry previous state, null head") {

@@ -21,16 +21,18 @@ query, after masking what differs between two runs of one commit:
 expression ids (#123), JVM lambda class names, object and array
 identities (TopKAgg@272979b4, [J@1f2e3d), ML uids
 (VectorAssembler_0123456789ab), the random suffix of a temporary
-directory (/tmp/graft_text2688608093) and the source line of an RDD's
+directory (/tmp/graft_text2688608093), the source line of an RDD's
 call site (localCheckpoint at Graph.scala:72), which moves with any
-edit above it. It prints the masked diff of every query
+edit above it, and the session-wide counters an exchange's plan_id
+and an RDD's id (MapPartitionsRDD[3963]), which move with any plan
+change in an earlier query. It prints the masked diff of every query
 whose plan differs, or that only one dump has.
 
 Usage: python3 tools/check.py <sfDir> <outDir> [query ...]
        python3 tools/check.py --spark <outDirA> <outDirB> [query ...]
        python3 tools/check.py --plans <dumpA> <dumpB> [query ...]
 """
-import difflib, json, os, re, struct, sys, math
+import difflib, json, os, re, sys
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -38,8 +40,12 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
 
 def compare(exp, got):
     """Differences between two result frames: column names, row count,
-    dtypes, and bit-exact values on rows sorted by all columns."""
-    errs = []
+    dtypes, and values on rows sorted by all columns. Values compare
+    bit-exactly: result hashes tell them apart, so -0.0 vs +0.0 (== under
+    IEEE) is a REAL mismatch (it hid the r2-r4 e1_features jerk_s
+    drift), while NaN equals NaN and None equals None (or NaN).
+    Vectorized per column, so it stays fast at millions of rows."""
+    import numpy as np
     if sorted(exp.columns) != sorted(got.columns):
         return [f"cols exp={sorted(exp.columns)} got={sorted(got.columns)}"]
     if len(exp) != len(got):
@@ -47,30 +53,22 @@ def compare(exp, got):
     cols = sorted(exp.columns)
     e = exp[cols].sort_values(cols).reset_index(drop=True)
     g = got[cols].sort_values(cols).reset_index(drop=True)
+    errs = []
     for c in cols:
         ev, gv = e[c], g[c]
         if str(ev.dtype) != str(gv.dtype):
             errs.append(f"dtype[{c}] exp={ev.dtype} got={gv.dtype}")
-        mismatch = 0
-        first = None
-        for i in range(len(ev)):
-            a, b = ev.iloc[i], gv.iloc[i]
-            if a is None or (isinstance(a, float) and math.isnan(a)):
-                ok = b is None or (isinstance(b, float) and math.isnan(b))
-            elif isinstance(a, float):
-                # Bit-exact: the driver hashes values, so -0.0
-                # vs +0.0 (== under IEEE) is a REAL mismatch —
-                # it hid the r2-r4 e1_features jerk_s drift.
-                ok = isinstance(b, float) and (
-                    struct.pack("<d", a) == struct.pack("<d", b))
-            else:
-                ok = a == b
-            if not ok:
-                mismatch += 1
-                if first is None:
-                    first = (i, a, b)
-        if mismatch:
-            errs.append(f"val[{c}] {mismatch}/{len(ev)} first@{first}")
+            continue
+        missing = (ev.isna() & gv.isna()).to_numpy()
+        if ev.dtype.kind == "f":
+            ea, ga = ev.to_numpy(), gv.to_numpy()
+            ok = (ea.view(f"u{ea.itemsize}") == ga.view(f"u{ga.itemsize}")) | missing
+        else:
+            ok = (ev.to_numpy() == gv.to_numpy()) | missing
+        bad = int((~ok).sum())
+        if bad:
+            i = int(np.argmax(~ok))
+            errs.append(f"val[{c}] {bad}/{len(ev)} first@({i}, {ev.iloc[i]!r}, {gv.iloc[i]!r})")
     return errs
 
 
@@ -161,6 +159,8 @@ PLAN_MASKS = [
     (re.compile(r"\b([A-Za-z]\w*)_[0-9a-f]{12}\b"), r"\1_uid"),
     (re.compile(r"\b(graft_\w*?)\d{6,}"), r"\1"),
     (re.compile(r"(\.scala):\d+"), r"\1:"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"(RDD)\[\d+\]"), r"\1[]"),
 ]
 FORMATTED = re.compile(r"^==== (\S+) ====$")
 SUMMARY = re.compile(r"^== (\S+?)(:| +exchanges=)")

@@ -1,9 +1,7 @@
 #!/usr/bin/env python3
-"""Dev-only sf1 oracle gate: tools/check.py semantics (bit-exact float
-compare, columns sorted by name, rows sorted by all columns) with two
-scale adaptations: the value comparison is VECTORIZED (check.py's
-per-row loop is fine at sf0.01's row counts, not at sf1's millions)
-and each query runs in a subprocess with a wall-clock budget. A few
+"""Dev-only sf1 oracle gate: tools/check.py's own compare (bit-exact
+float compare, columns sorted by name, rows sorted by all columns),
+with each query run in a subprocess with a wall-clock budget. A few
 oracle SQLs are intentionally oracle-scale-only (recursive transitive
 closures, all-pairs verifies) and are intractable in DuckDB at sf1 —
 those are reported as ORACLE_TIMEOUT, never silently skipped; the
@@ -15,10 +13,7 @@ import json
 import subprocess
 import sys
 
-import numpy as np
-
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+from check import TABLES, compare
 
 
 def compare_one(sf_dir, out_dir, name):
@@ -37,29 +32,8 @@ def compare_one(sf_dir, out_dir, name):
         sql = json.load(open(f"{out_dir}/oracle_sql.json"))[name]
         exp = con.sql(sql).df()
     got = duckdb.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
-    if sorted(exp.columns) != sorted(got.columns):
-        return f"cols exp={sorted(exp.columns)} got={sorted(got.columns)}"
-    if len(exp) != len(got):
-        return f"rows exp={len(exp)} got={len(got)}"
-    cols = sorted(exp.columns)
-    e = exp[cols].sort_values(cols).reset_index(drop=True)
-    g = got[cols].sort_values(cols).reset_index(drop=True)
-    for c in cols:
-        ev, gv = e[c], g[c]
-        if str(ev.dtype) != str(gv.dtype):
-            return f"dtype[{c}] exp={ev.dtype} got={gv.dtype}"
-        if ev.dtype == np.float64:
-            ea, ga = ev.to_numpy(), gv.to_numpy()
-            # bit-exact like check.py (-0.0 != +0.0), any-NaN == any-NaN
-            ok = (ea.view(np.uint64) == ga.view(np.uint64)) | \
-                 (np.isnan(ea) & np.isnan(ga))
-        else:
-            ok = (ev.values == gv.values) | (ev.isna() & gv.isna()).values
-        bad = int((~ok).sum())
-        if bad:
-            i = int(np.argmax(~ok))
-            return f"val[{c}] {bad}/{len(ev)} first@({i}, {ev.iloc[i]}, {gv.iloc[i]})"
-    return None
+    errs = compare(exp, got)
+    return "; ".join(errs[:4]) if errs else None
 
 
 def main():
