@@ -106,6 +106,20 @@ class TemporalSpec extends SparkSpec {
     assert(y1.toSeq == y2.toSeq)
   }
 
+  test("W5 EwmAvg: nulls carry the previous EMA (pandas ffill-like)") {
+    val df = Seq(("a", 1, Some(10.0)), ("a", 2, None), ("a", 3, Some(20.0)))
+      .toDF("k", "t", "v")
+    val r = ewm(df, 0.5).select("e").collect()
+    assert(approx(r(0).getDouble(0), 10.0))
+    assert(approx(r(1).getDouble(0), 10.0))   // null input -> hold state
+    assert(approx(r(2).getDouble(0), 15.0))   // recursion continues
+    // ignore_na=False holds the same value at the gap; only the step
+    // after it differs (position-decay weights)
+    val f = ewm(df, 0.5, ignoreNa = false).select("e").collect()
+    assert(approx(f(1).getDouble(0), 10.0))
+    assert(approx(f(2).getDouble(0), (0.25 * 10.0 + 0.5 * 20.0) / 0.75))
+  }
+
   test("W5 native EwmAvg: null inputs carry previous state, null head") {
     val df = Seq(("a", 1, Some(10.0)), ("a", 2, None), ("a", 3, Some(20.0)),
       ("b", 1, Option.empty[Double]))
