@@ -40,15 +40,15 @@ object SparkEntry {
     Curation69Q, Curation70Q, Curation71Q, Curation72Q, Curation73Q,
     Curation74Q, Curation75Q, Curation76Q, Curation77Q)
 
-  /** The union of the modules' maps. A name that two maps both hold
-    * throws instead of letting the later one silently win. */
-  private[graft] def union[V](maps: Seq[Map[String, V]]): Map[String, V] =
-    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
-      val dup = acc.keySet intersect m.keySet
-      require(dup.isEmpty,
-        s"query names registered twice: ${dup.toSeq.sorted.mkString(", ")}")
-      acc ++ m
-    }
+  /** The modules' pairs as one map. A name written twice, inside one
+    * module or across two, throws instead of letting one entry win. */
+  private[graft] def union[V](modules: Seq[Seq[(String, V)]]): Map[String, V] = {
+    val pairs = modules.flatten
+    val dup = pairs.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
+    require(dup.isEmpty,
+      s"query names registered twice: ${dup.toSeq.sorted.mkString(", ")}")
+    pairs.toMap
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =

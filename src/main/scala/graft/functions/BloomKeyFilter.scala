@@ -27,7 +27,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * The filter bytes ride the expression itself (a few hundred KB for
   * millions of keys at 1% fpp), so they broadcast with the serialized
   * plan — same distribution story as a broadcast join's hashed
-  * relation, far smaller.
+  * relation, far smaller. Explain prints them by length and content
+  * hash.
+  *
+  * One kernel: interpreted eval and generated code both call the
+  * deserialized filter's `mightContainLong`.
   */
 case class BloomMightContainLong(child: Expression, filterBytes: Array[Byte])
     extends UnaryExpression {
@@ -55,6 +59,9 @@ case class BloomMightContainLong(child: Expression, filterBytes: Array[Byte])
       classOf[BloomFilter].getName)
     nullSafeCodeGen(ctx, ev, key => s"${ev.value} = $ref.mightContainLong($key);")
   }
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, PlanText.array(filterBytes))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

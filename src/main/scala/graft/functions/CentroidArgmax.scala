@@ -2,15 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Fused nearest-centroid argmax: for one embedding row, the cosine
   * against EVERY centroid and the (max cos, min cid) winner in a
-  * single generated loop — the codegen replacement for the
+  * single loop — the codegen replacement for the
   * crossJoin(broadcast(centroids)) + struct-max aggregate, which
   * materializes N×K candidate ROWS just to throw away K−1 per
   * vector (at the 100x step that row traffic, not the flops, was
@@ -31,6 +30,11 @@ import org.apache.spark.sql.types._
   * embeddings-table contract); a centroid of mismatched width is
   * skipped, matching the join form's null-cos behavior of never
   * winning.
+  *
+  * One kernel: interpreted eval and generated code both call
+  * `CentroidArgmax.best`; codegen passes the centroid matrix, norms
+  * and ids as hoisted references. Explain prints the three arrays by
+  * shape and content hash.
   */
 case class CentroidArgmax(child: Expression, cids: Array[Long],
     cents: Array[Array[Double]], norms: Array[Double])
@@ -53,17 +57,38 @@ case class CentroidArgmax(child: Expression, cids: Array[Long],
   private def isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    CentroidArgmax.best(input.asInstanceOf[ArrayData], isFloat, cids, cents, norms)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cidsRef = ctx.addReferenceObj("caCids", cids, "long[]")
+    val centsRef = ctx.addReferenceObj("caCents", cents, "double[][]")
+    val normsRef = ctx.addReferenceObj("caNorms", norms, "double[]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""
+         |${ev.value} = graft.functions.CentroidArgmax.best(
+         |  $a, $isFloat, $cidsRef, $centsRef, $normsRef);
+       """.stripMargin)
+  }
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, PlanText.array(cids), PlanText.array(cents), PlanText.array(norms))
+
+  override protected def withNewChildInternal(newChild: Expression): CentroidArgmax =
+    copy(child = newChild)
+}
+
+object CentroidArgmax {
+  /** The kernel of interpreted eval and generated code: the
+    * (cid, cos) of the nearest centroid, ties to the smallest cid. */
+  def best(arr: ArrayData, isFloat: Boolean, cids: Array[Long],
+      cents: Array[Array[Double]], norms: Array[Double]): InternalRow = {
     val n = arr.numElements()
     val a = new Array[Double](n)
     var i = 0
     if (isFloat) while (i < n) { a(i) = arr.getFloat(i).toDouble; i += 1 }
     else while (i < n) { a(i) = arr.getDouble(i); i += 1 }
-    var na2 = 0.0
-    i = 0
-    while (i < n) { na2 += a(i) * a(i); i += 1 }
-    val na = math.sqrt(na2)
+    val na = foldNorm(a)
     var best = Double.NegativeInfinity
     var bc = -1L
     var k = 0
@@ -82,56 +107,6 @@ case class CentroidArgmax(child: Expression, cids: Array[Long],
     new GenericInternalRow(Array[Any](bc, best))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("caCents", cents, "double[][]")
-    val normsRef = ctx.addReferenceObj("caNorms", norms, "double[]")
-    val cidsRef = ctx.addReferenceObj("caCids", cids, "long[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val get =
-        if (isFloat) (i: String) => s"(double) $a.getFloat($i)"
-        else (i: String) => s"$a.getDouble($i)"
-      val n = ctx.freshName("n")
-      val vec = ctx.freshName("vec")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val na = ctx.freshName("na")
-      val acc = ctx.freshName("acc")
-      val best = ctx.freshName("best")
-      val bc = ctx.freshName("bc")
-      val c = ctx.freshName("c")
-      val d = ctx.freshName("d")
-      val cos = ctx.freshName("cos")
-      s"""
-         |int $n = $a.numElements();
-         |double[] $vec = new double[$n];
-         |double $na = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $vec[$i] = ${get(i)};
-         |  $na += $vec[$i] * $vec[$i];
-         |}
-         |$na = java.lang.Math.sqrt($na);
-         |double $best = java.lang.Double.NEGATIVE_INFINITY;
-         |long $bc = -1L;
-         |for (int $k = 0; $k < $centsRef.length; $k++) {
-         |  double[] $c = $centsRef[$k];
-         |  if ($c.length != $n) continue;
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) $acc += $vec[$i] * $c[$i];
-         |  double $d = $na * $normsRef[$k];
-         |  double $cos = $d > 0.0 ? $acc / $d : 0.0;
-         |  if ($cos > $best) { $best = $cos; $bc = $cidsRef[$k]; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] { $bc, $best });
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CentroidArgmax =
-    copy(child = newChild)
-}
-
-object CentroidArgmax {
   /** Left-fold self-norm matching [[DotProduct]]'s accumulation. */
   def foldNorm(c: Array[Double]): Double = {
     var acc = 0.0

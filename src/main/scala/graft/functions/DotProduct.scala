@@ -7,11 +7,14 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Codegen'd dense dot product over two array<float|double> columns:
-  * one generated loop, promoting each element to double and
+  * one loop, promoting each element to double and
   * accumulating strictly left-to-right — bitwise identical to the
   * composable zip_with+aggregate fold (and the DuckDB oracle), but
   * without the interpreted lambda dispatch per element. Null result
   * on length mismatch or a null element (zip_with parity).
+  *
+  * One kernel: interpreted eval and generated code both test
+  * `DotProduct.defined` and then call `DotProduct.fold`.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -32,46 +35,22 @@ case class DotProduct(left: Expression, right: Expression)
         s"${left.dataType.sql} and ${right.dataType.sql}")
   }
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  private def isFloat(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    if (a.numElements != b.numElements) return null
-    val (ta, tb) = (elemType(left), elemType(right))
-    var acc = 0.0
-    var i = 0
-    while (i < a.numElements) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (ta == FloatType) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (tb == FloatType) b.getFloat(i).toDouble else b.getDouble(i)
-      acc += x * y
-      i += 1
-    }
-    acc
+    if (DotProduct.defined(a, b)) DotProduct.fold(a, isFloat(left), b, isFloat(right))
+    else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      def get(arr: String, i: String, dt: DataType): String =
-        if (dt == FloatType) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val n = ctx.freshName("n")
+    nullSafeCodeGen(ctx, ev, (l, r) =>
       s"""
-         |int $n = $l.numElements();
-         |if ($n != $r.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($l.isNullAt($i) || $r.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += ${get(l, i, elemType(left))} * ${get(r, i, elemType(right))};
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+         |${ev.isNull} = !graft.functions.DotProduct.defined($l, $r);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.DotProduct.fold(
+         |  $l, ${isFloat(left)}, $r, ${isFloat(right)});
+       """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
@@ -79,6 +58,30 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
+  /** False (the result is NULL) on a width mismatch or a null element. */
+  def defined(a: ArrayData, b: ArrayData): Boolean = {
+    val n = a.numElements
+    if (n != b.numElements) return false
+    var i = 0
+    while (i < n) { if (a.isNullAt(i) || b.isNullAt(i)) return false; i += 1 }
+    true
+  }
+
+  /** The kernel of interpreted eval and generated code: the
+    * left-to-right double fold of a [[defined]] pair, float elements
+    * promoted to double. */
+  def fold(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.numElements) {
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      acc += x * y
+      i += 1
+    }
+    acc
+  }
+
   def dot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftshim.ColumnBridge
     ColumnBridge.column(

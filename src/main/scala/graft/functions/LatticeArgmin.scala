@@ -1,16 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Fused nearest-centroid argmin on the exact integer lattice: for
   * one (vec_id, q: array<long>) row, the squared L2 distance to
   * EVERY driver-known centroid and the (best, second-best) winners
-  * in a single generated loop — the L2/BIGINT sibling of
+  * in a single loop — the L2/BIGINT sibling of
   * [[CentroidArgmax]] (which is cosine/double). Replaces both the
   * comps×cents explode-join (N·k·dims shuffled rows) and the
   * zip_with/aggregate higher-order-function formulation, whose
@@ -33,6 +33,10 @@ import org.apache.spark.sql.types._
   * one; this expression is internal-only (not SQL-registered), so
   * the contract is documented rather than schema-enforced — a
   * containsNull=true schema whose DATA is null-free is fine.
+  *
+  * One kernel: interpreted eval and generated code both call
+  * `LatticeArgmin.nearest`; codegen passes the centroid matrix as a
+  * hoisted reference. Explain prints it by shape and content hash.
   */
 case class LatticeArgmin(child: Expression, cents: Array[Array[Long]])
     extends UnaryExpression {
@@ -52,8 +56,27 @@ case class LatticeArgmin(child: Expression, cents: Array[Array[Long]])
           s"$prettyName requires array<bigint>, got ${other.sql}")
     }
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    LatticeArgmin.nearest(input.asInstanceOf[ArrayData], cents)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val centsRef = ctx.addReferenceObj("laCents", cents, "long[][]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.LatticeArgmin.nearest($a, $centsRef);")
+  }
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, PlanText.array(cents))
+
+  override protected def withNewChildInternal(newChild: Expression): LatticeArgmin =
+    copy(child = newChild)
+}
+
+object LatticeArgmin {
+  /** The kernel of interpreted eval and generated code: (cid, a2, b2)
+    * of the nearest centroid by exact squared L2, ties to the
+    * smallest cid. */
+  def nearest(arr: ArrayData, cents: Array[Array[Long]]): InternalRow = {
     val n = arr.numElements()
     var bestD = Long.MaxValue
     var bestC = -1L
@@ -77,45 +100,6 @@ case class LatticeArgmin(child: Expression, cents: Array[Array[Long]])
     new GenericInternalRow(Array[Any](bestC, bestD, secondD))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("laCents", cents, "long[][]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val acc = ctx.freshName("acc")
-      val dd = ctx.freshName("dd")
-      val bestD = ctx.freshName("bestD")
-      val bestC = ctx.freshName("bestC")
-      val secondD = ctx.freshName("secondD")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = $a.numElements();
-         |long $bestD = java.lang.Long.MAX_VALUE;
-         |long $bestC = -1L;
-         |long $secondD = java.lang.Long.MAX_VALUE;
-         |for (int $k = 0; $k < $centsRef.length; $k++) {
-         |  long[] $c = $centsRef[$k];
-         |  if ($c.length != $n) continue;
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $dd = $a.getLong($i) - $c[$i];
-         |    $acc += $dd * $dd;
-         |  }
-         |  if ($acc < $bestD) { $secondD = $bestD; $bestD = $acc; $bestC = (long) $k; }
-         |  else if ($acc < $secondD) { $secondD = $acc; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] { $bestC, $bestD, $secondD });
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LatticeArgmin =
-    copy(child = newChild)
-}
-
-object LatticeArgmin {
   def argmin(q: Column, cents: Array[Array[Long]]): Column = {
     import org.apache.spark.sql.graftshim.ColumnBridge
     ColumnBridge.column(LatticeArgmin(ColumnBridge.expression(q), cents))

@@ -9,9 +9,12 @@ import org.apache.spark.sql.types.{DataType, LongType}
 /** Codegen'd |A ∩ B| for two array<bigint> columns whose elements are
   * DISTINCT within each array (as Dedup's gram-hash arrays are).
   * `size(array_intersect(a, b))` materializes the intersection array
-  * through an interpreted collection expression; this emits one
-  * generated HashSet probe loop and returns only the count — the
+  * through an interpreted collection expression; this is one probe
+  * loop over a primitive long set that returns only the count — the
   * near-dup verify hot path runs it once per candidate pair.
+  *
+  * One kernel: interpreted eval and generated code both call
+  * `LongArrayIntersectCount.count`.
   */
 case class LongArrayIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -40,9 +43,23 @@ case class LongArrayIntersectCount(left: Expression, right: Expression)
               s"${l.sql}, ${r.sql}")
     }
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    val set = new java.util.HashSet[java.lang.Long](a.numElements * 2)
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    LongArrayIntersectCount.count(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      s"${ev.value} = graft.functions.LongArrayIntersectCount.count($l, $r);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): LongArrayIntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object LongArrayIntersectCount {
+  /** The kernel of interpreted eval and generated code: the elements
+    * of `b` that `a` holds, counted by probing a primitive set of `a`. */
+  def count(a: ArrayData, b: ArrayData): Long = {
+    val set = new LongSet(a.numElements)
     var i = 0
     while (i < a.numElements) { set.add(a.getLong(i)); i += 1 }
     var n = 0L
@@ -51,32 +68,6 @@ case class LongArrayIntersectCount(left: Expression, right: Expression)
     n
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val set = ctx.freshName("set")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      s"""
-         |java.util.HashSet<Long> $set =
-         |  new java.util.HashSet<Long>($l.numElements() * 2);
-         |for (int $i = 0; $i < $l.numElements(); $i++) {
-         |  $set.add($l.getLong($i));
-         |}
-         |long $n = 0L;
-         |for (int $j = 0; $j < $r.numElements(); $j++) {
-         |  if ($set.contains($r.getLong($j))) $n++;
-         |}
-         |${ev.value} = $n;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongArrayIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-object LongArrayIntersectCount {
   def intersectCount(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftshim.ColumnBridge
     ColumnBridge.column(LongArrayIntersectCount(

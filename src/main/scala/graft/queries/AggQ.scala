@@ -16,7 +16,7 @@ import Q._
   */
 object AggQ extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     // A2: multi-agg with named outputs incl. the pre-multiplied
     // weighted sum (`main_cuda.py:365-380`; the algebraic rewrite
     // weight*value BEFORE the agg is kept explicit — Catalyst won't
@@ -1246,7 +1246,7 @@ object AggQ extends QueryModule {
           "disc" -> lattice(col("l_discount"), 100)))
     }))
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "a2_multiagg" ->
       """SELECT l_returnflag, l_linestatus,
         | round(sum(l_quantity), 2) AS sum_qty,

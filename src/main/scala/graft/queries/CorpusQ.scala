@@ -38,7 +38,7 @@ object CorpusQ extends QueryModule {
 
   private val EnStop = Seq("the", "a", "of", "and", "to", "in", "is")
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     "c_corpus" -> ((s, dir) => {
       val t = Text.normalizeAz(col("text"))
       val toks = Text.tokens(t)
@@ -364,7 +364,7 @@ object CorpusQ extends QueryModule {
          |   i -> array_to_string(list_slice(toks, i, i + ${n - 1}), ' '))
          | ELSE [] END)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "d_contamination" ->
       s"""WITH $TokCte,
          |g AS (SELECT doc_id, ${tokenGramsSql(5)} AS grams FROM tok),

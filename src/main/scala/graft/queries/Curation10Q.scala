@@ -15,7 +15,7 @@ import Q._
   */
 object Curation10Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Mann–Whitney U (Wilcoxon rank-sum) per event type: does the
     // even-user arm's value distribution differ from the odd arm's —
@@ -137,7 +137,7 @@ object Curation10Q extends QueryModule {
 
   import LlmQ.slotSql
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a50_mannwhitney" ->
       s"""WITH e AS (SELECT event_type, user_id % 2 = 0 AS arma,

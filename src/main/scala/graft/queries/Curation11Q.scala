@@ -13,7 +13,7 @@ import Q._
   */
 object Curation11Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Wald's SPRT over each user's event stream: H0 p=1/3 vs H1
     // p=1/2 for the (event_id % 3 == 0)-derived outcome. Each outcome
@@ -91,7 +91,7 @@ object Curation11Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     // Gate rows: the seed-stable GBT-importance facts (signal feature
     // tops, all gains non-negative, gains sum to one) are the content.

@@ -11,7 +11,7 @@ import Q._
   */
 object Curation12Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // S15: recursive file discovery — ingest trees like
     // base/source=X/part-*.parquet WITHOUT partition-column inference
@@ -50,7 +50,7 @@ object Curation12Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "s15_recursive" ->
       """SELECT lang, count(*) AS n_docs,

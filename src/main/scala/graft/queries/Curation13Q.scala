@@ -22,7 +22,7 @@ import Q._
   */
 object Curation13Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     "c_curation" -> ((s, dir) => {
       val t = Text.normalizeAz(col("text"))
@@ -84,7 +84,7 @@ object Curation13Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "c_curation" ->
       s"""WITH base AS (SELECT doc_id, lang, text,

@@ -13,7 +13,7 @@ import Q._
   */
 object Curation14Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // NFC canonical composition via the native codegen'd expression:
     // each doc gets a decomposed suffix (e + COMBINING ACUTE, built
@@ -101,7 +101,7 @@ object Curation14Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_nfc" ->
       """WITH d AS (SELECT doc_id,

@@ -11,7 +11,7 @@ import Q._
   */
 object Curation15Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // O20: write-audit-publish — the safe-publication discipline every
     // production table write needs: stage the output, AUDIT it
@@ -174,7 +174,7 @@ object Curation15Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "o20_wap" ->
       s"""SELECT o_orderkey % 7 AS bucket, count(*) AS n,

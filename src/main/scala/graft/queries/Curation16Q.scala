@@ -13,7 +13,7 @@ import Q._
   */
 object Curation16Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Sample-size (power) analysis per segment: n per arm to detect a
     // 10% relative lift of the segment's observed rate at α=0.05,
@@ -98,7 +98,7 @@ object Curation16Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a54_power" ->
       """WITH e AS (SELECT event_type,

@@ -25,7 +25,7 @@ object Curation17Q extends QueryModule {
     */
   val PairBudget = 1000000L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Kendall's tau-a per user (value vs time): concordant minus
     // discordant pairs over n(n−1)/2 — the third rank-correlation
@@ -147,7 +147,7 @@ object Curation17Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     // Oracle is ALWAYS exhaustive: valid only while every group sits
     // under PairBudget pairs (n < 1415 obs) — see PairBudget doc.

@@ -14,7 +14,7 @@ import Q._
   */
 object Curation18Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Matthews correlation coefficient per segment — the single-number
     // classifier summary robust to class imbalance (accuracy and F1
@@ -102,7 +102,7 @@ object Curation18Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "m31_mcc" ->
       """WITH e AS (SELECT event_type,

@@ -19,7 +19,7 @@ import Q._
   */
 object Curation19Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // The interval enumeration is O(m³) in the number of DISTINCT
     // scores m — applied strictly AFTER the groupBy collapses the
@@ -73,7 +73,7 @@ object Curation19Q extends QueryModule {
       val pav = model.transform(e.select(col("score")).distinct())
         .select(col("score").cast("long").as("score"),
           col("prediction").as("cal_pav"))
-      val closed = queries("m25_isotonic_closed")(s, dir)
+      val closed = graft.SparkEntry.queries("m25_isotonic_closed")(s, dir)
         .select(col("score").cast("long").as("score"),
           col("calibrated").as("cal_closed"))
       pav.join(closed, "score")
@@ -87,7 +87,7 @@ object Curation19Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     // ADVERSARIAL gate oracle: n_scores/n_agree are the data-derived
     // lattice size — if MLlib PAV diverged from the closed form at

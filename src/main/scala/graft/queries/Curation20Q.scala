@@ -15,7 +15,7 @@ object Curation20Q extends QueryModule {
 
   private val DayUs = 86400L * 1000000L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A60: Kaplan–Meier survival curve over user lifetimes — THE
     // churn/conversion statistic (how long until a user converts,
@@ -128,7 +128,7 @@ object Curation20Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a60_kaplan_meier" ->
       s"""WITH u AS (SELECT user_id,

@@ -12,7 +12,7 @@ import Q._
   */
 object Curation21Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // M32: ONE exact Lloyd (k-means) step on the milli-lattice —
     // the hash-checkable core of s_kmeans_ivf (MLlib's trained
@@ -125,7 +125,7 @@ object Curation21Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "m32_lloyd_step" ->
       s"""WITH L AS (SELECT vec_id,

@@ -28,7 +28,7 @@ object Curation22Q extends QueryModule {
 
   private val Rounds = 5
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     "t_bpe_merges" -> ((s, dir) => {
       val words = documents(s, dir)
@@ -70,7 +70,7 @@ object Curation22Q extends QueryModule {
   private val NormSql =
     "list_filter(string_split(regexp_replace(lower(text), '[^a-z ]', '', 'g'), ' '), x -> x != '')"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_bpe_merges" -> {
       def rep6(e: String): String =

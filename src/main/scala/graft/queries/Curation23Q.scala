@@ -13,7 +13,7 @@ object Curation23Q extends QueryModule {
 
   private val DayUs = 86400L * 1000000L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A63: difference-in-differences per event_type — the workhorse
     // causal estimator when treatment wasn't randomized: treated
@@ -98,7 +98,7 @@ object Curation23Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a63_did" ->
       s"""WITH e AS (SELECT event_type,

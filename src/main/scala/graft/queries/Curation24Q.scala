@@ -10,7 +10,7 @@ import Q._
   */
 object Curation24Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // T: Good-Turing count-of-counts — the classic smoothing table
     // for language-model vocabularies: how many TRIGRAM types occur
@@ -146,7 +146,7 @@ object Curation24Q extends QueryModule {
   private val NormSql =
     "list_filter(string_split(regexp_replace(lower(text), '[^a-z ]', '', 'g'), ' '), x -> x != '')"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_good_turing" ->
       s"""WITH d AS (SELECT $NormSql AS t FROM documents),

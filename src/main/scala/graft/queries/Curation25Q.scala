@@ -13,7 +13,7 @@ import Q._
   */
 object Curation25Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // W62: EWMA control chart (the SPC monitoring layer on top of
     // w5's recursion): per-user EWMA of cents (α=1/2, dyadic → the
@@ -123,7 +123,7 @@ object Curation25Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "w62_ewma_chart" ->
       s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,

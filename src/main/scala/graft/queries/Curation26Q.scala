@@ -9,7 +9,7 @@ import Q._
   */
 object Curation26Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // O23: commit-log replay / time travel — the transaction-log
     // primitive behind Delta/Iceberg: a log of add/remove file
@@ -63,7 +63,7 @@ object Curation26Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "o23_timetravel" ->
       """WITH files AS (SELECT l_orderkey % 50 AS file_id,

@@ -11,7 +11,7 @@ import Q._
   */
 object Curation27Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // O24: partition-skew audit — the pre-join diagnostic that
     // decides whether a key needs salting (operators/Skew): the
@@ -104,7 +104,7 @@ object Curation27Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "o24_skew_audit" ->
       """WITH c AS (SELECT l_suppkey, count(*)::BIGINT AS n

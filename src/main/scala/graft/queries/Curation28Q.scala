@@ -10,7 +10,7 @@ import Q._
   */
 object Curation28Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // J24: BITEMPORAL as-of — the two-axis time query (valid time ×
     // transaction time) behind reproducible feature lookups: "what
@@ -74,7 +74,7 @@ object Curation28Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "j24_bitemporal" ->
       s"""WITH v AS (SELECT unnest(range(0, 5)) AS tx_v),

@@ -64,7 +64,7 @@ object Curation29Q extends QueryModule {
     lbl
   }
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // G11: label-propagation communities (Raghavan et al. 2007) on
     // the customer-supplier bipartite graph — the near-linear-time
@@ -182,7 +182,7 @@ object Curation29Q extends QueryModule {
        | FROM $prev JOIN s$r USING (start))""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "g11_labelprop" ->
       s"""WITH ${GraphQ.SymSql},

@@ -20,7 +20,7 @@ import Q._
   */
 object Curation2Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Shared-n-gram coverage — the per-doc "how much of me is copied"
     // metric behind substring-level dedup (5-token grams shared with
@@ -195,7 +195,7 @@ object Curation2Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "d_ngram_coverage" ->
       s"""WITH tn AS (SELECT doc_id, $NormToksSql AS t,

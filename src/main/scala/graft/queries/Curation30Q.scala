@@ -32,7 +32,7 @@ object Curation30Q extends QueryModule {
         i => concat_ws(" ", slice(toks, i + lit(1), lit(2)))))
       .otherwise(typedLit(Seq.empty[String]))
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // G13: Newman modularity of the g11_labelprop partition — the
     // standard "is this community structure real" score (Newman &
@@ -186,7 +186,7 @@ object Curation30Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "g13_modularity" ->
       s"""WITH ${GraphQ.SymSql},

@@ -38,7 +38,7 @@ object Curation31Q extends QueryModule {
   private def dist2Sql(a: String, b: String): String =
     s"list_sum(list_transform(range(1, len($a) + 1), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])))::BIGINT"
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // T: Okapi BM25 (Robertson et al.) — the lexical-retrieval scorer
     // every RAG stack pairs with embedding ANN. Query = the corpus
@@ -225,7 +225,7 @@ object Curation31Q extends QueryModule {
        |c$r AS (SELECT q AS q$r FROM p JOIN s$r USING (vec_id))""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_bm25" ->
       s"""WITH tok AS (SELECT doc_id,

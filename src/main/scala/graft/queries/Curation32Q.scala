@@ -34,7 +34,7 @@ object Curation32Q extends QueryModule {
   /** One DTW cell column name. */
   private def cn(i: Int, j: Int) = s"c_${i}_$j"
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // W65: Viterbi decoding of a 2-state HMM (engaged/idle) over each
     // user's last 16 events — the classic latent-state sequence
@@ -250,7 +250,7 @@ object Curation32Q extends QueryModule {
     s"l$i AS (SELECT *, $cells FROM ${if (i == 0) "pr" else s"l${i - 1}"})"
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "w65_viterbi" ->
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.functions.Text.P
 import Q._
 
 /** Round-7 batch 33: interpolated Kneser-Ney bigram smoothing, a
@@ -19,8 +20,7 @@ object Curation33Q extends QueryModule {
     * BIGINTs then folded mod P — order/partitioning-independent (the
     * o26_merkle class), safe against sum overflow to ~9e9 neighbors
     * per node (terms < P = 1e9+7, sums < 2^63). */
-  private val P = 1000000007L
-  private val A = 1103515245L % 1000000007L
+  private val A = 1103515245L % P
   private val B = 1299709L
   private val C = 104729L
 
@@ -29,7 +29,7 @@ object Curation33Q extends QueryModule {
     * |score6| < n_tok·20e6 stays far under the 2^40 offset. */
   private[queries] val NbOff = 1L << 40
 
-  val queries: Map[String, QueryFn] = Map[String, QueryFn](
+  val queries: Seq[(String, QueryFn)] = Seq[(String, QueryFn)](
 
     // T: interpolated Kneser-Ney bigram smoothing (Kneser & Ney 1995)
     // — the canonical n-gram LM estimator (and the baseline every
@@ -141,7 +141,7 @@ object Curation33Q extends QueryModule {
     }
   }
 
-  private def queries2: Map[String, QueryFn] = Map(
+  private def queries2: Seq[(String, QueryFn)] = Seq(
 
     // G14: Weisfeiler-Lehman refinement hashing (2 rounds) on the
     // customer-supplier graph — the graph-isomorphism fingerprint
@@ -223,7 +223,7 @@ object Curation33Q extends QueryModule {
        |   w -> length(w) > 0) AS toks
        | FROM documents)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_kneser_ney" ->
       s"""WITH $TokCte,
@@ -290,7 +290,7 @@ object Curation33Q extends QueryModule {
          |FROM pk JOIN cls ON cls.cls_idx = pk.pred_idx""".stripMargin
   }
 
-  private def oracle2: Map[String, String] = Map(
+  private def oracle2: Seq[(String, String)] = Seq(
 
     "g14_wl_hash" ->
       s"""WITH ${GraphQ.SymSql},

@@ -23,7 +23,7 @@ object Curation34Q extends QueryModule {
     * position p = h mod 720; contiguous range shards are p·n/720. */
   private val Ring = 720L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // M37: retrieval evaluation — MRR and average precision of the
     // IVF-blocked top-10 neighbor lists, relevance = label match (the
@@ -164,7 +164,7 @@ object Curation34Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "m37_retrieval_eval" ->
       s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cemb

@@ -24,7 +24,7 @@ object Curation35Q extends QueryModule {
   private def sTerm(x: Column): Column =
     when(x > 0L, x.cast("double") * log(x.cast("double"))).otherwise(lit(0.0))
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A74: quantile normalization across sources (the batch-effect
     // corrector from bioinformatics, equally at home normalizing
@@ -266,7 +266,7 @@ object Curation35Q extends QueryModule {
        | FROM s2 CROSS JOIN wt2)""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a74_quantile_norm" ->
       """WITH d AS (SELECT doc_id, source, n_chars FROM documents),

@@ -17,7 +17,7 @@ import Q._
   */
 object Curation36Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A76: two-sample Cramér–von Mises (rank form, Anderson 1962) —
     // the drift test that weighs the WHOLE CDF gap where KS (a35)
@@ -249,7 +249,7 @@ object Curation36Q extends QueryModule {
        |    (a, b) -> (a * 31 + b) % $P))
        | ELSE [] END""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a76_cvm" ->
       s"""WITH e AS (SELECT event_id,

@@ -25,7 +25,7 @@ object Curation37Q extends QueryModule {
     pmod(pmod(col("event_id"), lit(720720L)) * (1103515245L + 2L * p) +
       (12345L + p), lit(1000L)) < 500L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // T: TextRank (Mihalcea & Tarau 2004) — keyword extraction as
     // PageRank over the word co-occurrence graph; the classic
@@ -171,7 +171,7 @@ object Curation37Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_textrank" ->
       s"""WITH $TokCte,

@@ -28,7 +28,7 @@ object Curation38Q extends QueryModule {
       .select(col("a"), col("b"), coalesce(col("sup"), lit(0L)).as("sup"))
   }
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // G16: k-truss (k = 4: every surviving edge sits in >= 2
     // triangles of the surviving subgraph) on the domestic co-supply
@@ -150,7 +150,7 @@ object Curation38Q extends QueryModule {
        | JOIN wed$i w ON w.x = e.a AND w.y = e.b WHERE w.sup >= 2)"""
       .stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "g16_ktruss" ->
       s"""WITH ${GraphQ.domesticCoSupplySql("e0")},

@@ -24,7 +24,7 @@ object Curation39Q extends QueryModule {
     pmod(pmod(col("event_id"), lit(720720L)) * (1103515245L + 2L * p + 1L) +
       (54321L + p), lit(1000L)) < 500L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A81: Benjamini-Hochberg FDR over per-segment EXACT permutation
     // p-values — the multiple-testing layer every metrics dashboard
@@ -201,7 +201,7 @@ object Curation39Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a81_bh_fdr" -> {
       def inASql(p: Int) =

@@ -15,7 +15,7 @@ import Q._
   */
 object Curation3Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Link prediction (common-neighbors + Adamic-Adar) on the
     // customer–supplier interaction graph: supplier candidate pairs
@@ -162,7 +162,7 @@ object Curation3Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "g6_linkpred" ->
       """WITH edges AS (SELECT DISTINCT o_custkey::BIGINT AS cust,

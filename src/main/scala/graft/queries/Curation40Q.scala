@@ -20,7 +20,7 @@ object Curation40Q extends QueryModule {
     * bounded-hop distance. */
   private val H12 = 12L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A82: fixed-effect meta-analysis of the per-event-type even-vs-
     // odd-user mean difference — the "pool the segment effects" step
@@ -210,7 +210,7 @@ object Curation40Q extends QueryModule {
     s"""f$h AS (SELECT DISTINCT f.seed, s.b AS node
        | FROM f${h - 1} f JOIN sym s ON s.a = f.node)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a82_meta_analysis" ->
       s"""WITH e AS (SELECT event_type,

@@ -26,7 +26,7 @@ object Curation41Q extends QueryModule {
       acc.when(pmod(rest, lit(1L << k)) === lit(1L << (k - 1)), k.toLong)
     }.otherwise(15L) // rest == 0: max rho for the 14-bit domain
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // W70: streaming HLL register maintenance — the mergeable
     // distinct-users state every streaming dashboard keeps per
@@ -123,7 +123,7 @@ object Curation41Q extends QueryModule {
     .map(k => s"WHEN rest % ${1L << k} = ${1L << (k - 1)} THEN $k")
     .mkString("CASE ", " ", " ELSE 15 END")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "w70_stream_hll" ->
       s"""WITH h AS (SELECT ts,

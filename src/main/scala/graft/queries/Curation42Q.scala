@@ -24,7 +24,7 @@ object Curation42Q extends QueryModule {
 
   private val DayUs = 86400000000L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A84: Kruskal-Wallis H — "do the k event types draw from the
     // same value distribution?" Global mid-ranks of the cent lattice
@@ -219,7 +219,7 @@ object Curation42Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a84_kruskal_wallis" ->
       s"""WITH e AS (SELECT event_type,

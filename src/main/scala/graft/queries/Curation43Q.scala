@@ -18,7 +18,7 @@ object Curation43Q extends QueryModule {
 
   private val WeekUs = 7L * 86400000000L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A88: exact 1-Wasserstein (earth-mover) distance between the
     // click and purchase cent distributions: W1 = ∫|F1−F2| dv over
@@ -166,7 +166,7 @@ object Curation43Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a88_wasserstein" ->
       s"""WITH e AS (SELECT event_type,

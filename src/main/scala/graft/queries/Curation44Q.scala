@@ -14,7 +14,7 @@ import Q._
   */
 object Curation44Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A89: Cochran's Q — "does purchase propensity differ by weekday
     // WITHIN users?" x_{ij} = user i purchased on dow j (0/1);
@@ -98,7 +98,7 @@ object Curation44Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a89_cochran_q" ->
       """WITH x AS (SELECT DISTINCT user_id,

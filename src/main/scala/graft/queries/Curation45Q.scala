@@ -17,7 +17,7 @@ object Curation45Q extends QueryModule {
 
   private val HourUs = 3600000000L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A91: Ljung-Box Q over the corpus-wide hourly event-count series
     // (24 lags). Missing hours count zero (the full hour range is
@@ -123,7 +123,7 @@ object Curation45Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a91_ljungbox" ->
       """WITH ev AS (SELECT epoch_us(ts) // 3600000000 AS h FROM events),

@@ -14,7 +14,7 @@ import Q._
   */
 object Curation46Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A92: single-changepoint estimate over the hourly event-count
     // series — argmax_t |t·S_n − n·S_t| (the CUSUM-distance form with
@@ -120,7 +120,7 @@ object Curation46Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a92_changepoint" ->
       """WITH ev AS (SELECT epoch_us(ts) // 3600000000 AS h FROM events),

@@ -18,7 +18,7 @@ import graft.operators.{DistRank, Similarity}
   */
 object Curation47Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // O32: 2D skyline of lineitem on (price, quantity), both
     // minimized — "no other line is cheaper AND smaller". The
@@ -146,7 +146,7 @@ object Curation47Q extends QueryModule {
     }.mkString(",\n ")
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "o32_skyline" ->
       s"""WITH pts AS (SELECT l_orderkey, l_linenumber,

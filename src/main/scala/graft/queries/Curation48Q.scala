@@ -13,7 +13,7 @@ import Q._
   */
 object Curation48Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // G19: bipartiteness of the g2 co-supply graph (same-nation
     // suppliers co-appearing in an order — triangles exist, so some
@@ -110,7 +110,7 @@ object Curation48Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "g19_bipartite" ->
       s"""WITH RECURSIVE ${GraphQ.domesticCoSupplySql("edges")},

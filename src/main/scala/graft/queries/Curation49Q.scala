@@ -15,7 +15,7 @@ object Curation49Q extends QueryModule {
 
   private val DayUs = 86400000000L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // M46: Harrell's C-index of an activity-based risk score against
     // the a60 survival construction (duration to first purchase,
@@ -95,7 +95,7 @@ object Curation49Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "m46_cindex" ->
       """WITH u AS (SELECT

@@ -14,7 +14,7 @@ import Q._
   */
 object Curation4Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // HITS hubs & authorities on the customer→supplier interaction
     // graph, two full un-normalized iterations in exact BIGINT:
@@ -124,7 +124,7 @@ object Curation4Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "g7_hits" ->
       """WITH edges AS (SELECT DISTINCT o_custkey::BIGINT AS cust,

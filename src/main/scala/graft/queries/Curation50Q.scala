@@ -58,7 +58,7 @@ object Curation50Q extends QueryModule {
     (c, n)
   }
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // M47: top principal component of the quantized 8-dim projection
     // — 30 power-iteration steps with per-step L2 normalization, all
@@ -157,7 +157,7 @@ object Curation50Q extends QueryModule {
     }.mkString(",\n ")
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "m47_pca" -> {
       val codeSql = (0 until 8).map { j =>

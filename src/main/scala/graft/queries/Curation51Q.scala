@@ -17,7 +17,7 @@ import Q._
   */
 object Curation51Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A96: Grubbs' outlier statistic G = max|c − mean| / s per
     // event_type. Scaled deviation n·c − Σc is an exact DECIMAL(38,0)
@@ -85,7 +85,7 @@ object Curation51Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a96_grubbs" ->
       s"""WITH e AS (SELECT event_type, event_id,

@@ -16,7 +16,7 @@ import Q._
   */
 object Curation52Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // M49: Cook's distance D_i = e_i²·h_i / (p·s²·(1−h_i)²) for the
     // OLS cents(extendedprice) ~ quantity fit (p = 2). Every moment
@@ -112,7 +112,7 @@ object Curation52Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "m49_cooks" ->
       s"""WITH li AS (SELECT l_orderkey, l_linenumber,

@@ -63,7 +63,7 @@ object Curation53Q extends QueryModule {
           (col("ssw") / (col("n") - col("k")).cast("double"))).as("f"),
         (col("ssb") / (col("ssb") + col("ssw"))).as("eta2"))
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A98: one-way ANOVA F — do the three return-flag populations
     // share a mean extended price? eta² is the variance-explained
@@ -216,7 +216,7 @@ object Curation53Q extends QueryModule {
       |       ORDER BY g)), (a, x) -> a + x) AS ssw
       |  FROM gs))""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a98_anova_f" ->
       s"""WITH li AS (SELECT l_returnflag AS g,

@@ -52,7 +52,7 @@ object Curation54Q extends QueryModule {
       .select(col("vec_id"), col("am")("cid").as("cid"),
         col("am")("a2").as("a2"), col("am")("b2").as("b2"))
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // M50: Davies-Bouldin detail — per cluster i, the worst
     // (σ_i + σ_j)/d(c_i, c_j) over j ≠ i (the index is their mean;
@@ -147,7 +147,7 @@ object Curation54Q extends QueryModule {
        |  ${latticeSql("s.x::DOUBLE", 1000)} AS q FROM L),
        |${graft.ml.ExactLloyd.sql(k = 8, iters = 3)}""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "m50_davies_bouldin" ->
       s"""WITH $FitCtes,

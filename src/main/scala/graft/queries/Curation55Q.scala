@@ -26,7 +26,7 @@ import graft.operators.DistRank
   */
 object Curation55Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A102: Chatterjee's ξ of quantity → extended price. Tie-aware:
     // ξ = 1 − n·Σ|r_{i+1} − r_i| / (2·Σ l_i·(n − l_i)) with
@@ -157,7 +157,7 @@ object Curation55Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a102_chatterjee_xi" ->
       s"""WITH li AS (SELECT l_quantity::BIGINT AS x,

@@ -29,7 +29,7 @@ object Curation56Q extends QueryModule {
   private val Iters = 6
   private val DayUs = 86400000000L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // G21: eigenvector centrality by power iteration on the g2
     // co-supply graph. x₀ = Scale; each round sums neighbour scores
@@ -121,7 +121,7 @@ object Curation56Q extends QueryModule {
        |x$r AS MATERIALIZED (SELECT node, (xs * $Scale // mx)::BIGINT AS x
        | FROM i$r, m$r)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "g21_eigencentrality" ->
       s"""WITH ${GraphQ.domesticCoSupplySql("e")},

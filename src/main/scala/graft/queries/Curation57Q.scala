@@ -31,7 +31,7 @@ object Curation57Q extends QueryModule {
 
   private val DayUs = 86400000000L
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A105: Page's L. Within-block doubled mid-ranks mr2 of the
     // per-(user, event_type) cross-multiplied mean values (the a87
@@ -128,7 +128,7 @@ object Curation57Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a105_page_trend" ->
       s"""WITH cell AS (SELECT user_id, event_type,

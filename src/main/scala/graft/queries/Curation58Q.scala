@@ -16,7 +16,7 @@ import Q._
   */
 object Curation58Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     "t_coleman_liau" -> ((s, dir) => {
       val d = documents(s, dir).select(col("doc_id"), col("text"),
@@ -42,7 +42,7 @@ object Curation58Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_coleman_liau" ->
       """WITH d AS (SELECT doc_id, text,

@@ -18,7 +18,7 @@ import Q._
   */
 object Curation59Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A106: Cramér's V between order status and priority. Cell counts,
     // row/column margins and the grand total are exact BIGINTs; each
@@ -127,7 +127,7 @@ object Curation59Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a106_cramers_v" ->
       """WITH cells AS (SELECT o_orderstatus AS st, o_orderpriority AS pr,

@@ -12,7 +12,7 @@ import Q._
   */
 object Curation5Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // CUPED variance-reduced experiment readout (the industry-standard
     // pre-period adjustment): per user, pre/post cent sums split at
@@ -94,7 +94,7 @@ object Curation5Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a48_cuped" ->
       s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,

@@ -17,7 +17,7 @@ import Q._
   */
 object Curation60Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // G22: Katz centrality with β = 1/8, 4 rounds, on the same
     // customer↔supplier bipartite graph as g_pagerank. katz(v) =
@@ -124,7 +124,7 @@ object Curation60Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "g22_katz" ->
       s"""WITH ${GraphQ.SymSql},

@@ -15,7 +15,7 @@ import Q._
   */
 object Curation61Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // W73: relative strength index, Wilder smoothing with DYADIC
     // alpha 1/16 (the w5_ema/w34 bitwise-portability class: gains
@@ -109,7 +109,7 @@ object Curation61Q extends QueryModule {
     "OVER (PARTITION BY user_id ORDER BY ts, event_id " +
       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "w73_rsi" ->
       s"""WITH d AS (SELECT event_id, user_id, ts,

@@ -29,7 +29,7 @@ object Curation62Q extends QueryModule {
       .otherwise(-1L)
   }
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A110: AMS (Alon-Matias-Szegedy) F₂ sketch vs exact. 16
     // estimators Z_i = Σ_u s_i(u)·f_u (per-user event counts f_u;
@@ -137,7 +137,7 @@ object Curation62Q extends QueryModule {
     s"(CASE WHEN ((user_id + 1) * $c) % $P31 < ${P31 / 2} THEN 1 ELSE -1 END)"
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a110_ams_f2" -> {
       val zs = (0 until 16).map(i =>

@@ -16,7 +16,7 @@ import Q._
   */
 object Curation63Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // S/net-new: multi-probe SRP-LSH candidate pairs. One 8-bit
     // hyperplane-sign band (the LOW half of s_srp_lsh's signature);
@@ -104,7 +104,7 @@ object Curation63Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "s_multiprobe" -> {
       val scale = math.sqrt(8.0)

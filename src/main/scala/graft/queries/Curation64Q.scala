@@ -17,7 +17,7 @@ object Curation64Q extends QueryModule {
 
   private val K = 64
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A111: theta-sketch union/intersection/difference estimates for
     // two user sets (purchasers vs clickers), each sketched as its
@@ -100,7 +100,7 @@ object Curation64Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a111_theta_sketch" ->
       s"""WITH a AS (SELECT DISTINCT user_id,

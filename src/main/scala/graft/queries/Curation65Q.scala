@@ -14,7 +14,7 @@ import Q._
   */
 object Curation65Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A112: Brunner-Munzel per event type, even-user arm A vs odd
     // arm B. EXACT construction on the doubled-midrank lattice: with
@@ -100,7 +100,7 @@ object Curation65Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a112_brunner_munzel" ->
       s"""WITH e AS (SELECT event_type, user_id % 2 = 0 AS arma,

@@ -17,7 +17,7 @@ import Q._
   */
 object Curation66Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // D/net-new: incremental dedup of a new batch (doc_id % 10 == 0,
     // the simulated daily ingest) against the standing corpus (the
@@ -114,7 +114,7 @@ object Curation66Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "d_incremental" -> {
       val sigCte =

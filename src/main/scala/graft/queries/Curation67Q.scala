@@ -14,7 +14,7 @@ import Q._
   */
 object Curation67Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // M57: WoE/IV per spend-cent bin against the purchase outcome.
     // Good/bad counts per bin are exact BIGINTs from ONE aggregate;
@@ -110,7 +110,7 @@ object Curation67Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "m57_woe_iv" ->
       s"""WITH e AS (SELECT

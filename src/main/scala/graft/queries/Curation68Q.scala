@@ -31,7 +31,7 @@ object Curation68Q extends QueryModule {
 
   private val dec = "decimal(38,0)"
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A114: Anderson-Darling 2-sample statistic (Scholz-Stephens
     // A²kN, eq. 6, midrank=false, k=2) between the even/odd user arms
@@ -157,7 +157,7 @@ object Curation68Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a114_ad2" -> {
       def armSum(m: String, nArm: String) =

@@ -24,7 +24,7 @@ object Curation69Q extends QueryModule {
 
   private val dec = "decimal(38,0)"
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A117: Theil T and Atkinson(ε=1) over positive event values on
     // the cent lattice. T = S₁/X − ln(X/n) and A = 1 − exp(S₂/n)·n/X
@@ -146,7 +146,7 @@ object Curation69Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a117_inequality" ->
       s"""WITH lat AS (SELECT ${latticeSql("value", 100)} AS c,

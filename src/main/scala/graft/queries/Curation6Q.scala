@@ -18,7 +18,7 @@ object Curation6Q extends QueryModule {
 
   private val Stop = Seq("the", "a", "of", "and", "to", "in", "is", "it")
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Quality-classifier filtering (the fastText/CCNet recipe): train
     // a logistic regression on cheap surface features, score a
@@ -140,7 +140,7 @@ object Curation6Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     // The gate row: n_test/n_pos are pure data facts; the AUC gate's
     // one seed-stable outcome (signal beats random) is the content.

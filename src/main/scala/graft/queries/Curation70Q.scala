@@ -59,7 +59,7 @@ object Curation70Q extends QueryModule {
     "d5" -> "g0 - (p41 * g1 + p42 * g2 + p43 * g3 + p44 * g4)",
     "p55" -> "(g5 - (p41 * g4 + p42 * g3 + p43 * g2 + p44 * g1)) / d5")
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // W78: PACF at lags 1..5. Mean-centering rides the exact scaled
     // residual d_t = n·x_t − X (never a float mean); the scaled
@@ -140,7 +140,7 @@ object Curation70Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "w78_pacf" -> {
       // the SAME ladder text Spark parses, as a nested-subquery chain

@@ -69,7 +69,7 @@ object Curation71Q extends QueryModule {
     "rss_r" -> "(syy - (suy / suu) * suy) / n",
     "f_granger" -> "(rss_r - rss_u) / (rss_u / (n - 3))")
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // W81: ATR(16) over daily OHLC cents. TR_t = max(h−l, |h−pc|,
     // |l−pc|) is an exact BIGINT (greatest/abs of exact lattice
@@ -187,7 +187,7 @@ object Curation71Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "w81_atr" ->
       s"""WITH RECURSIVE ohlc AS ($dailyOhlcSql),

@@ -30,7 +30,7 @@ object Curation72Q extends QueryModule {
     "vif_2" -> "(1.0 - r13 * r13) / det_r",
     "vif_3" -> "(1.0 - r12 * r12) / det_r")
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // G23: pseudo-diameter of the co-supply graph. Sweep 1 starts at
     // the max-degree supplier (ties → min id, packed argmax) and runs
@@ -164,7 +164,7 @@ object Curation72Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "g23_pseudo_diameter" -> {
       // every CTE past the shared co-supply fragment is MATERIALIZED:

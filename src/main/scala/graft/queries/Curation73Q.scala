@@ -29,7 +29,7 @@ import Q._
   */
 object Curation73Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // A120: Box-Cox profile log-likelihood over λ ∈ {−2, −1, −1/2,
     // 0, 1/2, 1, 2} on positive event cents. ℓ(λ) = −(n/2)·ln(σ̂²_λ)
@@ -192,7 +192,7 @@ object Curation73Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "a120_boxcox" -> {
       def y(lam: String, cd: String) = lam match {

@@ -19,7 +19,7 @@ import Q._
   */
 object Curation74Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // J27: Damerau-Levenshtein entity resolution over part names with
     // transposition-heavy corruptions (char swap / duplicate /
@@ -144,7 +144,7 @@ object Curation74Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "j27_dl_entity" ->
       s"""WITH p AS (SELECT p_partkey, p_name, p_type,

@@ -23,7 +23,7 @@ import Q._
   */
 object Curation75Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // T_LEXICAL_RICHNESS per language: token count N, vocab V, hapax
     // V1, dis legomena V2 from ONE (lang, token) aggregate; Honoré
@@ -138,7 +138,7 @@ object Curation75Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_lexical_richness" ->
       s"""WITH tok AS (SELECT lang, unnest($ToksSql) AS w

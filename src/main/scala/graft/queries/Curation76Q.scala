@@ -21,7 +21,7 @@ object Curation76Q extends QueryModule {
 
   private val dec = "decimal(38,0)"
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // W85: streaming Page-Hinkley — identical statistic to w84
     // (everything integer, so batch parity is exact by construction);
@@ -129,9 +129,9 @@ object Curation76Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
-    "w85_stream_ph" -> Curation71Q.oracle("w84_page_hinkley"),
+    "w85_stream_ph" -> Curation71Q.oracle.toMap.apply("w84_page_hinkley"),
 
     "m63_brier_decomp" ->
       """WITH e AS (SELECT (event_id * 37) % 101 AS k,

@@ -21,7 +21,7 @@ import Q._
   */
 object Curation77Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // M64: two-sample KS over the m14/m21 score fixture (score k =
     // (id·37) mod 101, label = id mod 3 = 0): D = max_k |cumpos·NEG −
@@ -119,7 +119,7 @@ object Curation77Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "m64_ks_stat" ->
       """WITH e AS (SELECT (event_id * 37) % 101 AS k,

@@ -14,7 +14,7 @@ import Q._
   */
 object Curation7Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // OHLC bar resampling — the canonical time-series downsample
     // (metrics pipelines as much as finance): per (user, hour) the
@@ -184,7 +184,7 @@ object Curation7Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     // Gate rows: the seed-stable permutation-importance ordering IS
     // the content (marker tops, every noise feature inside the

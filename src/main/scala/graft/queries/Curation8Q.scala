@@ -13,7 +13,7 @@ import Q._
   */
 object Curation8Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // CCNet's head/middle/tail split: rank every doc by unigram-LM
     // per-token surprisal (the t_unigram_lp micro-nat lattice — the
@@ -92,7 +92,7 @@ object Curation8Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_ccnet_buckets" ->
       s"""WITH toks AS (SELECT doc_id, unnest($NormToksSql) AS tok

@@ -15,7 +15,7 @@ import Q._
   */
 object Curation9Q extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Zipf slope of the corpus frequency spectrum — the one-number
     // corpus-health check (natural text ≈ −1; pathological corpora
@@ -105,7 +105,7 @@ object Curation9Q extends QueryModule {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_zipf_slope" ->
       s"""WITH vocab AS (SELECT tok, count(*) AS f

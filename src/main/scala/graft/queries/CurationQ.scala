@@ -20,7 +20,7 @@ import Q._
   */
 object CurationQ extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
 
     // Deterministic in-shard negative sampling for contrastive
     // training: order docs on a content-hash ring inside each shard,
@@ -459,7 +459,7 @@ object CurationQ extends QueryModule {
       | THEN list_transform(range(1, length(t) - 1), i -> substr(t, i::INT, 3))
       | ELSE [] END)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
 
     "t_negsample" ->
       s"""WITH d AS (SELECT doc_id, ${polyHashSql("t")} AS h

@@ -23,7 +23,7 @@ object EventsQ extends QueryModule {
 
   private val GapUs = 600L * 1000000L // 10 minutes
 
-  val queries: Map[String, Q.QueryFn] = Map(
+  val queries: Seq[(String, Q.QueryFn)] = Seq(
     // J20/net-new: last-touch conversion attribution — assign each
     // purchase to the user's most recent PRIOR non-purchase event's
     // channel (first question every event-analytics user asks of a
@@ -177,7 +177,7 @@ object EventsQ extends QueryModule {
             .as("p"))
     }))
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     // Same packed-BIGINT argmax recursion-free attribution; rn·8+code
     // stays far under 2^53 so the packing is exact in both engines.
     "j20_attribution" ->

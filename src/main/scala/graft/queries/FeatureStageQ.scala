@@ -113,7 +113,7 @@ object FeatureStageQ extends QueryModule {
   private val emaCols = Seq("ema_s", "jerk_s", "dir_change")
   private val sideCols = Seq("side_mean_s", "side_std_s")
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     "e1_features" -> ((s, dir) => full(s, dir)),
     "e1_features_trig" -> ((s, dir) =>
       full(s, dir).select((keyCols ++ trigCols).map(col): _*)),
@@ -182,7 +182,7 @@ object FeatureStageQ extends QueryModule {
        |WINDOW w AS (PARTITION BY game_id, play_id, nfl_id ORDER BY frame_id),
        |       ws AS (PARTITION BY game_id, play_id, player_side)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "e1_features" -> FullSql,
     "e1_features_trig" ->
       s"""SELECT ${(keyCols ++ trigCols).mkString(", ")}

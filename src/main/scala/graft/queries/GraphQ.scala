@@ -123,7 +123,7 @@ object GraphQ extends QueryModule {
          |  GROUP BY e.dst) inc ON n.node = inc.node)""".stripMargin
     }.mkString(",\n")
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     // G5/net-new: k-core decomposition (k=34) by iterative peeling —
     // the standard spam/bot-farm densification screen on interaction
     // graphs. Each round drops every node of degree < k and the edges
@@ -254,7 +254,7 @@ object GraphQ extends QueryModule {
        |GROUP BY node""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "g5_kcore" -> KcoreSql,
 
     // the identical exact-integer recursion, unrolled (rankRounds)

@@ -24,7 +24,7 @@ object IoQ extends QueryModule {
     f.delete(); ()
   }
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     // S1/S2/S3/S4: write two CSV part-files (submission sink mechanics),
     // read them back through the explicit-schema multi-path scan, and
     // aggregate — values must round-trip exactly.
@@ -388,7 +388,7 @@ object IoQ extends QueryModule {
           col("frame_id").as("last_frame_id"))
     }))
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "s1_csv_roundtrip" ->
       """SELECT p_brand, count(*) AS n,
         | CAST(sum(p_size) AS BIGINT) AS size_sum,

@@ -22,7 +22,7 @@ object LlmQ extends QueryModule {
   private val EnStop = Seq("the", "a", "of", "and", "to", "in", "is")
   private val TechWords = Seq("spark", "table", "query", "join", "row", "scan")
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     "t_tokens" -> ((s, dir) => {
       val norm = Text.normalizeAz(col("text"))
       documents(s, dir).select(
@@ -858,7 +858,7 @@ object LlmQ extends QueryModule {
        | THEN ${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))
        | ELSE 0.0 END""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "s_knn_join" ->
       s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cemb
          |  FROM embeddings WHERE vec_id < greatest(8,

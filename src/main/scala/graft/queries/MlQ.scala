@@ -10,7 +10,7 @@ import Q._
   * rows-only checks — GBT fits aren't SQL. */
 object MlQ extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     "m1_folds" -> ((s, dir) => {
       Folds.withRankFold(customer(s, dir), Seq("c_nationkey", "c_mktsegment"), 5)
         .select(col("c_custkey"), col("fold").cast("long").as("fold"))
@@ -42,7 +42,7 @@ object MlQ extends QueryModule {
           col("l_returnflag"), col("fold"), col("enc"))
     }))
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "m1_folds" ->
       """WITH keys AS (SELECT DISTINCT c_nationkey, c_mktsegment FROM customer),
         |f AS (SELECT c_nationkey, c_mktsegment,

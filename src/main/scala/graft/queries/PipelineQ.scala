@@ -61,7 +61,7 @@ object PipelineQ extends QueryModule {
           .as("y_true"))
   }
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     // M2: one GBT pair fit on physics residuals, predictions on the
     // held-out fold.
     "m2_gbt" -> ((s, dir) => {
@@ -342,7 +342,7 @@ object PipelineQ extends QueryModule {
     * [dist_center, progress] pair order inside each step, and
     * list_prepend(bias) the left fold — all ::DOUBLE-pinned, trap 8's
     * scalar-lambda rule). */
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     // The gate's CONTENT is the assertion itself: the oracle pins the
     // one seed-stable outcome (model beats physics) as a constant row.
     "e1_rmse_gate" ->

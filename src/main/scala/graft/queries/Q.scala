@@ -164,11 +164,12 @@ object Q {
     })
 }
 
-/** One module of registered queries. `queries` maps each name to its
-  * DataFrame builder; `oracle` gives the DuckDB SQL of the
-  * SQL-expressible subset under the same names. `graft.SparkEntry`
-  * lists every module exactly once. */
+/** One module of registered queries. `queries` pairs each name with
+  * its DataFrame builder; `oracle` gives the DuckDB SQL of the
+  * SQL-expressible subset under the same names. Pairs, not maps, so a
+  * name written twice reaches `graft.SparkEntry`, which lists every
+  * module exactly once and rejects any repeated name. */
 trait QueryModule {
-  def queries: Map[String, Q.QueryFn]
-  def oracle: Map[String, String]
+  def queries: Seq[(String, Q.QueryFn)]
+  def oracle: Seq[(String, String)]
 }

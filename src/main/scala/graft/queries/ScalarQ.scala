@@ -12,7 +12,7 @@ import Q._
   */
 object ScalarQ extends QueryModule {
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     "p2_velocity" -> ((s, dir) => {
       val li = lineitem(s, dir)
       // Off the integer-degree lattice (see TrackingQ.frames): whole
@@ -113,7 +113,7 @@ object ScalarQ extends QueryModule {
 
   private val keys = "l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "p2_velocity" ->
       s"""SELECT $keys,
          | round(l_quantity * sin(radians(CAST(l_partkey % 3600 AS DOUBLE) / 10 + 0.05)), 6) AS vx,

@@ -51,12 +51,12 @@ object TemporalQ extends QueryModule {
     * while round() itself disagrees between engines on tie-looking
     * values (DuckDB rounds the shortest decimal repr, Spark the exact
     * one). */
-  private def ema05(s: org.apache.spark.sql.SparkSession, dir: String) =
+  private val ema05: QueryFn = (s, dir) =>
     events(s, dir).select(col("event_id"),
       EwmAvg.ewmAvg(col("value"), 0.5, Seq(col("user_id")),
         Seq(col("ts"), col("event_id"))).as("ema"))
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     "w1_lag" -> ((s, dir) => {
       val ww = w(s)
       events(s, dir).select(
@@ -402,8 +402,8 @@ object TemporalQ extends QueryModule {
         Temporal.delta2(col("value"), ww).as("d2"))
     }),
 
-    "w5_ema" -> ((s, dir) => ema05(s, dir)),
-    "w5_ema_native" -> ((s, dir) => ema05(s, dir)),
+    "w5_ema" -> ema05,
+    "w5_ema_native" -> ema05,
 
     // W5 with the pandas DEFAULT null semantics (ignore_na=False, what
     // the reference's ewm(alpha, adjust=False) actually does): nulls
@@ -1285,7 +1285,7 @@ object TemporalQ extends QueryModule {
        |   (acc, x) -> 0.5 * x + 0.5 * acc) AS ema
        |FROM events""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "a34_decompose" ->
       s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
         |  ${latticeSql("value", 100)} AS c,
@@ -1547,7 +1547,7 @@ object TemporalQ extends QueryModule {
 
     // Batch-parity: the streaming attribution answers the batch
     // w58 question exactly.
-    "w59_stream_attribution" -> Curation20Q.oracle("w58_attribution"),
+    "w59_stream_attribution" -> Curation20Q.oracle.toMap.apply("w58_attribution"),
 
     "w60_stream_left_join" ->
       """WITH c AS (SELECT event_id AS click_id, user_id, ts

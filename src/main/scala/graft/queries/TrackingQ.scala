@@ -87,7 +87,7 @@ object TrackingQ extends QueryModule {
       |   ORDER BY frame_id DESC) AS rn FROM frames)
       | WHERE rn = 1)""".stripMargin
 
-  val queries: Map[String, QueryFn] = Map(
+  val queries: Seq[(String, QueryFn)] = Seq(
     // K1: typed per-frame pairwise kernel (flatMapGroups) — verified
     // against the relational SQL oracle below.
     "k1_pairwise" -> ((s, dir) => {
@@ -178,7 +178,7 @@ object TrackingQ extends QueryModule {
         r6(Scalars.clampY(col("y") + col("vy") * col("dt"))).as("y"))
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "k1_pairwise" ->
       s"""WITH $FramesSql,
          |pairs AS (

@@ -35,10 +35,10 @@ class ContractSpec extends SparkSpec {
 
   test("registry: a name two modules share fails construction") {
     def stub(names: String*): QueryModule = new QueryModule {
-      val queries: Map[String, Q.QueryFn] =
+      val queries: Seq[(String, Q.QueryFn)] =
         names.map(n => n -> ((s: org.apache.spark.sql.SparkSession, _: String) =>
-          s.emptyDataFrame)).toMap
-      val oracle: Map[String, String] = names.map(_ -> "SELECT 1").toMap
+          s.emptyDataFrame))
+      val oracle: Seq[(String, String)] = names.map(_ -> "SELECT 1")
     }
     val modules = Seq(stub("q_a", "q_shared"), stub("q_shared", "q_b"))
     assert(SparkEntry.union(Seq(stub("q_a"), stub("q_b")).map(_.queries))
@@ -47,6 +47,12 @@ class ContractSpec extends SparkSpec {
       SparkEntry.union(modules.map(_.queries)))
     assert(e.getMessage.contains("q_shared"))
     intercept[IllegalArgumentException](SparkEntry.union(modules.map(_.oracle)))
+    // a name repeated inside ONE module fails too
+    val within = Seq(stub("q_a", "q_twice", "q_twice"))
+    val e2 = intercept[IllegalArgumentException](
+      SparkEntry.union(within.map(_.queries)))
+    assert(e2.getMessage.contains("q_twice"))
+    intercept[IllegalArgumentException](SparkEntry.union(within.map(_.oracle)))
   }
 
   /** Every main source file under `graft/`, with its text. */
@@ -73,19 +79,6 @@ class ContractSpec extends SparkSpec {
     } yield s"${f.getName}: $m"
     assert(copies.isEmpty,
       s"use Q.lattice / Q.latticeSql instead of: ${copies.take(10).mkString("; ")}")
-  }
-
-  test("sources: no query name repeats inside one module's Map literal") {
-    // A repeated key in one Map(...) literal silently keeps the later
-    // entry, which SparkEntry.union cannot see.
-    val key = """"(\w+)" -> \(\(""".r
-    val names = sources.map { case (f, text) =>
-      f.getName -> key.findAllMatchIn(text).map(_.group(1)).toSeq }
-    for ((file, ns) <- names) {
-      val dup = ns.diff(ns.distinct).distinct
-      assert(dup.isEmpty, s"$file registers twice: ${dup.mkString(", ")}")
-    }
-    assert(names.map(_._2.size).sum == SparkEntry.queries.size)
   }
 
   private val expected: Map[String, Seq[(String, DataType)]] = Map(

@@ -9,7 +9,7 @@ class Curation29Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("g11_labelprop: every node labeled once, sizes account for all nodes") {
-    val r = graft.queries.Curation29Q.queries("g11_labelprop")(spark, dir)
+    val r = SparkEntry.queries("g11_labelprop")(spark, dir)
       .cache()
     val nodes = r.select("node").distinct().count()
     assert(r.count() == nodes, "one row per node")
@@ -23,7 +23,7 @@ class Curation29Spec extends SparkSpec {
   }
 
   test("g12_randomwalk: every step follows an edge and alternates sides") {
-    val r = graft.queries.Curation29Q.queries("g12_randomwalk")(spark, dir)
+    val r = SparkEntry.queries("g12_randomwalk")(spark, dir)
       .cache()
     assert(r.count() > 0)
     // each hop must be a real edge of the bipartite graph
@@ -51,7 +51,7 @@ class Curation29Spec extends SparkSpec {
   }
 
   test("o26_merkle: per-level row accounting and digest ranges") {
-    val r = graft.queries.Curation29Q.queries("o26_merkle")(spark, dir)
+    val r = SparkEntry.queries("o26_merkle")(spark, dir)
       .cache()
     val total = graft.queries.Q.lineitem(spark, dir).count()
     val byLevel = r.groupBy("level").agg(

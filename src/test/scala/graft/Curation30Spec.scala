@@ -10,7 +10,7 @@ class Curation30Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("g13_modularity: contributions sum to a valid Q, edges account") {
-    val r = graft.queries.Curation30Q.queries("g13_modularity")(spark, dir)
+    val r = SparkEntry.queries("g13_modularity")(spark, dir)
       .cache()
     assert(r.count() > 0)
     // Σ internal_edges <= m and Σ degree_sum = 2m exactly
@@ -32,7 +32,7 @@ class Curation30Spec extends SparkSpec {
   }
 
   test("t_rouge: recalls in [0,1], self-pair sanity via identical docs") {
-    val r = graft.queries.Curation30Q.queries("t_rouge")(spark, dir)
+    val r = SparkEntry.queries("t_rouge")(spark, dir)
       .cache()
     assert(r.count() > 0)
     assert(r.filter(col("rouge1") < 0 || col("rouge1") > 1 ||
@@ -50,7 +50,7 @@ class Curation30Spec extends SparkSpec {
       .withColumn("n_chars", length(col("text")).cast("long"))
     withTempDir("rouge") { tmp =>
       two.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val self = graft.queries.Curation30Q.queries("t_rouge")(spark, tmp)
+      val self = SparkEntry.queries("t_rouge")(spark, tmp)
       val row = self.filter(col("doc_a") === 0).head()
       assert(row.getAs[Double]("rouge1") == 1.0)
       assert(row.getAs[Double]("rouge2") == 1.0)
@@ -58,7 +58,7 @@ class Curation30Spec extends SparkSpec {
   }
 
   test("m34_knn_clf: one prediction per vector, labels from the domain") {
-    val r = graft.queries.Curation30Q.queries("m34_knn_clf")(spark, dir)
+    val r = SparkEntry.queries("m34_knn_clf")(spark, dir)
       .cache()
     val n = r.count()
     assert(n > 0 && r.select("vec_id").distinct().count() == n)
@@ -71,7 +71,7 @@ class Curation30Spec extends SparkSpec {
   }
 
   test("t_pps_sample: exactly 100 tickets, weights bound draw counts") {
-    val r = graft.queries.Curation30Q.queries("t_pps_sample")(spark, dir)
+    val r = SparkEntry.queries("t_pps_sample")(spark, dir)
       .cache()
     val tickets = r.agg(sum("n_tickets")).head().getLong(0)
     assert(tickets == 100L, s"systematic PPS must draw exactly k, got $tickets")

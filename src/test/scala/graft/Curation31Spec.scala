@@ -10,7 +10,7 @@ class Curation31Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("t_bm25: positive contributions, score is the pinned 4-term sum") {
-    val r = graft.queries.Curation31Q.queries("t_bm25")(spark, dir).cache()
+    val r = SparkEntry.queries("t_bm25")(spark, dir).cache()
     assert(r.count() > 0)
     // idf > 0 (df <= N ⇒ (2N+2)/(2df+1) > 1) and sat > 0 ⇒ every
     // present contribution is positive; saturation bounds it by
@@ -33,7 +33,7 @@ class Curation31Spec extends SparkSpec {
   }
 
   test("m35_mcnemar: 2x2 table partitions n, chi2 consistent") {
-    val row = graft.queries.Curation31Q.queries("m35_mcnemar")(spark, dir)
+    val row = SparkEntry.queries("m35_mcnemar")(spark, dir)
       .head()
     val n = row.getAs[Long]("n")
     val br = row.getAs[Long]("both_right"); val bw = row.getAs[Long]("both_wrong")
@@ -49,7 +49,7 @@ class Curation31Spec extends SparkSpec {
   }
 
   test("s_rrf: both ranks are 1..N permutations, rrf bounded") {
-    val r = graft.queries.Curation31Q.queries("s_rrf")(spark, dir).cache()
+    val r = SparkEntry.queries("s_rrf")(spark, dir).cache()
     val n = r.count()
     assert(n > 0)
     for (c <- Seq("r_cos", "r_dot")) {
@@ -68,7 +68,7 @@ class Curation31Spec extends SparkSpec {
   }
 
   test("s_kcenter: 8 distinct self-assigned centers, valid assignment") {
-    val r = graft.queries.Curation31Q.queries("s_kcenter")(spark, dir)
+    val r = SparkEntry.queries("s_kcenter")(spark, dir)
       .cache()
     val n = r.count()
     assert(n > 0 && r.select("vec_id").distinct().count() == n)

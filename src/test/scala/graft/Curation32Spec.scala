@@ -25,7 +25,7 @@ class Curation32Spec extends SparkSpec {
   }
 
   test("w65_viterbi: cost identities and a hand-computed golden") {
-    val r = graft.queries.Curation32Q.queries("w65_viterbi")(spark, dir)
+    val r = SparkEntry.queries("w65_viterbi")(spark, dir)
       .cache()
     assert(r.count() > 0)
     assert(r.filter(col("best_cost") =!=
@@ -38,7 +38,7 @@ class Curation32Spec extends SparkSpec {
     // step2: v0 = min(734+223, 3218+1204)+916 = 957+916 = 1873
     //        v1 = min(734+1609, 3218+357)+223 = 2343+223 = 2566
     withEvents(Seq((1L, 7L, 10L, 150.0), (2L, 7L, 20L, 3.0))) { tmp =>
-      val g = graft.queries.Curation32Q.queries("w65_viterbi")(spark, tmp)
+      val g = SparkEntry.queries("w65_viterbi")(spark, tmp)
         .head()
       assert(g.getAs[Long]("cost_engaged") == 1873L)
       assert(g.getAs[Long]("cost_idle") == 2566L)
@@ -47,7 +47,7 @@ class Curation32Spec extends SparkSpec {
   }
 
   test("w66_dtw: non-negative, zero iff aligned-identical series") {
-    val r = graft.queries.Curation32Q.queries("w66_dtw")(spark, dir).cache()
+    val r = SparkEntry.queries("w66_dtw")(spark, dir).cache()
     assert(r.count() > 0)
     assert(r.filter(col("dtw") < 0L).count() == 0)
     // two users with identical 8-value series -> dtw = 0; a third
@@ -58,7 +58,7 @@ class Curation32Spec extends SparkSpec {
       (v, i) <- vals.zipWithIndex
     } yield ((u * 100 + i).toLong, u, (i * 10).toLong, v + off)
     withEvents(rows) { tmp =>
-      val g = graft.queries.Curation32Q.queries("w66_dtw")(spark, tmp)
+      val g = SparkEntry.queries("w66_dtw")(spark, tmp)
         .orderBy("user_a").collect()
       assert(g.length == 2)
       assert(g(0).getAs[Long]("dtw") == 0L, "identical series align at 0")
@@ -67,7 +67,7 @@ class Curation32Spec extends SparkSpec {
   }
 
   test("s_mmr: 4 distinct picks, first is pure relevance, scores bounded") {
-    val r = graft.queries.Curation32Q.queries("s_mmr")(spark, dir)
+    val r = SparkEntry.queries("s_mmr")(spark, dir)
       .orderBy("mmr_rank").collect()
     assert(r.length == 4)
     assert(r.map(_.getAs[Long]("vec_id")).distinct.length == 4)
@@ -82,7 +82,7 @@ class Curation32Spec extends SparkSpec {
   }
 
   test("o27_bitmap: masks account for rows, AND readout consistent") {
-    val r = graft.queries.Curation32Q.queries("o27_bitmap")(spark, dir)
+    val r = SparkEntry.queries("o27_bitmap")(spark, dir)
       .cache()
     assert(r.count() > 0)
     // n_and = popcount(mask_and), and both masks are subsets of the

@@ -10,7 +10,7 @@ class Curation33Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("t_kneser_ney: valid probabilities, count identities, 200 rows") {
-    val r = graft.queries.Curation33Q.queries("t_kneser_ney")(spark, dir)
+    val r = SparkEntry.queries("t_kneser_ney")(spark, dir)
       .cache()
     assert(r.count() == 200)
     assert(r.filter(col("p_kn") <= 0.0 || col("p_kn") > 1.0).count() == 0,
@@ -28,7 +28,7 @@ class Curation33Spec extends SparkSpec {
   }
 
   test("m36_nb_clf: one verdict per test doc, above-chance accuracy") {
-    val r = graft.queries.Curation33Q.queries("m36_nb_clf")(spark, dir)
+    val r = SparkEntry.queries("m36_nb_clf")(spark, dir)
       .cache()
     val n = r.count()
     assert(n > 0 && r.select("doc_id").distinct().count() == n)
@@ -46,7 +46,7 @@ class Curation33Spec extends SparkSpec {
   }
 
   test("g14_wl_hash: labels on the lattice, refinement only splits") {
-    val r = graft.queries.Curation33Q.queries("g14_wl_hash")(spark, dir)
+    val r = SparkEntry.queries("g14_wl_hash")(spark, dir)
       .cache()
     val n = r.count()
     assert(n > 0 && r.select("node").distinct().count() == n)
@@ -61,7 +61,7 @@ class Curation33Spec extends SparkSpec {
   }
 
   test("o28_rle: run bounds and whole-table accounting") {
-    val r = graft.queries.Curation33Q.queries("o28_rle")(spark, dir).cache()
+    val r = SparkEntry.queries("o28_rle")(spark, dir).cache()
     assert(r.count() > 0)
     // sorting can only reduce runs; runs are within [distinct, rows]
     assert(r.filter(col("runs_sorted") > col("runs_natural") ||

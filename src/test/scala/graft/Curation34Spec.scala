@@ -10,7 +10,7 @@ class Curation34Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("m37_retrieval_eval: lattice identities, bounded lists") {
-    val r = graft.queries.Curation34Q.queries("m37_retrieval_eval")(
+    val r = SparkEntry.queries("m37_retrieval_eval")(
       spark, dir).cache()
     assert(r.count() > 0)
     assert(r.filter(col("n_ret") > 10 || col("n_rel") > col("n_ret"))
@@ -29,7 +29,7 @@ class Curation34Spec extends SparkSpec {
   }
 
   test("t_kwic: single data-driven term, tight contexts, 1-based pos") {
-    val r = graft.queries.Curation34Q.queries("t_kwic")(spark, dir).cache()
+    val r = SparkEntry.queries("t_kwic")(spark, dir).cache()
     assert(r.count() > 0)
     assert(r.select("term").distinct().count() == 1)
     assert(r.filter(col("pos") < 1L).count() == 0)
@@ -42,7 +42,7 @@ class Curation34Spec extends SparkSpec {
   }
 
   test("o29_rebalance: ring migration is an order of magnitude cheaper") {
-    val r = graft.queries.Curation34Q.queries("o29_rebalance")(spark, dir)
+    val r = SparkEntry.queries("o29_rebalance")(spark, dir)
       .cache()
     assert(r.count() == 8, "one row per source shard")
     val t = r.agg(sum("n_keys"), sum("moved_mod"), sum("moved_ring")).head()
@@ -56,7 +56,7 @@ class Curation34Spec extends SparkSpec {
   }
 
   test("t_yule_k: index ranges and moment identities") {
-    val r = graft.queries.Curation34Q.queries("t_yule_k")(spark, dir).cache()
+    val r = SparkEntry.queries("t_yule_k")(spark, dir).cache()
     assert(r.count() > 0)
     assert(r.filter(col("simpson_d") < 0.0 || col("simpson_d") > 1.0)
       .count() == 0)

@@ -10,7 +10,7 @@ class Curation35Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("a74_quantile_norm: per-source rank permutations, monotone target") {
-    val r = graft.queries.Curation35Q.queries("a74_quantile_norm")(
+    val r = SparkEntry.queries("a74_quantile_norm")(
       spark, dir).cache()
     assert(r.count() > 0)
     assert(r.filter(col("q_pct") < 0L || col("q_pct") > 100L).count() == 0)
@@ -31,7 +31,7 @@ class Curation35Spec extends SparkSpec {
   }
 
   test("m38_adaboost: weak-learner bound, valid stumps, exact weights") {
-    val r = graft.queries.Curation35Q.queries("m38_adaboost")(spark, dir)
+    val r = SparkEntry.queries("m38_adaboost")(spark, dir)
       .orderBy("round").collect()
     assert(r.length == 2)
     r.foreach { x =>
@@ -50,7 +50,7 @@ class Curation35Spec extends SparkSpec {
   }
 
   test("t_llr: G-squared non-negative, marginal bounds, 200 rows") {
-    val r = graft.queries.Curation35Q.queries("t_llr")(spark, dir).cache()
+    val r = SparkEntry.queries("t_llr")(spark, dir).cache()
     assert(r.count() == 200)
     assert(r.filter(col("llr") < -1e-6).count() == 0,
       "G-squared is non-negative")
@@ -59,7 +59,7 @@ class Curation35Spec extends SparkSpec {
   }
 
   test("a75_nelson_aalen: monotone hazard, shrinking risk set") {
-    val r = graft.queries.Curation35Q.queries("a75_nelson_aalen")(
+    val r = SparkEntry.queries("a75_nelson_aalen")(
       spark, dir).orderBy("day").collect()
     assert(r.length > 0)
     val hz = r.map(_.getAs[Double]("hazard"))

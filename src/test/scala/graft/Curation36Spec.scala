@@ -10,7 +10,7 @@ class Curation36Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("a76_cvm: sample sizes partition rows, statistic bounded below") {
-    val r = graft.queries.Curation36Q.queries("a76_cvm")(spark, dir).head()
+    val r = SparkEntry.queries("a76_cvm")(spark, dir).head()
     val n = r.getAs[Long]("n"); val m = r.getAs[Long]("m")
     assert(n + m == graft.io.Tables.eventsUs(spark, dir).count())
     assert(n > 0 && m > 0)
@@ -21,7 +21,7 @@ class Curation36Spec extends SparkSpec {
   }
 
   test("d_cdc_chunks: chunk arithmetic and signature lattice") {
-    val r = graft.queries.Curation36Q.queries("d_cdc_chunks")(spark, dir)
+    val r = SparkEntry.queries("d_cdc_chunks")(spark, dir)
       .cache()
     assert(r.count() > 0)
     assert(r.filter(col("n_chunks") < 1L).count() == 0)
@@ -36,7 +36,7 @@ class Curation36Spec extends SparkSpec {
   }
 
   test("m39_learning_curve: nested subsets, fixed test set, exact ppm") {
-    val r = graft.queries.Curation36Q.queries("m39_learning_curve")(
+    val r = SparkEntry.queries("m39_learning_curve")(
       spark, dir).orderBy("train_pct").collect()
     assert(r.length == 4)
     assert(r.map(_.getAs[Long]("train_pct")).sameElements(
@@ -50,14 +50,14 @@ class Curation36Spec extends SparkSpec {
         x.getAs[Long]("n_correct") * 1000000L / x.getAs[Long]("n_test"))
     }
     // the 100% row IS m36's split: cross-check accuracy
-    val m36 = graft.queries.Curation33Q.queries("m36_nb_clf")(spark, dir)
+    val m36 = SparkEntry.queries("m36_nb_clf")(spark, dir)
       .agg(sum("correct"), count(lit(1))).head()
     assert(r(3).getAs[Long]("n_correct") == m36.getLong(0))
     assert(r(3).getAs[Long]("n_test") == m36.getLong(1))
   }
 
   test("a77_odds_ratio: cells partition sources, CI brackets the point") {
-    val r = graft.queries.Curation36Q.queries("a77_odds_ratio")(spark, dir)
+    val r = SparkEntry.queries("a77_odds_ratio")(spark, dir)
       .cache()
     assert(r.count() > 0)
     val tot = r.agg(sum(col("a") + col("b") + col("c") + col("d")))

@@ -10,7 +10,7 @@ class Curation37Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("t_textrank: positive lattice scores, ordered head") {
-    val r = graft.queries.Curation37Q.queries("t_textrank")(spark, dir)
+    val r = SparkEntry.queries("t_textrank")(spark, dir)
       .collect()
     assert(r.nonEmpty && r.length <= 50)
     // every rank carries at least the teleport mass 0.15 on the 1e6
@@ -22,7 +22,7 @@ class Curation37Spec extends SparkSpec {
   }
 
   test("a78_perm_test: valid p-value, observed split accounted") {
-    val r = graft.queries.Curation37Q.queries("a78_perm_test")(spark, dir)
+    val r = SparkEntry.queries("a78_perm_test")(spark, dir)
       .head()
     assert(r.getAs[Long]("n_perms") == 100L)
     val nGe = r.getAs[Long]("n_ge")
@@ -35,7 +35,7 @@ class Curation37Spec extends SparkSpec {
   }
 
   test("o30_encoding_advisor: rules decide exactly as written") {
-    val r = graft.queries.Curation37Q.queries("o30_encoding_advisor")(
+    val r = SparkEntry.queries("o30_encoding_advisor")(
       spark, dir).cache()
     assert(r.count() > 0)
     assert(r.select("column_name").distinct().count() == 2)
@@ -49,7 +49,7 @@ class Curation37Spec extends SparkSpec {
   }
 
   test("a79_dp_counts: noise accounting and bounded magnitude") {
-    val r = graft.queries.Curation37Q.queries("a79_dp_counts")(spark, dir)
+    val r = SparkEntry.queries("a79_dp_counts")(spark, dir)
       .cache()
     assert(r.count() > 0)
     // noisy = true + noise (rounding slack), |noise| = abs_err

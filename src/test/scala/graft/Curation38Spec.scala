@@ -12,7 +12,7 @@ class Curation38Spec extends SparkSpec {
   private val dir01 = "/root/testdata/sf0.01"
 
   test("g16_ktruss: survivors meet the support floor, proper edges") {
-    val r = graft.queries.Curation38Q.queries("g16_ktruss")(spark, dir01)
+    val r = SparkEntry.queries("g16_ktruss")(spark, dir01)
       .cache()
     assert(r.count() > 0, "the sf0.01 co-supply graph holds a 4-truss")
     assert(r.filter(col("support") < 2L).count() == 0,
@@ -22,7 +22,7 @@ class Curation38Spec extends SparkSpec {
   }
 
   test("o31_vacuum_plan: only pre-horizon removals are reclaimable") {
-    val r = graft.queries.Curation38Q.queries("o31_vacuum_plan")(spark, dir)
+    val r = SparkEntry.queries("o31_vacuum_plan")(spark, dir)
       .cache()
     assert(r.count() == 50)
     // vacuumable iff removed at or before version 35
@@ -39,7 +39,7 @@ class Curation38Spec extends SparkSpec {
   }
 
   test("m40_shapley: efficiency identity holds exactly per row and in sum") {
-    val r = graft.queries.Curation38Q.queries("m40_shapley")(spark, dir)
+    val r = SparkEntry.queries("m40_shapley")(spark, dir)
       .cache()
     assert(r.count() > 0)
     // phi0 + phi1 = F(x)·n − E[F]·n, exactly (all BIGINTs)
@@ -53,7 +53,7 @@ class Curation38Spec extends SparkSpec {
   }
 
   test("a80_cohens_d: arms partition each type, d finite") {
-    val r = graft.queries.Curation38Q.queries("a80_cohens_d")(spark, dir)
+    val r = SparkEntry.queries("a80_cohens_d")(spark, dir)
       .cache()
     assert(r.count() > 0)
     val byType = graft.io.Tables.eventsUs(spark, dir)

@@ -10,7 +10,7 @@ class Curation39Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("a81_bh_fdr: rejection set is a rank prefix, thresholds exact") {
-    val r = graft.queries.Curation39Q.queries("a81_bh_fdr")(spark, dir)
+    val r = SparkEntry.queries("a81_bh_fdr")(spark, dir)
       .orderBy("rank").collect()
     assert(r.length == 5)
     assert(r.map(_.getAs[Long]("rank")).sameElements(1L to 5L))
@@ -28,7 +28,7 @@ class Curation39Spec extends SparkSpec {
   }
 
   test("s_two_stage: 5 ranked lists, recall well-defined, cos ordered") {
-    val r = graft.queries.Curation39Q.queries("s_two_stage")(spark, dir)
+    val r = SparkEntry.queries("s_two_stage")(spark, dir)
       .cache()
     assert(r.count() == 25, "5 queries x top-5")
     assert(r.select("qid").distinct().count() == 5)
@@ -47,7 +47,7 @@ class Curation39Spec extends SparkSpec {
   }
 
   test("m41_delong: CI brackets the AUC, matches m14's point estimate") {
-    val row = graft.queries.Curation39Q.queries("m41_delong")(spark, dir)
+    val row = SparkEntry.queries("m41_delong")(spark, dir)
       .head()
     val auc = row.getAs[Double]("auc")
     assert(auc >= 0.0 && auc <= 1.0)

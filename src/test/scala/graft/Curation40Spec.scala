@@ -10,7 +10,7 @@ class Curation40Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("a82_meta_analysis: pooled effect inside the effect range") {
-    val row = graft.queries.Curation40Q.queries("a82_meta_analysis")(
+    val row = SparkEntry.queries("a82_meta_analysis")(
       spark, dir).head()
     assert(row.getAs[Long]("k") >= 2L)
     assert(row.getAs[Double]("pooled_se") > 0.0)
@@ -33,7 +33,7 @@ class Curation40Spec extends SparkSpec {
   }
 
   test("t_burstiness: bounded in (-1,1), stopword-class terms even") {
-    val r = graft.queries.Curation40Q.queries("t_burstiness")(spark, dir)
+    val r = SparkEntry.queries("t_burstiness")(spark, dir)
       .cache()
     assert(r.count() > 0)
     assert(r.filter(col("burstiness") <= -1.0 ||
@@ -47,7 +47,7 @@ class Curation40Spec extends SparkSpec {
   }
 
   test("a83_hurst: R/S positive, exponent in a sane band") {
-    val r = graft.queries.Curation40Q.queries("a83_hurst")(spark, dir)
+    val r = SparkEntry.queries("a83_hurst")(spark, dir)
       .cache()
     assert(r.count() > 0)
     assert(r.filter(col("rs8") <= 0.0 || col("rs16") <= 0.0 ||
@@ -59,7 +59,7 @@ class Curation40Spec extends SparkSpec {
   }
 
   test("g17_harmonic: 8 seeds, score12 bounded by the reach lattice") {
-    val r = graft.queries.Curation40Q.queries("g17_harmonic")(spark, dir)
+    val r = SparkEntry.queries("g17_harmonic")(spark, dir)
       .cache()
     assert(r.count() == 8)
     // every reached node contributes 12/d with d in 1..4: so

@@ -11,7 +11,7 @@ class Curation41Spec extends SparkSpec {
   private val dir01 = "/root/testdata/sf0.01" // clustcoef needs triangles
 
   test("w70_stream_hll: registers on the lattice, rows accounted") {
-    val r = graft.queries.Curation41Q.queries("w70_stream_hll")(spark, dir)
+    val r = SparkEntry.queries("w70_stream_hll")(spark, dir)
       .cache()
     assert(r.count() > 0)
     assert(r.filter(col("bucket") < 0L || col("bucket") > 63L).count() == 0)
@@ -25,7 +25,7 @@ class Curation41Spec extends SparkSpec {
   }
 
   test("m42_replay_eval: matched subset accounting, rates in [0,1]") {
-    val row = graft.queries.Curation41Q.queries("m42_replay_eval")(
+    val row = SparkEntry.queries("m42_replay_eval")(
       spark, dir).head()
     val n = row.getAs[Long]("n_events")
     val m = row.getAs[Long]("n_matched")
@@ -38,7 +38,7 @@ class Curation41Spec extends SparkSpec {
   }
 
   test("g18_clustcoef: cc in [0,1], triangle-degree identities") {
-    val r = graft.queries.Curation41Q.queries("g18_clustcoef")(spark, dir01)
+    val r = SparkEntry.queries("g18_clustcoef")(spark, dir01)
       .cache()
     assert(r.count() > 0)
     assert(r.filter(col("cc") < 0.0 || col("cc") > 1.0).count() == 0,

@@ -20,7 +20,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a84_kruskal_wallis matches a brute-force mid-rank recompute") {
-    val row = graft.queries.Curation42Q.queries("a84_kruskal_wallis")(
+    val row = SparkEntry.queries("a84_kruskal_wallis")(
       spark, dir).head()
     val data = cents()
     val n = data.length
@@ -50,7 +50,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a85_logrank matches a brute-force day-ordered recompute") {
-    val row = graft.queries.Curation42Q.queries("a85_logrank")(
+    val row = SparkEntry.queries("a85_logrank")(
       spark, dir).head()
     val u = graft.io.Tables.eventsUs(spark, dir)
       .groupBy("user_id").agg(
@@ -85,7 +85,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a86_chao1: spectrum facts exact, estimator formula holds") {
-    val row = graft.queries.Curation42Q.queries("a86_chao1")(
+    val row = SparkEntry.queries("a86_chao1")(
       spark, dir).head()
     val freq = graft.queries.Q.documents(spark, dir)
       .select(explode(graft.functions.Text.tokens(
@@ -102,7 +102,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a87_friedman: complete blocks only, brute chi2 agrees") {
-    val row = graft.queries.Curation42Q.queries("a87_friedman")(
+    val row = SparkEntry.queries("a87_friedman")(
       spark, dir).head()
     val cells = graft.io.Tables.eventsUs(spark, dir)
       .select(col("user_id"), col("event_type"),
@@ -144,7 +144,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a88_wasserstein matches a brute sorted-support recompute") {
-    val row = graft.queries.Curation43Q.queries("a88_wasserstein")(
+    val row = SparkEntry.queries("a88_wasserstein")(
       spark, dir).head()
     val cs = cents().filter(x =>
       x._1 == "click" || x._1 == "purchase")
@@ -169,7 +169,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("m43_conformal: exact order-stat q-hat, coverage gate holds") {
-    val out = graft.queries.Curation43Q.queries("m43_conformal")(
+    val out = SparkEntry.queries("m43_conformal")(
       spark, dir).collect()
     assert(out.length == 5)
     val e = graft.io.Tables.eventsUs(spark, dir)
@@ -195,7 +195,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("w67_mannkendall: brute S and variance for sampled users") {
-    val out = graft.queries.Curation43Q.queries("w67_mannkendall")(
+    val out = SparkEntry.queries("w67_mannkendall")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> r).toMap
     val wk = graft.io.Tables.eventsUs(spark, dir)
@@ -225,7 +225,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a89_cochran_q matches a brute recompute, blocks discriminate") {
-    val row = graft.queries.Curation44Q.queries("a89_cochran_q")(
+    val row = SparkEntry.queries("a89_cochran_q")(
       spark, dir).head()
     val x = graft.io.Tables.eventsUs(spark, dir)
       .filter(col("event_type") === "purchase")
@@ -245,14 +245,14 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("w68_markov_stationary: a distribution, and a fixed point") {
-    val out = graft.queries.Curation44Q.queries("w68_markov_stationary")(
+    val out = SparkEntry.queries("w68_markov_stationary")(
       spark, dir).collect()
     val pi = out.map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(approx(pi.values.sum, 1.0, 1e-9), s"sums to 1: $pi")
     assert(pi.values.forall(_ >= 0.0))
     // after 20 synchronous steps the 5-state chain is ~stationary:
     // one more application of P moves no coordinate by more than 1e-6
-    val t = graft.queries.EventsQ.queries("w32_transitions")(spark, dir)
+    val t = SparkEntry.queries("w32_transitions")(spark, dir)
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
       .toMap
     val states = pi.keys.toSeq.sorted
@@ -271,7 +271,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a90_raking: margins converge to uniform, mass preserved") {
-    val out = graft.queries.Curation45Q.queries("a90_raking")(spark, dir)
+    val out = SparkEntry.queries("a90_raking")(spark, dir)
       .collect().map(r => ((r.getString(0), r.getLong(1)),
         (r.getLong(2), r.getDouble(3))))
     val n = out.map(_._2._1).sum.toDouble
@@ -294,7 +294,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a91_ljungbox matches a brute exact-lattice recompute") {
-    val row = graft.queries.Curation45Q.queries("a91_ljungbox")(
+    val row = SparkEntry.queries("a91_ljungbox")(
       spark, dir).head()
     val hc = graft.io.Tables.eventsUs(spark, dir)
       .select(expr("ts_us DIV 3600000000").as("h"))
@@ -320,7 +320,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a92_changepoint matches a brute argmax over the hour series") {
-    val row = graft.queries.Curation46Q.queries("a92_changepoint")(
+    val row = SparkEntry.queries("a92_changepoint")(
       spark, dir).head()
     val hc = graft.io.Tables.eventsUs(spark, dir)
       .select(expr("ts_us DIV 3600000000").as("h"))
@@ -347,7 +347,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a93_hodges_lehmann: brute Walsh-average medians agree") {
-    val out = graft.queries.Curation46Q.queries("a93_hodges_lehmann")(
+    val out = SparkEntry.queries("a93_hodges_lehmann")(
       spark, dir).collect().map(r => r.getLong(0) -> r).toMap
     val wk = graft.io.Tables.eventsUs(spark, dir)
       .select(col("user_id"), expr("ts_us DIV 604800000000").as("wk"),
@@ -369,7 +369,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("m44_qwk matches a brute weighted-kappa recompute, in [-1,1]") {
-    val row = graft.queries.Curation46Q.queries("m44_qwk")(
+    val row = SparkEntry.queries("m44_qwk")(
       spark, dir).head()
     val rat = graft.io.Tables.eventsUs(spark, dir).select(
         round(col("value") * 100).cast("long").as("c"), col("event_id"))
@@ -397,7 +397,7 @@ class Curation42Spec extends SparkSpec {
   test("o32_skyline: exactly the non-dominated points survive") {
     def asL(r: org.apache.spark.sql.Row, i: Int): Long =
       r.get(i) match { case l: Long => l; case n: Number => n.longValue }
-    val out = graft.queries.Curation47Q.queries("o32_skyline")(
+    val out = SparkEntry.queries("o32_skyline")(
       spark, dir).collect()
       .map(r => (asL(r, 0), asL(r, 1), asL(r, 2), asL(r, 3)))
     val pts = graft.queries.Q.lineitem(spark, dir).select(
@@ -412,7 +412,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("m45_ransac: winning consensus is the true brute maximum") {
-    val row = graft.queries.Curation47Q.queries("m45_ransac")(
+    val row = SparkEntry.queries("m45_ransac")(
       spark, dir).head()
     val hourly = graft.io.Tables.eventsUs(spark, dir)
       .select(expr("ts_us DIV 3600000000").as("h"),
@@ -442,7 +442,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("v_proj_recall: overlap bounded by 10, self excluded") {
-    val out = graft.queries.Curation47Q.queries("v_proj_recall")(
+    val out = SparkEntry.queries("v_proj_recall")(
       spark, dir).collect()
     assert(out.nonEmpty && out.length <= 5)
     out.foreach { r =>
@@ -453,7 +453,7 @@ class Curation42Spec extends SparkSpec {
 
   test("g19_bipartite matches a brute BFS-parity audit at sf0.01") {
     val d01 = "/root/testdata/sf0.01"
-    val out = graft.queries.Curation48Q.queries("g19_bipartite")(
+    val out = SparkEntry.queries("g19_bipartite")(
       spark, d01).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toMap
@@ -513,7 +513,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("s20_dynamic_overwrite: only the restated partition changed") {
-    val out = graft.queries.Curation48Q.queries("s20_dynamic_overwrite")(
+    val out = SparkEntry.queries("s20_dynamic_overwrite")(
       spark, dir).collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     val src = graft.queries.Q.orders(spark, dir).select(
@@ -530,7 +530,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("m46_cindex matches a brute pairwise concordance recompute") {
-    val row = graft.queries.Curation49Q.queries("m46_cindex")(
+    val row = SparkEntry.queries("m46_cindex")(
       spark, dir).head()
     val u = graft.io.Tables.eventsUs(spark, dir)
       .groupBy("user_id").agg(
@@ -557,7 +557,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a94_fleiss_kappa matches a brute recompute, bounded by 1") {
-    val row = graft.queries.Curation49Q.queries("a94_fleiss_kappa")(
+    val row = SparkEntry.queries("a94_fleiss_kappa")(
       spark, dir).head()
     val rat = graft.io.Tables.eventsUs(spark, dir)
       .select(col("event_id"),
@@ -584,7 +584,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("m47_pca: unit eigenvector, Rayleigh residual small, sign fixed") {
-    val out = graft.queries.Curation50Q.queries("m47_pca")(spark, dir)
+    val out = SparkEntry.queries("m47_pca")(spark, dir)
       .collect().sortBy(_.getLong(0))
     assert(out.length == 8)
     val v = out.map(_.getDouble(1))
@@ -621,17 +621,17 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("a95_entropy_rate: bounded by ln(k), matches brute recompute") {
-    val row = graft.queries.Curation50Q.queries("a95_entropy_rate")(
+    val row = SparkEntry.queries("a95_entropy_rate")(
       spark, dir).head()
     val k = row.getLong(0)
     val h = row.getDouble(1)
     assert(h >= 0.0 && h <= math.log(k.toDouble) + 1e-12,
       s"0 <= H=$h <= ln($k)")
     // brute: recompute from w32 transition counts + w68's pi
-    val t = graft.queries.EventsQ.queries("w32_transitions")(spark, dir)
+    val t = SparkEntry.queries("w32_transitions")(spark, dir)
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
       .toMap
-    val pi = graft.queries.Curation44Q.queries("w68_markov_stationary")(
+    val pi = SparkEntry.queries("w68_markov_stationary")(
       spark, dir).collect().map(r => r.getString(0) -> r.getDouble(1))
       .toMap
     val states = pi.keys.toSeq.sorted
@@ -651,7 +651,7 @@ class Curation42Spec extends SparkSpec {
   }
 
   test("s19_parquet_bloom: lossless point lookup, filter pushed") {
-    val q = graft.queries.Curation44Q.queries("s19_parquet_bloom")(
+    val q = SparkEntry.queries("s19_parquet_bloom")(
       spark, dir)
     val row = q.head()
     val src = graft.queries.Q.orders(spark, dir)

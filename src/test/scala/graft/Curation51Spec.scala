@@ -19,7 +19,7 @@ class Curation51Spec extends SparkSpec {
         r.getLong(3), r.getLong(4)))
 
   test("a96_grubbs matches a brute-force recompute per event_type") {
-    val got = graft.queries.Curation51Q.queries("a96_grubbs")(spark, dir)
+    val got = SparkEntry.queries("a96_grubbs")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getLong(3))).toMap
     val byType = rows().groupBy(_._1)
@@ -48,7 +48,7 @@ class Curation51Spec extends SparkSpec {
   }
 
   test("a97_dw matches a brute-force recompute per user") {
-    val got = graft.queries.Curation51Q.queries("a97_dw")(spark, dir)
+    val got = SparkEntry.queries("a97_dw")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
     rows().groupBy(_._3).foreach { case (u, xs) =>

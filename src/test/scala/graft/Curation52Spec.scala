@@ -9,7 +9,7 @@ class Curation52Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("m49_cooks matches a brute-force OLS influence recompute") {
-    val got = graft.queries.Curation52Q.queries("m49_cooks")(spark, dir)
+    val got = SparkEntry.queries("m49_cooks")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1).toLong, r.getDouble(2),
         r.getDouble(3)))
@@ -55,10 +55,10 @@ class Curation52Spec extends SparkSpec {
   test("g20_richclub matches a brute recompute on the co-supply graph") {
     // brute graph build at sf0.01 (sf0.001's graph is empty — the
     // query correctly emits 0 rows there, asserted below)
-    assert(graft.queries.Curation52Q.queries("g20_richclub")(
+    assert(SparkEntry.queries("g20_richclub")(
       spark, dir).count() == 0)
     val d01 = "/root/testdata/sf0.01"
-    val got = graft.queries.Curation52Q.queries("g20_richclub")(
+    val got = SparkEntry.queries("g20_richclub")(
       spark, d01).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getDouble(3))).toMap

@@ -40,7 +40,7 @@ class Curation53Spec extends SparkSpec {
   }
 
   test("a98_anova_f matches the brute one-way ANOVA") {
-    val r = graft.queries.Curation53Q.queries("a98_anova_f")(spark, dir)
+    val r = SparkEntry.queries("a98_anova_f")(spark, dir)
       .collect()(0)
     val (n, k, f, eta2) = anovaBrute(cents())
     assert(r.getLong(0) == n && r.getLong(1) == k)
@@ -55,7 +55,7 @@ class Curation53Spec extends SparkSpec {
       g -> med2Of(xs.map(_._2).toSeq) }
     val z = rows.map { case (g, y) => (g, math.abs(2 * y - meds(g))) }
     val (n, k, f, eta2) = anovaBrute(z)
-    val r = graft.queries.Curation53Q.queries("a99_levene_bf")(spark, dir)
+    val r = SparkEntry.queries("a99_levene_bf")(spark, dir)
       .collect()(0)
     assert(r.getLong(0) == n && r.getLong(1) == k)
     assert(r.getDouble(2) == f && r.getDouble(3) == eta2)
@@ -81,7 +81,7 @@ class Curation53Spec extends SparkSpec {
     val skew = m3 / (math.sqrt(m2) * math.sqrt(m2) * math.sqrt(m2))
     val kurtEx = m4 / (m2 * m2) - 3.0
     val jb = nd * (skew * skew / 6.0 + kurtEx * kurtEx / 24.0)
-    val r = graft.queries.Curation53Q.queries("a100_jarque_bera")(
+    val r = SparkEntry.queries("a100_jarque_bera")(
       spark, dir).collect()(0)
     assert(r.getLong(0) == n)
     assert(r.getDouble(1) == skew && r.getDouble(2) == kurtEx &&
@@ -106,7 +106,7 @@ class Curation53Spec extends SparkSpec {
         (be.toDouble - eb) * (be.toDouble - eb) / eb
       a + term
     }
-    val r = graft.queries.Curation53Q.queries("a101_mood_median")(
+    val r = SparkEntry.queries("a101_mood_median")(
       spark, dir).collect()(0)
     assert(r.getLong(0) == t, "tie-free n")
     assert(r.getLong(1) == tab.length - 1)

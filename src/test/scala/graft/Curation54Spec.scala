@@ -53,7 +53,7 @@ class Curation54Spec extends SparkSpec {
   }
 
   test("m50_davies_bouldin matches the brute per-cluster ratios") {
-    val got = graft.queries.Curation54Q.queries("m50_davies_bouldin")(
+    val got = SparkEntry.queries("m50_davies_bouldin")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2),
         r.getDouble(3))).toMap
@@ -75,7 +75,7 @@ class Curation54Spec extends SparkSpec {
   }
 
   test("m51_calinski matches the brute variance ratio") {
-    val r = graft.queries.Curation54Q.queries("m51_calinski")(
+    val r = SparkEntry.queries("m51_calinski")(
       spark, dir).collect()(0)
     val n = vecs.size.toLong
     val ssw = asn.map { case (v, cid) =>
@@ -94,7 +94,7 @@ class Curation54Spec extends SparkSpec {
   }
 
   test("m52_silhouette matches the brute banding") {
-    val got = graft.queries.Curation54Q.queries("m52_silhouette")(
+    val got = SparkEntry.queries("m52_silhouette")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toMap

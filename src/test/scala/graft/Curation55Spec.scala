@@ -36,7 +36,7 @@ class Curation55Spec extends SparkSpec {
       .map(i => BigInt((rs(i + 1) - rs(i)).abs)).sum
     val sl = ls.map(l => BigInt(l) * (n - l)).sum
     val xi = 1.0 - (sad * n).toDouble / (sl * 2).toDouble
-    val r = graft.queries.Curation55Q.queries("a102_chatterjee_xi")(
+    val r = SparkEntry.queries("a102_chatterjee_xi")(
       spark, dir).collect()(0)
     assert(r.getLong(0) == n)
     assert(r.getDouble(1) == xi, s"xi ${r.getDouble(1)} vs $xi")
@@ -71,7 +71,7 @@ class Curation55Spec extends SparkSpec {
     val s1 = seq.sum
     val rvn = (sdd * n).toDouble /
       (s2 * n - BigInt(s1) * s1).toDouble
-    val r = graft.queries.Curation55Q.queries("a103_bartels_rvn")(
+    val r = SparkEntry.queries("a103_bartels_rvn")(
       spark, dir).collect()(0)
     assert(r.getLong(0) == n)
     assert(r.getDouble(1) == rvn, s"rvn ${r.getDouble(1)} vs $rvn")
@@ -97,7 +97,7 @@ class Curation55Spec extends SparkSpec {
         (tpc.toDouble / cc.toDouble)
       ap += term
     }
-    val r = graft.queries.Curation55Q.queries("m53_pr_auc")(
+    val r = SparkEntry.queries("m53_pr_auc")(
       spark, dir).collect()(0)
     assert(r.getLong(0) == n && r.getLong(1) == p)
     assert(r.getDouble(2) == ap, s"ap ${r.getDouble(2)} vs $ap")

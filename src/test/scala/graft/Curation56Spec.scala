@@ -10,10 +10,10 @@ class Curation56Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("g21_eigencentrality matches a brute power-iteration replay") {
-    assert(graft.queries.Curation56Q.queries("g21_eigencentrality")(
+    assert(SparkEntry.queries("g21_eigencentrality")(
       spark, dir).count() == 0)
     val d01 = "/root/testdata/sf0.01"
-    val got = graft.queries.Curation56Q.queries("g21_eigencentrality")(
+    val got = SparkEntry.queries("g21_eigencentrality")(
       spark, d01).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val sn = graft.queries.Q.supplier(spark, d01)
       .select(col("s_suppkey").cast("long"), col("s_nationkey"))
@@ -55,7 +55,7 @@ class Curation56Spec extends SparkSpec {
       dp = math.max(dp, ca * nb - cb * na)
       dm = math.max(dm, cb * na - ca * nb)
     }
-    val r = graft.queries.Curation56Q.queries("a104_kuiper")(
+    val r = SparkEntry.queries("a104_kuiper")(
       spark, dir).collect()(0)
     assert(r.getLong(0) == na && r.getLong(1) == nb)
     assert(r.getLong(2) == dp && r.getLong(3) == dm)
@@ -72,7 +72,7 @@ class Curation56Spec extends SparkSpec {
     val ss = rows.map(_._2).sum
     val qq = rows.map(t => BigInt(t._2) * t._2).sum
     val byDay = rows.groupBy(_._1)
-    val got = graft.queries.Curation56Q.queries("w71_xbar_chart")(
+    val got = SparkEntry.queries("w71_xbar_chart")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getLong(4))).toMap

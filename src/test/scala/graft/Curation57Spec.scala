@@ -39,7 +39,7 @@ class Curation57Spec extends SparkSpec {
     val nd = n.toDouble; val kd = k.toDouble
     val z = (l2.toDouble / 2.0 - nd * kd * (kd + 1.0) * (kd + 1.0) / 4.0) /
       math.sqrt(nd * kd * kd * (kd + 1.0) * (kd * kd - 1.0) / 144.0)
-    val r = graft.queries.Curation57Q.queries("a105_page_trend")(
+    val r = SparkEntry.queries("a105_page_trend")(
       spark, dir).collect()(0)
     assert(r.getLong(0) == n && r.getLong(1) == k.toLong)
     assert(r.getLong(2) == l2)
@@ -47,7 +47,7 @@ class Curation57Spec extends SparkSpec {
   }
 
   test("w72_holt_winters matches an independent recursion replay") {
-    val got = graft.queries.Curation57Q.queries("w72_holt_winters")(
+    val got = SparkEntry.queries("w72_holt_winters")(
       spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5)))

@@ -8,7 +8,7 @@ class Curation58Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("t_coleman_liau matches a brute per-document recompute") {
-    val got = graft.queries.Curation58Q.queries("t_coleman_liau")(
+    val got = SparkEntry.queries("t_coleman_liau")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), if (r.isNullAt(4)) None else Some(r.getDouble(4))))

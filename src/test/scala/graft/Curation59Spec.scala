@@ -21,7 +21,7 @@ class Curation59Spec extends SparkSpec {
       r.getAs[java.time.LocalDateTime](2)))
 
   test("a106_cramers_v matches a brute contingency recompute") {
-    val got = graft.queries.Curation59Q.queries("a106_cramers_v")(
+    val got = SparkEntry.queries("a106_cramers_v")(
       spark, dir).collect().head
     val cells = rows.groupBy(r => (r._1, r._2)).map { case (k, v) =>
       k -> v.length.toLong }
@@ -45,7 +45,7 @@ class Curation59Spec extends SparkSpec {
   }
 
   test("a107_theil_u matches a brute entropy recompute") {
-    val got = graft.queries.Curation59Q.queries("a107_theil_u")(
+    val got = SparkEntry.queries("a107_theil_u")(
       spark, dir).collect().head
     val cells = rows.groupBy(r => (r._1, r._2)).map { case (k, v) =>
       k -> v.length.toLong }
@@ -70,7 +70,7 @@ class Curation59Spec extends SparkSpec {
   }
 
   test("a108_gk_gamma matches brute pair counting") {
-    val got = graft.queries.Curation59Q.queries("a108_gk_gamma")(
+    val got = SparkEntry.queries("a108_gk_gamma")(
       spark, dir).collect().head
     val pts = rows.map { case (_, pr, d) =>
       (pr.substring(0, 1).toLong, (d.getMonthValue - 1) / 3 + 1L)

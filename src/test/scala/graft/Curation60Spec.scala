@@ -11,7 +11,7 @@ class Curation60Spec extends SparkSpec {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("g22_katz matches brute path counting") {
-    val got = graft.queries.Curation60Q.queries("g22_katz")(spark, dir)
+    val got = SparkEntry.queries("g22_katz")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getLong(5))).toMap
@@ -45,7 +45,7 @@ class Curation60Spec extends SparkSpec {
   }
 
   test("a109_hill matches a brute order-statistic recompute") {
-    val got = graft.queries.Curation60Q.queries("a109_hill")(spark, dir)
+    val got = SparkEntry.queries("a109_hill")(spark, dir)
       .collect().head
     val counts = graft.queries.Q.documents(spark, dir)
       .select(col("text")).collect().map(_.getString(0))
@@ -69,7 +69,7 @@ class Curation60Spec extends SparkSpec {
   }
 
   test("m54_qini matches brute decile accounting") {
-    val got = graft.queries.Curation60Q.queries("m54_qini")(spark, dir)
+    val got = SparkEntry.queries("m54_qini")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getDouble(5))).toMap

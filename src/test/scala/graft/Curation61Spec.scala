@@ -44,7 +44,7 @@ class Curation61Spec extends SparkSpec {
   }
 
   test("w73_rsi matches a brute per-user recompute") {
-    val got = graft.queries.Curation61Q.queries("w73_rsi")(spark, dir)
+    val got = SparkEntry.queries("w73_rsi")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     val rows = graft.io.Tables.eventsUs(spark, dir)
@@ -71,7 +71,7 @@ class Curation61Spec extends SparkSpec {
   }
 
   test("j26_jw_entity verdicts are consistent with the kernel") {
-    val got = graft.queries.Curation61Q.queries("j26_jw_entity")(spark, dir)
+    val got = SparkEntry.queries("j26_jw_entity")(spark, dir)
     val rows = got.collect()
     assert(rows.nonEmpty)
     // self-pairs (p_partkey == rid) must score their own perturbation;
@@ -90,7 +90,7 @@ class Curation61Spec extends SparkSpec {
   }
 
   test("o33_overlap_depth matches a brute sweep") {
-    val got = graft.queries.Curation61Q.queries("o33_overlap_depth")(
+    val got = SparkEntry.queries("o33_overlap_depth")(
       spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
       .toMap

@@ -19,7 +19,7 @@ class Curation62Spec extends SparkSpec {
       math.round(r.getDouble(3) * 100), r.getString(4)))
 
   test("a110_ams_f2 matches a brute sketch replay") {
-    val got = graft.queries.Curation62Q.queries("a110_ams_f2")(spark, dir)
+    val got = SparkEntry.queries("a110_ams_f2")(spark, dir)
       .collect().head
     val f = events.groupBy(_._1).map { case (u, v) => (u, v.length.toLong) }
     val f2 = f.values.map(x => x * x).sum
@@ -39,7 +39,7 @@ class Curation62Spec extends SparkSpec {
   }
 
   test("w74_pettitt matches a brute rank recompute") {
-    val got = graft.queries.Curation62Q.queries("w74_pettitt")(spark, dir)
+    val got = SparkEntry.queries("w74_pettitt")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
     var checked = 0
@@ -74,7 +74,7 @@ class Curation62Spec extends SparkSpec {
   }
 
   test("m55_hosmer matches a brute per-bin recompute") {
-    val got = graft.queries.Curation62Q.queries("m55_hosmer")(spark, dir)
+    val got = SparkEntry.queries("m55_hosmer")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
     val bins = events.groupBy(_._4 / 5000)

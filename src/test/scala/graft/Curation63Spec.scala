@@ -10,7 +10,7 @@ class Curation63Spec extends SparkSpec {
 
   test("s_multiprobe pairs are exactly the Hamming<=1 band pairs " +
       "of kept buckets") {
-    val rows = graft.queries.Curation63Q.queries("s_multiprobe")(
+    val rows = SparkEntry.queries("s_multiprobe")(
       spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
@@ -42,7 +42,7 @@ class Curation63Spec extends SparkSpec {
   }
 
   test("w75_kalman matches a brute fold replay") {
-    val got = graft.queries.Curation63Q.queries("w75_kalman")(spark, dir)
+    val got = SparkEntry.queries("w75_kalman")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
     val events = graft.io.Tables.eventsUs(spark, dir)

@@ -10,7 +10,7 @@ class Curation64Spec extends SparkSpec {
   private val P = 1000000007L
 
   test("a111_theta_sketch matches a brute sketch replay") {
-    val got = graft.queries.Curation64Q.queries("a111_theta_sketch")(
+    val got = SparkEntry.queries("a111_theta_sketch")(
       spark, dir).collect().head
     val evs = graft.queries.Q.events(spark, dir)
       .select(col("user_id"), col("event_type")).collect()
@@ -43,7 +43,7 @@ class Curation64Spec extends SparkSpec {
   }
 
   test("w76_stream_kalman matches the full-history batch fold") {
-    val got = graft.queries.Curation64Q.queries("w76_stream_kalman")(
+    val got = SparkEntry.queries("w76_stream_kalman")(
       spark, dir).collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
     val events = graft.io.Tables.eventsUs(spark, dir)

@@ -18,7 +18,7 @@ class Curation65Spec extends SparkSpec {
       math.round(r.getDouble(3) * 100), r.getString(4)))
 
   test("a112_brunner_munzel matches a brute placement recompute") {
-    val got = graft.queries.Curation65Q.queries("a112_brunner_munzel")(
+    val got = SparkEntry.queries("a112_brunner_munzel")(
       spark, dir).collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3),
           if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toMap
@@ -57,7 +57,7 @@ class Curation65Spec extends SparkSpec {
   }
 
   test("w77_rolling_entropy matches a brute window recompute") {
-    val got = graft.queries.Curation65Q.queries("w77_rolling_entropy")(
+    val got = SparkEntry.queries("w77_rolling_entropy")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val types = Seq("click", "error", "purchase", "signup", "view")

@@ -10,7 +10,7 @@ class Curation66Spec extends SparkSpec {
 
   test("d_incremental pairs only cross the new/corpus boundary and " +
       "agree with planted duplicate structure") {
-    val rows = graft.queries.Curation66Q.queries("d_incremental")(
+    val rows = SparkEntry.queries("d_incremental")(
       spark, dir).collect()
     assert(rows.nonEmpty, "incremental candidates exist")
     for (r <- rows) {
@@ -28,7 +28,7 @@ class Curation66Spec extends SparkSpec {
   }
 
   test("d_incremental jaccard matches a brute gram recompute") {
-    val rows = graft.queries.Curation66Q.queries("d_incremental")(
+    val rows = SparkEntry.queries("d_incremental")(
       spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val texts = graft.queries.Q.documents(spark, dir)
@@ -55,7 +55,7 @@ class Curation66Spec extends SparkSpec {
   }
 
   test("s_hard_negatives returns cross-label, non-dup, ranked neighbors") {
-    val rows = graft.queries.Curation66Q.queries("s_hard_negatives")(
+    val rows = SparkEntry.queries("s_hard_negatives")(
       spark, dir).collect()
     assert(rows.nonEmpty)
     for (r <- rows) {

@@ -11,7 +11,7 @@ class Curation67Spec extends SparkSpec {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("m57_woe_iv matches a brute bin recompute") {
-    val got = graft.queries.Curation67Q.queries("m57_woe_iv")(spark, dir)
+    val got = SparkEntry.queries("m57_woe_iv")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
     val evs = graft.queries.Q.events(spark, dir)
@@ -35,7 +35,7 @@ class Curation67Spec extends SparkSpec {
   }
 
   test("a113_chow matches a brute two-segment OLS") {
-    val got = graft.queries.Curation67Q.queries("a113_chow")(spark, dir)
+    val got = SparkEntry.queries("a113_chow")(spark, dir)
       .collect().head
     val daily = graft.io.Tables.eventsUs(spark, dir)
       .select(expr("ts_us DIV 86400000000").as("day"),

@@ -15,7 +15,7 @@ class Curation68Spec extends SparkSpec {
       math.round(r.getDouble(2) * 100)))
 
   test("a114_ad2 matches a brute Scholz-Stephens recompute") {
-    val got = graft.queries.Curation68Q.queries("a114_ad2")(spark, dir)
+    val got = SparkEntry.queries("a114_ad2")(spark, dir)
       .collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
@@ -70,7 +70,7 @@ class Curation68Spec extends SparkSpec {
       .map(g => g.length.toLong * g.length).sum) / 2
     val pairsY = (n * n - rows.groupBy(_._2).values
       .map(g => g.length.toLong * g.length).sum) / 2
-    val r = graft.queries.Curation68Q.queries("a115_somers_d")(spark, dir)
+    val r = SparkEntry.queries("a115_somers_d")(spark, dir)
       .collect().head
     assert(r.getLong(0) == n)
     assert(r.getLong(1) == c, s"C: ${r.getLong(1)} vs $c")
@@ -80,7 +80,7 @@ class Curation68Spec extends SparkSpec {
   }
 
   test("a116_cliffs_delta matches brute dominance counts") {
-    val got = graft.queries.Curation68Q.queries("a116_cliffs_delta")(
+    val got = SparkEntry.queries("a116_cliffs_delta")(
       spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6),

@@ -17,7 +17,7 @@ class Curation69Spec extends SparkSpec {
     val mu = x.toDouble / n
     val theil = cents.map(c => (c / mu) * math.log(c / mu)).sum / n
     val atk = 1.0 - math.exp(cents.map(c => math.log(c.toDouble)).sum / n) / mu
-    val r = graft.queries.Curation69Q.queries("a117_inequality")(spark, dir)
+    val r = SparkEntry.queries("a117_inequality")(spark, dir)
       .collect().head
     assert(r.getLong(0) == n && r.getLong(1) == x)
     // r6 on the query side → 5e-7 quantization on top of float noise
@@ -31,7 +31,7 @@ class Curation69Spec extends SparkSpec {
       .select(col("event_type"), col("user_id"), col("value")).collect()
       .map(r => (r.getString(0), r.getLong(1) % 2 == 0,
         math.round(r.getDouble(2) * 100)))
-    val got = graft.queries.Curation69Q.queries("a118_ansari_bradley")(
+    val got = SparkEntry.queries("a118_ansari_bradley")(
       spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4), r.getDouble(5))).toMap
@@ -88,7 +88,7 @@ class Curation69Spec extends SparkSpec {
       }
       nT += nij + nji
     }
-    val r = graft.queries.Curation69Q.queries("a119_bowker")(spark, dir)
+    val r = SparkEntry.queries("a119_bowker")(spark, dir)
       .collect().head
     assert(r.getLong(0) == df && r.getLong(1) == nT)
     assert(math.abs(r.getDouble(2) - chi2) < 1e-9, s"${r.getDouble(2)} vs $chi2")

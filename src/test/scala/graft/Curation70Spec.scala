@@ -34,7 +34,7 @@ class Curation70Spec extends SparkSpec {
       for (j <- 1 until k) phi(k)(j) =
         phi(k - 1)(j) - pacf(k) * phi(k - 1)(k - j)
     }
-    val r = graft.queries.Curation70Q.queries("w78_pacf")(spark, dir)
+    val r = SparkEntry.queries("w78_pacf")(spark, dir)
       .collect().head
     assert(r.getLong(0) == n.toLong)
     for (k <- 1 to 5)
@@ -55,7 +55,7 @@ class Curation70Spec extends SparkSpec {
       }
       (daily(i)._1, ef - es, sg, (ef - es) - sg)
     }
-    val got = graft.queries.Curation70Q.queries("w79_macd")(spark, dir)
+    val got = SparkEntry.queries("w79_macd")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
         r.getDouble(3))).sortBy(_._1)
     assert(got.length == exp.length)
@@ -66,7 +66,7 @@ class Curation70Spec extends SparkSpec {
   }
 
   test("w80_aroon matches a brute trailing-argmax recompute") {
-    val got = graft.queries.Curation70Q.queries("w80_aroon")(spark, dir)
+    val got = SparkEntry.queries("w80_aroon")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5))).toMap
     assert(got.size == daily.length - 15)

@@ -39,7 +39,7 @@ class Curation71Spec extends SparkSpec {
       if (i > 0) atr = 0.0625 * tr + 0.9375 * atr
       (ohlc(i)._1, tr, atr)
     }
-    val got = graft.queries.Curation71Q.queries("w81_atr")(spark, dir)
+    val got = SparkEntry.queries("w81_atr")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
       .sortBy(_._1)
     assert(got.length == exp.length)
@@ -89,7 +89,7 @@ class Curation71Spec extends SparkSpec {
     val rssR = ols(Seq(u), y)
     val rssU = ols(Seq(u, v), y)
     val f = (rssR - rssU) / (rssU / (n - 3))
-    val r = graft.queries.Curation71Q.queries("w82_granger")(spark, dir)
+    val r = SparkEntry.queries("w82_granger")(spark, dir)
       .collect().head
     assert(r.getLong(0) == n.toLong)
     assert(math.abs(r.getDouble(1) - rssR) < 1e-6 * rssR, s"rss_r")
@@ -98,7 +98,7 @@ class Curation71Spec extends SparkSpec {
   }
 
   test("w83_stochastic matches a brute range recompute") {
-    val got = graft.queries.Curation71Q.queries("w83_stochastic")(
+    val got = SparkEntry.queries("w83_stochastic")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         if (r.isNullAt(4)) Double.NaN else r.getDouble(4))).toMap
@@ -122,7 +122,7 @@ class Curation71Spec extends SparkSpec {
       .select(col("user_id"), col("ts_us"), col("event_id"), col("value"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         math.round(r.getDouble(3) * 100)))
-    val got = graft.queries.Curation71Q.queries("w84_page_hinkley")(
+    val got = SparkEntry.queries("w84_page_hinkley")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap

@@ -35,7 +35,7 @@ class Curation72Spec extends SparkSpec {
     val ecc1 = d1.values.max
     val far = d1.toSeq.maxBy(t => (t._2, -t._1))._1
     val d2 = bfs(far)
-    val r = graft.queries.Curation72Q.queries("g23_pseudo_diameter")(
+    val r = SparkEntry.queries("g23_pseudo_diameter")(
       spark, dir).collect().head
     assert(r.getLong(0) == start, s"start ${r.getLong(0)} vs $start")
     assert(r.getLong(1) == ecc1.toLong)
@@ -67,7 +67,7 @@ class Curation72Spec extends SparkSpec {
       r13 * (r12 * r23 - r13)
     val exp = Seq((1 - r23 * r23) / det, (1 - r13 * r13) / det,
       (1 - r12 * r12) / det)
-    val r = graft.queries.Curation72Q.queries("m59_vif")(spark, dir)
+    val r = SparkEntry.queries("m59_vif")(spark, dir)
       .collect().head
     assert(r.getLong(0) == n.toLong)
     assert(math.abs(r.getDouble(1) - r12) < 1e-9)
@@ -103,7 +103,7 @@ class Curation72Spec extends SparkSpec {
       (r._1, (chh * dx * dx - 2 * cxh * dx * dy + cxx * dy * dy) / det)
     }
     val exp = md.sortBy(t => (-t._2, t._1)).take(20)
-    val got = graft.queries.Curation72Q.queries("m60_mahalanobis")(
+    val got = SparkEntry.queries("m60_mahalanobis")(
       spark, dir).collect().map(r => (r.getLong(0), r.getDouble(3)))
     assert(got.length == 20)
     got.zip(exp).foreach { case ((gid, gmd), (eid, emd)) =>

@@ -23,7 +23,7 @@ class Curation73Spec extends SparkSpec {
       -0.5 * n * math.log(v) + (lam - 1.0) * slog
     }
     val lams = Seq(-2.0, -1.0, -0.5, 0.0, 0.5, 1.0, 2.0)
-    val r = graft.queries.Curation73Q.queries("a120_boxcox")(spark, dir)
+    val r = SparkEntry.queries("a120_boxcox")(spark, dir)
       .collect().head
     assert(r.getLong(0) == n.toLong)
     lams.zipWithIndex.foreach { case (lam, i) =>
@@ -64,7 +64,7 @@ class Curation73Spec extends SparkSpec {
       ((lab._1 + 32) * 64 + lab._2 + 32,
         (cells.size.toLong, cells.keys.iterator.map(counts).sum))
     }
-    val got = graft.queries.Curation73Q.queries("m61_dbscan_grid")(
+    val got = SparkEntry.queries("m61_dbscan_grid")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == exp, s"$got vs $exp")
@@ -82,7 +82,7 @@ class Curation73Spec extends SparkSpec {
       else s.sliding(n).toSeq.groupBy(identity)
         .map { case (k, v) => k -> v.length.toLong }
     val byId = docs.toMap
-    val got = graft.queries.Curation73Q.queries("t_chrf")(spark, dir)
+    val got = SparkEntry.queries("t_chrf")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
           r.getLong(6), r.getLong(7), r.getDouble(8))).toMap

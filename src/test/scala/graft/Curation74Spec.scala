@@ -40,7 +40,7 @@ class Curation74Spec extends SparkSpec {
   }
 
   test("j27_dl_entity scores the planted corruptions sanely") {
-    val rows = graft.queries.Curation74Q.queries("j27_dl_entity")(
+    val rows = SparkEntry.queries("j27_dl_entity")(
       spark, dir).collect()
     assert(rows.nonEmpty)
     // self-pairs (p_partkey == rid) carry a known corruption: swap /
@@ -61,7 +61,7 @@ class Curation74Spec extends SparkSpec {
   }
 
   test("mm_wht matches a brute Walsh-Hadamard recompute") {
-    val got = graft.queries.Curation74Q.queries("mm_wht")(spark, dir)
+    val got = SparkEntry.queries("mm_wht")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getLong(5))).toMap
@@ -95,7 +95,7 @@ class Curation74Spec extends SparkSpec {
       s -> ds.flatMap(d => Seq(d._3, d._4)).toSet }
     val exact = docs.groupBy(_._1).map { case (s, ds) =>
       s -> ds.map(_._2).toSet }
-    val got = graft.queries.Curation74Q.queries("d_bloom_handshake")(
+    val got = SparkEntry.queries("d_bloom_handshake")(
       spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap

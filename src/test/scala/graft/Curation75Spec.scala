@@ -16,7 +16,7 @@ class Curation75Spec extends SparkSpec {
     val docs = graft.queries.Q.documents(spark, dir)
       .select(col("lang"), col("text")).collect()
       .map(r => (r.getString(0), r.getString(1)))
-    val got = graft.queries.Curation75Q.queries("t_lexical_richness")(
+    val got = SparkEntry.queries("t_lexical_richness")(
       spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5), r.getDouble(6),
@@ -42,7 +42,7 @@ class Curation75Spec extends SparkSpec {
     val docs = graft.queries.Q.documents(spark, dir)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val got = graft.queries.Curation75Q.queries("t_gunning_fog")(
+    val got = SparkEntry.queries("t_gunning_fog")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).toMap
@@ -81,7 +81,7 @@ class Curation75Spec extends SparkSpec {
       math.log(n) - counts.map(m => m * math.log(m.toDouble)).sum / n
     }
     val feats = Seq("f_q", "f_d", "f_t", "f_p")
-    val got = graft.queries.Curation75Q.queries("m58_mrmr")(spark, dir)
+    val got = SparkEntry.queries("m58_mrmr")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
     assert(got.keySet == feats.toSet)

@@ -9,11 +9,11 @@ class Curation76Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("w85_stream_ph equals the batch w84 result (exact parity)") {
-    val batch = graft.queries.Curation71Q.queries("w84_page_hinkley")(
+    val batch = SparkEntry.queries("w84_page_hinkley")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toMap
-    val stream = graft.queries.Curation76Q.queries("w85_stream_ph")(
+    val stream = SparkEntry.queries("w85_stream_ph")(
       spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toMap
@@ -39,7 +39,7 @@ class Curation76Spec extends SparkSpec {
       val ok = g.map(_._2).sum.toDouble / g.length
       g.length * math.pow(ok - oBar, 2) }.sum / n
     val unc = oBar * (1 - oBar)
-    val r = graft.queries.Curation76Q.queries("m63_brier_decomp")(
+    val r = SparkEntry.queries("m63_brier_decomp")(
       spark, dir).collect().head
     assert(r.getLong(0) == n.toLong && r.getLong(1) == so)
     assert(math.abs(r.getDouble(2) - brier) < 1e-9, "brier")
@@ -76,7 +76,7 @@ class Curation76Spec extends SparkSpec {
       ts.map(x => BigInt(x) * (x - 1)).sum.toDouble /
       (8.0 * n * (n - 1.0))
     val z = (jt2 / 2.0 - mean) / math.sqrt(aT + bT + cT)
-    val r = graft.queries.Curation76Q.queries("a121_jonckheere")(
+    val r = SparkEntry.queries("a121_jonckheere")(
       spark, dir).collect().head
     assert(r.getLong(0) == n && r.getLong(1) == jt2,
       s"jt2 ${r.getLong(1)} vs $jt2")

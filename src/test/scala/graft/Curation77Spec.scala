@@ -22,7 +22,7 @@ class Curation77Spec extends SparkSpec {
     }
     val mx = gaps.map(_._2).max
     val cut = gaps.filter(_._2 == mx).map(_._1).min
-    val r = graft.queries.Curation77Q.queries("m64_ks_stat")(spark, dir)
+    val r = SparkEntry.queries("m64_ks_stat")(spark, dir)
       .collect().head
     assert(r.getLong(0) == pos && r.getLong(1) == neg)
     assert(r.getLong(2) == cut, s"cut ${r.getLong(2)} vs $cut")
@@ -31,7 +31,7 @@ class Curation77Spec extends SparkSpec {
   }
 
   test("a122_median_polish sweeps reconstruct and residuals center") {
-    val got = graft.queries.Curation77Q.queries("a122_median_polish")(
+    val got = SparkEntry.queries("a122_median_polish")(
       spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
@@ -87,7 +87,7 @@ class Curation77Spec extends SparkSpec {
       cum += c; rm = math.max(rm, cum)
       (day, c, cum, rm, rm - cum)
     }
-    val got = graft.queries.Curation77Q.queries("w86_drawdown")(
+    val got = SparkEntry.queries("w86_drawdown")(
       spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).sortBy(_._1)

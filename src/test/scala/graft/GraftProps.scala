@@ -204,4 +204,35 @@ object GraftProps extends Properties("graft") {
         val expect = 1L + gaps.count(_ > gapUs)
         got == expect
     }
+
+  // Small alphabets force repeated grams; 'é' adds two-byte characters.
+  private val gramText = Gen.chooseNum(0, 30).flatMap(n =>
+    Gen.listOfN(n, Gen.oneOf('a', 'b', ' ', 'é')).map(_.mkString))
+  private val mult = Gen.oneOf(Gen.const(31L), Gen.const(-7L), Gen.chooseNum(-1000L, 1000L))
+
+  property("ngram_poly_hash is the LinkedHashSet distinct of the window Horner folds") =
+    forAll(Gen.listOfN(20, gramText), Gen.chooseNum(1, 4), mult) { (strs, n, m) =>
+      val got = strs.toDF("s").select(graft.functions.NgramPolyHash
+        .ngramHashes(col("s"), n, m)).collect().map(_.getSeq[Long](0)).toSeq
+      val want = strs.map { s =>
+        val b = s.getBytes("UTF-8")
+        val seen = new java.util.LinkedHashSet[java.lang.Long]()
+        for (i <- 0 to b.length - n)
+          seen.add(b.slice(i, i + n).foldLeft(0L)((h, x) =>
+            (h * m + (x & 0xffL)) % graft.functions.Text.P))
+        seen.toArray.toSeq.map(_.asInstanceOf[java.lang.Long].longValue)
+      }
+      got == want
+    }
+
+  private val distinctLongs = Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n,
+    Gen.oneOf(Gen.chooseNum(-6L, 6L), Gen.oneOf(Long.MinValue, Long.MaxValue)))
+    .map(_.distinct))
+
+  property("long_array_intersect_count is the Set intersection size") =
+    forAll(Gen.listOfN(20, Gen.zip(distinctLongs, distinctLongs))) { pairs =>
+      val got = pairs.toDF("a", "b").select(graft.functions.LongArrayIntersectCount
+        .intersectCount(col("a"), col("b"))).collect().map(_.getLong(0)).toSeq
+      got == pairs.map { case (a, b) => (a.toSet intersect b.toSet).size.toLong }
+    }
 }

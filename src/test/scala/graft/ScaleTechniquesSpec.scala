@@ -269,8 +269,8 @@ class ScaleTechniquesSpec extends SparkSpec {
       .reduce(_.unionByName(_))
     withTempDir("graft_corpus16x") { tmp =>
       big.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val got = graft.queries.CorpusQ.queries("c_corpus")(spark, tmp)
-      val want = graft.queries.CorpusQ.queries("c_corpus")(spark, dir)
+      val got = SparkEntry.queries("c_corpus")(spark, tmp)
+      val want = SparkEntry.queries("c_corpus")(spark, dir)
       assert(got.count() == want.count(), "16x must dedup down to the 1x corpus")
       assert(got.except(want).isEmpty && want.except(got).isEmpty,
         "surviving rows (ids, quality, split) must match the 1x run exactly")

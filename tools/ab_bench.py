@@ -13,7 +13,9 @@ isolated-JVM subset runs).
 Usage: python3 tools/ab_bench.py <dirA> <dirB> <sf_dir> <n_alts> q1 q2 ...
 Writes ab_bench.json {queries: {q: {A: min, B: min, ratio}}, ...}.
 """
-import json, os, subprocess, sys
+import json, os, sys
+
+from benchrun import bench
 
 dirA, dirB, sf = sys.argv[1], sys.argv[2], sys.argv[3]
 n = int(sys.argv[4])
@@ -26,24 +28,7 @@ env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf)
 env.setdefault("SPARK_DRIVER_MEM", "64g" if "sf10" in sf else "8g")
 
 def run(cwd, i):
-    out = subprocess.run(
-        ["sbt", "-batch", "runMain graft.Bench " + " ".join(queries)],
-        capture_output=True, text=True, env=env, cwd=cwd)
-    line = next((l[l.index('{"metric"'):] for l in out.stdout.splitlines()
-                 if '{"metric"' in l), None)
-    if line is None:
-        sys.stderr.write(f"{cwd} run {i}: no bench line\n"
-                         f"{out.stdout[-3000:]}\n{out.stderr[-2000:]}\n")
-        sys.exit(1)
-    j = json.loads(line)
-    if j.get("errors"):
-        sys.stderr.write(f"{cwd} run {i}: errors {j['errors']}\n")
-        sys.exit(1)
-    missing = [q for q in queries if q not in j["queries"]]
-    if missing:
-        sys.stderr.write(f"{cwd} run {i}: requested queries absent from "
-                         f"bench output (typo'd name?): {missing}\n")
-        sys.exit(1)
+    j = bench(cwd, env, queries, f"{cwd} run {i}")
     sys.stderr.write(f"{os.path.basename(cwd) or 'HEAD':8s} run {i}: "
                      f"total {j['value']:.1f}s {json.dumps(j['queries'])}\n")
     return j["queries"]

@@ -11,25 +11,19 @@ mean/median still carry scheduler jitter.
 Usage: python3 tools/bench3.py [sf_dir] [n_runs]
 Writes the merged line to stdout and bench3_min.json.
 """
-import json, os, subprocess, sys
+import json, os, sys
+
+from benchrun import bench
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 n = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf)
+root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 runs = []
 for i in range(n):
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf)
-    out = subprocess.run(
-        ["sbt", "-batch", "runMain graft.Bench"],
-        capture_output=True, text=True, env=env, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    line = next((l[l.index('{"metric"'):] for l in out.stdout.splitlines()
-                 if '{"metric"' in l), None)
-    if line is None:
-        sys.stderr.write(f"run {i}: no bench line\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}\n")
-        sys.exit(1)
-    j = json.loads(line)
-    if j.get("errors"):
-        sys.stderr.write(f"run {i}: errors {j['errors']}\n")
-        sys.exit(1)
+    # later runs must report every query the first one did
+    j = bench(root, env, label=f"run {i}",
+              expect=runs[0]["queries"] if runs else ())
     runs.append(j)
     sys.stderr.write(f"run {i}: total {j['value']}s\n")
 
@@ -40,5 +34,5 @@ merged["queries"] = {
 merged["value"] = round(sum(merged["queries"].values()), 3)
 merged["runs"] = n
 print(json.dumps(merged))
-with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "bench3_min.json"), "w") as f:
+with open(os.path.join(root, "bench3_min.json"), "w") as f:
     json.dump(merged, f)
