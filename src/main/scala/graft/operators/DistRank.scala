@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.BucketIndex
 
-/** Distributed exact global order statistics — cumulative sums,
-  * row_number, and ntile over a TOTAL order — without ever planning a
-  * single-partition window.
+/** Distributed exact global order statistics — cumulative sums and
+  * minima, row_number, ntile, and sums over adjacent row pairs over a
+  * TOTAL order — without ever planning a single-partition window.
   *
   * The reference's global sorts/ranks (AUC, quintile scores, gains
   * curves — the reference's analysis scripts) run inside one pandas
@@ -31,6 +31,12 @@ import graft.functions.BucketIndex
   *   4. window WITHIN each bucket (`Window.partitionBy(bucket)` —
   *      p-way parallel, spillable local sorts) and add the bucket's
   *      offset.
+  *
+  * The running folds ([[cumsum]], [[cummin]], [[rowNumbers]]) share
+  * this one body, [[scan]]. [[adjacentSum]] needs no offsets: after
+  * steps 1 and 2 its bucket-local window pairs rows within a bucket,
+  * and a fold over the ≤ p per-bucket first/last rows adds the one
+  * term that straddles each bucket boundary.
   *
   * Steps 1 and 3 are ONE struct-valued scalar subquery per call, its
   * meta (see [[meta]]): the boundaries are a subquery nested inside
@@ -201,47 +207,55 @@ object DistRank {
           .as(s"f${j}_$i")): _*)
     }
 
-  /** [[cumsum]] and [[cummin]]: the two-pass shape of the class doc
-    * under one [[Fold]]. `values` are (column, output name) pairs;
-    * each value's grand fold is appended as a column named
-    * outputName + `totalsSuffix` when that is set. */
-  private def scan(df: DataFrame, bucketKey: Column, order: Seq[Column],
-      values: Seq[(Column, String)], inclusive: Boolean,
-      totalsSuffix: Option[String], parts: Int, fold: Fold): DataFrame = {
+  /** One bucketed ordering of a [[scan]]: its bucket key, its total
+    * order, and the output name of each scanned value under it. */
+  private final case class Track(bucketKey: Column, order: Seq[Column],
+      names: Seq[String])
+
+  /** [[cumsum]], [[cummin]] and [[rowNumbers]]: the two-pass shape of
+    * the class doc under one [[Fold]]. Every track folds every value
+    * (LONG-castable columns) along its own order; one meta serves all
+    * tracks, and their bucket-local windows run back to back over one
+    * scan. `totals`, empty or one name per value, appends each value's
+    * grand fold under that name. */
+  private def scan(df: DataFrame, tracks: Seq[Track], values: Seq[Column],
+      inclusive: Boolean, totals: Seq[String], parts: Int,
+      fold: Fold): DataFrame = {
     val p = partitions(df, parts)
     if (p == 1) requireFastPath(df)
     val keep = df.columns.toSeq
+    val keys = tracks.indices.map(j => s"__drk$j")
     val tags = values.indices.map(i => s"${fold.tag}v$i")
-    val tagged = df.select(
-      (keep.map(col) :+ bucketKey.cast("double").as("__drk")) ++
-        values.zip(tags).map { case ((c, _), t) => c.cast("long").as(t) }: _*)
+    val tagged = df.select(keep.map(col) ++
+      tracks.zip(keys).map { case (t, k) => t.bucketKey.cast("double").as(k) } ++
+      values.zip(tags).map { case (c, t) => c.cast("long").as(t) }: _*)
     // With a single bucket the offsets are all identities, so the meta
     // runs only when the caller wants grand totals.
-    val m = if (p > 1 || totalsSuffix.nonEmpty)
-      Some(foldMeta(tagged, Seq("__drk"), tags.map(col), fold, p)) else None
-    val bucketed = tagged.withColumn("__drp",
-      bucketIds(Seq("__drk"), m.flatMap(boundsOf(_, p))).head)
+    val m = if (p > 1 || totals.nonEmpty)
+      Some(foldMeta(tagged, keys, tags.map(col), fold, p)) else None
+    val bucketed = tagged.select(col("*") +:
+      bucketIds(keys, m.flatMap(boundsOf(_, p))).zipWithIndex.map {
+        case (c, j) => c.as(s"__drp$j")
+      }: _*)
 
     // bucket-local windows + each bucket's offset from the meta
     val frameEnd = if (inclusive) 0L else -1L
-    val w = Window.partitionBy("__drp").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, frameEnd)
+    val cells = for ((t, j) <- tracks.zipWithIndex; (n, i) <- t.names.zipWithIndex)
+      yield (t, j, n, i, s"${fold.tag}l${j}_$i")
     val withLocal = bucketed.select(
-      (keep.map(col) :+ col("__drp")) ++
-        tags.zipWithIndex.map { case (t, i) =>
-          coalesce(fold.agg(col(t)).over(w), lit(fold.zero))
-            .as(s"${fold.tag}l$i")
+      (keep ++ keys.indices.map(j => s"__drp$j")).map(col) ++
+        cells.map { case (t, j, _, i, l) =>
+          val w = Window.partitionBy(s"__drp$j").orderBy(t.order: _*)
+            .rowsBetween(Window.unboundedPreceding, frameEnd)
+          coalesce(fold.agg(col(tags(i))).over(w), lit(fold.zero)).as(l)
         }: _*)
     val outCols = keep.map(col) ++
-      values.zipWithIndex.map { case ((_, n), i) =>
+      cells.map { case (_, j, n, i, l) =>
         val offset = m.fold(lit(fold.zero))(
-          _(s"f0_$i")("offs").getItem(col("__drp")))
-        fold.combine(col(s"${fold.tag}l$i"), offset).as(n)
+          _(s"f${j}_$i")("offs").getItem(col(s"__drp$j")))
+        fold.combine(col(l), offset).as(n)
       } ++
-      totalsSuffix.toSeq.flatMap(suf =>
-        values.zipWithIndex.map { case ((_, n), i) =>
-          m.get(s"f0_$i")("run").as(s"$n$suf")
-        })
+      totals.zipWithIndex.map { case (n, i) => m.get(s"f0_$i")("run").as(n) }
     withLocal.select(outCols: _*)
   }
 
@@ -268,10 +282,12 @@ object DistRank {
   def cumsum(df: DataFrame, bucketKey: Column, order: Seq[Column],
       values: Seq[(Column, String)], inclusive: Boolean = true,
       totalsSuffix: Option[String] = None,
-      rowNumberAs: Option[String] = None, parts: Int = 0): DataFrame =
-    scan(df, bucketKey, order,
-      values ++ rowNumberAs.map(n => (lit(1L), n)).toSeq, inclusive,
-      totalsSuffix, parts, SumFold)
+      rowNumberAs: Option[String] = None, parts: Int = 0): DataFrame = {
+    val vs = values ++ rowNumberAs.map(n => (lit(1L), n))
+    scan(df, Seq(Track(bucketKey, order, vs.map(_._2))), vs.map(_._1),
+      inclusive, totalsSuffix.toSeq.flatMap(s => vs.map(_._2 + s)), parts,
+      SumFold)
+  }
 
   /** Exact global running MINIMUM of `values` over the total order
     * `order` — the two-pass [[cumsum]] shape with min in place of
@@ -285,7 +301,8 @@ object DistRank {
   def cummin(df: DataFrame, bucketKey: Column, order: Seq[Column],
       values: Seq[(Column, String)], inclusive: Boolean = true,
       parts: Int = 0): DataFrame =
-    scan(df, bucketKey, order, values, inclusive, None, parts, MinFold)
+    scan(df, Seq(Track(bucketKey, order, values.map(_._2))),
+      values.map(_._1), inclusive, Nil, parts, MinFold)
 
   /** Exact global 1-based row number over `order` — [[rowNumbers]] with
     * one order. `totalAs`, if set, appends the total row count as a
@@ -303,12 +320,12 @@ object DistRank {
       as: String)
 
   /** Several exact global row numbers over DIFFERENT total orders of
-    * the SAME frame, fused: one meta sketches every order's bucket
-    * boundaries together and counts each order's rows per bucket
-    * (≤ k·p rows, prefix-summed into per-order offsets), and the final
-    * plan runs the k bucket-local sort+window passes back to back over
-    * one scan — no per-order re-read of the input and no k-way
-    * self-join on the row key.
+    * the SAME frame, fused: one [[scan]] with a track per spec, so one
+    * meta sketches every order's bucket boundaries together and counts
+    * each order's rows per bucket (≤ k·p rows, prefix-summed into
+    * per-order offsets), and the final plan runs the k bucket-local
+    * sort+window passes back to back over one scan — no per-order
+    * re-read of the input and no k-way self-join on the row key.
     *
     * Replaces k independent [[rowNumber]] calls (k metas, k+1
     * computations of the input, k joins) for the RFM-style "rank the
@@ -322,99 +339,63 @@ object DistRank {
   def rowNumbers(df: DataFrame, specs: Seq[RankSpec],
       totalAs: Option[String] = None, parts: Int = 0): DataFrame = {
     require(specs.nonEmpty, "rowNumbers needs at least one RankSpec")
-    val p = partitions(df, parts)
-    if (p == 1) requireFastPath(df)
-    val keep = df.columns.toSeq
-    val keys = specs.indices.map(j => s"__drk$j")
-    val tagged = df.select(keep.map(col) ++ specs.zip(keys).map {
-      case (sp, k) => sp.bucketKey.cast("double").as(k)
-    }: _*)
-    // With a single bucket the offsets are all 0, so the meta runs
-    // only when the caller wants the total.
-    val m = if (p > 1 || totalAs.isDefined)
-      Some(foldMeta(tagged, keys, Seq(lit(1L)), SumFold, p)) else None
-    val bucketed = tagged.select(keep.map(col) ++
-      bucketIds(keys, m.flatMap(boundsOf(_, p))).zipWithIndex.map {
-        case (c, j) => c.as(s"__drp$j")
-      }: _*)
-
-    // k bucket-local windows over one scan, offsets from the meta
-    val ranked = specs.indices.foldLeft(bucketed) { (d, j) =>
-      val offset =
-        m.fold(lit(0L))(_(s"f${j}_0")("offs").getItem(col(s"__drp$j")))
-      val w = Window.partitionBy(s"__drp$j").orderBy(specs(j).order: _*)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      d.withColumn(specs(j).as,
-        coalesce(sum(lit(1L)).over(w), lit(0L)) + offset)
-    }
-    ranked.select(keep.map(col) ++ specs.map(sp => col(sp.as)) ++
-      totalAs.map(t => m.get("f0_0")("run").as(t)).toSeq: _*)
+    scan(df, specs.map(sp => Track(sp.bucketKey, sp.order, Seq(sp.as))),
+      Seq(lit(1L)), inclusive = true, totalAs.toSeq, parts, SumFold)
   }
 
-  /** All ADJACENT row pairs (row_i, row_{i+1}) of the total order
-    * `order` — the operator behind exact sequential statistics
-    * (Chatterjee's ξ, von Neumann ratios) whose terms touch each
-    * consecutive pair once. Replaces the global-row-number self-join
-    * shape (`pos` joined against itself shifted by one), which
-    * computes the full input chain twice and shuffles a row-scale
-    * hash join, with ONE bucket-local sort pass:
+  /** Σ term(row_i, row_{i+1}) over every ADJACENT row pair of the
+    * total order `order`, as a one-row frame with column `sum` — the
+    * operator behind exact sequential statistics (Chatterjee's ξ, von
+    * Neumann ratios) whose terms touch each consecutive pair once.
+    * `term` gets both rows as structs of `df`'s columns and must not
+    * read other frames. One bucket-local sort pass, no pair rows:
     *
-    *   - within-bucket pairs: `lead()` over the cumsum bucket-local
-    *     window (bucket-local sort, p-way parallel, spillable);
-    *   - the ≤ p−1 cross-boundary pairs: per-bucket first/last rows
-    *     by `min_by`/`max_by` (aggregate-grain, ≤ p rows) joined to
-    *     the next PRESENT bucket over a broadcast inequality —
-    *     bounded metadata, entirely in-plan.
+    *   - the boundary [[sketch]] buckets the rows;
+    *   - a bucket-local `lag` window pairs each row with its
+    *     predecessor, and the term is evaluated per row;
+    *   - one per-bucket aggregate (over the window's own partitioning,
+    *     so no exchange) keeps the term sum and the bucket's first and
+    *     last rows, by `min_by`/`max_by` over the order struct;
+    *   - one fold over the ≤ p bucket rows, in bucket order, adds the
+    *     term across each pair of consecutive PRESENT buckets.
     *
-    * Output: for each name in `cols`, `name` (row i) and `name_n`
-    * (row i+1); exactly N−1 rows for an N-row input. `order` must be
-    * an ASCENDING total order; `bucketKey` ASC-congruent with its
-    * leading column and NULL-free (the [[cumsum]] contract — NaN
-    * keys go to the top bucket). Its one subquery is the boundary
-    * [[sketch]], which both passes read through one expression, so
-    * they agree on every row's bucket.
+    * The sum is taken in the term's own type (exact for DECIMAL), and
+    * NULL terms are skipped as `sum` skips them: fewer than two rows
+    * give NULL. `order` must be an ASCENDING order; `bucketKey`
+    * ASC-congruent with its leading column and NULL-free (the
+    * [[cumsum]] contract — NaN keys go to the top bucket). Tied rows of
+    * a non-unique order may pair up either way, so they must give equal
+    * terms in any arrangement.
     */
-  def adjacentPairs(df: DataFrame, bucketKey: Column, order: Seq[Column],
-      cols: Seq[String], parts: Int = 0): DataFrame = {
-    require(cols.forall(c => !cols.contains(s"${c}_n")),
-      s"adjacentPairs suffix collision: a requested column's '_n' pair " +
-        s"name shadows another requested column (${cols.mkString(", ")})")
+  def adjacentSum(df: DataFrame, bucketKey: Column, order: Seq[Column],
+      term: (Column, Column) => Column, parts: Int = 0): DataFrame = {
     val p = partitions(df, parts)
     val oNames = order.indices.map(i => s"__do$i")
     val tagged = df.select(
-      order.zip(oNames).map { case (c, n) => c.as(n) } ++
-        cols.map(col) :+ bucketKey.cast("double").as("__drk"): _*)
-    val bucketed = tagged.withColumn("__drp",
-      bucketIds(Seq("__drk"), sketch(tagged, Seq("__drk"), p)).head)
+      struct(df.columns.map(col): _*).as("__row") +:
+        order.zip(oNames).map { case (c, n) => c.as(n) } :+
+        bucketKey.cast("double").as("__drk"): _*)
     val w = Window.partitionBy("__drp").orderBy(oNames.map(col): _*)
-    val ordStruct = struct(oNames.map(col): _*)
-    val payload = struct(cols.map(col): _*)
-    val inBucket = bucketed
-      .withColumn("__dnext", lead(payload, 1).over(w))
-      .filter(col("__dnext").isNotNull)
-      .select(cols.map(col) ++
-        cols.map(c => col(s"__dnext.$c").as(s"${c}_n")): _*)
-    // bucket ends: the total order makes ordStruct unique, so
-    // min_by/max_by are deterministic
-    val ends = bucketed.groupBy("__drp").agg(
-      min_by(payload, ordStruct).as("__first"),
-      max_by(payload, ordStruct).as("__last"))
-    val lasts = ends.select(col("__drp").as("__pa"), col("__last"))
-    val firsts = ends.select(col("__drp").as("__pb"), col("__first"))
-    // next PRESENT bucket (ids are sparse when buckets are empty):
-    // a ≤ p-row broadcast inequality join, then keep the minimal
-    // successor per bucket
-    // group by the bucket id alone (never the payload struct —
-    // grouping keys get -0.0-normalized); __last is constant within
-    // a group, carried through min_by
-    val boundary = lasts
-      .join(broadcast(firsts), col("__pb") > col("__pa"))
-      .groupBy(col("__pa"))
-      .agg(min_by(col("__first"), col("__pb")).as("__first"),
-        min_by(col("__last"), col("__pb")).as("__last"))
-      .select(cols.map(c => col(s"__last.$c").as(c)) ++
-        cols.map(c => col(s"__first.$c").as(s"${c}_n")): _*)
-    inBucket.union(boundary)
+    val ord = struct(oNames.map(col): _*)
+    val buckets = tagged
+      .withColumn("__drp",
+        bucketIds(Seq("__drk"), sketch(tagged, Seq("__drk"), p)).head)
+      .withColumn("__prev", lag(col("__row"), 1).over(w))
+      .groupBy("__drp")
+      .agg(sum(when(col("__prev").isNotNull,
+          term(col("__prev"), col("__row")))).as("s"),
+        min_by(col("__row"), ord).as("first"),
+        max_by(col("__row"), ord).as("last"))
+    val sumType = buckets.schema("s").dataType
+    def add(a: Column, b: Column): Column = coalesce(a + b, a, b)
+    buckets.agg(aggregate(
+        array_sort(collect_list(struct("__drp", "s", "first", "last"))),
+        struct(lit(null).cast(sumType).as("s"),
+          lit(null).cast(tagged.schema("__row").dataType).as("last")),
+        (acc, c) => struct(
+          add(add(acc("s"), c("s")), when(acc("last").isNotNull,
+            term(acc("last"), c("first")))).cast(sumType).as("s"),
+          c("last").as("last")))("s").as("sum"))
   }
 
   /** Where a running weight over `cells` (struct(b: bucket id,

@@ -48,7 +48,7 @@ object Multimodal {
       var h = 0L
       var i = 0
       while (i < payload.length) {
-        h = (h * 31 + (payload(i) & 0xff)) % 1000000007L
+        h = (h * 31 + (payload(i) & 0xff)) % graft.functions.Text.P
         i += 1
       }
       (64 + (h % 1920L).toInt, 64 + ((h / 7L) % 1080L).toInt,

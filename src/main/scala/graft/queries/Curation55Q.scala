@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import Q._
 import graft.operators.DistRank
@@ -19,8 +20,9 @@ import graft.operators.DistRank
   *
   * Cross-engine discipline: every rank is an exact BIGINT from a
   * value-count cumsum (never a row-scale sort — DistRank two-pass);
-  * adjacent-pair terms come from a pos→pos+1 self-join on the exact
-  * global row number, not a window; numerators/denominators are
+  * adjacent-pair sums come from DistRank.adjacentSum in Spark and from
+  * a pos→pos+1 self-join on the exact global row number in the
+  * oracle; numerators/denominators are
   * exact DECIMAL(38,0) with ONE final division, VARCHAR-routed in
   * the oracle (round-9 trap 7).
   */
@@ -39,49 +41,27 @@ object Curation55Q extends QueryModule {
         col("l_quantity").cast("long").as("x"),
         lattice(col("l_extendedprice"), 100).as("y"),
         col("l_orderkey").as("ok"), col("l_linenumber").as("ln"))
-      val vc = li.groupBy(col("y").as("c")).agg(count(lit(1)).as("m"))
-      // cum is VALUE-LATTICE grain (distinct cents — saturates ~10M
-      // values at any SF while the input keeps growing), so it is the
-      // side to cache AND to broadcast: the rank join below then never
-      // shuffles the row-scale side, and the l-moments fold at lattice
-      // grain (Σ over rows of f(l) = Σ over cents of m·f(l) — the
-      // identical exact integers).
-      val cum = DistRank.cumsum(vc, col("c"), Seq(col("c")),
-        Seq((col("m"), "clo")), inclusive = false,
-        totalsSuffix = Some("_tot"))
-        .select(col("c"), col("m"), (col("clo") + col("m")).as("r"),
-          (col("clo_tot") - col("clo")).as("l")).cache()
       // (ok, ln) is NOT unique in the synthetic lineitem (11785 dup
       // pairs at sf0.01) — append y to the order: remaining ties have
       // equal y hence equal rank r, so the r-SEQUENCE (all ξ reads)
       // is invariant under their arbitrary arrangement on both
       // engines.
-      // broadcast(cum): bounded build side — a BroadcastHashJoin at
-      // every SF in place of the former row-scale shuffle join (the
-      // round-11 sf10 wall); the row side is scanned, never exchanged.
-      // rows stays cached: adjacentPairs' sketch pass and final union
-      // would otherwise rebuild the lattice broadcast per action and
-      // rescan the row side 3x (measured +27% at sf0.1, round 12).
-      val rows = li.join(broadcast(cum), col("y") === col("c"))
-        .select(col("x"), col("ok"), col("ln"), col("y"), col("r"))
-        .cache()
-      // one bucket-local sort pass for the Σ|r_{i+1} − r_i| fold
-      // (before: a global-row-number cumsum referenced twice — the
-      // full chain computed twice — plus a row-scale pos→pos+1 hash
-      // join); Σ l·(n−l) = n·Σl − Σl² folds the former pos_tot
-      // literal into moments of the same pass — exact integers both
-      // ways, so the final double ops see identical operands
-      val adj = DistRank.adjacentPairs(rows, col("x"),
-          Seq(col("x"), col("ok"), col("ln"), col("y")), Seq("r"))
-        .agg(sum(abs(col("r_n") - col("r")).cast("decimal(38,0)"))
-          .as("sad"))
+      val (cum, rows) = latticeRanks(li, "y",
+        Seq((col("clo") + col("m")).as("r"),
+          (col("clo_tot") - col("clo")).as("l")),
+        Seq("x", "ok", "ln", "y", "r"))
+      // Σ l·(n−l) = n·Σl − Σl² from the lattice moments — exact
+      // integers, so the final double ops see the oracle's operands
+      val adj = DistRank.adjacentSum(rows, col("x"),
+        Seq(col("x"), col("ok"), col("ln"), col("y")),
+        (a, b) => abs(b("r") - a("r")).cast("decimal(38,0)"))
       val den = cum.agg(
         sum(col("m")).as("n"),
         sum(col("l").cast("decimal(38,0)") * col("m")).as("sl1"),
         sum(col("l").cast("decimal(38,0)") * col("l") * col("m")).as("sl2"))
       den.crossJoin(broadcast(adj))
         .select(col("n"),
-          (lit(1.0) - (col("sad") * col("n")).cast("double") /
+          (lit(1.0) - (col("sum") * col("n")).cast("double") /
             ((col("sl1") * col("n") - col("sl2")) * 2).cast("double"))
             .as("xi"))
     }),
@@ -89,40 +69,27 @@ object Curation55Q extends QueryModule {
     // A103: Bartels' rank von Neumann ratio of the event-value series
     // in (ts, event_id) order. Mid-ranks live on the doubled lattice
     // (mr2 = 2·below + ties + 1, exact BIGINT; the 2× cancels in the
-    // ratio), successive differences come from the pos→pos+1 join,
+    // ratio), successive differences come from the adjacent-pair sum,
     // and RVN = n·Σ(Δmr2)² / (n·Σmr2² − (Σmr2)²) is exact until one
     // division.
     "a103_bartels_rvn" -> ((s, dir) => {
       val e = graft.io.Tables.eventsUs(s, dir).select(
         col("ts_us"), col("event_id"), lattice(col("value"), 100).as("c"))
-      val vc = e.groupBy("c").agg(count(lit(1)).as("m"))
-      // mr is VALUE-LATTICE grain (bounded at any SF) — cache it,
-      // broadcast it into the rank join (no row-scale shuffle), and
-      // fold the mr2-moments at lattice grain (Σ_rows f(mr2) =
-      // Σ_cents m·f(mr2), identical exact integers) — the a102 shape.
-      val mr = DistRank.cumsum(vc, col("c"), Seq(col("c")),
-        Seq((col("m"), "clo")), inclusive = false)
-        .select(col("c"), col("m"),
-          (col("clo") * 2 + col("m") + 1).as("mr2")).cache()
-      // project BEFORE the cache: the pair pass needs only
-      // (ts_us, event_id, mr2) — caching c and m too fattened the
-      // row-scale cache by half (measured 1.32x at sf10, round 12)
-      val rows = e.join(broadcast(mr), "c")
-        .select(col("ts_us"), col("event_id"), col("mr2")).cache()
-      // same rewrite as a102: adjacent Δmr2 terms from one
-      // bucket-local sort pass instead of the doubled cumsum chain +
-      // pos self-join; n comes from the same lattice moments pass
-      // (identical integer, identical final double ops)
-      val num = DistRank.adjacentPairs(rows, col("ts_us"),
-          Seq(col("ts_us"), col("event_id")), Seq("mr2"))
-        .agg(sum((col("mr2_n") - col("mr2")).cast("decimal(38,0)") *
-          (col("mr2_n") - col("mr2"))).as("sdd"))
+      val (mr, rows) = latticeRanks(e, "c",
+        Seq((col("clo") * 2 + col("m") + 1).as("mr2")),
+        Seq("ts_us", "event_id", "mr2"))
+      // n comes from the same lattice moments pass (identical integer,
+      // identical final double ops)
+      val num = DistRank.adjacentSum(rows, col("ts_us"),
+        Seq(col("ts_us"), col("event_id")),
+        (a, b) => (b("mr2") - a("mr2")).cast("decimal(38,0)") *
+          (b("mr2") - a("mr2")))
       val den = mr.agg(
         sum(col("mr2").cast("decimal(38,0)") * col("mr2") * col("m")).as("s2"),
         sum(col("mr2") * col("m")).as("s1"), sum(col("m")).as("n"))
       den.crossJoin(broadcast(num))
         .select(col("n"),
-          ((col("sdd") * col("n")).cast("double") /
+          ((col("sum") * col("n")).cast("double") /
             (col("s2") * col("n") -
               col("s1").cast("decimal(38,0)") * col("s1")).cast("double"))
             .as("rvn"))
@@ -154,6 +121,26 @@ object Curation55Q extends QueryModule {
             lit(0.0), (a, x) => a + x).as("ap"))
         .select(col("n"), col("p"), col("ap"))
     }))
+
+  /** The rank shape a102 and a103 share. The value-lattice counts `m`
+    * of `rows`' column `c` get their exclusive running count `clo` and
+    * its total `clo_tot` from one DistRank cumsum at LATTICE grain
+    * (distinct cents saturate at any SF while the rows keep growing);
+    * `ranks` derives the per-value columns from them. The lattice is
+    * the side to broadcast: the rank join never shuffles the row side,
+    * and the moments fold at lattice grain (Σ over rows of f = Σ over
+    * values of m·f, the identical exact integers). Returns the lattice
+    * and `rows` joined to it, cut to `keep`. Neither is cached: the
+    * adjacent-pair sum reads the rows twice (its sketch and its pass),
+    * and an sf0.1 A/B measured the uncached form faster. */
+  private def latticeRanks(rows: DataFrame, c: String, ranks: Seq[Column],
+      keep: Seq[String]): (DataFrame, DataFrame) = {
+    val vc = rows.groupBy(c).agg(count(lit(1)).as("m"))
+    val lat = DistRank.cumsum(vc, col(c), Seq(col(c)),
+      Seq((col("m"), "clo")), inclusive = false, totalsSuffix = Some("_tot"))
+      .select(col(c) +: col("m") +: ranks: _*)
+    (lat, rows.join(broadcast(lat), c).select(keep.map(col): _*))
+  }
 
   // ---- oracle SQL ----------------------------------------------------
 

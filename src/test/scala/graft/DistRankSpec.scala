@@ -4,14 +4,14 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.graftshim.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Complete, Final}
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType}
 import org.scalacheck.{Gen, Prop, Test}
 
 import graft.functions.BucketIndex
@@ -168,8 +168,7 @@ class DistRankSpec extends SparkSpec {
       .select("id", "rk", "rv", "ri", "n").collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))).toMap
-    def one(b: org.apache.spark.sql.Column,
-        ord: Seq[org.apache.spark.sql.Column]) =
+    def one(b: Column, ord: Seq[Column]) =
       DistRank.rowNumber(base, b, ord, "r", parts = 4)
         .select("id", "r").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -256,8 +255,8 @@ class DistRankSpec extends SparkSpec {
         DistRank.RankSpec(col("sv"), ord, "r1"),
         DistRank.RankSpec(-col("k"), Seq(col("k").desc), "r2")),
         totalAs = Some("n"), parts = pt)),
-      "adjacentPairs" -> (pt => DistRank.adjacentPairs(agg, col("sv"), ord,
-        Seq("k"), parts = pt)),
+      "adjacentSum" -> (pt => DistRank.adjacentSum(agg, col("sv"), ord,
+        (a, b) => abs(b("k") - a("k")), parts = pt)),
       "medianDoubled" -> (pt => DistRank.medianDoubled(agg, col("sv"),
         parts = pt)),
       "groupedMedianDoubled" -> (pt => DistRank.groupedMedianDoubled(agg,
@@ -399,46 +398,92 @@ class DistRankSpec extends SparkSpec {
     }
   }
 
-  test("adjacentPairs equals the global-order lead, N-1 rows") { underAqe {
-    // (k, id) total order; payload v AND the order column k itself
-    val expect = base
-      .withColumn("vn", lead(col("v"), 1)
-        .over(Window.orderBy(col("k"), col("id"))))
-      .withColumn("kn", lead(col("k"), 1)
-        .over(Window.orderBy(col("k"), col("id"))))
-      .filter(col("vn").isNotNull)
-      .select("v", "k", "vn", "kn").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sorted.toSeq
-    val got = DistRank.adjacentPairs(base, col("k"),
-        Seq(col("k"), col("id")), Seq("v", "k"), parts = 4)
-      .select("v", "k", "v_n", "k_n").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sorted.toSeq
-    assert(got.size == 998 && got == expect)
+  /** Σ term(row_i, row_{i+1}) by the plan adjacentSum replaces: a
+    * single-partition `lag` over the same total order, then `sum`. */
+  private def lagSum(df: DataFrame, order: Seq[Column],
+      term: (Column, Column) => Column): DataFrame = {
+    val row = struct(df.columns.map(col): _*)
+    df.withColumn("prev", lag(row, 1).over(Window.orderBy(order: _*)))
+      .agg(sum(when(col("prev").isNotNull, term(col("prev"), row))))
+  }
+
+  // asymmetric and non-telescoping, so a mis-paired or missed pair
+  // changes the sum; exact DECIMAL(38,0), the a102/a103 term type
+  private val term: (Column, Column) => Column = (a, b) =>
+    (abs(b("v") - a("v")) * (a("id") % 13 + 1) + b("k") * a("v"))
+      .cast("decimal(38,0)")
+
+  test("adjacentSum equals the single-partition lag sum") { underAqe {
+    val ord = Seq(col("k"), col("id"))
+    val expect = lagSum(base, ord, term).head().getDecimal(0)
+    for (parts <- Seq(1, 3, 4)) {
+      val got = DistRank.adjacentSum(base, col("k"), ord, term, parts)
+      assert(got.columns.toSeq == Seq("sum"))
+      assert(got.schema("sum").dataType == DecimalType(38, 0))
+      assert(got.collect().toSeq.map(_.getDecimal(0)) == Seq(expect),
+        s"parts=$parts")
+    }
   }}
 
-  test("adjacentPairs: sparse buckets, single row, empty input") { underAqe {
-    // two far-apart key islands with p=8 leaves most buckets empty —
-    // the boundary join must still chain across PRESENT buckets only
-    val sparse = spark.range(0, 20)
-      .select(col("id"), when(col("id") < 10, col("id"))
-        .otherwise(col("id") * 1000).as("k"))
-    val expect = sparse
-      .withColumn("kn", lead(col("k"), 1).over(Window.orderBy(col("k"))))
-      .filter(col("kn").isNotNull)
-      .select("k", "kn").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val got = DistRank.adjacentPairs(sparse, col("k"), Seq(col("k")),
-        Seq("k"), parts = 8)
-      .select("k", "k_n").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(got.size == 19 && got == expect)
-    assert(DistRank.adjacentPairs(base.limit(1), col("k"),
-      Seq(col("k"), col("id")), Seq("v"), parts = 4).count() == 0L)
-    assert(DistRank.adjacentPairs(base.limit(0), col("k"),
-      Seq(col("k"), col("id")), Seq("v"), parts = 4).count() == 0L)
+  test("adjacentSum: sparse buckets, 0/1/2 rows, special keys, ties") { underAqe {
+    def got(df: DataFrame, key: Column, ord: Seq[Column], parts: Int) =
+      DistRank.adjacentSum(df, key, ord, term, parts).head().get(0)
+    def expect(df: DataFrame, ord: Seq[Column]) =
+      lagSum(df, ord, term).head().get(0)
+    // two far-apart key islands with p = 8 leave most buckets empty:
+    // the fold must chain across PRESENT buckets only
+    val sparse = spark.range(0, 20).select(col("id"),
+      when(col("id") < 10, col("id")).otherwise(col("id") * 1000).as("k"),
+      ((col("id") * 37) % 101).as("v"))
+    val so = Seq(col("k"))
+    assert(got(sparse, col("k"), so, 8) == expect(sparse, so))
+    // 0 and 1 rows: no pair, NULL (what sum over no pairs gives);
+    // 2 rows: the one term
+    val ord = Seq(col("k"), col("id"))
+    for (n <- Seq(0, 1)) assert(got(base.limit(n), col("k"), ord, 4) == null)
+    // ids 3 and 10: k = 3 for both, v = 10 then 67
+    val two = base.filter(col("id").isin(3L, 10L))
+    assert(got(two, col("k"), ord, 4) ==
+      new java.math.BigDecimal((67 - 10) * (3 % 13 + 1) + 3 * 10))
+    // NaN keys sort above every number, -0.0 equals 0.0 (BucketIndex
+    // follows Catalyst's double order)
+    val special = base.withColumn("kd", element_at(array(lit(-0.0),
+      lit(0.0), lit(Double.NaN), lit(-1.5), lit(2.0)),
+      (col("id") % 5 + 1).cast("int")))
+    val sk = Seq(col("kd"), col("id"))
+    assert(got(special, col("kd"), sk, 4) == expect(special, sk))
+    // a non-unique order: rows tied on k carry equal payloads, so any
+    // arrangement of the ties gives the same sum
+    val tied = base.select(col("k"), (col("k") * 3).as("v"),
+      (col("k") * 5).as("id"))
+    assert(got(tied, col("k"), Seq(col("k")), 4) ==
+      expect(tied, Seq(col("k"))))
   }}
+
+  test("adjacentSum equals the ordered fold on random frames") {
+    // keys on a coarse lattice with NaN and both zeros (ties across
+    // bucket boundaries), a unique id tiebreaker, random bucket counts
+    val key = Gen.frequency(6 -> Gen.chooseNum(-3, 3).map(_ / 2.0),
+      1 -> Gen.oneOf(Double.NaN, -0.0, 0.0))
+    val frames = Gen.zip(Gen.chooseNum(1, 6), Gen.choose(0, 40).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(key, Gen.chooseNum(-50L, 50L)))))
+    val prop = Prop.forAll(frames) { case (parts, rows) =>
+      val df = rows.zipWithIndex.map { case ((k, v), i) => (k, v, i.toLong) }
+        .toDF("kd", "v", "id")
+      val sorted = rows.zipWithIndex.sortWith { case (((k1, _), i1), ((k2, _), i2)) =>
+        val c = SQLOrderingUtil.compareDoubles(k1, k2)
+        c < 0 || (c == 0 && i1 < i2)
+      }.map { case ((_, v), i) => (v, i.toLong) }
+      val ref = sorted.sliding(2).collect { case Seq((va, ia), (vb, _)) =>
+        math.abs(vb - va) * (ia % 13 + 1) }.toSeq
+      val got = DistRank.adjacentSum(df, col("kd"), Seq(col("kd"), col("id")),
+        (a, b) => abs(b("v") - a("v")) * (a("id") % 13 + 1), parts).head()
+      if (ref.isEmpty) got.isNullAt(0) else got.getLong(0) == ref.sum
+    }
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(15), prop)
+    assert(result.passed, result.status.toString)
+  }
 
   /** Reference doubled median: vlo = min v with 2·cumw ≥ tot,
     * vhi = min v with 2·cumw > tot, over (v, w) pairs. */

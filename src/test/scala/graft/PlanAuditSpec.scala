@@ -158,10 +158,8 @@ class PlanAuditSpec extends SparkSpec {
     // m51: the 1-row nvec/ssw scalar frames broadcast into the
     // 64-row per-dim moment combine
     "m51_calinski",
-    // a102/a103: the 1-row adjacent-pair aggregate broadcasts into
-    // the 1-row denominator combine, and (round 11) DistRank
-    // .adjacentPairs chains the ≤ p-row bucket-end frames over a
-    // broadcast next-present-bucket inequality
+    // a102/a103: the 1-row adjacent-pair sum broadcasts into the
+    // 1-row denominator combine (the final crossJoin)
     "a102_chatterjee_xi", "a103_bartels_rvn",
     // g21: the per-round 1-row max-renormalizer broadcasts into the
     // node-score frame; w71: the 1-row global-moment frame broadcasts

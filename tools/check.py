@@ -25,7 +25,9 @@ directory (/tmp/graft_text2688608093), the source line of an RDD's
 call site (localCheckpoint at Graph.scala:72), which moves with any
 edit above it, and the session-wide counters an exchange's plan_id
 and an RDD's id (MapPartitionsRDD[3963]), which move with any plan
-change in an earlier query. It prints the masked diff of every query
+change in an earlier query. Lambda variables (lambda x_27) take a
+session-wide counter too, so each query's are renumbered in order of
+first use (lambda x_0, lambda y_1, ...). It prints the masked diff of every query
 whose plan differs, or that only one dump has.
 
 Usage: python3 tools/check.py <sfDir> <outDir> [query ...]
@@ -162,6 +164,7 @@ PLAN_MASKS = [
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"(RDD)\[\d+\]"), r"\1[]"),
 ]
+LAMBDA_VAR = re.compile(r"\blambda (\w+?)_(\d+)\b")
 FORMATTED = re.compile(r"^==== (\S+) ====$")
 SUMMARY = re.compile(r"^== (\S+?)(:| +exchanges=)")
 
@@ -193,6 +196,10 @@ def read_plans(path):
     for lines in plans.values():
         while lines and not lines[-1].strip():
             lines.pop()
+        seen = {}
+        lines[:] = [LAMBDA_VAR.sub(lambda m: "lambda %s_%d" % (
+            m.group(1), seen.setdefault(m.group(0), len(seen))), line)
+            for line in lines]
     return plans
 
 

@@ -526,6 +526,79 @@ def t_chrf(sf_dir):
         {c: "int64" for c in cols[:-1]} | {"chrf": "float64"})
 
 
+def _lattice(x, scale):
+    """Q.lattice: round(x * scale) HALF_UP (Spark rounds the double's
+    shortest decimal repr) as int64; the double product is the same
+    IEEE op on both sides, and only near-ties take the Decimal path."""
+    y = np.asarray(x, dtype=np.float64) * scale
+    a = np.abs(y)
+    r = np.sign(y) * np.floor(a + 0.5)
+    for i in np.flatnonzero(np.abs(a - np.floor(a) - 0.5) < 1e-6):
+        r[i] = float(Decimal(repr(float(y[i]))).quantize(
+            Decimal(1), rounding=ROUND_HALF_UP))
+    return r.astype(np.int64)
+
+
+def _lattice_ranks(v):
+    """Per row: the count clo of lattice values strictly below its
+    value v and the count m of its own value (the exclusive value-count
+    cumsum both rank queries start from), plus the (m, clo) lattice."""
+    vals, inv, m = np.unique(v, return_inverse=True, return_counts=True)
+    clo = np.concatenate([[0], np.cumsum(m)[:-1]])
+    return clo[inv], m[inv], m, clo
+
+
+def _exact_sum(xs):
+    return sum(int(x) for x in xs)
+
+
+def a102_chatterjee_xi(sf_dir):
+    """Chatterjee's xi with the rows in (x, ok, ln, y) order: exact
+    Python integers for r, l, the lattice moments and sum |r_{i+1} -
+    r_i|, then the query's own final double operations."""
+    import duckdb
+    li = duckdb.sql(
+        f"SELECT l_quantity, l_extendedprice, l_orderkey, l_linenumber "
+        f"FROM '{sf_dir}/lineitem.parquet'").df()
+    x = np.trunc(li.l_quantity.to_numpy(np.float64)).astype(np.int64)
+    y = _lattice(li.l_extendedprice.to_numpy(np.float64), 100)
+    clo, m_row, m, clo_v = _lattice_ranks(y)
+    r = clo + m_row
+    n = int(len(y))
+    order = np.lexsort((y, li.l_linenumber.to_numpy(np.int64),
+                        li.l_orderkey.to_numpy(np.int64), x))
+    sad = _exact_sum(np.abs(np.diff(r[order])))
+    lv = [n - int(c) for c in clo_v]
+    sl1 = sum(l * int(k) for l, k in zip(lv, m))
+    sl2 = sum(l * l * int(k) for l, k in zip(lv, m))
+    xi = 1.0 - float(sad * n) / float((sl1 * n - sl2) * 2)
+    return pd.DataFrame({"n": [n], "xi": [xi]}).astype(
+        {"n": "int64", "xi": "float64"})
+
+
+def a103_bartels_rvn(sf_dir):
+    """Bartels' rank von Neumann ratio over the (ts_us, event_id)
+    order on the doubled mid-rank lattice mr2 = 2*below + ties + 1:
+    exact Python integers for the moments and sum (d mr2)^2, then the
+    query's own final double operations."""
+    import duckdb
+    e = duckdb.sql(f"SELECT epoch_us(ts) AS ts_us, event_id, value "
+                   f"FROM '{sf_dir}/events.parquet'").df()
+    c = _lattice(e.value.to_numpy(np.float64), 100)
+    clo, m_row, m, clo_v = _lattice_ranks(c)
+    mr2 = clo * 2 + m_row + 1
+    order = np.lexsort((e.event_id.to_numpy(np.int64),
+                        e.ts_us.to_numpy(np.int64)))
+    sdd = sum(int(d) * int(d) for d in np.diff(mr2[order]))
+    mv = [int(cl) * 2 + int(k) + 1 for cl, k in zip(clo_v, m)]
+    n = sum(int(k) for k in m)
+    s2 = sum(v * v * int(k) for v, k in zip(mv, m))
+    s1 = sum(v * int(k) for v, k in zip(mv, m))
+    rvn = float(sdd * n) / float(s2 * n - s1 * s1)
+    return pd.DataFrame({"n": [n], "rvn": [rvn]}).astype(
+        {"n": "int64", "rvn": "float64"})
+
+
 ORACLES = {
     "t_chrf": t_chrf,
     "d_neardup": d_neardup,
@@ -537,6 +610,8 @@ ORACLES = {
     "m34_knn_clf": m34_knn_clf,
     "g_pagerank": g_pagerank,
     "g10_ppr": g10_ppr,
+    "a102_chatterjee_xi": a102_chatterjee_xi,
+    "a103_bartels_rvn": a103_bartels_rvn,
 }
 
 
