@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 import graft.functions.BucketIndex
 
@@ -225,14 +226,20 @@ object DistRank {
     if (p == 1) requireFastPath(df)
     val keep = df.columns.toSeq
     val keys = tracks.indices.map(j => s"__drk$j")
-    val tags = values.indices.map(i => s"${fold.tag}v$i")
+    // A literal value (a row number's 1) folds as itself in the windows
+    // and the meta; any other value is computed once, as a tagged column.
+    val (vals, valueTags) = values.zipWithIndex.map { case (c, i) =>
+      val t = s"${fold.tag}v$i"
+      if (ColumnBridge.isLiteral(c)) (c.cast("long"), None)
+      else (col(t), Some(c.cast("long").as(t)))
+    }.unzip
     val tagged = df.select(keep.map(col) ++
       tracks.zip(keys).map { case (t, k) => t.bucketKey.cast("double").as(k) } ++
-      values.zip(tags).map { case (c, t) => c.cast("long").as(t) }: _*)
+      valueTags.flatten: _*)
     // With a single bucket the offsets are all identities, so the meta
     // runs only when the caller wants grand totals.
     val m = if (p > 1 || totals.nonEmpty)
-      Some(foldMeta(tagged, keys, tags.map(col), fold, p)) else None
+      Some(foldMeta(tagged, keys, vals, fold, p)) else None
     val bucketed = tagged.select(col("*") +:
       bucketIds(keys, m.flatMap(boundsOf(_, p))).zipWithIndex.map {
         case (c, j) => c.as(s"__drp$j")
@@ -247,7 +254,7 @@ object DistRank {
         cells.map { case (t, j, _, i, l) =>
           val w = Window.partitionBy(s"__drp$j").orderBy(t.order: _*)
             .rowsBetween(Window.unboundedPreceding, frameEnd)
-          coalesce(fold.agg(col(tags(i))).over(w), lit(fold.zero)).as(l)
+          coalesce(fold.agg(vals(i)).over(w), lit(fold.zero)).as(l)
         }: _*)
     val outCols = keep.map(col) ++
       cells.map { case (_, j, n, i, l) =>

@@ -1,8 +1,11 @@
 package graft.operators
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.{HashPartitioner, Partitioner, SparkContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed connected components for duplicate-cluster resolution.
   *
@@ -46,9 +49,10 @@ import org.apache.spark.sql.functions._
   *    a hot root costs one row per map partition there.
   *
   * The link-analysis operators ([[pageRank]], [[personalizedPageRank]])
-  * run one exact-integer rank loop ([[rankLoop]]): each caller builds
-  * its node state and passes its own base mass and initial rank, and
-  * the loop carries that state through every round.
+  * share one exact-integer rank loop ([[rankLoop]]): Pregel supersteps
+  * over edge and node RDDs under one hash partitioner, one message
+  * shuffle per round, chained lazily so that the caller's own action
+  * runs every round in one job with nothing cached.
   */
 object Graph {
 
@@ -71,11 +75,22 @@ object Graph {
                        checkpointDir: Option[String]): DataFrame =
     checkpointDir match {
       case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
+        useCheckpointDir(df.sparkSession.sparkContext, dir)
         df.checkpoint()
       case None => df.localCheckpoint()
     }
+
+  /** [[truncate]] of an RDD with a checkpoint dir: the same eager
+    * RELIABLE checkpoint, one job to compute `rdd` and one to write it. */
+  private def truncate[T](rdd: RDD[T], dir: String): RDD[T] = {
+    useCheckpointDir(rdd.sparkContext, dir)
+    rdd.checkpoint()
+    rdd.count()
+    rdd
+  }
+
+  private def useCheckpointDir(sc: SparkContext, dir: String): Unit =
+    if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
 
   /** Connected components of an undirected graph given as an edge list
     * with BIGINT-comparable columns `a`, `b` (self-loops ignored).
@@ -227,14 +242,10 @@ object Graph {
 
   /** Distributed PageRank in exact-integer fixed-point — link analysis
     * for source/domain authority scoring over a directed edge list
-    * (src, dst). Pregel-shape per iteration: ranks join edges on src
-    * (one keyed shuffle), shares aggregate on dst (second keyed
-    * shuffle), nothing ever visits the driver; `localCheckpoint` per
-    * round truncates the iterative plan exactly as in
-    * [[connectedComponents]]. Edges and degrees are computed once and
-    * cached. The rounds are [[rankLoop]], shared with
-    * [[personalizedPageRank]]: here every node's base mass is
-    * 15·scale/100 and every node starts at r = scale.
+    * (src, dst): [[personalizedPageRank]] with every node a seed, so
+    * every node's base mass is 15·scale/100 and every node starts at
+    * r = scale. The rounds are [[rankLoop]]'s supersteps; nothing ever
+    * visits the driver, and building the frame runs no round.
     *
     * Determinism: the textbook float recursion would inherit shuffle
     * summation order — instead ranks live on an integer lattice
@@ -256,9 +267,7 @@ object Graph {
                scale: Long = 1000000L,
                checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1 && scale >= 100)
-    val e = rankEdges(edges)
-    rankLoop(e, endpoints(e).join(outDegrees(e), Seq("node"), "left"),
-      lit(15L * scale / 100L), lit(scale), iters, checkpointDir)
+    rankLoop(edges, None, iters, scale, checkpointDir)
       .select(col("node"), col("r"))
   }
 
@@ -268,93 +277,113 @@ object Graph {
     * items / similar users" primitive behind graph-based recommen-
     * dation and expansion queries). The same [[rankLoop]] rounds,
     * identical determinism argument: share = r DIV deg, incoming is
-    * an exact BIGINT sum; the node state carries `is_seed`, the base
-    * mass 15·scale/100 lands on seeds only and only seeds start with
-    * r = scale (every other node starts at 0). Bit-identical across
-    * engines and partitionings.
+    * an exact BIGINT sum; the base mass 15·scale/100 lands on seeds
+    * only and only seeds start with r = scale (every other node starts
+    * at 0). A seed that is no edge endpoint is dropped. Returns
+    * (node, is_seed, r). Bit-identical across engines and
+    * partitionings.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iters: Int, scale: Long = 1000000L,
                            checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1 && scale >= 100)
-    val e = rankEdges(edges)
-    val sd = seeds.select(col("seed").cast("long").as("node"))
-      .distinct().withColumn("__isSeed", lit(1L))
-    val nodes = endpoints(e)
-      .join(sd, Seq("node"), "left")
-      .join(outDegrees(e), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__isSeed"), lit(0L)).as("is_seed"), col("__deg"))
-    val seed = col("is_seed") === 1L
-    rankLoop(e, nodes, when(seed, lit(15L * scale / 100L)).otherwise(lit(0L)),
-      when(seed, lit(scale)).otherwise(lit(0L)), iters, checkpointDir)
-      .select(col("node"), col("is_seed"), col("r"))
+    rankLoop(edges, Some(seeds), iters, scale, checkpointDir)
   }
 
-  /** The rank loops' edge set: distinct, non-null (src, dst) LONG
-    * pairs, cached pre-partitioned on src (round 11): every iteration
-    * joins e⋈shares on src, and a cache partitioned on (src, dst) —
-    * distinct's layout — would re-Exchange the EDGE table per
-    * iteration. Partitioned on src, only the (node-scale) shares
-    * side moves; the edge side reads cached blocks in place. One
-    * extra exchange at build, iters exchanges of the edge table
-    * saved — the dominant byte-mover at 100 TB. */
-  private def rankEdges(edges: DataFrame): DataFrame = {
-    val p = edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
-    edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().repartition(p, col("src")).cache()
+  /** What the rank rounds know of a node: its out-degree over the
+    * distinct edges (0 = dangling), whether it is an edge endpoint, and
+    * whether it is a seed. `+` merges two partial tallies of one node. */
+  private final case class RankNode(deg: Long, endpoint: Boolean,
+                                    seed: Boolean) {
+    def +(o: RankNode): RankNode =
+      RankNode(deg + o.deg, endpoint || o.endpoint, seed || o.seed)
   }
 
-  /** Every endpoint of the edge set `e`, once, as `node`. */
-  private def endpoints(e: DataFrame): DataFrame =
-    e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+  /** Places a (src, dst) key where `nodes` places its src, so an edge
+    * lives in the partition of its source node's state. */
+  private final class BySrc(nodes: HashPartitioner) extends Partitioner {
+    def numPartitions: Int = nodes.numPartitions
+    def getPartition(key: Any): Int =
+      nodes.getPartition(key.asInstanceOf[(Long, Long)]._1)
+  }
 
-  /** Out-degree of every node with an out-edge, as (node, __deg). */
-  private def outDegrees(e: DataFrame): DataFrame =
-    e.groupBy("src").agg(count(lit(1)).as("__deg"))
-      .select(col("src").as("node"), col("__deg"))
+  private val rankSchema = StructType(Seq("node", "is_seed", "r")
+    .map(StructField(_, LongType, nullable = false)))
 
   /** The exact-integer rank rounds of [[pageRank]] and
-    * [[personalizedPageRank]] over the cached edge set `e` (from
-    * [[rankEdges]]). `nodes` has one row per node with its out-degree
-    * `__deg` (null = dangling) next to the caller's own columns, and
-    * every round carries all of them: the per-iteration share step
-    * stays a narrow projection — the former ranks⋈degrees join
-    * re-shuffled the whole rank table once per iteration for a value
-    * that never changes (round 11). Ranks start at `init` and each
-    * round sets r = base + (85·incoming) DIV 100; `init` and `base`
-    * are columns over `nodes`, so the loop is the same for every
-    * caller. Returns `nodes`' columns plus `r`, and unpersists `e`. */
-  private def rankLoop(e: DataFrame, nodes: DataFrame, base: Column,
-                       init: Column, iters: Int,
+    * [[personalizedPageRank]] (`seeds` = None: every node is a seed),
+    * as Pregel supersteps over RDDs that share one
+    * `HashPartitioner(spark.sql.shuffle.partitions)` on the node id:
+    *
+    *  - edges: the distinct non-null (src, dst) LONG pairs, deduped
+    *    inside the one shuffle that places each pair with its src; no
+    *    per-node adjacency row, so a hub is never one record;
+    *  - state: one row per endpoint with its out-degree and seed flag,
+    *    from one shuffle of the edges' tallies and the seeds;
+    *  - a round: a narrow `zipPartitions` of the edges with the ranks
+    *    turns each edge into the message (dst, r DIV deg), the
+    *    message `reduceByKey` is the round's only shuffle, and a
+    *    second narrow `zipPartitions` with the state sets
+    *    r = base + 85·incoming DIV 100. Each round reads the state and
+    *    its own messages only, never the previous round's ranks, so a
+    *    task's narrow chain stays one round long.
+    *
+    * The rounds chain lazily: the returned frame's own action runs the
+    * input's remaining stages and every round as one job, and nothing
+    * is cached. (The input frames are converted with `.rdd`, so any
+    * of their stages that adaptive execution materializes still run at
+    * build time.) Lineage grows by one shuffle stage per round, and
+    * Spark's scheduler walks the stage graph recursively, so a job of
+    * thousands of rounds needs `checkpointDir`: with it the state and
+    * every round are reliably checkpointed, eagerly, one job each (see
+    * [[truncate]]), which also bounds the recomputation after a lost
+    * executor. Returns (node, is_seed, r) as LONG columns. */
+  private def rankLoop(edges: DataFrame, seeds: Option[DataFrame],
+                       iters: Int, scale: Long,
                        checkpointDir: Option[String]): DataFrame = {
-    val state = truncate(nodes, checkpointDir)
-    val carried = state.columns.toSeq.map(col)
-    var r = state.withColumn("r", init)
-    for (_ <- 1 to iters) {
-      // inner join semantics of the former ranks⋈degrees: nodes with
-      // no out-edges contribute no share rows
-      val shares = r.filter(col("__deg").isNotNull)
-        .select(col("node").as("src"), expr("r DIV __deg").as("__share"))
-      val inc = e.join(shares, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("__share")).as("__in"))
-      // Measured (sf0.1, local[32]): materializing each round beats
-      // pipelining several rounds into one deep job (5.4 s vs 8.5 s
-      // warm) — each round's exchange then feeds AQE a concrete
-      // size, and the deep chained-join alternative re-plans the
-      // whole prefix per action.
-      r = truncate(state.join(inc, Seq("node"), "left")
-        .select(carried :+
-          (base + expr("85 * coalesce(__in, 0L) DIV 100")).as("r"): _*),
-        checkpointDir)
+    val spark = edges.sparkSession
+    val nodes = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val pairs = edges
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    // one conversion for both inputs: a seed is a row with a null dst
+    val in = seeds.fold(pairs)(sd => pairs.union(sd
+      .select(col("seed").cast("long").as("src"), lit(null).cast("long").as("dst"))
+      .filter(col("src").isNotNull))).rdd
+    val e = in.filter(!_.isNullAt(1))
+      .map(row => ((row.getLong(0), row.getLong(1)), null))
+      .reduceByKey(new BySrc(nodes), (x, _) => x).keys
+    val everySeed = seeds.isEmpty
+    val tallies = e.flatMap { case (s, d) =>
+      Iterator((s, RankNode(1L, endpoint = true, seed = everySeed)),
+        (d, RankNode(0L, endpoint = true, seed = everySeed)))
     }
-    e.unpersist()
-    r
+    val seeded = if (everySeed) tallies else tallies.union(in
+      .filter(_.isNullAt(1))
+      .map(row => (row.getLong(0), RankNode(0L, endpoint = false, seed = true))))
+    def checkpointed[T](rdd: RDD[T]): RDD[T] =
+      checkpointDir.fold(rdd)(truncate(rdd, _))
+    val state = checkpointed(
+      seeded.reduceByKey(nodes, _ + _).filter(_._2.endpoint))
+    val base = 15L * scale / 100L
+    var ranked = state.map { case (n, s) => (n, s, if (s.seed) scale else 0L) }
+    for (_ <- 1 to iters) {
+      val incoming = e.zipPartitions(ranked) { (es, rs) =>
+        val share = new mutable.LongMap[Long]()
+        rs.foreach { case (n, s, r) => if (s.deg > 0) share(n) = r / s.deg }
+        es.map { case (src, dst) => (dst, share(src)) }
+      }.reduceByKey(nodes, _ + _)
+      ranked = checkpointed(state.zipPartitions(incoming) { (ss, is) =>
+        val got = mutable.LongMap.from(is)
+        ss.map { case (n, s) =>
+          (n, s, (if (s.seed) base else 0L) + 85L * got.getOrElse(n, 0L) / 100L)
+        }
+      })
+    }
+    spark.createDataFrame(
+      ranked.map { case (n, s, r) => Row(n, if (s.seed) 1L else 0L, r) },
+      rankSchema)
   }
 
   /** Exact triangle enumeration of an undirected graph — the classic

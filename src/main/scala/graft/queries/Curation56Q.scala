@@ -18,9 +18,9 @@ import graft.operators.DistRank
   *    where the out-of-control flag is decided on EXACT cross-
   *    multiplied integers, never on the emitted IEEE ratio.
   *
-  * Scale shapes: the power iteration is the g_pagerank Pregel loop
-  * (one keyed shuffle per round, localCheckpoint against plan
-  * growth); Kuiper rides the a35_ks value-lattice cumsum; the chart
+  * Scale shapes: the power iteration is a DataFrame Pregel loop (one
+  * keyed shuffle per round, localCheckpoint against plan growth);
+  * Kuiper rides the a35_ks value-lattice cumsum; the chart
   * is one groupBy plus a broadcast scalar frame.
   */
 object Curation56Q extends QueryModule {

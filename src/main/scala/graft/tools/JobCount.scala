@@ -12,7 +12,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * (build-time sketches/fits + the final action). The per-query job
   * count is the honest "how many eager passes does this operator pay"
   * metric for plan shapes whose cost is driver-loop structure rather
-  * than a single DAG — the final `explain` of an iterative query only
+  * than a single DAG; `build_jobs` is the part fired while building
+  * the frame — the final `explain` of an iterative query only
   * shows the last plan over checkpointed RDDs.
   *
   * Usage: runMain graft.tools.JobCount <sfDir> q1 q2 ...
@@ -33,10 +34,12 @@ object JobCount {
       ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
       val before = n.get()
       val t0 = System.nanoTime()
-      val rows = graft.SparkEntry.queries(q)(spark, sfDir)
-        .queryExecution.toRdd.count()
+      val df = graft.SparkEntry.queries(q)(spark, sfDir)
       ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
-      println(f"JOBCOUNT $q jobs=${n.get() - before} " +
+      val built = n.get() - before
+      val rows = df.queryExecution.toRdd.count()
+      ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
+      println(f"JOBCOUNT $q jobs=${n.get() - before} build_jobs=$built " +
         f"wall=${(System.nanoTime() - t0) / 1e9}%.2f rows=$rows")
     }
     try spark.catalog.clearCache() catch { case NonFatal(_) => () }

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graftshim.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Complete, Final}
@@ -53,6 +49,18 @@ class DistRankSpec extends SparkSpec {
       .toMap
     assert(got == expect)
   }}
+
+  test("a row number's literal 1 is folded in place, not carried as a column") {
+    // a tagged copy of the literal would ride the row-scale bucket
+    // exchange into the window; a computed value still gets its tag
+    val ord = Seq(col("k"), col("id"))
+    def tags(df: DataFrame): Seq[String] = df.queryExecution.optimizedPlan
+      .collectWithSubqueries { case p => p.output.map(_.name) }.flatten
+      .filter(_.startsWith("__drv")).distinct
+    assert(tags(DistRank.rowNumber(base, col("k"), ord, "r", parts = 4)).isEmpty)
+    assert(tags(DistRank.cumsum(base, col("k"), ord, Seq(col("v") -> "cv"),
+      rowNumberAs = Some("r"), parts = 4)) == Seq("__drv0"))
+  }
 
   test("descending order via negated bucket key") { underAqe {
     val ord = Seq(col("v").desc, col("id"))
@@ -263,32 +271,11 @@ class DistRankSpec extends SparkSpec {
         col("k") % 2, col("sv"), parts = pt)))
   }
 
-  /** Builds a frame inside its own job group and returns it with the
-    * number of Spark jobs the build fired (the PlanAuditSpec method:
-    * job-group attribution, listener bus drained before reading). */
-  private def built(build: => DataFrame): (DataFrame, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(
-            _.getProperty("spark.jobGroup.id") == "distrank-build"))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("distrank-build", "build a DistRank frame")
-      val df = try build finally sc.clearJobGroup()
-      ListenerBusBridge.waitUntilEmpty(sc)
-      (df, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("every primitive builds with 0 jobs and leaves no persisted RDD") {
     val sc = spark.sparkContext
     val baseline = sc.getPersistentRDDs.keySet.toSet
     for ((name, primitive) <- primitives; parts <- Seq(4, 1)) {
-      val (df, jobs) = built(primitive(parts))
+      val (df, jobs) = jobsIn(primitive(parts))
       assert(jobs == 0, s"$name at parts=$parts: $jobs job(s) at build")
       df.collect()
       assert((sc.getPersistentRDDs.keySet.toSet -- baseline).isEmpty,

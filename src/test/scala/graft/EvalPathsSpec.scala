@@ -23,16 +23,6 @@ class EvalPathsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
-  private def withConf[T](kvs: Seq[(String, String)])(body: => T): T = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** A value with doubles and floats as their raw bits, so -0.0, 0.0
     * and NaN payloads compare exactly. */
   private def canon(v: Any): Any = v match {
@@ -46,7 +36,7 @@ class EvalPathsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   /** The rows of `df` under each path, and whether each plan holds a
     * whole-stage codegen stage. */
   private def bothPaths(df: DataFrame): Seq[(Seq[Any], Boolean)] =
-    Seq(Generated, Interpreted).map(conf => withConf(conf) {
+    Seq(Generated, Interpreted).map(conf => withConf(conf: _*) {
       // a fresh Dataset per path: a Dataset plans once and keeps that plan
       val q = df.select(df.columns.map(col).toIndexedSeq: _*)
       val rows = q.collect().toSeq.map(canon).sortBy(_.toString)

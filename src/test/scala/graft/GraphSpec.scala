@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Graph
 
@@ -21,6 +22,11 @@ class GraphSpec extends SparkSpec {
     }
     parent.keys.map(k => k -> find(k)).toMap
   }
+
+  /** A rank frame's rows, sorted, as LONG sequences. */
+  private def rows(df: DataFrame): Seq[Seq[Long]] =
+    df.collect().map(r => r.toSeq.map(_.asInstanceOf[Long])).toSeq
+      .sortBy(_.head)
 
   private def run(edges: Seq[(Long, Long)]): Map[Long, Long] =
     Graph.connectedComponents(edges.toDF("a", "b"))
@@ -172,24 +178,72 @@ class GraphSpec extends SparkSpec {
   test("personalizedPageRank with every node a seed is pageRank") {
     import org.scalacheck.{Gen, Prop, Test}
     // directed edges over 12 nodes: dangling nodes, self-loops and
-    // duplicates included
+    // duplicates included; every input layout, shuffle width and AQE
+    // mode must give the same rows, and PPR seeded with every node
+    // must give pageRank's
     val graphs = Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(0L, 11L),
       Gen.chooseNum(0L, 11L))).map(_.take(30))
+    val layouts = for (parts <- Seq(1, 3, 7); width <- Seq("1", "4", "32");
+                       aqe <- Seq("true", "false")) yield (parts, width, aqe)
     val prop = Prop.forAll(graphs) { es =>
       val edges = es.toDF("src", "dst")
       val seeds = es.flatMap { case (a, b) => Seq(a, b) }.toDF("seed")
-      Seq(1, 7).forall { parts =>
-        val in = edges.repartition(parts)
-        val pr = Graph.pageRank(in, iters = 4)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val ppr = Graph.personalizedPageRank(in, seeds, iters = 4)
-          .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-        pr == ppr
+      val odd = es.map(_._1).filter(_ % 2 == 1).toDF("seed")
+      val runs = layouts.map { case (parts, width, aqe) =>
+        withConf("spark.sql.shuffle.partitions" -> width,
+            "spark.sql.adaptive.enabled" -> aqe) {
+          val in = edges.repartition(parts)
+          val pr = rows(Graph.pageRank(in, iters = 4))
+          val ppr = rows(Graph.personalizedPageRank(in, seeds, iters = 4))
+          val pprOdd = rows(Graph.personalizedPageRank(in, odd, iters = 4))
+          (pr, ppr, pprOdd)
+        }
       }
+      val (pr, ppr, _) = runs.head
+      pr == ppr.map(_.patch(1, Nil, 1)) && runs.forall(_ == runs.head)
     }
     val result = Test.check(Test.Parameters.default
       .withMinSuccessfulTests(4), prop)
     assert(result.passed, result.status.toString)
+  }
+
+  test("pageRank builds with no job and collects in one, caching nothing") {
+    // a local edge frame has no stage for adaptive execution to run at
+    // build, so every round runs in the action's own job
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L)).toDF("src", "dst")
+    val seeds = Seq(1L, 4L).toDF("seed")
+    val cached = sc.getPersistentRDDs.keySet.toSet
+    for ((name, build) <- Seq(
+        "pageRank" -> (() => Graph.pageRank(edges, iters = 5)),
+        "personalizedPageRank" ->
+          (() => Graph.personalizedPageRank(edges, seeds, iters = 5)))) {
+      val (df, built) = jobsIn(build())
+      assert(built == 0, s"$name: $built job(s) at build")
+      val (_, collected) = jobsIn(df.collect())
+      assert(collected == 1, s"$name: $collected job(s) to collect")
+      assert(sc.getPersistentRDDs.keySet.toSet == cached,
+        s"$name left a persisted RDD")
+    }
+  }
+
+  test("rank loops: a reliable checkpoint dir gives the default rows") {
+    // the CC reliable-checkpointing test's shape: the state and every
+    // round are written to the dir, and the rows do not change
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L),
+      (4L, 1L), (5L, 3L)).toDF("src", "dst").repartition(3)
+    val seeds = Seq(2L, 5L, 9L).toDF("seed")
+    withTempDir("graft_rank_ck") { ckDir =>
+      val dir = Some(ckDir)
+      assert(rows(Graph.pageRank(edges, iters = 6, checkpointDir = dir)) ==
+        rows(Graph.pageRank(edges, iters = 6)))
+      assert(rows(Graph.personalizedPageRank(edges, seeds, iters = 6,
+          checkpointDir = dir)) ==
+        rows(Graph.personalizedPageRank(edges, seeds, iters = 6)))
+      val written = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(written > 0, "checkpoint dir must contain checkpoint files")
+    }
   }
 
   test("dupClusters: transitive chain resolved, singletons kept") {
